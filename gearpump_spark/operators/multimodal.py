@@ -33,6 +33,8 @@ downstream grouping should key on doc_id/metadata, not bytes.
 from __future__ import annotations
 
 import hashlib
+import struct
+import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -52,6 +54,8 @@ RESIZE_SCHEMA = "payload binary, width int, height int, byte_len bigint"
 
 FEATURE_SCHEMA = "features array<float>"
 
+PIXEL_STATS_SCHEMA = "width int, height int, px_sum bigint"
+
 
 def _id_field(df: DataFrame, id_col: str) -> str:
     """`"<name> <type>"` for the input's id column, for output schemas."""
@@ -62,6 +66,103 @@ def attach_fake_payload(df: DataFrame, text_col: str = "text", out_col: str = "p
     """Deterministic stand-in binary payload (UTF-8 bytes of the text);
     real pipelines read bytes from parquet/object storage directly."""
     return df.withColumn(out_col, F.encode(F.col(text_col), "UTF-8"))
+
+
+def _synth_batches(make_payload):
+    """Batch function of the synthesis seam: (doc_id) batches -> (doc_id,
+    payload) batches, one ``make_payload(id)`` call per row."""
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf["doc_id"].values
+            yield pd.DataFrame(
+                {"doc_id": ids, "payload": [make_payload(int(i)) for i in ids]}
+            )
+
+    return op
+
+
+def synthesize_payloads(df: DataFrame, make_payload) -> DataFrame:
+    """(doc_id bigint, payload binary): one payload per input row, built by
+    a per-id encoder ``make_payload(i: int) -> bytes`` (the ``*_payload``
+    functions in this module, whose docstrings state the closed form the
+    query oracles replay). Arrow-batched narrow map."""
+    return df.select("doc_id").mapInPandas(
+        _synth_batches(make_payload), "doc_id bigint, payload binary"
+    )
+
+
+def _field_names(schema: str) -> list[str]:
+    """Column names of a flat DDL tail ("width int, px_sum bigint")."""
+    return [field.split()[0] for field in schema.split(",")]
+
+
+def _row_batches(row, schema: str, payload_col: str, id_col: str):
+    """Batch function of the row seam: (id, payload) batches -> (id,
+    *schema) batches, one ``row(payload)`` call per input row; a ``None``
+    result is an all-null row. Output columns are object dtype so a null
+    beside integers never makes pandas upcast the column to float64 (a
+    63-bit hash would lose its low bits on the way back to bigint)."""
+    names = _field_names(schema)
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            recs = [row(None if p is None else bytes(p)) for p in pdf[payload_col]]
+            out = {id_col: pdf[id_col].values}
+            for k, name in enumerate(names):
+                out[name] = pd.Series(
+                    [None if r is None else r[k] for r in recs], dtype=object
+                )
+            yield pd.DataFrame(out)
+
+    return op
+
+
+def map_payloads(
+    df: DataFrame,
+    row,
+    schema: str,
+    payload_col: str = "payload",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """One output row per input payload: (id, *schema), where
+    ``row(payload: bytes | None) -> tuple | None`` maps one payload to the
+    ``schema`` columns (a flat DDL tail such as "width int, px_sum bigint")
+    and ``None`` means an all-null row. The id column keeps the input's
+    name and type (_id_field). Arrow-batched narrow map; payload bytes
+    never shuffle."""
+    return df.select(id_col, payload_col).mapInPandas(
+        _row_batches(row, schema, payload_col, id_col),
+        _id_field(df, id_col) + ", " + schema,
+    )
+
+
+def _pixel_row(decoder, value):
+    """Row function over decoded rasters: (width, height, value(arr)), or
+    an all-null row when the payload is null or undecodable."""
+
+    def row(p):
+        img = None if p is None else decoder.decode_pixels_arr(p)
+        return None if img is None else (img["width"], img["height"], value(img["arr"]))
+
+    return row
+
+
+def _meta_row(sniff, schema: str):
+    """Row function over a header sniffer: the sniffed dict's values for
+    the ``schema`` columns, or an all-null row when the payload is null or
+    unrecognized."""
+    cols = _field_names(schema)
+
+    def row(p):
+        meta = None if p is None else sniff(p)
+        return None if meta is None else tuple(meta[c] for c in cols)
+
+    return row
+
+
+def _px_sum(arr) -> int:
+    return int(arr.sum())
 
 
 class LibraryDecoder:
@@ -958,8 +1059,6 @@ class PixelDecoder(HeaderDecoder):
         interlaced streams reassemble from the seven passes; 16-bit
         samples present as their high byte (the spec-sanctioned
         8-bit scale)."""
-        import struct
-        import zlib
 
         import numpy as np
 
@@ -1118,8 +1217,6 @@ class PixelDecoder(HeaderDecoder):
         """Re-encode a top-down [B,G,R] raster as a REAL 8-bit RGB PNG:
         filter-0 scanlines, one zlib-compressed IDAT, correct CRCs.
         Decodable by any PNG reader, and by decode_png_pixels above."""
-        import struct
-        import zlib
 
         h = len(rows)
         w = len(rows[0]) if h else 0
@@ -1131,28 +1228,13 @@ class PixelDecoder(HeaderDecoder):
             axis=1,
         ).tobytes()  # filter byte 0 (None) + RGB scanline per row
 
-        def chunk(tag: bytes, body: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(body))
-                + tag
-                + body
-                + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-            )
-
         ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b"")
-        )
+        return _png(ihdr, zlib.compress(bytes(raw)))
 
     @staticmethod
     def encode_bmp(rows: list[list[list[int]]]) -> bytes:
         """Re-encode a top-down [B,G,R] raster as a real bottom-up 24-bit
         BMP (BITMAPINFOHEADER, rows padded to 4 bytes)."""
-        import struct
-
         h = len(rows)
         w = len(rows[0]) if h else 0
         stride = (w * 3 + 3) & ~3
@@ -1354,130 +1436,72 @@ def decode_image_metadata(
     containers, so mixed-corpus runs never fail mid-batch."""
     decoder = decoder or HeaderDecoder()
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [
-                decoder.decode_image(b"" if p is None else bytes(p))
-                for p in pdf[payload_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "byte_len": [
-                        0 if p is None else len(bytes(p))
-                        for p in pdf[payload_col]
-                    ],
-                    "format": [m["format"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "n_channels": [m["n_channels"] for m in metas],
-                }
-            )
+    def row(p):
+        p = p or b""
+        m = decoder.decode_image(p)
+        return (len(p), m["format"], m["width"], m["height"], m["n_channels"])
 
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", " + IMAGE_META_SCHEMA
-    )
+    return map_payloads(df, row, IMAGE_META_SCHEMA, payload_col, id_col)
 
 
-def synthesize_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _riff_wav(tag: int, ch: int, rate: int, bits: int, data: bytes | None) -> bytes:
+    """RIFF/WAVE container: a fmt chunk (wFormatTag ``tag``) and, unless
+    ``data`` is None (a truncated container), a data chunk."""
+    block = ch * bits // 8
+    fmt = struct.pack("<HHIIHH", tag, ch, rate, rate * block, block, bits)
+    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    if data is not None:
+        body += b"data" + struct.pack("<I", len(data)) + data
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def wav_payload(i: int) -> bytes:
     """Build REAL RIFF/WAV bytes per row with parameters derived from the id
     (channels = 1 + id%2, sample rate = 8000 + (id%5)*1000, bit depth =
     8·(1 + id%3), 4 silent samples). The bytes round-trip through
     decode_audio_metadata's actual header parser, so a driver oracle can
     verify the parse against the closed-form parameters — real bytes, no
     codec libraries."""
-    import struct
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                ch, rate, bits = 1 + i % 2, 8000 + (i % 5) * 1000, 8 * (1 + i % 3)
-                block = ch * bits // 8
-                # 4 frames of REAL PCM with closed-form sample values
-                # s_k = (7·id + 13·k) % 200 − 100 (k = frame·ch + channel),
-                # scaled to the bit depth — so a sample-level decode is
-                # verifiable against pure arithmetic (see
-                # PixelDecoder.decode_audio_samples and the
-                # multimodal_audio_samples_real oracle).
-                vals = [(7 * i + 13 * k) % 200 - 100 for k in range(4 * ch)]
-                if bits == 8:  # unsigned PCM
-                    data = bytes(128 + v for v in vals)
-                elif bits == 16:  # signed little-endian, scaled ×100
-                    data = b"".join(
-                        (v * 100).to_bytes(2, "little", signed=True) for v in vals
-                    )
-                else:  # 24-bit signed little-endian, scaled ×1000
-                    data = b"".join(
-                        (v * 1000).to_bytes(3, "little", signed=True) for v in vals
-                    )
-                fmt = struct.pack("<HHIIHH", 1, ch, rate, rate * block, block, bits)
-                body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                body += b"data" + struct.pack("<I", len(data)) + data
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    ch, rate, bits = 1 + i % 2, 8000 + (i % 5) * 1000, 8 * (1 + i % 3)
+    # 4 frames of REAL PCM with closed-form sample values
+    # s_k = (7·id + 13·k) % 200 − 100 (k = frame·ch + channel),
+    # scaled to the bit depth — so a sample-level decode is
+    # verifiable against pure arithmetic (see
+    # PixelDecoder.decode_audio_samples and the
+    # multimodal_audio_samples_real oracle).
+    vals = [(7 * i + 13 * k) % 200 - 100 for k in range(4 * ch)]
+    if bits == 8:  # unsigned PCM
+        data = bytes(128 + v for v in vals)
+    elif bits == 16:  # signed little-endian, scaled ×100
+        data = b"".join((v * 100).to_bytes(2, "little", signed=True) for v in vals)
+    else:  # 24-bit signed little-endian, scaled ×1000
+        data = b"".join((v * 1000).to_bytes(3, "little", signed=True) for v in vals)
+    return _riff_wav(1, ch, rate, bits, data)
 
 
-def synthesize_wav_mulaw_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def wav_mulaw_payload(i: int) -> bytes:
     """Build REAL RIFF/WAV G.711 mu-law bytes per row (wFormatTag 7, mono,
     8 kHz, 8 bits): 8 companded bytes with closed-form values
     b_k = (5·id + 17·k) % 256, so the decoder's integer expansion is
     verifiable against pure SQL arithmetic. Every 7th doc gets a
     truncated container (RIFF/WAVE + fmt, no data chunk) to exercise the
     null path."""
-    import struct
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                fmt = struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
-                body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                if i % 7 != 0:
-                    data = bytes((5 * i + 17 * k) % 256 for k in range(8))
-                    body += b"data" + struct.pack("<I", len(data)) + data
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    data = bytes((5 * i + 17 * k) % 256 for k in range(8)) if i % 7 else None
+    return _riff_wav(7, 1, 8000, 8, data)
 
 
-def synthesize_wav_alaw_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def wav_alaw_payload(i: int) -> bytes:
     """Build REAL RIFF/WAV G.711 A-law bytes per row (wFormatTag 6, mono,
     8 kHz, 8 bits): 8 companded bytes with closed-form values
     b_k = (3·id + 29·k) % 256, so the decoder's integer expansion is
     verifiable against pure SQL arithmetic. Every 6th doc gets a
     truncated container (RIFF/WAVE + fmt, no data chunk) to exercise the
     null path."""
-    import struct
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                fmt = struct.pack("<HHIIHH", 6, 1, 8000, 8000, 1, 8)
-                body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                if i % 6 != 0:
-                    data = bytes((3 * i + 29 * k) % 256 for k in range(8))
-                    body += b"data" + struct.pack("<I", len(data)) + data
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    data = bytes((3 * i + 29 * k) % 256 for k in range(8)) if i % 6 else None
+    return _riff_wav(6, 1, 8000, 8, data)
 
 
-def synthesize_qoi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def qoi_payload(i: int) -> bytes:
     """Build REAL QOI bytes per row: width = 2 + id%5, height = 1 + id%4.
     Rows where (y + id) % 3 == 0 are a constant color (exercising
     QOI_OP_RUN); every fifth doc uses a unit-gradient raster (all three
@@ -1486,131 +1510,103 @@ def synthesize_qoi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     seams fall to RGB, revisited colors hit INDEX) — so the byte stream
     exercises every 3-channel op while every pixel stays pure arithmetic
     for the oracle."""
+    w, h = 2 + i % 5, 1 + i % 4
+    rows = []
+    for y in range(h):
+        if (y + i) % 3 == 0:
+            px = [(13 * i) % 256, (11 * i) % 256, (7 * i) % 256]
+            rows.append([list(px) for _ in range(w)])
+        elif i % 5 == 0:
+            rows.append(
+                [
+                    [(i + x + y) % 256, (2 * i + x + y) % 256, (3 * i + x + y) % 256]
+                    for x in range(w)
+                ]
+            )
+        else:
+            rows.append([_bmp_px(i, x, y) for x in range(w)])
+    return PixelDecoder.encode_qoi(rows)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 5, 1 + i % 4
-                rows = []
-                for y in range(h):
-                    if (y + i) % 3 == 0:
-                        px = [(13 * i) % 256, (11 * i) % 256, (7 * i) % 256]
-                        rows.append([list(px) for _ in range(w)])
-                    elif i % 5 == 0:
-                        rows.append(
-                            [
-                                [
-                                    (i + x + y) % 256,
-                                    (2 * i + x + y) % 256,
-                                    (3 * i + x + y) % 256,
-                                ]
-                                for x in range(w)
-                            ]
-                        )
-                    else:
-                        rows.append(
-                            [
-                                [
-                                    (i + 3 * x + 7 * y) % 256,
-                                    (2 * i + 5 * x + y) % 256,
-                                    (3 * i + x + 11 * y) % 256,
-                                ]
-                                for x in range(w)
-                            ]
-                        )
-                payloads.append(PixelDecoder.encode_qoi(rows))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+def _tiff_gray(
+    w: int,
+    h: int,
+    bo: str,
+    photo: int,
+    compression: int,
+    strips: list[bytes],
+    extra: tuple = (),
+) -> bytes:
+    """8-bit gray TIFF around pre-encoded strips (RowsPerStrip = 2):
+    header, one IFD (``extra`` = additional (tag, SHORT value) entries after
+    PhotometricInterpretation), then the StripOffsets/StripByteCounts
+    arrays when there is more than one strip, then the strip data."""
+    rps = 2
+    n_strips = len(strips)
+    strip_lens = [len(s) for s in strips]
+    shorts = ((256, w), (257, h), (258, 8), (259, compression), (262, photo), *extra)
+    n_entries = len(shorts) + 4
+    # layout: header(8) | IFD(2 + n*12 + 4) | [offset/count
+    # arrays when n_strips > 1] | strip data
+    ifd_off = 8
+    ifd_len = 2 + n_entries * 12 + 4
+    arrays_off = ifd_off + ifd_len
+    arrays_len = 0 if n_strips == 1 else 2 * 4 * n_strips
+    data_off = arrays_off + arrays_len
+    strip_offs = []
+    o = data_off
+    for ln in strip_lens:
+        strip_offs.append(o)
+        o += ln
+
+    def short_val(v: int) -> bytes:
+        return v.to_bytes(2, bo) + b"\x00\x00"
+
+    def entry(tag: int, typ: int, cnt: int, valfield: bytes) -> bytes:
+        return tag.to_bytes(2, bo) + typ.to_bytes(2, bo) + cnt.to_bytes(4, bo) + valfield
+
+    if n_strips == 1:
+        so_field = strip_offs[0].to_bytes(4, bo)
+        sc_field = strip_lens[0].to_bytes(4, bo)
+    else:
+        so_field = arrays_off.to_bytes(4, bo)
+        sc_field = (arrays_off + 4 * n_strips).to_bytes(4, bo)
+    entries = (
+        b"".join(entry(tag, 3, 1, short_val(v)) for tag, v in shorts)
+        + entry(273, 4, n_strips, so_field)
+        + entry(277, 3, 1, short_val(1))
+        + entry(278, 3, 1, short_val(rps))
+        + entry(279, 4, n_strips, sc_field)
     )
+    ifd = n_entries.to_bytes(2, bo) + entries + (0).to_bytes(4, bo)
+    header = (
+        (b"II" + (42).to_bytes(2, "little") if bo == "little" else b"MM" + (42).to_bytes(2, "big"))
+        + ifd_off.to_bytes(4, bo)
+    )
+    arrays = b""
+    if n_strips > 1:
+        arrays = b"".join(v.to_bytes(4, bo) for v in strip_offs)
+        arrays += b"".join(v.to_bytes(4, bo) for v in strip_lens)
+    return header + ifd + arrays + b"".join(strips)
 
 
-def synthesize_tiff_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def tiff_payload(i: int) -> bytes:
     """Build REAL baseline-TIFF bytes per row: 8-bit gray, width =
     2 + id%6, height = 1 + id%5, gray(x, y) = (id + 5x + 3y) % 256,
     RowsPerStrip = 2 (so multi-strip assembly is exercised), byte order
     alternating II/MM by id parity, and PhotometricInterpretation
     WhiteIsZero (stored inverted) every third doc. Every header, IFD
     entry, and strip offset is real."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                bo = "little" if i % 2 == 0 else "big"
-                photo = 0 if i % 3 == 0 else 1  # 0 = WhiteIsZero (inverted)
-                gray = bytes(
-                    (i + 5 * x + 3 * y) % 256 if photo == 1
-                    else 255 - ((i + 5 * x + 3 * y) % 256)
-                    for y in range(h)
-                    for x in range(w)
-                )
-                rps = 2
-                n_strips = (h + rps - 1) // rps
-                strip_lens = [
-                    w * min(rps, h - s * rps) for s in range(n_strips)
-                ]
-                # layout: header(8) | IFD(2 + 9*12 + 4) | [offset/count
-                # arrays when n_strips > 1] | strip data
-                ifd_off = 8
-                ifd_len = 2 + 9 * 12 + 4
-                arrays_off = ifd_off + ifd_len
-                arrays_len = 0 if n_strips == 1 else 2 * 4 * n_strips
-                data_off = arrays_off + arrays_len
-                strip_offs = []
-                o = data_off
-                for ln in strip_lens:
-                    strip_offs.append(o)
-                    o += ln
-
-                def short_val(v: int) -> bytes:
-                    return v.to_bytes(2, bo) + b"\x00\x00"
-
-                def entry(tag: int, typ: int, cnt: int, valfield: bytes) -> bytes:
-                    return (
-                        tag.to_bytes(2, bo)
-                        + typ.to_bytes(2, bo)
-                        + cnt.to_bytes(4, bo)
-                        + valfield
-                    )
-
-                if n_strips == 1:
-                    so_field = strip_offs[0].to_bytes(4, bo)
-                    sc_field = strip_lens[0].to_bytes(4, bo)
-                else:
-                    so_field = arrays_off.to_bytes(4, bo)
-                    sc_field = (arrays_off + 4 * n_strips).to_bytes(4, bo)
-                entries = (
-                    entry(256, 3, 1, short_val(w))
-                    + entry(257, 3, 1, short_val(h))
-                    + entry(258, 3, 1, short_val(8))
-                    + entry(259, 3, 1, short_val(1))
-                    + entry(262, 3, 1, short_val(photo))
-                    + entry(273, 4, n_strips, so_field)
-                    + entry(277, 3, 1, short_val(1))
-                    + entry(278, 3, 1, short_val(rps))
-                    + entry(279, 4, n_strips, sc_field)
-                )
-                ifd = (9).to_bytes(2, bo) + entries + (0).to_bytes(4, bo)
-                header = (
-                    (b"II" + (42).to_bytes(2, "little") if bo == "little" else b"MM" + (42).to_bytes(2, "big"))
-                    + ifd_off.to_bytes(4, bo)
-                )
-                arrays = b""
-                if n_strips > 1:
-                    arrays = b"".join(v.to_bytes(4, bo) for v in strip_offs)
-                    arrays += b"".join(v.to_bytes(4, bo) for v in strip_lens)
-                payloads.append(header + ifd + arrays + gray)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    w, h = 2 + i % 6, 1 + i % 5
+    photo = 0 if i % 3 == 0 else 1  # 0 = WhiteIsZero (inverted)
+    gray = bytes(
+        (i + 5 * x + 3 * y) % 256 if photo == 1
+        else 255 - ((i + 5 * x + 3 * y) % 256)
+        for y in range(h)
+        for x in range(w)
     )
+    strips = [gray[s : s + 2 * w] for s in range(0, w * h, 2 * w)]
+    return _tiff_gray(w, h, "little" if i % 2 == 0 else "big", photo, 1, strips)
 
 
 def _packbits_encode(row: bytes) -> bytes:
@@ -1618,8 +1614,8 @@ def _packbits_encode(row: bytes) -> bytes:
     'pack each row separately'): maximal byte runs of length >= 2 become
     replicate packets (header 257-n, n <= 128), everything else literal
     packets (header n-1, n <= 128). Never emits the reserved -128
-    header; the decoder must still skip it (synthesize_tiff_packbits_
-    payloads plants one deliberately to pin that path)."""
+    header; the decoder must still skip it (tiff_packbits_payload plants
+    one deliberately to pin that path)."""
     out = bytearray()
     i, n = 0, len(row)
     while i < n:
@@ -1642,12 +1638,12 @@ def _packbits_encode(row: bytes) -> bytes:
     return bytes(out)
 
 
-def synthesize_tiff_packbits_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def tiff_packbits_payload(i: int) -> bytes:
     """Build REAL PackBits-compressed TIFF bytes per row (Compression =
     32773): 8-bit gray, width = 3 + id%9, height = 1 + id%6,
     RowsPerStrip = 2, byte order alternating II/MM by parity,
     WhiteIsZero (stored inverted) every third doc — all as in
-    synthesize_tiff_payloads — and three raster classes chosen to
+    tiff_payload — and three raster classes chosen to
     exercise every PackBits packet type:
       id%3 == 0: constant rows gray(x,y) = (id + 7y) % 256  → full-row
                  replicate packets;
@@ -1657,138 +1653,65 @@ def synthesize_tiff_packbits_payloads(df: DataFrame, id_col: str = "doc_id") -> 
                  replicate packets.
     Docs with id%7 == 0 get a reserved -128 no-op header byte planted at
     the start of each strip stream (decoders must skip it, spec §9)."""
+    w, h = 3 + i % 9, 1 + i % 6
+    photo = 0 if i % 3 == 0 else 1  # 0 = WhiteIsZero (inverted)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 3 + i % 9, 1 + i % 6
-                bo = "little" if i % 2 == 0 else "big"
-                photo = 0 if i % 3 == 0 else 1  # 0 = WhiteIsZero (inverted)
+    def gray_at(x: int, y: int) -> int:
+        if i % 3 == 0:
+            g = (i + 7 * y) % 256
+        elif i % 3 == 1:
+            g = (i + 5 * x + 3 * y) % 256
+        else:
+            g = (i + 3 * y + x // 2) % 256
+        return g if photo == 1 else 255 - g
 
-                def gray_at(x: int, y: int) -> int:
-                    if i % 3 == 0:
-                        g = (i + 7 * y) % 256
-                    elif i % 3 == 1:
-                        g = (i + 5 * x + 3 * y) % 256
-                    else:
-                        g = (i + 3 * y + x // 2) % 256
-                    return g if photo == 1 else 255 - g
-
-                rows = [
-                    bytes(gray_at(x, y) for x in range(w)) for y in range(h)
-                ]
-                rps = 2
-                n_strips = (h + rps - 1) // rps
-                strips = []
-                for s in range(n_strips):
-                    enc = b"".join(
-                        _packbits_encode(r) for r in rows[s * rps : (s + 1) * rps]
-                    )
-                    if i % 7 == 0:
-                        enc = b"\x80" + enc  # reserved no-op header
-                    strips.append(enc)
-                strip_lens = [len(s) for s in strips]
-                ifd_off = 8
-                ifd_len = 2 + 10 * 12 + 4
-                arrays_off = ifd_off + ifd_len
-                arrays_len = 0 if n_strips == 1 else 2 * 4 * n_strips
-                data_off = arrays_off + arrays_len
-                strip_offs = []
-                o = data_off
-                for ln in strip_lens:
-                    strip_offs.append(o)
-                    o += ln
-
-                def short_val(v: int) -> bytes:
-                    return v.to_bytes(2, bo) + b"\x00\x00"
-
-                def entry(tag: int, typ: int, cnt: int, valfield: bytes) -> bytes:
-                    return (
-                        tag.to_bytes(2, bo)
-                        + typ.to_bytes(2, bo)
-                        + cnt.to_bytes(4, bo)
-                        + valfield
-                    )
-
-                if n_strips == 1:
-                    so_field = strip_offs[0].to_bytes(4, bo)
-                    sc_field = strip_lens[0].to_bytes(4, bo)
-                else:
-                    so_field = arrays_off.to_bytes(4, bo)
-                    sc_field = (arrays_off + 4 * n_strips).to_bytes(4, bo)
-                entries = (
-                    entry(256, 3, 1, short_val(w))
-                    + entry(257, 3, 1, short_val(h))
-                    + entry(258, 3, 1, short_val(8))
-                    + entry(259, 3, 1, short_val(32773))
-                    + entry(262, 3, 1, short_val(photo))
-                    + entry(266, 3, 1, short_val(1))  # FillOrder, benign extra
-                    + entry(273, 4, n_strips, so_field)
-                    + entry(277, 3, 1, short_val(1))
-                    + entry(278, 3, 1, short_val(rps))
-                    + entry(279, 4, n_strips, sc_field)
-                )
-                ifd = (10).to_bytes(2, bo) + entries + (0).to_bytes(4, bo)
-                header = (
-                    (b"II" + (42).to_bytes(2, "little") if bo == "little" else b"MM" + (42).to_bytes(2, "big"))
-                    + ifd_off.to_bytes(4, bo)
-                )
-                arrays = b""
-                if n_strips > 1:
-                    arrays = b"".join(v.to_bytes(4, bo) for v in strip_offs)
-                    arrays += b"".join(v.to_bytes(4, bo) for v in strip_lens)
-                payloads.append(header + ifd + arrays + b"".join(strips))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    rows = [bytes(gray_at(x, y) for x in range(w)) for y in range(h)]
+    strips = []
+    for s in range(0, h, 2):
+        enc = b"".join(_packbits_encode(r) for r in rows[s : s + 2])
+        if i % 7 == 0:
+            enc = b"\x80" + enc  # reserved no-op header
+        strips.append(enc)
+    return _tiff_gray(
+        w,
+        h,
+        "little" if i % 2 == 0 else "big",
+        photo,
+        32773,
+        strips,
+        extra=((266, 1),),  # FillOrder, benign extra
     )
 
 
-def synthesize_jpeg_lossless_payloads(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def jpeg_lossless_payload(i: int) -> bytes:
     """Build REAL lossless-JPEG (SOF3) bytes per row: width = 2 + id%6,
     height = 1 + id%5, predictor = 1 + id%7 (every spec predictor
     exercised across the corpus), every fourth doc 12-bit
     (gray = (17·id + 5x + 3y) % 4096, presented via the high byte),
     the rest 8-bit (gray = (id + 5x + 3y) % 256). Lossless, so every
     decoded sample equals the closed form exactly."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                pred = 1 + i % 7
-                if i % 4 == 0:
-                    gray = [
-                        [(17 * i + 5 * x + 3 * y) % 4096 for x in range(w)]
-                        for y in range(h)
-                    ]
-                    p = JpegDecoder.encode_jpeg_lossless_gray(
-                        gray, precision=12, predictor=pred
-                    )
-                else:
-                    gray = [
-                        [(i + 5 * x + 3 * y) % 256 for x in range(w)]
-                        for y in range(h)
-                    ]
-                    p = JpegDecoder.encode_jpeg_lossless_gray(
-                        gray, precision=8, predictor=pred
-                    )
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    w, h = 2 + i % 6, 1 + i % 5
+    if i % 4 == 0:
+        base, mod, precision = 17 * i, 4096, 12
+    else:
+        base, mod, precision = i, 256, 8
+    gray = [[(base + 5 * x + 3 * y) % mod for x in range(w)] for y in range(h)]
+    return JpegDecoder.encode_jpeg_lossless_gray(
+        gray, precision=precision, predictor=1 + i % 7
     )
 
 
-def synthesize_bmp_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _bmp_px(i: int, x: int, y: int) -> list[int]:
+    """The closed-form [B,G,R] pixel of bmp_payload at (x, y)."""
+    return [(i + 3 * x + 7 * y) % 256, (2 * i + 5 * x + y) % 256, (3 * i + x + 11 * y) % 256]
+
+
+def _bmp_rows(i: int) -> list[list[list[int]]]:
+    """The closed-form raster of bmp_payload, top-down."""
+    return [[_bmp_px(i, x, y) for x in range(2 + i % 6)] for y in range(1 + i % 5)]
+
+
+def bmp_payload(i: int) -> bytes:
     """Build REAL uncompressed 24-bit BMP bytes per row with closed-form
     raster content: width = 2 + id%6, height = 1 + id%5, pixel (x, y) =
     [B,G,R] = [(id+3x+7y)%256, (2id+5x+y)%256, (3id+x+11y)%256]. Every
@@ -1796,33 +1719,10 @@ def synthesize_bmp_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     is real, and every pixel is pure arithmetic — so pixel-level
     operators (decode/resize/features) are verifiable against closed-form
     oracles with no codec library anywhere."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                rows = [
-                    [
-                        [
-                            (i + 3 * x + 7 * y) % 256,
-                            (2 * i + 5 * x + y) % 256,
-                            (3 * i + x + 11 * y) % 256,
-                        ]
-                        for x in range(w)
-                    ]
-                    for y in range(h)
-                ]
-                payloads.append(PixelDecoder.encode_bmp(rows))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return PixelDecoder.encode_bmp(_bmp_rows(i))
 
 
-def synthesize_bmp_rle8_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def bmp_rle8_payload(i: int) -> bytes:
     """Build REAL RLE8-compressed 8-bit palette BMP bytes per row
     (BI_RLE8, grayscale palette entry j = (j,j,j,0)): width = 4 + id%8,
     height = 1 + id%5, bottom-up rows, EOL after every row and EOB at
@@ -1838,94 +1738,57 @@ def synthesize_bmp_rle8_payloads(df: DataFrame, id_col: str = "doc_id") -> DataF
     y here is the BOTTOM-UP row index (the storage order), so the
     closed-form oracle indexes the decoded top-down raster at
     y_top = h - 1 - y."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 4 + i % 8, 1 + i % 5
-                cls = i % 4
-                stream = bytearray()
-                for y in range(h):  # bottom-up storage rows
-                    if cls == 0:
-                        stream += bytes([w, (i + 9 * y) % 256])
-                    elif cls == 1:
-                        px = bytes((i + 5 * x + 3 * y) % 256 for x in range(w))
-                        stream += bytes([0, w]) + px
-                        if w & 1:
-                            stream += b"\x00"
-                    elif cls == 2:
-                        x = 0
-                        while x < w:
-                            n = min(2, w - x)
-                            stream += bytes([n, (i + 3 * y + x // 2) % 256])
-                            x += n
-                    else:
-                        stream += bytes([1, (i + 11 * y) % 256])
-                        stream += bytes([0, 2, 2, 0])  # delta: skip x=1..2
-                        rest = bytes(
-                            (i + 7 * x + 3 * y) % 256 for x in range(3, w)
-                        )
-                        if len(rest) >= 3:
-                            stream += bytes([0, len(rest)]) + rest
-                            if len(rest) & 1:
-                                stream += b"\x00"
-                        else:
-                            for b in rest:
-                                stream += bytes([1, b])
-                    stream += b"\x00\x00" if y < h - 1 else b"\x00\x01"
-                palette = b"".join(bytes([j, j, j, 0]) for j in range(256))
-                data_off = 14 + 40 + len(palette)
-                header = (
-                    b"BM"
-                    + (data_off + len(stream)).to_bytes(4, "little")
-                    + b"\x00\x00\x00\x00"
-                    + data_off.to_bytes(4, "little")
-                )
-                dib = (
-                    (40).to_bytes(4, "little")
-                    + w.to_bytes(4, "little", signed=True)
-                    + h.to_bytes(4, "little", signed=True)  # positive: bottom-up
-                    + (1).to_bytes(2, "little")
-                    + (8).to_bytes(2, "little")
-                    + (1).to_bytes(4, "little")  # BI_RLE8
-                    + len(stream).to_bytes(4, "little")
-                    + (2835).to_bytes(4, "little")
-                    + (2835).to_bytes(4, "little")
-                    + (256).to_bytes(4, "little")
-                    + (0).to_bytes(4, "little")
-                )
-                payloads.append(header + dib + palette + bytes(stream))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    w, h = 4 + i % 8, 1 + i % 5
+    cls = i % 4
+    stream = bytearray()
+    for y in range(h):  # bottom-up storage rows
+        if cls == 0:
+            stream += bytes([w, (i + 9 * y) % 256])
+        elif cls == 1:
+            px = bytes((i + 5 * x + 3 * y) % 256 for x in range(w))
+            stream += bytes([0, w]) + px
+            if w & 1:
+                stream += b"\x00"
+        elif cls == 2:
+            x = 0
+            while x < w:
+                n = min(2, w - x)
+                stream += bytes([n, (i + 3 * y + x // 2) % 256])
+                x += n
+        else:
+            stream += bytes([1, (i + 11 * y) % 256])
+            stream += bytes([0, 2, 2, 0])  # delta: skip x=1..2
+            rest = bytes((i + 7 * x + 3 * y) % 256 for x in range(3, w))
+            if len(rest) >= 3:
+                stream += bytes([0, len(rest)]) + rest
+                if len(rest) & 1:
+                    stream += b"\x00"
+            else:
+                for b in rest:
+                    stream += bytes([1, b])
+        stream += b"\x00\x00" if y < h - 1 else b"\x00\x01"
+    palette = b"".join(bytes([j, j, j, 0]) for j in range(256))
+    data_off = 14 + 40 + len(palette)
+    header = (
+        b"BM"
+        + (data_off + len(stream)).to_bytes(4, "little")
+        + b"\x00\x00\x00\x00"
+        + data_off.to_bytes(4, "little")
     )
-
-
-def _pixel_stats_op(decoder, payload_col: str = "payload", id_col: str = "doc_id"):
-    """Batch-level pixel_stats seam: (id, payload) batches → (id, width,
-    height, px_sum) batches. Factored out so the fused synth+decode stage
-    composes the SAME decode function the standalone operator runs —
-    the codec seam is the batch function, not the physical stage."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {id_col: pdf[id_col].values, "width": [], "height": [], "px_sum": []}
-            for p in pdf[payload_col]:
-                img = None if p is None else decoder.decode_pixels_arr(bytes(p))
-                if img is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["px_sum"].append(None)
-                else:
-                    out["width"].append(img["width"])
-                    out["height"].append(img["height"])
-                    out["px_sum"].append(int(img["arr"].sum()))
-            yield pd.DataFrame(out)
-
-    return op
+    dib = (
+        (40).to_bytes(4, "little")
+        + w.to_bytes(4, "little", signed=True)
+        + h.to_bytes(4, "little", signed=True)  # positive: bottom-up
+        + (1).to_bytes(2, "little")
+        + (8).to_bytes(2, "little")
+        + (1).to_bytes(4, "little")  # BI_RLE8
+        + len(stream).to_bytes(4, "little")
+        + (2835).to_bytes(4, "little")
+        + (2835).to_bytes(4, "little")
+        + (256).to_bytes(4, "little")
+        + (0).to_bytes(4, "little")
+    )
+    return header + dib + palette + bytes(stream)
 
 
 def pixel_stats(
@@ -1934,12 +1797,8 @@ def pixel_stats(
     """Decode REAL raster pixels (PixelDecoder tier) and aggregate per
     payload: dimensions plus the total of all channel bytes. Undecodable
     payloads yield nulls. Arrow-batched; payload bytes never shuffle."""
-    decoder = decoder or PixelDecoder()
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _pixel_stats_op(decoder, payload_col, id_col),
-        _id_field(df, id_col) + ", width int, height int, px_sum bigint",
-    )
+    row = _pixel_row(decoder or PixelDecoder(), _px_sum)
+    return map_payloads(df, row, PIXEL_STATS_SCHEMA, payload_col, id_col)
 
 
 def pixel_fingerprints(
@@ -1950,34 +1809,13 @@ def pixel_fingerprints(
     image stored as BMP, PNG, or GIF hashes identically, so image dedup
     keys on content, not encoding. Arrow-batched narrow map; undecodable
     payloads yield null fingerprints."""
-    import hashlib
 
-    decoder = decoder or PixelDecoder()
+    def fp(arr) -> str:
+        return hashlib.md5(arr.astype("uint8").tobytes().hex().encode()).hexdigest()
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                id_col: pdf[id_col].values,
-                "width": [],
-                "height": [],
-                "pixel_fp": [],
-            }
-            for p in pdf[payload_col]:
-                img = None if p is None else decoder.decode_pixels_arr(bytes(p))
-                if img is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["pixel_fp"].append(None)
-                else:
-                    hexes = img["arr"].astype("uint8").tobytes().hex()
-                    out["width"].append(img["width"])
-                    out["height"].append(img["height"])
-                    out["pixel_fp"].append(hashlib.md5(hexes.encode()).hexdigest())
-            yield pd.DataFrame(out)
-
-    # id field name/type follow the input schema (r2 advisor finding)
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", width int, height int, pixel_fp string"
+    row = _pixel_row(decoder or PixelDecoder(), fp)
+    return map_payloads(
+        df, row, "width int, height int, pixel_fp string", payload_col, id_col
     )
 
 
@@ -2015,32 +1853,11 @@ def phash_fingerprints(
     byte and exact-pixel hashes differ. Narrow Arrow map; downstream
     grouping (exact) or band-bucketing (Hamming, as in SimHash) keys on
     the 8-byte hash only."""
-    decoder = decoder or PixelDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                id_col: pdf[id_col].values,
-                "width": [],
-                "height": [],
-                "phash": [],
-            }
-            for p in pdf[payload_col]:
-                img = None if p is None else decoder.decode_pixels_arr(bytes(p))
-                if img is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["phash"].append(None)
-                else:
-                    out["width"].append(img["width"])
-                    out["height"].append(img["height"])
-                    # 63 coefficient bits (8x8 low band minus DC) — always
-                    # fits a signed Spark long as-is
-                    out["phash"].append(phash64(img["arr"]))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", width int, height int, phash bigint"
+    # 63 coefficient bits (8x8 low band minus DC) — always fits a signed
+    # Spark long as-is
+    row = _pixel_row(decoder or PixelDecoder(), phash64)
+    return map_payloads(
+        df, row, "width int, height int, phash bigint", payload_col, id_col
     )
 
 
@@ -2138,30 +1955,9 @@ def ahash_fingerprints(
     full decode -> hash -> band -> pair pipeline is DuckDB-hash-checkable
     (multimodal_ahash_neardup) where the DCT pHash can only be
     numpy-goldened."""
-    decoder = decoder or PixelDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                id_col: pdf[id_col].values,
-                "width": [],
-                "height": [],
-                "ahash": [],
-            }
-            for p in pdf[payload_col]:
-                img = None if p is None else decoder.decode_pixels_arr(bytes(p))
-                if img is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["ahash"].append(None)
-                else:
-                    out["width"].append(img["width"])
-                    out["height"].append(img["height"])
-                    out["ahash"].append(ahash63(img["arr"]))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", width int, height int, ahash bigint"
+    row = _pixel_row(decoder or PixelDecoder(), ahash63)
+    return map_payloads(
+        df, row, "width int, height int, ahash bigint", payload_col, id_col
     )
 
 
@@ -2238,34 +2034,13 @@ def phash_int_fingerprints(
     narrow Arrow-map shape and banding contract as phash_fingerprints,
     but hash-exact across engines (multimodal_phash_int), closing the
     gap the float DCT left goldened-only."""
-    decoder = decoder or PixelDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                id_col: pdf[id_col].values,
-                "width": [],
-                "height": [],
-                "phash": [],
-            }
-            for p in pdf[payload_col]:
-                img = None if p is None else decoder.decode_pixels_arr(bytes(p))
-                if img is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["phash"].append(None)
-                else:
-                    out["width"].append(img["width"])
-                    out["height"].append(img["height"])
-                    out["phash"].append(phash63_int(img["arr"]))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", width int, height int, phash bigint"
+    row = _pixel_row(decoder or PixelDecoder(), phash63_int)
+    return map_payloads(
+        df, row, "width int, height int, phash bigint", payload_col, id_col
     )
 
 
-def synthesize_noise_pair_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def noise_pair_payload(i: int) -> bytes:
     """Near-dup fixture for pHash: every 2 consecutive doc_ids share one
     deterministic LCG-noise pattern (group = doc_id // 2 seeds the
     generator; gray values 40..199) but the odd doc adds a uniform +8
@@ -2275,27 +2050,16 @@ def synthesize_noise_pair_payloads(df: DataFrame, id_col: str = "doc_id") -> Dat
     median for float wobble to flip (a LINEAR-GRADIENT fixture fails
     exactly that way: sawtooth DCTs put half the coefficients in an
     exact tie at the median; measured in-pair Hamming up to 30/64)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                s = (i // 2) * 2654435761 % (2**32)
-                off = 8 * (i % 2)
-                rows = []
-                for _y in range(16):
-                    row = []
-                    for _x in range(24):
-                        s = (s * 1103515245 + 12345) % (2**31)
-                        row.append([40 + (s >> 16) % 160 + off] * 3)
-                    rows.append(row)
-                payloads.append(PixelDecoder.encode_png(rows))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    s = (i // 2) * 2654435761 % (2**32)
+    off = 8 * (i % 2)
+    rows = []
+    for _y in range(16):
+        row = []
+        for _x in range(24):
+            s = (s * 1103515245 + 12345) % (2**31)
+            row.append([40 + (s >> 16) % 160 + off] * 3)
+        rows.append(row)
+    return PixelDecoder.encode_png(rows)
 
 
 def encode_mp4(
@@ -2444,116 +2208,73 @@ _MP4_UNITY_MATRIX = (
 )
 
 
-def synthesize_mp4_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def mp4_payload(i: int) -> bytes:
     """REAL minimal MP4 per row with closed-form parameters: timescale =
     1000·(1 + id%3), duration = timescale·(1 + id%9) (so duration_ms =
     1000·(1 + id%9) exactly), width = 16·(1 + id%5), height =
     16·(1 + id%4), tracks = 1 + id%2 — a driver oracle verifies the box
     walk against pure arithmetic."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                ts = 1000 * (1 + i % 3)
-                payloads.append(
-                    encode_mp4(
-                        width=16 * (1 + i % 5),
-                        height=16 * (1 + i % 4),
-                        timescale=ts,
-                        duration=ts * (1 + i % 9),
-                        n_tracks=1 + i % 2,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    ts = 1000 * (1 + i % 3)
+    return encode_mp4(
+        width=16 * (1 + i % 5),
+        height=16 * (1 + i % 4),
+        timescale=ts,
+        duration=ts * (1 + i % 9),
+        n_tracks=1 + i % 2,
     )
 
 
-def synthesize_mp4_stsd_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def mp4_stsd_payload(i: int) -> bytes:
     """REAL MP4s WITH sample tables, closed-form: video track (codec
     'avc1' for even ids, 'hev1' for odd; n_frames = 12·(1 + id%4); media
     timescale 600·(1 + id%3)) plus an audio track ('mp4a') iff id%3 == 0
     — a driver oracle verifies the stbl walk by pure arithmetic."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                tables = [
-                    {
-                        "handler": "vide",
-                        "codec": "avc1" if i % 2 == 0 else "hev1",
-                        "n_frames": 12 * (1 + i % 4),
-                        "media_timescale": 600 * (1 + i % 3),
-                    }
-                ]
-                if i % 3 == 0:
-                    tables.append(
-                        {
-                            "handler": "soun",
-                            "codec": "mp4a",
-                            "n_frames": 48 * (1 + i % 4),
-                            "media_timescale": 44100,
-                        }
-                    )
-                payloads.append(
-                    encode_mp4(
-                        width=16 * (1 + i % 5),
-                        height=16 * (1 + i % 4),
-                        timescale=1000,
-                        duration=1000 * (1 + i % 9),
-                        sample_tables=tables,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    tables = [
+        {
+            "handler": "vide",
+            "codec": "avc1" if i % 2 == 0 else "hev1",
+            "n_frames": 12 * (1 + i % 4),
+            "media_timescale": 600 * (1 + i % 3),
+        }
+    ]
+    if i % 3 == 0:
+        tables.append(
+            {
+                "handler": "soun",
+                "codec": "mp4a",
+                "n_frames": 48 * (1 + i % 4),
+                "media_timescale": 44100,
+            }
+        )
+    return encode_mp4(
+        width=16 * (1 + i % 5),
+        height=16 * (1 + i % 4),
+        timescale=1000,
+        duration=1000 * (1 + i % 9),
+        sample_tables=tables,
     )
 
 
-def synthesize_mp4_fps_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def mp4_fps_payload(i: int) -> bytes:
     """REAL MP4s with VARIABLE frame timing, closed-form: the video
     track's stts carries two runs — 8·(1+id%3) frames at (20+10·(id%4))
     ticks plus 4·(1+id%2) frames at 25 ticks, media timescale
     600·(1+id%3) — so average fps = timescale·frames/Σ(count·delta) is a
     different non-trivial rational per document; a driver oracle verifies
     the stts walk by pure arithmetic."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                c1, d1 = 8 * (1 + i % 3), 20 + 10 * (i % 4)
-                c2, d2 = 4 * (1 + i % 2), 25
-                tables = [
-                    {
-                        "handler": "vide",
-                        "codec": "avc1" if i % 2 == 0 else "hev1",
-                        "n_frames": c1 + c2,
-                        "media_timescale": 600 * (1 + i % 3),
-                        "stts_runs": [(c1, d1), (c2, d2)],
-                    }
-                ]
-                payloads.append(
-                    encode_mp4(
-                        width=32,
-                        height=32,
-                        timescale=1000,
-                        duration=1000,
-                        sample_tables=tables,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    c1, d1 = 8 * (1 + i % 3), 20 + 10 * (i % 4)
+    c2, d2 = 4 * (1 + i % 2), 25
+    tables = [
+        {
+            "handler": "vide",
+            "codec": "avc1" if i % 2 == 0 else "hev1",
+            "n_frames": c1 + c2,
+            "media_timescale": 600 * (1 + i % 3),
+            "stts_runs": [(c1, d1), (c2, d2)],
+        }
+    ]
+    return encode_mp4(
+        width=32, height=32, timescale=1000, duration=1000, sample_tables=tables
     )
 
 
@@ -2574,59 +2295,28 @@ def decode_video_sample_tables(
     over the stts run table, media ticks) — the denominator of real fps.
     Opt-in so the original column set stays schema-stable."""
     decoder = decoder or HeaderDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("video_codec", "audio_codec", "n_video_frames", "video_timescale")
-        if include_timing:
-            cols = cols + ("video_stts_duration",)
-        for pdf in batches:
-            out = {id_col: pdf[id_col].values, **{c: [] for c in cols}}
-            for p in pdf[payload_col]:
-                meta = None if p is None else decoder.sniff_video_tracks(bytes(p))
-                for c in cols:
-                    out[c].append(None if meta is None else meta[c])
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op,
-        # bigint, not int: stsz sample_count and mdhd timescale are
-        # UNSIGNED 32-bit per the spec — a real container with values
-        # >= 2^31 would overflow an int32 Arrow cast and fail the task,
-        # violating corrupt-payload-never-fails-the-batch (ADVICE r3)
-        _id_field(df, id_col) + ", video_codec string, audio_codec string, "
+    # bigint, not int: stsz sample_count and mdhd timescale are
+    # UNSIGNED 32-bit per the spec — a real container with values
+    # >= 2^31 would overflow an int32 Arrow cast and fail the task,
+    # violating corrupt-payload-never-fails-the-batch (ADVICE r3)
+    schema = (
+        "video_codec string, audio_codec string, "
         "n_video_frames bigint, video_timescale bigint"
-        + (", video_stts_duration bigint" if include_timing else ""),
+        + (", video_stts_duration bigint" if include_timing else "")
     )
+    row = _meta_row(decoder.sniff_video_tracks, schema)
+    return map_payloads(df, row, schema, payload_col, id_col)
 
 
-def synthesize_jpeg_jfif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def jpeg_jfif_payload(i: int) -> bytes:
     """REAL JPEGs with an APP0/JFIF density segment, closed-form: every
     third doc carries NO JFIF (the Exif-first / bare-SOI case — fields
     must come back NULL, not fail); the rest carry version 1.02,
     units = id % 3, xdensity = 72 + id % 120, ydensity = 72 + (7·id) % 120.
     The raster is the flat-gray fixture so the payloads stay real,
     decodable JPEGs end to end."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                jfif = (
-                    None
-                    if i % 3 == 0
-                    else (i % 3, 72 + i % 120, 72 + (7 * i) % 120)
-                )
-                payloads.append(
-                    JpegDecoder.encode_jpeg_gray(
-                        [[(37 * i + 11) % 256] * 8] * 8, jfif=jfif
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    jfif = None if i % 3 == 0 else (i % 3, 72 + i % 120, 72 + (7 * i) % 120)
+    return JpegDecoder.encode_jpeg_gray([[(37 * i + 11) % 256] * 8] * 8, jfif=jfif)
 
 
 def decode_jfif_metadata(
@@ -2637,22 +2327,9 @@ def decode_jfif_metadata(
     print/scan corpus filters on; JPEGs without a JFIF segment yield
     NULL fields. Narrow Arrow map; payloads never shuffle."""
     decoder = decoder or HeaderDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("version_major", "version_minor", "units", "xdensity", "ydensity")
-        for pdf in batches:
-            out = {id_col: pdf[id_col].values, **{c: [] for c in cols}}
-            for p in pdf[payload_col]:
-                meta = None if p is None else decoder.sniff_jfif(bytes(p))
-                for c in cols:
-                    out[c].append(None if meta is None else meta[c])
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op,
-        _id_field(df, id_col) + ", version_major int, version_minor int, "
-        "units int, xdensity int, ydensity int",
-    )
+    schema = "version_major int, version_minor int, units int, xdensity int, ydensity int"
+    row = _meta_row(decoder.sniff_jfif, schema)
+    return map_payloads(df, row, schema, payload_col, id_col)
 
 
 def decode_video_metadata(
@@ -2662,22 +2339,12 @@ def decode_video_metadata(
     the REAL ISO-BMFF box walker; unrecognized payloads yield nulls.
     Narrow Arrow map — payload bytes never shuffle."""
     decoder = decoder or HeaderDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("format", "width", "height", "duration_ms", "timescale", "n_tracks")
-        for pdf in batches:
-            out = {id_col: pdf[id_col].values, **{c: [] for c in cols}}
-            for p in pdf[payload_col]:
-                meta = None if p is None else decoder.sniff_video(bytes(p))
-                for c in cols:
-                    out[c].append(None if meta is None else meta[c])
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op,
-        _id_field(df, id_col) + ", format string, width int, height int, "
-        "duration_ms bigint, timescale int, n_tracks int",
+    schema = (
+        "format string, width int, height int, "
+        "duration_ms bigint, timescale int, n_tracks int"
     )
+    row = _meta_row(decoder.sniff_video, schema)
+    return map_payloads(df, row, schema, payload_col, id_col)
 
 
 def audio_fingerprints(
@@ -2688,103 +2355,52 @@ def audio_fingerprints(
     no float), and md5 the comma-joined values. The same waveform stored
     at 8/16/24-bit depths hashes identically, so audio dedup keys on the
     signal, not the container encoding. Narrow Arrow map."""
-    import hashlib
-
     decoder = decoder or PixelDecoder()
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {id_col: pdf[id_col].values, "n_samples": [], "audio_fp": []}
-            for p in pdf[payload_col]:
-                payload = b"" if p is None else bytes(p)
-                meta = decoder.sniff_audio(payload)
-                samples = decoder.decode_audio_samples(payload)
-                if meta is None or samples is None:
-                    out["n_samples"].append(None)
-                    out["audio_fp"].append(None)
-                else:
-                    shift = meta["bits_per_sample"] - 8
-                    norm = [v >> shift if shift else v for v in samples]
-                    key = ",".join(str(v) for v in norm)
-                    out["n_samples"].append(len(samples))
-                    out["audio_fp"].append(hashlib.md5(key.encode()).hexdigest())
-            yield pd.DataFrame(out)
+    def row(p):
+        p = p or b""
+        meta = decoder.sniff_audio(p)
+        samples = decoder.decode_audio_samples(p)
+        if meta is None or samples is None:
+            return None
+        shift = meta["bits_per_sample"] - 8
+        norm = [v >> shift if shift else v for v in samples]
+        key = ",".join(str(v) for v in norm)
+        return len(samples), hashlib.md5(key.encode()).hexdigest()
 
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", n_samples int, audio_fp string"
-    )
+    return map_payloads(df, row, "n_samples int, audio_fp string", payload_col, id_col)
 
 
-def synthesize_multidepth_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def multidepth_wav_payload(i: int) -> bytes:
     """Every 3 consecutive doc_ids carry ONE waveform (group = doc_id // 3:
     16 mono samples s_k = (11·group + 17·k) % 200 - 100) stored at a
     DIFFERENT bit depth — 8-bit unsigned (128+s), 16-bit signed (s·256),
     24-bit signed (s·65536) by doc_id % 3. Byte hashing sees three
     payloads; depth-normalized sample hashing sees one signal."""
-    import struct
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                grp = i // 3
-                bits = 8 * (1 + i % 3)
-                vals = [(11 * grp + 17 * k) % 200 - 100 for k in range(16)]
-                if bits == 8:
-                    data = bytes(128 + v for v in vals)
-                elif bits == 16:
-                    data = b"".join(
-                        (v * 256).to_bytes(2, "little", signed=True) for v in vals
-                    )
-                else:
-                    data = b"".join(
-                        (v * 65536).to_bytes(3, "little", signed=True) for v in vals
-                    )
-                block = bits // 8
-                fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000 * block, block, bits)
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                )
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    bits = 8 * (1 + i % 3)
+    vals = [(11 * (i // 3) + 17 * k) % 200 - 100 for k in range(16)]
+    if bits == 8:
+        data = bytes(128 + v for v in vals)
+    elif bits == 16:
+        data = b"".join((v * 256).to_bytes(2, "little", signed=True) for v in vals)
+    else:
+        data = b"".join((v * 65536).to_bytes(3, "little", signed=True) for v in vals)
+    return _riff_wav(1, 1, 8000, bits, data)
 
 
-def synthesize_multiformat_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def multiformat_payload(i: int) -> bytes:
     """Every 3 consecutive doc_ids share ONE raster (group = doc_id // 3:
     w = 2 + group % 5, h = 1 + group % 4, color r=(41g+7)%256,
     g=(83g+29)%256, b=(29g+171)%256) but store it in a DIFFERENT lossless
     container — BMP, PNG, or GIF by doc_id % 3. The canonical fixture for
     container-invariant dedup: byte-level hashing sees three distinct
     payloads, pixel-level hashing sees one image."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                grp = i // 3
-                w, h = 2 + grp % 5, 1 + grp % 4
-                r, g, b = (41 * grp + 7) % 256, (83 * grp + 29) % 256, (29 * grp + 171) % 256
-                rows = [[[b, g, r]] * w for _ in range(h)]
-                fmt = i % 3
-                if fmt == 0:
-                    payloads.append(PixelDecoder.encode_bmp(rows))
-                elif fmt == 1:
-                    payloads.append(PixelDecoder.encode_png(rows))
-                else:
-                    payloads.append(GifDecoder.encode_gif(rows))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    grp = i // 3
+    w, h = 2 + grp % 5, 1 + grp % 4
+    r, g, b = (41 * grp + 7) % 256, (83 * grp + 29) % 256, (29 * grp + 171) % 256
+    rows = [[[b, g, r]] * w for _ in range(h)]
+    encode = (PixelDecoder.encode_bmp, PixelDecoder.encode_png, GifDecoder.encode_gif)
+    return encode[i % 3](rows)
 
 
 def audio_sample_stats(
@@ -2794,143 +2410,91 @@ def audio_sample_stats(
     sample count, sum, min, max. Non-PCM payloads yield nulls."""
     decoder = decoder or PixelDecoder()
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                id_col: pdf[id_col].values,
-                "n_samples": [],
-                "sample_sum": [],
-                "sample_min": [],
-                "sample_max": [],
-            }
-            for p in pdf[payload_col]:
-                vals = None if p is None else decoder.decode_audio_samples(bytes(p))
-                if not vals:
-                    for k in ("n_samples", "sample_sum", "sample_min", "sample_max"):
-                        out[k].append(None)
-                else:
-                    out["n_samples"].append(len(vals))
-                    out["sample_sum"].append(sum(vals))
-                    out["sample_min"].append(min(vals))
-                    out["sample_max"].append(max(vals))
-            yield pd.DataFrame(out)
+    def row(p):
+        vals = None if p is None else decoder.decode_audio_samples(p)
+        return (len(vals), sum(vals), min(vals), max(vals)) if vals else None
 
-    return df.select(id_col, payload_col).mapInPandas(
-        op,
-        _id_field(df, id_col)
-        + ", n_samples bigint, sample_sum bigint, sample_min bigint, sample_max bigint",
+    return map_payloads(
+        df,
+        row,
+        "n_samples bigint, sample_sum bigint, sample_min bigint, sample_max bigint",
+        payload_col,
+        id_col,
     )
 
 
-def synthesize_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _png_chunk(tag: bytes, body: bytes) -> bytes:
+    return (
+        struct.pack(">I", len(body))
+        + tag
+        + body
+        + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
+    )
+
+
+def _png(ihdr: bytes, idat: bytes) -> bytes:
+    """PNG signature + IHDR + one IDAT + IEND, with correct CRCs."""
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", idat)
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def png_payload(i: int) -> bytes:
     """Build REAL PNG bytes per row (valid signature/IHDR/IDAT/IEND with
     correct CRCs) sized by the id: width = 16 + id%64, height =
     16 + (7·id)%64, color type cycling 0/2/4/6. IDAT carries a minimal
     zlib stream — header parsing never reads it, and keeping it tiny makes
     the synthesis O(1) per row regardless of nominal dimensions."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 16 + i % 64, 16 + (7 * i) % 64
-                color_type = (0, 2, 4, 6)[i % 4]
-                ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n"
-                    + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(b""))
-                    + chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    w, h = 16 + i % 64, 16 + (7 * i) % 64
+    color_type = (0, 2, 4, 6)[i % 4]
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
+    return _png(ihdr, zlib.compress(b""))
 
 
-def synthesize_png_raster_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _png_filtered(rows: list[list[list[int]]], i: int) -> bytes:
+    """Forward-filtered RGB scanlines of a top-down [B,G,R] raster: line y
+    gets filter type (id + y) % 5 against the previous line of ``rows``."""
+    raw = bytearray()
+    prior = bytearray(3 * len(rows[0]))
+    for y, px_row in enumerate(rows):
+        line = bytearray(c for px in px_row for c in px[::-1])  # RGB on the wire
+        ft = (i + y) % 5
+        out = bytearray(len(line))
+        for k in range(len(line)):
+            a = line[k - 3] if k >= 3 else 0
+            b = prior[k]
+            c = prior[k - 3] if k >= 3 else 0
+            if ft == 0:
+                pred = 0
+            elif ft == 1:
+                pred = a
+            elif ft == 2:
+                pred = b
+            elif ft == 3:
+                pred = (a + b) >> 1
+            else:
+                pred = PixelDecoder._paeth(a, b, c)
+            out[k] = (line[k] - pred) & 0xFF
+        raw.append(ft)
+        raw += out
+        prior = line
+    return bytes(raw)
+
+
+def png_raster_payload(i: int) -> bytes:
     """Build REAL 8-bit RGB PNG bytes per row with the SAME closed-form
-    raster as synthesize_bmp_payloads (w = 2+id%6, h = 1+id%5, pixel
+    raster as bmp_payload (w = 2+id%6, h = 1+id%5, pixel
     [B,G,R] = [(id+3x+7y)%256, (2id+5x+y)%256, (3id+x+11y)%256]) — so the
     BMP oracles' arithmetic applies verbatim — but stored as a compressed
     PNG whose scanline y is FORWARD-FILTERED with type (id+y) % 5. Every
     decode therefore exercises zlib inflate plus all five spec filters
     (None/Sub/Up/Average/Paeth), not just the trivial path."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                stride = w * 3
-                raw = bytearray()
-                prior = bytearray(stride)
-                for y in range(h):
-                    # RGB byte order on the wire; formula is [B,G,R]
-                    line = bytearray()
-                    for x in range(w):
-                        line += bytes(
-                            (
-                                (3 * i + x + 11 * y) % 256,  # R
-                                (2 * i + 5 * x + y) % 256,  # G
-                                (i + 3 * x + 7 * y) % 256,  # B
-                            )
-                        )
-                    ft = (i + y) % 5
-                    out = bytearray(stride)
-                    for k in range(stride):
-                        a = line[k - 3] if k >= 3 else 0
-                        b = prior[k]
-                        c = prior[k - 3] if k >= 3 else 0
-                        if ft == 0:
-                            pred = 0
-                        elif ft == 1:
-                            pred = a
-                        elif ft == 2:
-                            pred = b
-                        elif ft == 3:
-                            pred = (a + b) >> 1
-                        else:
-                            pred = PixelDecoder._paeth(a, b, c)
-                        out[k] = (line[k] - pred) & 0xFF
-                    raw.append(ft)
-                    raw += out
-                    prior = line
-                ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n"
-                    + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(bytes(raw)))
-                    + chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    w, h = 2 + i % 6, 1 + i % 5
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    return _png(ihdr, zlib.compress(_png_filtered(_bmp_rows(i), i)))
 
 
 # Adam7 pass geometry (PNG spec §8.2): (x0, dx, y0, dy) per pass 1..7.
@@ -2940,84 +2504,24 @@ ADAM7_PASSES = (
 )
 
 
-def synthesize_png_adam7_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def png_adam7_payload(i: int) -> bytes:
     """REAL Adam7-INTERLACED 8-bit RGB PNG bytes per row, same closed-form
-    raster as synthesize_png_raster_payloads (w = 2+id%6, h = 1+id%5,
+    raster as png_raster_payload (w = 2+id%6, h = 1+id%5,
     pixel [B,G,R] = [(id+3x+7y)%256, (2id+5x+y)%256, (3id+x+11y)%256]) but
     stored interlace=1: the seven spec passes in order, empty passes
     skipped entirely, each pass's scanline y_sub forward-filtered with
     type (id + y_sub) % 5 against the PASS's own prior line — so a decode
     exercises the full Adam7 reassembly scatter plus all five filters
     restarting per pass."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                raw = bytearray()
-                for x0, dx, y0, dy in ADAM7_PASSES:
-                    pw = (w - x0 + dx - 1) // dx
-                    ph = (h - y0 + dy - 1) // dy
-                    if pw <= 0 or ph <= 0:
-                        continue  # spec: empty passes contribute no bytes
-                    stride = pw * 3
-                    prior = bytearray(stride)
-                    for y_sub in range(ph):
-                        y = y0 + y_sub * dy
-                        line = bytearray()
-                        for x_sub in range(pw):
-                            x = x0 + x_sub * dx
-                            line += bytes(
-                                (
-                                    (3 * i + x + 11 * y) % 256,  # R
-                                    (2 * i + 5 * x + y) % 256,  # G
-                                    (i + 3 * x + 7 * y) % 256,  # B
-                                )
-                            )
-                        ft = (i + y_sub) % 5
-                        out = bytearray(stride)
-                        for k in range(stride):
-                            a = line[k - 3] if k >= 3 else 0
-                            b = prior[k]
-                            c = prior[k - 3] if k >= 3 else 0
-                            if ft == 0:
-                                pred = 0
-                            elif ft == 1:
-                                pred = a
-                            elif ft == 2:
-                                pred = b
-                            elif ft == 3:
-                                pred = (a + b) >> 1
-                            else:
-                                pred = PixelDecoder._paeth(a, b, c)
-                            out[k] = (line[k] - pred) & 0xFF
-                        raw.append(ft)
-                        raw += out
-                        prior = line
-                ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1)
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n"
-                    + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(bytes(raw)))
-                    + chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    rows = _bmp_rows(i)
+    h, w = len(rows), len(rows[0])
+    raw = b""
+    for x0, dx, y0, dy in ADAM7_PASSES:
+        sub = [rows[y][x0::dx] for y in range(y0, h, dy)]
+        if sub and sub[0]:  # spec: empty passes contribute no bytes
+            raw += _png_filtered(sub, i)
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1)
+    return _png(ihdr, zlib.compress(raw))
 
 
 def adam7_pass_stats(
@@ -3082,30 +2586,14 @@ def decode_audio_metadata(
     libs). Non-WAV payloads yield nulls for the audio fields rather than
     failing the batch — filter on `format IS NOT NULL` downstream."""
     decoder = decoder or HeaderDecoder()
+    cols = ("format", "n_channels", "sample_rate", "bits_per_sample")
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [
-                decoder.sniff_audio(b"" if p is None else bytes(p))
-                for p in pdf[payload_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "byte_len": [
-                        0 if p is None else len(bytes(p))
-                        for p in pdf[payload_col]
-                    ],
-                    "format": [m["format"] if m else None for m in metas],
-                    "n_channels": [m["n_channels"] if m else None for m in metas],
-                    "sample_rate": [m["sample_rate"] if m else None for m in metas],
-                    "bits_per_sample": [m["bits_per_sample"] if m else None for m in metas],
-                }
-            )
+    def row(p):
+        p = p or b""
+        m = decoder.sniff_audio(p)
+        return (len(p), *(m[c] if m else None for c in cols))
 
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", " + AUDIO_META_SCHEMA
-    )
+    return map_payloads(df, row, AUDIO_META_SCHEMA, payload_col, id_col)
 
 
 def resize_images(
@@ -3121,25 +2609,11 @@ def resize_images(
     written straight to the sink partition that holds the input row."""
     decoder = decoder or FakeDecoder()
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                decoder.resize(b"" if p is None else bytes(p), width, height)
-                for p in pdf[payload_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "payload": out,
-                    "width": width,
-                    "height": height,
-                    "byte_len": [len(b) for b in out],
-                }
-            )
+    def row(p):
+        out = decoder.resize(p or b"", width, height)
+        return out, width, height, len(out)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", " + RESIZE_SCHEMA
-    )
+    return map_payloads(df, row, RESIZE_SCHEMA, payload_col, id_col)
 
 
 def extract_features(
@@ -3154,21 +2628,8 @@ def extract_features(
     forward pass behind the decoder seam; batch size stays Arrow-bounded so
     accelerator batching maps 1:1 onto these pandas batches."""
     decoder = decoder or FakeDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "features": [
-                        decoder.features(b"" if p is None else bytes(p), dim)
-                        for p in pdf[payload_col]
-                    ],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", " + FEATURE_SCHEMA
+    return map_payloads(
+        df, lambda p: (decoder.features(p or b"", dim),), FEATURE_SCHEMA, payload_col, id_col
     )
 
 
@@ -3521,72 +2982,38 @@ class GifDecoder(PixelDecoder):
         return bytes(out)
 
 
-def synthesize_gif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def gif_payload(i: int) -> bytes:
     """Build REAL GIF89a bytes per row with the SAME closed-form raster as
-    synthesize_bmp_payloads (w = 2+id%6, h = 1+id%5, pixel [B,G,R] =
+    bmp_payload (w = 2+id%6, h = 1+id%5, pixel [B,G,R] =
     [(id+3x+7y)%256, (2id+5x+y)%256, (3id+x+11y)%256]; <= 35 pixels per
     image keeps the palette under GIF's 256-color limit) — LZW-compressed
     through the real variable-width encoder, so every decode exercises the
     full dictionary-growth path."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                rows = [
-                    [
-                        [
-                            (i + 3 * x + 7 * y) % 256,
-                            (2 * i + 5 * x + y) % 256,
-                            (3 * i + x + 11 * y) % 256,
-                        ]
-                        for x in range(w)
-                    ]
-                    for y in range(h)
-                ]
-                payloads.append(GifDecoder.encode_gif(rows))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return GifDecoder.encode_gif(_bmp_rows(i))
 
 
-def synthesize_animated_gif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def animated_gif_payload(i: int) -> bytes:
     """REAL animated GIF89a per row: n_frames = 2 + id%3 full-size frames,
     w = 2+id%6, h = 1+id%5, frame f pixel [B,G,R] =
     [(id+3x+7y+13f)%256, (2id+5x+y+17f)%256, (3id+x+11y+19f)%256] — the
     BMP/PNG closed-form family extended by a frame term, so per-frame
     checksums have pure-arithmetic oracles."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h, nf = 2 + i % 6, 1 + i % 5, 2 + i % 3
-                frames = [
-                    [
-                        [
-                            [
-                                (i + 3 * x + 7 * y + 13 * f) % 256,
-                                (2 * i + 5 * x + y + 17 * f) % 256,
-                                (3 * i + x + 11 * y + 19 * f) % 256,
-                            ]
-                            for x in range(w)
-                        ]
-                        for y in range(h)
-                    ]
-                    for f in range(nf)
+    w, h, nf = 2 + i % 6, 1 + i % 5, 2 + i % 3
+    frames = [
+        [
+            [
+                [
+                    (i + 3 * x + 7 * y + 13 * f) % 256,
+                    (2 * i + 5 * x + y + 17 * f) % 256,
+                    (3 * i + x + 11 * y + 19 * f) % 256,
                 ]
-                payloads.append(GifDecoder.encode_gif_animated(frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+                for x in range(w)
+            ]
+            for y in range(h)
+        ]
+        for f in range(nf)
+    ]
+    return GifDecoder.encode_gif_animated(frames)
 
 
 def gif_frame_stats(
@@ -4269,8 +3696,6 @@ class JpegDecoder(GifDecoder):
             if acc == 0xFF:
                 bits.append(0x00)
 
-        import struct
-
         sof = struct.pack(">BHHB", precision, h, w, 1) + bytes([1, 0x11, 0])
         nv = sum(dc_bits)
         dht = bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals[:nv])
@@ -4882,7 +4307,7 @@ class JpegDecoder(GifDecoder):
         return bytes(out)
 
 
-def synthesize_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def jpeg_payload(i: int) -> bytes:
     """REAL baseline grayscale JPEG per row: w = 2+id%6, h = 1+id%5,
     constant gray value (37*id + 11) % 256, DC quant step 8. The constant
     raster makes the lossy pipeline exactly verifiable: the quantized DC
@@ -4890,46 +4315,19 @@ def synthesize_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     reconstructs the flat value with pure integer arithmetic, so
     decode(encode(img)) == img bit-for-bit — while the encoder/decoder
     still run the full FDCT/Huffman machinery."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                val = (37 * i + 11) % 256
-                payloads.append(JpegDecoder.encode_jpeg_gray([[val] * w for _ in range(h)]))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    w, h = 2 + i % 6, 1 + i % 5
+    return JpegDecoder.encode_jpeg_gray([[(37 * i + 11) % 256] * w for _ in range(h)])
 
 
-def synthesize_jpeg12_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def jpeg12_payload(i: int) -> bytes:
     """REAL 12-bit extended-sequential (SOF1) grayscale JPEG per row:
     w = 2+id%6, h = 1+id%5, constant sample (37·id + 991) % 4096 at DC
     quant 8. The flat raster reconstructs bit-exactly through the
     DC-only integer path and presents as the high 8 bits, so px_sum has
     a pure-arithmetic oracle: w·h·3·(v12 >> 4)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                v12 = (37 * i + 991) % 4096
-                payloads.append(
-                    JpegDecoder.encode_jpeg_gray(
-                        [[v12] * w for _ in range(h)], precision=12
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    w, h = 2 + i % 6, 1 + i % 5
+    v12 = (37 * i + 991) % 4096
+    return JpegDecoder.encode_jpeg_gray([[v12] * w for _ in range(h)], precision=12)
 
 
 def _jpeg_fdct_quant(block, quant):
@@ -5213,127 +4611,57 @@ def encode_jpeg_color(
     return bytes(out)
 
 
-def synthesize_jpeg_color_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _jpeg_color_rows(i: int) -> list[list[list[int]]]:
+    """The constant-color [B,G,R] raster every color-JPEG layout encodes:
+    w = 2+id%6, h = 1+id%5, R=(37id+11)%256, G=(91id+53)%256,
+    B=(13id+199)%256."""
+    w, h = 2 + i % 6, 1 + i % 5
+    r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
+    return [[[b, g, r]] * w for _ in range(h)]
+
+
+def jpeg_color_payload(i: int) -> bytes:
     """REAL baseline 4:4:4 color JPEG per row: w = 2+id%6, h = 1+id%5,
     constant color R=(37id+11)%256, G=(91id+53)%256, B=(13id+199)%256.
     Constant planes make the full color pipeline exactly verifiable: the
     YCbCr transform uses floor(x+0.5) rounding reproducible in SQL, and
     constant Y/Cb/Cr blocks hit the integral-DC / DC-only-IDCT path."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
-                payloads.append(encode_jpeg_color([[[b, g, r]] * w for _ in range(h)]))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return encode_jpeg_color(_jpeg_color_rows(i))
 
 
-def synthesize_jpeg_420_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def jpeg_420_payload(i: int) -> bytes:
     """Same closed-form constant-color rasters as
-    synthesize_jpeg_color_payloads but encoded 4:2:0 (2x2-subsampled
+    jpeg_color_payload but encoded 4:2:0 (2x2-subsampled
     chroma, 16x16 MCUs of 4 Y + Cb + Cr blocks) — constant chroma
     survives the 2x2 mean exactly, so the SAME color oracle applies while
     the decode exercises the interleaved multi-block MCU path."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
-                payloads.append(
-                    encode_jpeg_color([[[b, g, r]] * w for _ in range(h)], subsample=True)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return encode_jpeg_color(_jpeg_color_rows(i), subsample=True)
 
 
-def synthesize_jpeg_dri_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def jpeg_dri_payload(i: int) -> bytes:
     """Same closed-form constant-color rasters but encoded with a
     restart interval of 1 (an RSTn marker after EVERY MCU — the maximum
     restart density): exercises byte realignment, marker stripping, and
     DC-predictor resets at every boundary, under the same color oracle."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
-                payloads.append(
-                    encode_jpeg_color(
-                        [[[b, g, r]] * w for _ in range(h)], restart_interval=1
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return encode_jpeg_color(_jpeg_color_rows(i), restart_interval=1)
 
 
-def synthesize_jpeg_422_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def jpeg_422_payload(i: int) -> bytes:
     """Same closed-form constant-color rasters as
-    synthesize_jpeg_color_payloads but encoded 4:2:2 (horizontal-only
+    jpeg_color_payload but encoded 4:2:2 (horizontal-only
     chroma subsampling, 16x8 MCUs of 2 Y + Cb + Cr blocks) — constant
     chroma survives the 2-pixel mean exactly, so the SAME color oracle
     applies while the decode exercises the (2,1) sampling-factor walk."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
-                payloads.append(
-                    encode_jpeg_color(
-                        [[[b, g, r]] * w for _ in range(h)], subsample="422"
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return encode_jpeg_color(_jpeg_color_rows(i), subsample="422")
 
 
-def synthesize_jpeg_411_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def jpeg_411_payload(i: int) -> bytes:
     """Same closed-form constant-color rasters as the other JPEG color
-    synthesizers but encoded 4:1:1 (DV/NTSC: chroma quartered
+    encoders but encoded 4:1:1 (DV/NTSC: chroma quartered
     horizontally, 32x8 MCUs of 4 Y + Cb + Cr) — constant chroma survives
     the 4-pixel mean exactly, so the SAME color oracle applies while the
     decode exercises the (4,1) sampling-factor walk."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
-                payloads.append(
-                    encode_jpeg_color(
-                        [[[b, g, r]] * w for _ in range(h)], subsample="411"
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return encode_jpeg_color(_jpeg_color_rows(i), subsample="411")
 
 
 def encode_jpeg_progressive(
@@ -5605,104 +4933,56 @@ def encode_jpeg_progressive(
     return bytes(out)
 
 
-def _jpeg_refined_synth_op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Batch-level refined-progressive-JPEG synth seam: (doc_id) batches →
-    (doc_id, payload) batches. Module-level so the fused synth+decode
-    stage composes the SAME encode function the standalone stage runs."""
-    for pdf in batches:
-        payloads = []
-        for i in pdf["doc_id"]:
-            i = int(i)
-            w, h = 2 + i % 6, 1 + i % 5
-            r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
-            payloads.append(
-                encode_jpeg_progressive(
-                    [[[b, g, r]] * w for _ in range(h)], successive=True
-                )
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-
-def synthesize_jpeg_refined_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Same constant-color rasters as synthesize_jpeg_color_payloads but
+def jpeg_refined_payload(i: int) -> bytes:
+    """Same constant-color rasters as jpeg_color_payload but
     encoded progressive WITH successive approximation (two precision
     passes: Al=1 first scans, then Ah=1 DC/AC refinement scans) — the
     same closed-form color oracle applies while the decode exercises the
     full G.1.2.2/G.1.2.3 refinement machinery."""
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        _jpeg_refined_synth_op, "doc_id bigint, payload binary"
-    )
+    return encode_jpeg_progressive(_jpeg_color_rows(i), successive=True)
 
 
-def synthesize_jpeg_refined_pixel_stats(
-    df: DataFrame, id_col: str = "doc_id", decoder=None
-) -> DataFrame:
+def synthesize_jpeg_refined_pixel_stats(df: DataFrame, decoder=None) -> DataFrame:
     """Fused synth+decode for the refined-progressive tier (guide §4: the
     JVM↔Python boundary is the cost — the two-stage form shipped every
     payload's bytes across Arrow TWICE, synth-out then decode-in, plus a
-    second Python-worker round trip). This runs the SAME two batch seams
-    (_jpeg_refined_synth_op |> _pixel_stats_op) composed inside ONE
-    mapInPandas stage, so payload bytes never leave the Python worker at
-    all; results are identical by construction (generator composition is
-    exactly the two-stage dataflow minus the serialization)."""
-    decoder = decoder or JpegDecoder()
-    decode = _pixel_stats_op(decoder, "payload", "doc_id")
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return decode(_jpeg_refined_synth_op(batches))
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, width int, height int, px_sum bigint"
+    second Python-worker round trip). This runs the batch functions of
+    the two seams — the SAME ones synthesize_payloads(df,
+    jpeg_refined_payload) and pixel_stats run (_synth_batches |>
+    _row_batches) — composed inside ONE mapInPandas stage, so payload
+    bytes never leave the Python worker at all; results are identical by
+    construction (generator composition is exactly the two-stage dataflow
+    minus the serialization)."""
+    synth = _synth_batches(jpeg_refined_payload)
+    stats = _row_batches(
+        _pixel_row(decoder or JpegDecoder(), _px_sum),
+        PIXEL_STATS_SCHEMA,
+        "payload",
+        "doc_id",
+    )
+    return df.select("doc_id").mapInPandas(
+        lambda batches: stats(synth(batches)), "doc_id bigint, " + PIXEL_STATS_SCHEMA
     )
 
 
-def synthesize_jpeg_progressive_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Same constant-color rasters as synthesize_jpeg_color_payloads but
+def jpeg_progressive_payload(i: int) -> bytes:
+    """Same constant-color rasters as jpeg_color_payload but
     encoded PROGRESSIVE (SOF2: interleaved DC scan + per-component
     spectral-selection AC scans) — the same closed-form color oracle
     applies while the decode exercises multi-scan coefficient
     accumulation and EOB-run handling."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 2 + i % 6, 1 + i % 5
-                r, g, b = (37 * i + 11) % 256, (91 * i + 53) % 256, (13 * i + 199) % 256
-                payloads.append(
-                    encode_jpeg_progressive([[[b, g, r]] * w for _ in range(h)])
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
-    )
+    return encode_jpeg_progressive(_jpeg_color_rows(i))
 
 
-def synthesize_jpeg_exif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def jpeg_exif_payload(i: int) -> bytes:
     """REAL JPEGs with an APP1/Exif orientation tag, closed-form: every
     fourth doc has NO Exif (fields must come back NULL); the rest carry
     orientation 1 + id % 8 with the TIFF byte order alternating II/MM by
     id parity — both endiannesses exercised through real bytes."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                payloads.append(
-                    JpegDecoder.encode_jpeg_gray(
-                        [[(37 * i + 11) % 256] * 8] * 8,
-                        exif_orientation=None if i % 4 == 0 else 1 + i % 8,
-                        exif_byte_order="II" if i % 2 == 0 else "MM",
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        op, "doc_id bigint, payload binary"
+    return JpegDecoder.encode_jpeg_gray(
+        [[(37 * i + 11) % 256] * 8] * 8,
+        exif_orientation=None if i % 4 == 0 else 1 + i % 8,
+        exif_byte_order="II" if i % 2 == 0 else "MM",
     )
 
 
@@ -5714,19 +4994,9 @@ def decode_exif_orientation(
     rasters splits one photo into up to 8 'distinct' images. Narrow
     Arrow map; payloads never shuffle."""
     decoder = decoder or HeaderDecoder()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {id_col: pdf[id_col].values, "orientation": [], "byte_order": []}
-            for p in pdf[payload_col]:
-                meta = None if p is None else decoder.sniff_exif_orientation(bytes(p))
-                out["orientation"].append(None if meta is None else meta["orientation"])
-                out["byte_order"].append(None if meta is None else meta["byte_order"])
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op, _id_field(df, id_col) + ", orientation int, byte_order string"
-    )
+    schema = "orientation int, byte_order string"
+    row = _meta_row(decoder.sniff_exif_orientation, schema)
+    return map_payloads(df, row, schema, payload_col, id_col)
 
 
 def audio_resample_stats(
@@ -5740,41 +5010,22 @@ def audio_resample_stats(
     narrow map; payload bytes never shuffle."""
     decoder = decoder or PixelDecoder()
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                id_col: pdf[id_col].values,
-                "n_out": [],
-                "out_sum": [],
-                "out_min": [],
-                "out_max": [],
-            }
-            for p in pdf[payload_col]:
-                payload = None if p is None else bytes(p)
-                meta = None if payload is None else decoder.sniff_audio(payload)
-                vals = (
-                    decoder.decode_audio_samples(payload)
-                    if meta is not None and meta["n_channels"] == 1
-                    else None
-                )
-                if not vals or len(vals) < 2:
-                    for k in ("n_out", "out_sum", "out_min", "out_max"):
-                        out[k].append(None)
-                    continue
-                # >> 1 is floor division toward -inf, matching the
-                # oracle's FLOOR((s0 + s1) / 2.0) for negative sums too
-                res = [
-                    (vals[2 * k] + vals[2 * k + 1]) >> 1
-                    for k in range(len(vals) // 2)
-                ]
-                out["n_out"].append(len(res))
-                out["out_sum"].append(sum(res))
-                out["out_min"].append(min(res))
-                out["out_max"].append(max(res))
-            yield pd.DataFrame(out)
+    def row(p):
+        meta = None if p is None else decoder.sniff_audio(p)
+        if meta is None or meta["n_channels"] != 1:
+            return None
+        vals = decoder.decode_audio_samples(p)
+        if not vals or len(vals) < 2:
+            return None
+        # >> 1 is floor division toward -inf, matching the
+        # oracle's FLOOR((s0 + s1) / 2.0) for negative sums too
+        res = [(vals[2 * k] + vals[2 * k + 1]) >> 1 for k in range(len(vals) // 2)]
+        return len(res), sum(res), min(res), max(res)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        op,
-        _id_field(df, id_col)
-        + ", n_out bigint, out_sum bigint, out_min bigint, out_max bigint",
+    return map_payloads(
+        df,
+        row,
+        "n_out bigint, out_sum bigint, out_min bigint, out_max bigint",
+        payload_col,
+        id_col,
     )

@@ -77,78 +77,69 @@ _LOADED = False
 # turn the tree red, which is exactly what happened at the r5/r6
 # boundary (r5 VERDICT "What's wrong" #1). Bump this whenever the
 # window rotates.
-DRIVER_SAMPLE_WINDOW_ROUND = 10
+DRIVER_SAMPLE_WINDOW_ROUND = 11
 
 DRIVER_SAMPLE_WINDOW = [
-    # ROUND-10 ROTATION (r9 verdict "Next round" #2). Policy unchanged:
-    # never-driver-oracle-verified first, then the stalest records; ZERO
-    # slots on rows-only queries — a rows-only re-sample buys no new
-    # signal once a rows-only record exists (the r9 window's one lapse,
-    # multimodal_phash_neardup, is exactly what this list must not
-    # repeat; the staleness ratchet in tests/test_registry_order.py
-    # encodes the policy).
+    # ROUND-11 ROTATION. Policy unchanged: never-driver-oracle-verified
+    # first (none remain), then the stalest records; ZERO slots on
+    # rows-only queries. Staleness is judged on the artifacts that
+    # existed before this round (CORRECTNESS_r01..r10).
     #
-    # -- the nine r10 additions (never sampled by construction): the
-    #    unigram-LM Viterbi segmenter, the six streaming queries
-    #    (sliding panes, replay dedup, merging session windows,
-    #    update-mode running state, inner and LEFT OUTER stream-stream
-    #    interval joins), the DSIR example selector, and the composed
-    #    media curation pipeline. --
-    "text_sentencepiece_tokens",
-    "q_window_sliding_stream",
-    "q_stream_dedup_replay",
-    "q_session_window_stream",
-    "q_running_aggregate_stream",
-    "q_stream_stream_join",
-    "q_stream_join_outer",
-    "sample_dsir_select",
-    "pipeline_media_dedup_shard",
-    # -- the full remaining round-4 cohort (33 oracle-backed queries
-    #    whose newest green is CORRECTNESS_r04, 6 rounds stale — the
-    #    16 other r4 records were re-greened in the r9 window). --
-    "dedup_canonical_pick",
-    "dedup_simhash",
-    "dedup_fuzzy_names",
-    "dedup_cdc_chunks",
-    "embedding_quantize_pq",
-    "embedding_quantize_int8",
-    "embedding_quantize_int4",
-    "embedding_random_projection",
-    "embedding_matryoshka",
-    "similarity_topk_pq_adc",
-    "similarity_topk_ivfpq",
-    "similarity_hard_negatives",
-    "text_gopher_rules",
-    "text_length_band_filter",
-    "text_blocklist_filter",
-    "text_bpe_exact",
-    "text_hybrid_rrf",
-    "text_oov_rate",
-    "sample_cluster_split",
-    "sample_negative_pairs",
-    "sample_unimax_mix",
-    "graph_degree_distribution",
-    "sketch_hll_registers",
-    "sketch_hll_union",
-    "sketch_kmv_distinct",
-    "sketch_theta_overlap",
-    "q_merge_into",
-    "q_scd2_history",
-    "q_ohlc_downsample",
-    "q_gap_detection",
-    "q_first_touch_attribution",
-    "q_zorder_layout",
-    "q_compaction_plan",
-    # -- 8 of the 48 round-5 records (5 rounds stale), registration
-    #    order; the remaining 40 head the r11 rotation. --
-    "dedup_duplicate_spans",
-    "multimodal_jfif_real",
-    "dedup_savings_report",
-    "text_retrieval_eval",
-    "multimodal_exif_real",
-    "text_unigram_logprob",
-    "text_char_entropy",
-    "graph_clustering_coeff",
+    # -- the full remaining round-5 cohort (40 oracle-backed queries whose
+    #    newest green is CORRECTNESS_r05, the stalest records), in
+    #    registration order. --
+    "similarity_ivf_recall",
+    "multimodal_mulaw_real",
+    "embedding_center_project",
+    "multimodal_qoi_real",
+    "multimodal_tiff_pixels_real",
+    "graph_assortativity",
+    "q_psi_drift",
+    "q_benford_digits",
+    "q_fd_violations",
+    "multimodal_wav_resample",
+    "text_kl_source_drift",
+    "graph_harmonic_centrality",
+    "dedup_soft_weights",
+    "sketch_ams_f2",
+    "sample_weighted_reservoir",
+    "q_moving_zscore",
+    "q_ewma_smooth",
+    "q_interp_gapfill",
+    "q_mad_outliers",
+    "q_running_distinct",
+    "q_event_transitions",
+    "q_temporal_lookup",
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q5_local_supplier_volume",
+    "q18_large_volume_customer",
+    "q_snapshot_diff",
+    "q_file_skip_stats",
+    "q2_min_acctbal_supplier",
+    "q13_customer_distribution",
+    "q14_promo_revenue",
+    "q15_top_supplier",
+    "q16_supplier_count",
+    "q17_small_quantity_revenue",
+    "q19_disjunctive_revenue",
+    "q22_idle_customers",
+    "q11_important_parts",
+    "q12_ship_priority_class",
+    "q20_excess_part_suppliers",
+    "q21_last_shipper",
+    # -- 10 of the 50 round-6 records (the next-stalest), registration
+    #    order; the remaining 40 head the r12 rotation. --
+    "dedup_exact",
+    "dedup_minhash_lsh_pairs",
+    "embedding_quantize_binary",
+    "similarity_topk_hamming",
+    "similarity_mmr_rerank",
+    "similarity_binary_rerank",
+    "graph_jaccard_neighbors",
+    "multimodal_jpeg_lossless_real",
+    "sample_poisson_bootstrap",
+    "wordcount",
 ]
 
 

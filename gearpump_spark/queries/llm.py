@@ -1299,11 +1299,12 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_image_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         decode_image_metadata,
-        synthesize_png_payloads,
+        png_payload,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    parsed = decode_image_metadata(synthesize_png_payloads(docs))
+    parsed = decode_image_metadata(synthesize_payloads(docs, png_payload))
     return parsed.select("doc_id", "format", "width", "height", "n_channels").orderBy(
         "doc_id"
     )
@@ -1327,11 +1328,12 @@ def multimodal_image_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_audio_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         decode_audio_metadata,
-        synthesize_wav_payloads,
+        synthesize_payloads,
+        wav_payload,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    parsed = decode_audio_metadata(synthesize_wav_payloads(docs))
+    parsed = decode_audio_metadata(synthesize_payloads(docs, wav_payload))
     return parsed.select(
         "doc_id", "byte_len", "format", "n_channels", "sample_rate", "bits_per_sample"
     ).orderBy("doc_id")
@@ -2303,7 +2305,7 @@ def text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.boilerplate_stats(docs, shingle_n=2, min_doc_frac=0.02).orderBy("doc_id")
 
 
-# Closed-form BMP raster dims (synthesize_bmp_payloads): w=2+id%6, h=1+id%5.
+# Closed-form BMP raster dims (bmp_payload): w=2+id%6, h=1+id%5.
 _BMP_W = "(2 + doc_id % 6)"
 _BMP_H = "(1 + doc_id % 5)"
 
@@ -2311,7 +2313,7 @@ _BMP_H = "(1 + doc_id % 5)"
 def _bmp_px_sum_sql(sx: str, sy: str, n: str) -> str:
     """DuckDB closed-form sum of all three channel bytes over `n` pixels,
     sampling source coordinates (sx, sy) as expressions of flat index k —
-    mirrors synthesize_bmp_payloads' pixel formula exactly."""
+    mirrors bmp_payload's pixel formula exactly."""
     return f"""CAST(LIST_SUM(LIST_TRANSFORM(RANGE(0, {n}), k ->
           (doc_id + 3 * ({sx}) + 7 * ({sy})) % 256
         + (2 * doc_id + 5 * ({sx}) + ({sy})) % 256
@@ -2335,12 +2337,13 @@ def _bmp_px_sum_sql(sx: str, sy: str, n: str) -> str:
 )
 def multimodal_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
+        bmp_payload,
         pixel_stats,
-        synthesize_bmp_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_bmp_payloads(docs)).orderBy("doc_id")
+    return pixel_stats(synthesize_payloads(docs, bmp_payload)).orderBy("doc_id")
 
 
 @register(
@@ -2362,14 +2365,15 @@ def multimodal_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         PixelDecoder,
+        bmp_payload,
         pixel_stats,
         resize_images,
-        synthesize_bmp_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
     resized = resize_images(
-        synthesize_bmp_payloads(docs), width=3, height=2, decoder=PixelDecoder()
+        synthesize_payloads(docs, bmp_payload), width=3, height=2, decoder=PixelDecoder()
     )
     return pixel_stats(resized).orderBy("doc_id")
 
@@ -2398,11 +2402,12 @@ def multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_audio_samples_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         audio_sample_stats,
-        synthesize_wav_payloads,
+        synthesize_payloads,
+        wav_payload,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return audio_sample_stats(synthesize_wav_payloads(docs)).orderBy("doc_id")
+    return audio_sample_stats(synthesize_payloads(docs, wav_payload)).orderBy("doc_id")
 
 
 @register(
@@ -3581,11 +3586,12 @@ def embedding_quantize_int4(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_png_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         pixel_stats,
-        synthesize_png_raster_payloads,
+        png_raster_payload,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_png_raster_payloads(docs)).orderBy("doc_id")
+    return pixel_stats(synthesize_payloads(docs, png_raster_payload)).orderBy("doc_id")
 
 
 @register(
@@ -3622,16 +3628,17 @@ def multimodal_png_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cannot localize an interlace bug)",
 )
 def multimodal_png_adam7_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """operators/multimodal.py synthesize_png_adam7_payloads +
+    """operators/multimodal.py png_adam7_payload +
     adam7_pass_stats: Arrow-batched narrow maps, payload bytes never
     shuffle, <=7 output rows per image."""
     from gearpump_spark.operators.multimodal import (
         adam7_pass_stats,
-        synthesize_png_adam7_payloads,
+        png_adam7_payload,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return adam7_pass_stats(synthesize_png_adam7_payloads(docs)).orderBy(
+    return adam7_pass_stats(synthesize_payloads(docs, png_adam7_payload)).orderBy(
         "doc_id", "pass_no"
     )
 
@@ -3655,13 +3662,14 @@ def multimodal_png_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         PixelDecoder,
         pixel_stats,
+        png_raster_payload,
         resize_images,
-        synthesize_png_raster_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
     resized = resize_images(
-        synthesize_png_raster_payloads(docs), width=3, height=2, decoder=PixelDecoder()
+        synthesize_payloads(docs, png_raster_payload), width=3, height=2, decoder=PixelDecoder()
     )
     return pixel_stats(resized).orderBy("doc_id")
 
@@ -3804,12 +3812,13 @@ def text_strip_html(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_gif_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         GifDecoder,
+        gif_payload,
         pixel_stats,
-        synthesize_gif_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_gif_payloads(docs), decoder=GifDecoder()).orderBy(
+    return pixel_stats(synthesize_payloads(docs, gif_payload), decoder=GifDecoder()).orderBy(
         "doc_id"
     )
 
@@ -3836,12 +3845,13 @@ def multimodal_gif_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_gif_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
+        animated_gif_payload,
         gif_frame_stats,
-        synthesize_animated_gif_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return gif_frame_stats(synthesize_animated_gif_payloads(docs)).orderBy(
+    return gif_frame_stats(synthesize_payloads(docs, animated_gif_payload)).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -3991,12 +4001,13 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_jpeg_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         JpegDecoder,
+        jpeg_payload,
         pixel_stats,
-        synthesize_jpeg_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_jpeg_payloads(docs), decoder=JpegDecoder()).orderBy(
+    return pixel_stats(synthesize_payloads(docs, jpeg_payload), decoder=JpegDecoder()).orderBy(
         "doc_id"
     )
 
@@ -4020,12 +4031,13 @@ def multimodal_jpeg_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_jpeg12_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         JpegDecoder,
+        jpeg12_payload,
         pixel_stats,
-        synthesize_jpeg12_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_jpeg12_payloads(docs), decoder=JpegDecoder()).orderBy(
+    return pixel_stats(synthesize_payloads(docs, jpeg12_payload), decoder=JpegDecoder()).orderBy(
         "doc_id"
     )
 
@@ -4058,17 +4070,21 @@ _SQL_JC = f"""
         FROM ycc)
 """
 
-
-@register(
-    "multimodal_jpeg_color_real",
-    oracle=f"""
+# The one oracle of every constant-color JPEG layout (color, 420, dri,
+# 422, 411, progressive, refined): each decodes to the same flat raster.
+_SQL_JC_PX_SUM = f"""
     WITH {_SQL_JC}
     SELECT d.doc_id,
            CAST({_BMP_W} AS INT) AS width,
            CAST({_BMP_H} AS INT) AS height,
            CAST({_BMP_W} * {_BMP_H} * (eb + eg + er) AS BIGINT) AS px_sum
     FROM dec d JOIN documents USING (doc_id) ORDER BY d.doc_id
-    """,
+    """
+
+
+@register(
+    "multimodal_jpeg_color_real",
+    oracle=_SQL_JC_PX_SUM,
     desc="REAL baseline 4:4:4 color JPEG decode: interleaved Y/Cb/Cr MCUs, "
     "per-component Huffman/dequant/IDCT, YCbCr->RGB with floor(x+0.5) "
     "rounding — the oracle replays the whole color round-trip in SQL "
@@ -4077,26 +4093,20 @@ _SQL_JC = f"""
 def multimodal_jpeg_color_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         JpegDecoder,
+        jpeg_color_payload,
         pixel_stats,
-        synthesize_jpeg_color_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
     return pixel_stats(
-        synthesize_jpeg_color_payloads(docs), decoder=JpegDecoder()
+        synthesize_payloads(docs, jpeg_color_payload), decoder=JpegDecoder()
     ).orderBy("doc_id")
 
 
 @register(
     "multimodal_jpeg_420_real",
-    oracle=f"""
-    WITH {_SQL_JC}
-    SELECT d.doc_id,
-           CAST({_BMP_W} AS INT) AS width,
-           CAST({_BMP_H} AS INT) AS height,
-           CAST({_BMP_W} * {_BMP_H} * (eb + eg + er) AS BIGINT) AS px_sum
-    FROM dec d JOIN documents USING (doc_id) ORDER BY d.doc_id
-    """,
+    oracle=_SQL_JC_PX_SUM,
     desc="REAL 4:2:0 chroma-subsampled JPEG decode (the wild's most common "
     "layout): 16x16 MCUs of four Y blocks + subsampled Cb/Cr, nearest "
     "upsample, YCbCr->RGB — constant chroma survives the 2x2 mean, so the "
@@ -4105,13 +4115,14 @@ def multimodal_jpeg_color_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_jpeg_420_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         JpegDecoder,
+        jpeg_420_payload,
         pixel_stats,
-        synthesize_jpeg_420_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
     return pixel_stats(
-        synthesize_jpeg_420_payloads(docs), decoder=JpegDecoder()
+        synthesize_payloads(docs, jpeg_420_payload), decoder=JpegDecoder()
     ).orderBy("doc_id")
 
 
@@ -4152,13 +4163,14 @@ def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost model, applied to images."""
     from gearpump_spark.operators.multimodal import (
         GifDecoder,
+        multiformat_payload,
         pixel_fingerprints,
-        synthesize_multiformat_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
     fps = pixel_fingerprints(
-        synthesize_multiformat_payloads(docs), decoder=GifDecoder()
+        synthesize_payloads(docs, multiformat_payload), decoder=GifDecoder()
     )
     return (
         fps.groupBy("pixel_fp")
@@ -4196,11 +4208,12 @@ def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_video_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         decode_video_metadata,
-        synthesize_mp4_payloads,
+        mp4_payload,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return decode_video_metadata(synthesize_mp4_payloads(docs)).orderBy("doc_id")
+    return decode_video_metadata(synthesize_payloads(docs, mp4_payload)).orderBy("doc_id")
 
 
 @register(
@@ -4226,11 +4239,12 @@ def multimodal_video_stsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     boxes (operators/multimodal.py sniff_video_tracks)."""
     from gearpump_spark.operators.multimodal import (
         decode_video_sample_tables,
-        synthesize_mp4_stsd_payloads,
+        mp4_stsd_payload,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return decode_video_sample_tables(synthesize_mp4_stsd_payloads(docs)).orderBy(
+    return decode_video_sample_tables(synthesize_payloads(docs, mp4_stsd_payload)).orderBy(
         "doc_id"
     )
 
@@ -4262,11 +4276,12 @@ def multimodal_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the groupBy — the exact-dedup cost model, applied to audio."""
     from gearpump_spark.operators.multimodal import (
         audio_fingerprints,
-        synthesize_multidepth_wav_payloads,
+        multidepth_wav_payload,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    fps = audio_fingerprints(synthesize_multidepth_wav_payloads(docs))
+    fps = audio_fingerprints(synthesize_payloads(docs, multidepth_wav_payload))
     return (
         fps.groupBy("audio_fp")
         .agg(
@@ -4294,12 +4309,13 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hamming-tolerant matching at scale, band the 64 bits into 4x16-bit
     keys and bucket-join (the SimHash pipeline), never all-pairs."""
     from gearpump_spark.operators.multimodal import (
+        noise_pair_payload,
         phash_fingerprints,
-        synthesize_noise_pair_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    fps = phash_fingerprints(synthesize_noise_pair_payloads(docs))
+    fps = phash_fingerprints(synthesize_payloads(docs, noise_pair_payload))
     return (
         fps.groupBy("phash")
         .agg(
@@ -4313,14 +4329,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_jpeg_dri_real",
-    oracle=f"""
-    WITH {_SQL_JC}
-    SELECT d.doc_id,
-           CAST({_BMP_W} AS INT) AS width,
-           CAST({_BMP_H} AS INT) AS height,
-           CAST({_BMP_W} * {_BMP_H} * (eb + eg + er) AS BIGINT) AS px_sum
-    FROM dec d JOIN documents USING (doc_id) ORDER BY d.doc_id
-    """,
+    oracle=_SQL_JC_PX_SUM,
     desc="REAL restart-marker JPEG decode (DRI interval 1: an RSTn after "
     "every MCU — byte realignment, marker stripping, DC-predictor reset "
     "at every boundary); the error-resilience feature most camera JPEGs "
@@ -4329,26 +4338,20 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_jpeg_dri_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         JpegDecoder,
+        jpeg_dri_payload,
         pixel_stats,
-        synthesize_jpeg_dri_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
     return pixel_stats(
-        synthesize_jpeg_dri_payloads(docs), decoder=JpegDecoder()
+        synthesize_payloads(docs, jpeg_dri_payload), decoder=JpegDecoder()
     ).orderBy("doc_id")
 
 
 @register(
     "multimodal_jpeg_422_real",
-    oracle=f"""
-    WITH {_SQL_JC}
-    SELECT d.doc_id,
-           CAST({_BMP_W} AS INT) AS width,
-           CAST({_BMP_H} AS INT) AS height,
-           CAST({_BMP_W} * {_BMP_H} * (eb + eg + er) AS BIGINT) AS px_sum
-    FROM dec d JOIN documents USING (doc_id) ORDER BY d.doc_id
-    """,
+    oracle=_SQL_JC_PX_SUM,
     desc="REAL 4:2:2 JPEG decode (horizontal-only chroma subsampling, "
     "16x8 MCUs of 2 Y + Cb + Cr blocks) — the broadcast/DV chroma layout; "
     "same closed-form color oracle as 4:4:4/4:2:0 since constant chroma "
@@ -4357,26 +4360,20 @@ def multimodal_jpeg_dri_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_jpeg_422_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         JpegDecoder,
+        jpeg_422_payload,
         pixel_stats,
-        synthesize_jpeg_422_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
     return pixel_stats(
-        synthesize_jpeg_422_payloads(docs), decoder=JpegDecoder()
+        synthesize_payloads(docs, jpeg_422_payload), decoder=JpegDecoder()
     ).orderBy("doc_id")
 
 
 @register(
     "multimodal_jpeg_411_real",
-    oracle=f"""
-    WITH {_SQL_JC}
-    SELECT d.doc_id,
-           CAST({_BMP_W} AS INT) AS width,
-           CAST({_BMP_H} AS INT) AS height,
-           CAST({_BMP_W} * {_BMP_H} * (eb + eg + er) AS BIGINT) AS px_sum
-    FROM dec d JOIN documents USING (doc_id) ORDER BY d.doc_id
-    """,
+    oracle=_SQL_JC_PX_SUM,
     desc="REAL 4:1:1 JPEG decode (DV/NTSC chroma layout: horizontal-only "
     "quarter subsampling, 32x8 MCUs of 4 Y + Cb + Cr) — with 4:4:0 "
     "round-trip-tested alongside, every spec-legal one-axis sampling "
@@ -4386,26 +4383,20 @@ def multimodal_jpeg_422_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_jpeg_411_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         JpegDecoder,
+        jpeg_411_payload,
         pixel_stats,
-        synthesize_jpeg_411_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
     return pixel_stats(
-        synthesize_jpeg_411_payloads(docs), decoder=JpegDecoder()
+        synthesize_payloads(docs, jpeg_411_payload), decoder=JpegDecoder()
     ).orderBy("doc_id")
 
 
 @register(
     "multimodal_jpeg_progressive_real",
-    oracle=f"""
-    WITH {_SQL_JC}
-    SELECT d.doc_id,
-           CAST({_BMP_W} AS INT) AS width,
-           CAST({_BMP_H} AS INT) AS height,
-           CAST({_BMP_W} * {_BMP_H} * (eb + eg + er) AS BIGINT) AS px_sum
-    FROM dec d JOIN documents USING (doc_id) ORDER BY d.doc_id
-    """,
+    oracle=_SQL_JC_PX_SUM,
     desc="REAL progressive-JPEG decode (SOF2): interleaved DC scan + "
     "per-component spectral-selection AC scans accumulate coefficients "
     "across scans before one IDCT — checked by the same closed-form color "
@@ -4415,26 +4406,20 @@ def multimodal_jpeg_411_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_jpeg_progressive_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         JpegDecoder,
+        jpeg_progressive_payload,
         pixel_stats,
-        synthesize_jpeg_progressive_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
     return pixel_stats(
-        synthesize_jpeg_progressive_payloads(docs), decoder=JpegDecoder()
+        synthesize_payloads(docs, jpeg_progressive_payload), decoder=JpegDecoder()
     ).orderBy("doc_id")
 
 
 @register(
     "multimodal_jpeg_refined_real",
-    oracle=f"""
-    WITH {_SQL_JC}
-    SELECT d.doc_id,
-           CAST({_BMP_W} AS INT) AS width,
-           CAST({_BMP_H} AS INT) AS height,
-           CAST({_BMP_W} * {_BMP_H} * (eb + eg + er) AS BIGINT) AS px_sum
-    FROM dec d JOIN documents USING (doc_id) ORDER BY d.doc_id
-    """,
+    oracle=_SQL_JC_PX_SUM,
     desc="REAL successive-approximation progressive-JPEG decode: Al=1 "
     "first scans then Ah=1 DC/AC refinement scans (spec G.1.2.2/G.1.2.3) "
     "rebuild full-precision coefficients across FOUR passes per component "
@@ -4652,7 +4637,7 @@ def text_bpe_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ahash_hashes_cte() -> str:
     """The WITH-body producing `hashes(doc_id, ahash)` — the closed-form
     mirror of the aHash pipeline over the LCG noise-pair fixture
-    (operators/multimodal.py synthesize_noise_pair_payloads): instead of
+    (operators/multimodal.py noise_pair_payload): instead of
     iterating the per-pixel LCG 384 times, each pixel k gets jump
     constants (a_k, b_k) with s_k = (a_k * s0 + b_k) mod 2^31 —
     generated here, shipped as a 384-row VALUES table. Blocks/threshold/
@@ -4724,14 +4709,15 @@ def multimodal_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-byte hashes reach the banded equi-join."""
     from gearpump_spark.operators.multimodal import (
         ahash_fingerprints,
+        noise_pair_payload,
         phash_candidate_pairs,
-        synthesize_noise_pair_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < 200
     )
-    fps = ahash_fingerprints(synthesize_noise_pair_payloads(docs))
+    fps = ahash_fingerprints(synthesize_payloads(docs, noise_pair_payload))
     return (
         phash_candidate_pairs(fps, max_hamming=3, hash_col="ahash")
         .select("id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming"))
@@ -4834,14 +4820,15 @@ def multimodal_phash_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora is phash_candidate_pairs, already plan-pinned under
     multimodal_ahash_neardup with the same hash column contract."""
     from gearpump_spark.operators.multimodal import (
+        noise_pair_payload,
         phash_int_fingerprints,
-        synthesize_noise_pair_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < 200
     )
-    fps = phash_int_fingerprints(synthesize_noise_pair_payloads(docs)).select(
+    fps = phash_int_fingerprints(synthesize_payloads(docs, noise_pair_payload)).select(
         "doc_id", "phash"
     )
     twin = fps.select(
@@ -5005,12 +4992,13 @@ def multimodal_video_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form so the REAL box walk is what's hash-checked."""
     from gearpump_spark.operators.multimodal import (
         decode_video_sample_tables,
-        synthesize_mp4_fps_payloads,
+        mp4_fps_payload,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
     out = decode_video_sample_tables(
-        synthesize_mp4_fps_payloads(docs), include_timing=True
+        synthesize_payloads(docs, mp4_fps_payload), include_timing=True
     )
     return out.select(
         "doc_id",
@@ -5988,11 +5976,12 @@ def multimodal_jfif_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     to every existing decode path (length-skipping marker walks)."""
     from gearpump_spark.operators.multimodal import (
         decode_jfif_metadata,
-        synthesize_jpeg_jfif_payloads,
+        jpeg_jfif_payload,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return decode_jfif_metadata(synthesize_jpeg_jfif_payloads(docs)).orderBy(
+    return decode_jfif_metadata(synthesize_payloads(docs, jpeg_jfif_payload)).orderBy(
         "doc_id"
     )
 
@@ -6224,11 +6213,12 @@ def multimodal_exif_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     APP1 is transparent to every decode path (length-skipping walks)."""
     from gearpump_spark.operators.multimodal import (
         decode_exif_orientation,
-        synthesize_jpeg_exif_payloads,
+        jpeg_exif_payload,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return decode_exif_orientation(synthesize_jpeg_exif_payloads(docs)).orderBy(
+    return decode_exif_orientation(synthesize_payloads(docs, jpeg_exif_payload)).orderBy(
         "doc_id"
     )
 
@@ -6597,11 +6587,12 @@ def multimodal_mulaw_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     map; payload bytes never shuffle, only 4 aggregate ints per doc do."""
     from gearpump_spark.operators.multimodal import (
         audio_sample_stats,
-        synthesize_wav_mulaw_payloads,
+        synthesize_payloads,
+        wav_mulaw_payload,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return audio_sample_stats(synthesize_wav_mulaw_payloads(docs)).orderBy("doc_id")
+    return audio_sample_stats(synthesize_payloads(docs, wav_mulaw_payload)).orderBy("doc_id")
 
 
 @register(
@@ -6649,11 +6640,12 @@ def multimodal_alaw_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     map; payload bytes never shuffle, only 4 aggregate ints per doc do."""
     from gearpump_spark.operators.multimodal import (
         audio_sample_stats,
-        synthesize_wav_alaw_payloads,
+        synthesize_payloads,
+        wav_alaw_payload,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return audio_sample_stats(synthesize_wav_alaw_payloads(docs)).orderBy("doc_id")
+    return audio_sample_stats(synthesize_payloads(docs, wav_alaw_payload)).orderBy("doc_id")
 
 
 @register(
@@ -6770,11 +6762,12 @@ def multimodal_qoi_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched narrow map; payloads never shuffle."""
     from gearpump_spark.operators.multimodal import (
         pixel_stats,
-        synthesize_qoi_payloads,
+        qoi_payload,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_qoi_payloads(docs)).orderBy("doc_id")
+    return pixel_stats(synthesize_payloads(docs, qoi_payload)).orderBy("doc_id")
 
 
 @register(
@@ -6802,11 +6795,12 @@ def multimodal_tiff_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     NORMALIZED gray sum x3 regardless of id % 3)."""
     from gearpump_spark.operators.multimodal import (
         pixel_stats,
-        synthesize_tiff_payloads,
+        synthesize_payloads,
+        tiff_payload,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_tiff_payloads(docs)).orderBy("doc_id")
+    return pixel_stats(synthesize_payloads(docs, tiff_payload)).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -7375,13 +7369,14 @@ def multimodal_jpeg_lossless_real(spark: SparkSession, sf_dir: str) -> DataFrame
     Arrow-batched narrow map; payloads never shuffle."""
     from gearpump_spark.operators.multimodal import (
         JpegDecoder,
+        jpeg_lossless_payload,
         pixel_stats,
-        synthesize_jpeg_lossless_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
     return pixel_stats(
-        synthesize_jpeg_lossless_payloads(docs), decoder=JpegDecoder()
+        synthesize_payloads(docs, jpeg_lossless_payload), decoder=JpegDecoder()
     ).orderBy("doc_id")
 
 
@@ -7732,11 +7727,12 @@ def multimodal_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form WAV corpus (mono = even doc ids); narrow Arrow map."""
     from gearpump_spark.operators.multimodal import (
         audio_resample_stats,
-        synthesize_wav_payloads,
+        synthesize_payloads,
+        wav_payload,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return audio_resample_stats(synthesize_wav_payloads(docs)).orderBy("doc_id")
+    return audio_resample_stats(synthesize_payloads(docs, wav_payload)).orderBy("doc_id")
 
 
 @register(
@@ -8175,11 +8171,12 @@ def multimodal_tiff_packbits_real(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle checks."""
     from gearpump_spark.operators.multimodal import (
         pixel_stats,
-        synthesize_tiff_packbits_payloads,
+        synthesize_payloads,
+        tiff_packbits_payload,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_tiff_packbits_payloads(docs)).orderBy("doc_id")
+    return pixel_stats(synthesize_payloads(docs, tiff_packbits_payload)).orderBy("doc_id")
 
 
 @register(
@@ -8769,18 +8766,19 @@ def pipeline_quality_dedup_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Windows-side RLE twin of the TIFF PackBits path)",
 )
 def multimodal_bmp_rle8_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """operators/multimodal.py synthesize_bmp_rle8_payloads /
+    """operators/multimodal.py bmp_rle8_payload /
     PixelDecoder._decode_bmp_rle8: per-byte RLE state machine with a
     2-D cursor (delta jumps) inside an Arrow-batched narrow map;
     payloads never shuffle. px_sum is storage-order-invariant, so the
     bottom-up flip cancels out of the oracle."""
     from gearpump_spark.operators.multimodal import (
+        bmp_rle8_payload,
         pixel_stats,
-        synthesize_bmp_rle8_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_bmp_rle8_payloads(docs)).orderBy("doc_id")
+    return pixel_stats(synthesize_payloads(docs, bmp_rle8_payload)).orderBy("doc_id")
 
 
 def _ppr_weighted_int_oracle(n_iter: int = 10, scale: int = 10**12, k: int = 5) -> str:
@@ -10052,14 +10050,15 @@ def pipeline_media_dedup_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.hashing import seeded_hash15
     from gearpump_spark.operators.multimodal import (
         ahash_fingerprints,
+        noise_pair_payload,
         phash_candidate_pairs,
-        synthesize_noise_pair_payloads,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < 200
     )
-    fps = ahash_fingerprints(synthesize_noise_pair_payloads(docs))
+    fps = ahash_fingerprints(synthesize_payloads(docs, noise_pair_payload))
     pairs = phash_candidate_pairs(fps, max_hamming=3, hash_col="ahash")
     surv = fps.join(
         pairs.select(F.col("id_b").alias("doc_id")).distinct(),

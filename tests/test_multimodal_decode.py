@@ -946,14 +946,15 @@ def test_phash_brightness_invariance_and_separation(spark):
     import numpy as np
 
     from gearpump_spark.operators.multimodal import (
+        noise_pair_payload,
         phash64,
         phash_fingerprints,
-        synthesize_noise_pair_payloads,
+        synthesize_payloads,
     )
 
     ids = spark.createDataFrame([(i,) for i in range(40)], "doc_id bigint")
     fps = {r.doc_id: r.phash for r in phash_fingerprints(
-        synthesize_noise_pair_payloads(ids)).collect()}
+        synthesize_payloads(ids, noise_pair_payload)).collect()}
     for g in range(20):
         assert fps[2 * g] == fps[2 * g + 1], g  # near-dup pair collides
     cross = [
@@ -1396,8 +1397,9 @@ def test_ahash63_brightness_invariance_and_pairing(spark):
     from gearpump_spark.operators.multimodal import (
         ahash63,
         ahash_fingerprints,
+        noise_pair_payload,
         phash_candidate_pairs,
-        synthesize_noise_pair_payloads,
+        synthesize_payloads,
     )
 
     base = [[[40 + (i * 37 + j * 11) % 160] * 3 for j in range(24)] for i in range(16)]
@@ -1406,7 +1408,7 @@ def test_ahash63_brightness_invariance_and_pairing(spark):
     assert 0 <= ahash63(base) < 1 << 63
 
     docs = spark.createDataFrame([(i,) for i in range(40)], "doc_id bigint")
-    fps = ahash_fingerprints(synthesize_noise_pair_payloads(docs))
+    fps = ahash_fingerprints(synthesize_payloads(docs, noise_pair_payload))
     rows = {r.doc_id: r.ahash for r in fps.collect()}
     got = {
         (r.id_a, r.id_b): r.hamming
@@ -1433,9 +1435,10 @@ def test_phash63_int_shift_invariance_and_twin_pairing(spark):
 
     from gearpump_spark.operators.multimodal import (
         _phash_int_basis,
+        noise_pair_payload,
         phash63_int,
         phash_int_fingerprints,
-        synthesize_noise_pair_payloads,
+        synthesize_payloads,
     )
 
     base = [[[40 + (i * 37 + j * 11) % 160] * 3 for j in range(24)] for i in range(16)]
@@ -1478,7 +1481,7 @@ def test_phash63_int_shift_invariance_and_twin_pairing(spark):
         phash63_int(deep)
 
     docs = spark.createDataFrame([(i,) for i in range(40)], "doc_id bigint")
-    fps = phash_int_fingerprints(synthesize_noise_pair_payloads(docs))
+    fps = phash_int_fingerprints(synthesize_payloads(docs, noise_pair_payload))
     rows = {r.doc_id: r.phash for r in fps.collect()}
     for g in range(20):
         assert rows[2 * g] == rows[2 * g + 1], g  # twins collide exactly
@@ -1680,13 +1683,14 @@ def test_tiff_decode_both_endians_photometric_and_strips(spark):
     multi-strip rasters (RowsPerStrip=2)."""
     from gearpump_spark.operators.multimodal import (
         PixelDecoder,
-        synthesize_tiff_payloads,
+        synthesize_payloads,
+        tiff_payload,
     )
 
     docs = spark.createDataFrame([(i,) for i in range(24)], "doc_id long")
     rows = {
         r["doc_id"]: bytes(r["payload"])
-        for r in synthesize_tiff_payloads(docs).collect()
+        for r in synthesize_payloads(docs, tiff_payload).collect()
     }
     dec = PixelDecoder()
     for i in range(24):
@@ -1759,14 +1763,15 @@ def test_tiff_packbits_decode_matches_formula(spark):
     are %7 == 0)."""
     from gearpump_spark.operators.multimodal import (
         pixel_stats,
-        synthesize_tiff_packbits_payloads,
+        synthesize_payloads,
+        tiff_packbits_payload,
     )
 
     ids = list(range(12)) + [42]
     df = spark.createDataFrame([(i,) for i in ids], "doc_id bigint")
     got = {
         r.doc_id: (r.width, r.height, r.px_sum)
-        for r in pixel_stats(synthesize_tiff_packbits_payloads(df)).collect()
+        for r in pixel_stats(synthesize_payloads(df, tiff_packbits_payload)).collect()
     }
     for i in ids:
         w, h = 3 + i % 9, 1 + i % 6
@@ -1785,15 +1790,16 @@ def test_bmp_rle8_decode_matches_formula(spark):
     raster for all four packet classes (encoded runs, absolute mode,
     pair runs, delta jumps with zero-defined skipped pixels)."""
     from gearpump_spark.operators.multimodal import (
+        bmp_rle8_payload,
         pixel_stats,
-        synthesize_bmp_rle8_payloads,
+        synthesize_payloads,
     )
 
     ids = list(range(16))
     df = spark.createDataFrame([(i,) for i in ids], "doc_id bigint")
     got = {
         r.doc_id: (r.width, r.height, r.px_sum)
-        for r in pixel_stats(synthesize_bmp_rle8_payloads(df)).collect()
+        for r in pixel_stats(synthesize_payloads(df, bmp_rle8_payload)).collect()
     }
     for i in ids:
         w, h = 4 + i % 8, 1 + i % 5
@@ -1968,3 +1974,99 @@ def test_qoi_giant_header_rejected_fast():
         + bytes([3, 0]) + b"\x00" * 16 + b"\x00" * 7 + b"\x01"
     )
     assert PixelDecoder().decode_pixels_arr(payload) is None
+
+
+# --- encoder golden bytes ----------------------------------------------------
+
+# md5 over the concatenated md5 digests of X_payload(i) for i = 0..63, one
+# entry per per-id encoder. Recorded from the batch synthesizers these
+# encoders replaced, so every format stays byte-identical — including the
+# ones whose queries are rows-only or whose oracles never read the bytes.
+ENCODER_GOLDEN_MD5 = {
+    "animated_gif": "9e7c62cbdd7ad37ac36eb8d26d2ceeb7",
+    "bmp": "6917a226158d24d0d28af50ef92b10cb",
+    "bmp_rle8": "84dfc0ce8c40cbce2a482c5da1ee3303",
+    "gif": "47d34ea77b4c9d83d18bdecf797cc44c",
+    "jpeg": "17aa501ba790a42e86d1be96bfcb12e9",
+    "jpeg12": "d69ca5f796bfcf832dd7a2b2918d3e6a",
+    "jpeg_411": "f24142b211927af4e51eab585e66d257",
+    "jpeg_420": "3ea108673f5f32dc41434b23e535d089",
+    "jpeg_422": "f9fed583f65297ccd4b05014e8f4d79d",
+    "jpeg_color": "0be4aa8b0d9b611d02f39fa910563358",
+    "jpeg_dri": "04318b0bd20cee1ac05563db6ba8ee4e",
+    "jpeg_exif": "8a6e6990a840cde32b216fa0062bf4aa",
+    "jpeg_jfif": "f88a67ddd36c2e784751769e057caa29",
+    "jpeg_lossless": "10b51c8f7ce4dfa4abbd1de927141613",
+    "jpeg_progressive": "7a6631b5bad65397c6442e70c142a386",
+    "jpeg_refined": "bd1f4c8bb584765cefa94dd8430d5274",
+    "mp4": "bf39c770cf74dc0950fca0db99e89468",
+    "mp4_fps": "4fe048bbd02e587373d9e2addec42c56",
+    "mp4_stsd": "b176baa3f03012f7f6245b3584a41a3e",
+    "multidepth_wav": "c9d77fe987026deae149000d1457bcd9",
+    "multiformat": "15433dc2f7d92b2072568ad8e79a0a5f",
+    "noise_pair": "13fe6c4e3d4ab00f7cb55838994b0136",
+    "png": "ac721a1f607fcedd406e943d2e17519f",
+    "png_adam7": "241808652db8c4a648a29f01e13a1e4c",
+    "png_raster": "bf775413cfaec6d59bd3b6e3081f1eeb",
+    "qoi": "98d7df03ee314a882736b0e17d90948b",
+    "tiff": "8c8b2859d816082b892f1c7f500eafb1",
+    "tiff_packbits": "11b4927543bea73b12893ed1f9e2562c",
+    "wav": "a4c0dd0a2c3963efe3186b2d864d8be6",
+    "wav_alaw": "b86493953ab76099a16e4a6d365af757",
+    "wav_mulaw": "53a33f9a8d8f64b83196965a2df3ec51",
+}
+
+
+@pytest.mark.parametrize("fmt", sorted(ENCODER_GOLDEN_MD5))
+def test_encoder_golden_bytes(fmt):
+    """Every per-id encoder emits exactly the pinned bytes for ids 0..63
+    (no Spark: the encoders are plain functions of the id)."""
+    import hashlib
+
+    import gearpump_spark.operators.multimodal as MM
+
+    encode = getattr(MM, f"{fmt}_payload")
+    digest = hashlib.md5(
+        b"".join(hashlib.md5(encode(i)).digest() for i in range(64))
+    ).hexdigest()
+    assert digest == ENCODER_GOLDEN_MD5[fmt]
+
+
+def test_malformed_payload_keeps_63bit_hashes_exact(spark):
+    """One undecodable payload in an Arrow batch must not change the
+    hashes of the valid images beside it: a null in a column of 63-bit
+    ints must not send the batch through float64 (which would round away
+    the low bits of every hash before the cast back to bigint)."""
+    from gearpump_spark.operators.multimodal import (
+        PixelDecoder,
+        ahash63,
+        ahash_fingerprints,
+        noise_pair_payload,
+        phash64,
+        phash63_int,
+        phash_fingerprints,
+        phash_int_fingerprints,
+    )
+
+    payloads = {i: noise_pair_payload(i) for i in range(16)}
+    payloads[16] = b"not an image"
+    df = spark.createDataFrame(
+        sorted((i, bytearray(p)) for i, p in payloads.items()),
+        "doc_id bigint, payload binary",
+    ).coalesce(1)  # one partition: the malformed row shares the batch
+    dec = PixelDecoder()
+    for op, col, hash_fn in (
+        (phash_fingerprints, "phash", phash64),
+        (ahash_fingerprints, "ahash", ahash63),
+        (phash_int_fingerprints, "phash", phash63_int),
+    ):
+        want = {
+            i: hash_fn(dec.decode_pixels_arr(p)["arr"])
+            for i, p in payloads.items()
+            if i != 16
+        }
+        # the fixture must hold hashes float64 cannot represent
+        assert any(h != int(float(h)) for h in want.values()), col
+        want[16] = None
+        got = {r.doc_id: r[col] for r in op(df).collect()}
+        assert got == want, col

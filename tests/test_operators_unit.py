@@ -2193,6 +2193,24 @@ class TestLinkPrediction:
         capped = self._predict(spark, edges, max_degree=3)
         assert capped == []  # hub excluded as wedge center -> no wedges
 
+    def test_hub_salted_wedges_match_pure_python(self, spark):
+        """Uncapped mode with a real hub: node 0 has degree 1100 (>= the
+        1024 hub gate), so its wedges run through the 16-way salted
+        branch. Scores must equal a brute-force common-neighbour count —
+        a salt that drops or duplicates hub wedges moves every leaf pair.
+        Extra leaf edges give pairs with common >= 2, so the top-k mixes
+        hub-only and hub-plus-other wedges."""
+        import random
+
+        rng = random.Random(11)
+        edges = [(0, i) for i in range(1, 1101)]
+        edges += [(rng.randint(1, 1100), rng.randint(1, 1130)) for _ in range(400)]
+        got = self._predict(spark, edges, k=3000)
+        want = self._python_truth(edges)
+        top = sorted(want.items(), key=lambda kv: (-kv[1][0], -kv[1][1], kv[0]))
+        assert [((r.u, r.v), (r.common, r.jaccard)) for r in got] == top[:3000]
+        assert {r.common for r in got} >= {1, 2}
+
 
 def test_cluster_safe_split_no_leakage(spark, sf_dir):
     """Every LSH candidate pair must land on ONE side of the split —

@@ -491,20 +491,21 @@ def test_multimodal_decode_pipelines_are_narrow(spark):
     from gearpump_spark.operators.multimodal import (
         GifDecoder,
         JpegDecoder,
+        animated_gif_payload,
         gif_frame_stats,
+        jpeg_progressive_payload,
         pixel_stats,
-        synthesize_animated_gif_payloads,
-        synthesize_jpeg_progressive_payloads,
-        synthesize_png_raster_payloads,
+        png_raster_payload,
+        synthesize_payloads,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id"
     )
     for df in (
-        pixel_stats(synthesize_png_raster_payloads(docs)),
-        pixel_stats(synthesize_jpeg_progressive_payloads(docs), decoder=JpegDecoder()),
-        gif_frame_stats(synthesize_animated_gif_payloads(docs)),
+        pixel_stats(synthesize_payloads(docs, png_raster_payload)),
+        pixel_stats(synthesize_payloads(docs, jpeg_progressive_payload), decoder=JpegDecoder()),
+        gif_frame_stats(synthesize_payloads(docs, animated_gif_payload)),
     ):
         p = plan(df)
         assert "Exchange" not in p
@@ -654,13 +655,14 @@ def test_video_stsd_walk_is_narrow(spark):
     never enter an exchange."""
     from gearpump_spark.operators.multimodal import (
         decode_video_sample_tables,
-        synthesize_mp4_stsd_payloads,
+        mp4_stsd_payload,
+        synthesize_payloads,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id"
     )
-    p = plan(decode_video_sample_tables(synthesize_mp4_stsd_payloads(docs)))
+    p = plan(decode_video_sample_tables(synthesize_payloads(docs, mp4_stsd_payload)))
     assert "Exchange" not in p
 
 
@@ -1267,11 +1269,12 @@ def test_adam7_audit_is_narrow_map(spark, sf_dir):
     from gearpump_spark.datasets import table
     from gearpump_spark.operators.multimodal import (
         adam7_pass_stats,
-        synthesize_png_adam7_payloads,
+        png_adam7_payload,
+        synthesize_payloads,
     )
 
     docs = table(spark, sf_dir, "documents", parallelize=False).select("doc_id")
-    p = plan(adam7_pass_stats(synthesize_png_adam7_payloads(docs)))
+    p = plan(adam7_pass_stats(synthesize_payloads(docs, png_adam7_payload)))
     assert "Exchange" not in p, "payloads must not shuffle"
 
 
@@ -1385,14 +1388,15 @@ def test_rle_codec_paths_are_narrow_maps(spark, sf_dir):
     Arrow-batched narrow maps: payload bytes never cross an exchange."""
     from gearpump_spark.datasets import table
     from gearpump_spark.operators.multimodal import (
+        bmp_rle8_payload,
         pixel_stats,
-        synthesize_bmp_rle8_payloads,
-        synthesize_tiff_packbits_payloads,
+        synthesize_payloads,
+        tiff_packbits_payload,
     )
 
     docs = table(spark, sf_dir, "documents", parallelize=False).select("doc_id")
-    for synth in (synthesize_tiff_packbits_payloads, synthesize_bmp_rle8_payloads):
-        p = plan(pixel_stats(synth(docs)))
+    for encoder in (tiff_packbits_payload, bmp_rle8_payload):
+        p = plan(pixel_stats(synthesize_payloads(docs, encoder)))
         assert "Exchange" not in p, "payloads must not shuffle"
 
 
@@ -1609,13 +1613,14 @@ def test_jpeg_refined_fused_single_arrow_stage(spark, sf_dir):
 
 def test_jpeg_refined_fused_matches_two_stage(spark):
     """The fused stage composes the SAME batch seams the two-stage form
-    runs (_jpeg_refined_synth_op |> _pixel_stats_op); results must be
+    runs (_synth_batches |> _row_batches); results must be
     identical row for row."""
     from gearpump_spark.operators.multimodal import (
         JpegDecoder,
+        jpeg_refined_payload,
         pixel_stats,
-        synthesize_jpeg_refined_payloads,
         synthesize_jpeg_refined_pixel_stats,
+        synthesize_payloads,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
@@ -1627,7 +1632,7 @@ def test_jpeg_refined_fused_matches_two_stage(spark):
     two_stage = sorted(
         tuple(r)
         for r in pixel_stats(
-            synthesize_jpeg_refined_payloads(docs), decoder=JpegDecoder()
+            synthesize_payloads(docs, jpeg_refined_payload), decoder=JpegDecoder()
         ).collect()
     )
     assert fused == two_stage and len(fused) == 500
