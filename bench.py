@@ -301,6 +301,7 @@ def main() -> None:
     )
 
     construction: dict[str, float] = {}
+    e2e: dict[str, float] = {}
 
     def run_best_of_2(name: str) -> float:
         # Best-of-2 at the target SF: run 1 still pays parquet footer reads
@@ -316,16 +317,23 @@ def main() -> None:
         # Reported as queries_construction_sec so the artifact states
         # explicitly what the timer does and does not include, without
         # changing the timed region round-over-round.
+        # End to end: e2e[name] is the best-of-2 of construction plus
+        # execution within one run, what a caller waits for;
+        # headline_e2e sums it over HEADLINE.
         best = float("inf")
         best_c = float("inf")
+        best_e = float("inf")
         for _ in range(2):
             c0 = time.perf_counter()
             df = qs[name](spark, SF_DIR)
-            best_c = min(best_c, time.perf_counter() - c0)
             t0 = time.perf_counter()
             df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
+            t1 = time.perf_counter()
+            best_c = min(best_c, t0 - c0)
+            best = min(best, t1 - t0)
+            best_e = min(best_e, t1 - c0)
         construction[name] = round(best_c, 3)
+        e2e[name] = round(best_e, 3)
         return round(best, 3)
 
     timings: dict[str, float] = {}
@@ -335,6 +343,7 @@ def main() -> None:
     for attempt in range(1, CANARY_MAX_ATTEMPTS + 1):
         timings = {}
         construction.clear()
+        e2e.clear()
         aborted = False
         for name in HEADLINE:
             timings[name] = run_best_of_2(name)
@@ -710,6 +719,10 @@ def main() -> None:
         # (triangle_count "auto" pays its strategy-selection count and the
         # kcore family runs its eager peel at construction time).
         "queries_construction_sec": construction,
+        # Construction + execution, best-of-2 per query; `value` above
+        # stays execution-only for one more round of comparisons.
+        "headline_e2e": round(sum(e2e.values()), 3),
+        "queries_e2e_sec": e2e,
         "sf": SF_DIR.rstrip("/").rsplit("sf", 1)[-1],
         "sol_passthrough_rows_per_sec": sol_rows_per_sec,
         "windowed_agg_rows_per_sec": windowed_rows_per_sec,

@@ -99,9 +99,3 @@ def _few_splits(path: str, target: int) -> bool:
         return n_files < max(2, target)
     except OSError:
         return False
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL entry point)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

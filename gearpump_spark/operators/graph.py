@@ -17,36 +17,75 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    max_iter: int = 20,
-    tol: float = 1e-6,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """PageRank over a directed edge list. Returns (node_id, rank).
-
-    Dangling-node mass is redistributed uniformly each round, matching
-    the reference (PageRankWorker.scala:55-63).
-    """
-    spark = edges.sparkSession
-    nodes = (
+def _node_set(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct endpoints of an edge list as one persisted ``node_id``
+    column; the caller unpersists it."""
+    return (
         edges.select(F.col(src).alias("node_id"))
         .union(edges.select(F.col(dst).alias("node_id")))
         .distinct()
         .persist()
     )
+
+
+def _seed_predicate(nodes: DataFrame, seeds: "list[int]", op_name: str):
+    """``node_id IN seeds``, after checking every seed is a node. A seed
+    absent from the graph would silently lose its restart mass while a
+    sequential reference raises on it — fail loudly instead (the
+    persisted ``nodes`` is released first)."""
+    is_seed = F.col("node_id").isin(seeds)
+    if nodes.where(is_seed).count() != len(seeds):
+        known = {r.node_id for r in nodes.where(is_seed).collect()}
+        unknown = sorted(s for s in seeds if s not in known)
+        nodes.unpersist()
+        raise ValueError(f"{op_name}: seeds not present in the graph: {unknown}")
+    return is_seed
+
+
+def _pagerank_loop(
+    edges: DataFrame,
+    seeds: "list[int] | None",
+    damping: float,
+    max_iter: int,
+    tol: float,
+    src: str,
+    dst: str,
+    op_name: str,
+) -> DataFrame:
+    """Shared float superstep loop behind `pagerank` (``seeds`` None:
+    restart set = all n nodes) and `personalized_pagerank` (restart set =
+    the k validated seeds). The rank update is picked once per variant,
+    so each keeps its own float evaluation order bit for bit. An
+    edge-free input returns an empty (node_id, rank) frame, and every
+    relation persisted here is released before returning.
+    """
+    nodes = _node_set(edges, src, dst)
     n = nodes.count()
     if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))  # empty graph: empty result
-    out_deg = edges.groupBy(src).agg(F.count("*").alias("out_deg"))
-
-    out_deg = out_deg.persist()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
+        nodes.unpersist()
+        return nodes.withColumn("rank", F.lit(0.0))
+    in_mass = F.coalesce(F.col("in_mass"), F.lit(0.0))
+    if seeds is None:
+        k, is_seed = n, F.lit(True)
+        new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * (
+            in_mass + F.col("dangling_mass") / F.lit(float(n))
+        )
+    else:
+        k, is_seed = len(seeds), _seed_predicate(nodes, seeds, op_name)
+        # teleport AND dangling mass restart to the seeds only
+        new_rank = (
+            F.when(is_seed, F.lit((1.0 - damping) / k)).otherwise(F.lit(0.0))
+            + F.lit(damping) * in_mass
+            + F.when(
+                is_seed, F.lit(damping) * F.col("dangling_mass") / F.lit(float(k))
+            ).otherwise(F.lit(0.0))
+        )
+    out_deg = edges.groupBy(src).agg(F.count("*").alias("out_deg")).persist()
+    ranks = nodes.withColumn(
+        "rank", F.when(is_seed, F.lit(1.0 / k)).otherwise(F.lit(0.0))
+    ).localCheckpoint()
 
     for _ in range(max_iter):
         # Dangling mass folds into the rank plan as a 1-row broadcast
@@ -71,17 +110,7 @@ def pagerank(
         new_ranks = (
             nodes.join(contribs.groupBy("node_id").agg(F.sum("c").alias("in_mass")), "node_id", "left")
             .crossJoin(F.broadcast(dangling_mass))
-            .select(
-                "node_id",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("in_mass"), F.lit(0.0))
-                        + F.col("dangling_mass") / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
+            .select("node_id", new_rank.alias("rank"))
             .localCheckpoint()  # truncate lineage: plan stays O(1) per round
         )
         delta = (
@@ -97,28 +126,20 @@ def pagerank(
     return ranks
 
 
-def pagerank_numpy_reference(edge_list, damping=0.85, max_iter=20, tol=1e-6):
-    """Tiny power-iteration oracle for tests (FIXTURES.md §B.6)."""
-    import numpy as np
+def pagerank(
+    edges: DataFrame,
+    damping: float = 0.85,
+    max_iter: int = 20,
+    tol: float = 1e-6,
+    src: str = "src",
+    dst: str = "dst",
+) -> DataFrame:
+    """PageRank over a directed edge list. Returns (node_id, rank).
 
-    nodes = sorted({a for a, _ in edge_list} | {b for _, b in edge_list})
-    idx = {v: i for i, v in enumerate(nodes)}
-    n = len(nodes)
-    out_deg = {v: 0 for v in nodes}
-    for a, _ in edge_list:
-        out_deg[a] += 1
-    r = np.full(n, 1.0 / n)
-    for _ in range(max_iter):
-        nr = np.full(n, (1.0 - damping) / n)
-        dangling = sum(r[idx[v]] for v in nodes if out_deg[v] == 0)
-        nr += damping * dangling / n
-        for a, b in edge_list:
-            nr[idx[b]] += damping * r[idx[a]] / out_deg[a]
-        if np.abs(nr - r).max() < tol:
-            r = nr
-            break
-        r = nr
-    return {v: float(r[idx[v]]) for v in nodes}
+    Dangling-node mass is redistributed uniformly each round, matching
+    the reference (PageRankWorker.scala:55-63).
+    """
+    return _pagerank_loop(edges, None, damping, max_iter, tol, src, dst, "pagerank")
 
 
 def personalized_pagerank(
@@ -144,123 +165,10 @@ def personalized_pagerank(
     (order-dependent sums) → rows-only query + numpy golden, like the
     float `pagerank`.
     """
-    spark = edges.sparkSession
-    if not seeds:
-        raise ValueError("personalized_pagerank needs a non-empty seed set")
-    if len({int(s) for s in seeds}) != len(seeds):
-        raise ValueError("personalized_pagerank: duplicate seeds")
-    nodes = (
-        edges.select(F.col(src).alias("node_id"))
-        .union(edges.select(F.col(dst).alias("node_id")))
-        .distinct()
-        .persist()
+    seeds = _validated_seeds(seeds, "personalized_pagerank")
+    return _pagerank_loop(
+        edges, seeds, damping, max_iter, tol, src, dst, "personalized_pagerank"
     )
-    n = nodes.count()
-    if n == 0:
-        nodes.unpersist()
-        return spark.createDataFrame([], "node_id long, rank double")
-    seed_df = F.broadcast(
-        spark.createDataFrame([(int(s),) for s in seeds], "node_id long")
-    )
-    k = len(seeds)
-    out_deg = edges.groupBy(src).agg(F.count("*").alias("out_deg")).persist()
-    ranks = nodes.join(seed_df, "node_id", "left_semi").withColumn(
-        "rank", F.lit(1.0 / k)
-    )
-    # A seed absent from the graph would silently lose restart mass here
-    # (the left_semi drops it) while the numpy golden raises KeyError —
-    # fail loudly on both sides instead of diverging.
-    present = ranks.count()
-    if present != k:
-        known = {r.node_id for r in ranks.select("node_id").collect()}
-        unknown = sorted(int(s) for s in seeds if int(s) not in known)
-        nodes.unpersist()
-        out_deg.unpersist()
-        raise ValueError(
-            f"personalized_pagerank: seeds not present in the graph: {unknown}"
-        )
-    # nodes outside the seed set start at 0 (the restart distribution)
-    ranks = (
-        nodes.join(ranks, "node_id", "left")
-        .select("node_id", F.coalesce("rank", F.lit(0.0)).alias("rank"))
-        .localCheckpoint()
-    )
-    is_seed = F.col("node_id").isin([int(s) for s in seeds])
-    for _ in range(max_iter):
-        dangling_mass = ranks.join(
-            out_deg, ranks.node_id == out_deg[src], "left_anti"
-        ).agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass"))
-        contribs = (
-            edges.join(out_deg, src)
-            .join(ranks, F.col(src) == ranks.node_id)
-            .select(
-                F.col(dst).alias("node_id"),
-                (F.col("rank") / F.col("out_deg")).alias("c"),
-            )
-        )
-        new_ranks = (
-            nodes.join(
-                contribs.groupBy("node_id").agg(F.sum("c").alias("in_mass")),
-                "node_id",
-                "left",
-            )
-            .crossJoin(F.broadcast(dangling_mass))
-            .select(
-                "node_id",
-                (
-                    F.when(is_seed, F.lit((1.0 - damping) / k)).otherwise(F.lit(0.0))
-                    + F.lit(damping) * F.coalesce(F.col("in_mass"), F.lit(0.0))
-                    + F.when(
-                        is_seed,
-                        F.lit(damping) * F.col("dangling_mass") / F.lit(float(k)),
-                    ).otherwise(F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-        delta = (
-            ranks.join(new_ranks.withColumnRenamed("rank", "new_rank"), "node_id")
-            .agg(F.max(F.abs(F.col("rank") - F.col("new_rank"))))
-            .collect()[0][0]
-        )
-        ranks = new_ranks
-        if delta is not None and delta < tol:
-            break
-    nodes.unpersist()
-    out_deg.unpersist()
-    return ranks
-
-
-def personalized_pagerank_numpy_reference(
-    edge_list, seeds, damping=0.85, max_iter=20, tol=1e-6
-):
-    """Tiny RWR oracle mirroring personalized_pagerank exactly."""
-    import numpy as np
-
-    nodes = sorted({a for a, _ in edge_list} | {b for _, b in edge_list})
-    idx = {v: i for i, v in enumerate(nodes)}
-    n = len(nodes)
-    k = len(seeds)
-    out_deg = {v: 0 for v in nodes}
-    for a, _ in edge_list:
-        out_deg[a] += 1
-    r = np.zeros(n)
-    for s in seeds:
-        r[idx[s]] = 1.0 / k
-    for _ in range(max_iter):
-        nr = np.zeros(n)
-        for s in seeds:
-            nr[idx[s]] += (1.0 - damping) / k
-        dangling = sum(r[idx[v]] for v in nodes if out_deg[v] == 0)
-        for s in seeds:
-            nr[idx[s]] += damping * dangling / k
-        for a, b in edge_list:
-            nr[idx[b]] += damping * r[idx[a]] / out_deg[a]
-        if np.abs(nr - r).max() < tol:
-            r = nr
-            break
-        r = nr
-    return {v: float(r[idx[v]]) for v in nodes}
 
 
 def _pagerank_int_loop(
@@ -282,12 +190,7 @@ def _pagerank_int_loop(
     is the one documented on the public wrappers; this function exists
     only to keep the four loops from drifting apart.
     """
-    nodes = (
-        e.select(F.col("src").alias("node_id"))
-        .union(e.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .persist()
-    )
+    nodes = _node_set(e, "src", "dst")
     n = nodes.count()
     if n == 0 and seeds is None:
         nodes.unpersist()
@@ -298,14 +201,7 @@ def _pagerank_int_loop(
         seed_share = f"dm DIV {n}L"
     else:
         kk = len(seeds)
-        is_seed = F.col("node_id").isin(seeds)
-        if nodes.where(is_seed).count() != kk:
-            known = {r.node_id for r in nodes.where(is_seed).collect()}
-            unknown = sorted(s for s in seeds if s not in known)
-            nodes.unpersist()
-            raise ValueError(
-                f"{op_name}: seeds not present in the graph: {unknown}"
-            )
+        is_seed = _seed_predicate(nodes, seeds, op_name)
         seed_pred = "node_id IN (" + ",".join(map(str, seeds)) + ")"
         seed_share = f"CASE WHEN {seed_pred} THEN dm DIV {kk}L ELSE 0L END"
     out_w = e.groupBy("src").agg(F.sum("w").cast("long").alias("tw")).persist()
@@ -578,6 +474,24 @@ def connected_components(
     return labels.select("node_id", "comp")
 
 
+def _canonical_undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Canonical undirected edge list (u, v) with u < v: self-loops
+    dropped, each unordered pair once."""
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
+        F.col("a") != F.col("b")
+    )
+    return e.select(
+        F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
+    ).distinct()
+
+
+def _adjacency(und: DataFrame) -> DataFrame:
+    """Both directions of a canonical edge list as (n, nb) rows."""
+    return und.select(F.col("u").alias("n"), F.col("v").alias("nb")).union(
+        und.select(F.col("v").alias("n"), F.col("u").alias("nb"))
+    )
+
+
 def triangle_count_estimate(
     edges: DataFrame,
     p_bp: int = 2000,
@@ -606,12 +520,7 @@ def triangle_count_estimate(
     """
     from gearpump_spark.operators.hashing import seeded_hash15
 
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
-        F.col("a") != F.col("b")
-    )
-    und = e.select(
-        F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-    ).distinct()
+    und = _canonical_undirected(edges, src, dst)
     # The canonical edge list is consumed by EVERY downstream leg — the
     # sample filter (whose triangle_count consumes it ~6 more times:
     # degrees, both orientation joins, both wedge sides, the closing set),
@@ -883,13 +792,7 @@ def triangle_count(
     if assume_canonical:
         und = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     else:
-        e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
-            F.col("a") != F.col("b")
-        )
-        # canonical undirected form, deduped
-        und = e.select(
-            F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-        ).distinct()
+        und = _canonical_undirected(edges, src, dst)
     if close_strategy == "auto":
         und = und.localCheckpoint()
         m = und.count()  # cheap: counts the checkpointed blocks
@@ -1252,21 +1155,14 @@ def link_predict_common_neighbors(
     only for celebrity nodes, which co-occurrence recommenders exclude
     anyway). Default None = exact.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
-        F.col("a") != F.col("b")
-    )
-    und = e.select(
-        F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-    ).distinct()
+    und = _canonical_undirected(edges, src, dst)
     # The canonical edge list feeds FOUR consumers (both adjacency
     # directions, the degree agg, and the anti-join); materialize it once
     # so the possibly-expensive upstream edge derivation doesn't re-run
     # per consumer. Lazy (r11): blocks materialize at first action, so
     # construction stays side-effect-free.
     und = und.localCheckpoint(eager=False)
-    adj = und.select(F.col("u").alias("n"), F.col("v").alias("nb")).union(
-        und.select(F.col("v").alias("n"), F.col("u").alias("nb"))
-    )
+    adj = _adjacency(und)
     deg = adj.groupBy("n").agg(F.count("*").alias("d"))
     centers = adj
     if max_degree is not None:
@@ -1387,15 +1283,8 @@ def khop_distances(
 
     `sources` is a 1-column frame of start nodes (deduped here).
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
-        F.col("a") != F.col("b")
-    )
-    und = e.select(
-        F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-    ).distinct()
-    adj = und.select(F.col("u").alias("n"), F.col("v").alias("nb")).union(
-        und.select(F.col("v").alias("n"), F.col("u").alias("nb"))
-    ).localCheckpoint()
+    und = _canonical_undirected(edges, src, dst)
+    adj = _adjacency(und).localCheckpoint()
     frontier = (
         sources.select(F.col(sources.columns[0]).alias(node_col))
         .distinct()
@@ -1442,12 +1331,7 @@ def clustering_coefficient(
     (coefficients on a p-sampled graph concentrate for deg·p ≫ 1). The
     top-n cut is a TakeOrdered, never a global sort.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
-        F.col("a") != F.col("b")
-    )
-    und = e.select(
-        F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-    ).distinct()
+    und = _canonical_undirected(edges, src, dst)
     # one materialization: degrees, orientation, wedges, closing set and
     # the final degree join all read these blocks (triangle-estimate
     # lesson: staying lazy re-derives the upstream per consumer). Eager
@@ -1524,17 +1408,8 @@ def khop_distances_labeled(
     round; work is O(Σ_seeds Σ frontier edges) — the multi-source BSP
     BFS. Per-round localCheckpoint cuts lineage.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
-        F.col("a") != F.col("b")
-    )
-    und = e.select(
-        F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-    ).distinct()
-    adj = (
-        und.select(F.col("u").alias("n"), F.col("v").alias("nb"))
-        .union(und.select(F.col("v").alias("n"), F.col("u").alias("nb")))
-        .localCheckpoint()
-    )
+    und = _canonical_undirected(edges, src, dst)
+    adj = _adjacency(und).localCheckpoint()
     frontier = (
         sources.select(F.col(sources.columns[0]).alias("seed"))
         .distinct()

@@ -35,6 +35,88 @@ _SQL_SHINGLES = """
     )
 """
 
+# Graph inputs. Each DataFrame builder has one DuckDB CTE twin that the
+# oracles format in, so every graph query and its oracle read one graph.
+
+
+def _copurchase_edges(
+    spark: SparkSession, sf_dir: str, sample: bool = False
+) -> DataFrame:
+    """Co-purchase graph: one (src, dst) row per pair of distinct parts
+    bought in one order, src < dst. ``sample`` keeps only the orders with
+    l_orderkey % 10 = 0."""
+    li = table(spark, sf_dir, "lineitem")
+    if sample:
+        li = li.where(F.col("l_orderkey") % 10 == 0)
+    items = li.select("l_orderkey", "l_partkey").distinct()
+    a, b = items.alias("a"), items.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
+        .distinct()
+    )
+
+
+def _sql_copurchase(sample: bool = False) -> str:
+    """CTE fragment defining ``copurchase(u, v)``: `_copurchase_edges`."""
+    where = " WHERE l_orderkey % 10 = 0" if sample else ""
+    return f"""
+    cp_items AS (
+        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem{where}),
+    copurchase AS (
+        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+        FROM cp_items a JOIN cp_items b
+          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)"""
+
+
+def _shipment_edges(
+    spark: SparkSession, sf_dir: str, weighted: bool = False
+) -> DataFrame:
+    """Part -> supplier shipment graph: src = l_partkey + 1,000,000 (so part
+    and supplier ids never collide), dst = l_suppkey. Distinct edges, or
+    with ``weighted`` one edge per pair carrying w = SUM(l_quantity)."""
+    li = table(spark, sf_dir, "lineitem")
+    src = (F.col("l_partkey") + F.lit(1_000_000)).alias("src")
+    dst = F.col("l_suppkey").alias("dst")
+    if weighted:
+        w = F.sum(F.col("l_quantity").cast("long")).alias("w")
+        return li.groupBy(src, dst).agg(w)
+    return li.select(src, dst).distinct()
+
+
+def _personalized_shipment(
+    spark: SparkSession, sf_dir: str, weighted: bool = False
+) -> "tuple[DataFrame, list[int]]":
+    """Both directions of the shipment graph plus the restart seeds, the 5
+    lowest supplier ids. The part -> supplier digraph alone makes every
+    supplier dangling, so a walk restarted AT suppliers would never leave
+    the seed set; the bipartite supplier <-> part walk diffuses: seeds ->
+    their parts -> co-supplying suppliers -> ..."""
+    ps = _shipment_edges(spark, sf_dir, weighted)
+    rev = ps.select(
+        F.col("dst").alias("src"), F.col("src").alias("dst"), *ps.columns[2:]
+    )
+    seeds = ps.select("dst").distinct().orderBy("dst").limit(5).collect()
+    return ps.unionByName(rev), [r[0] for r in seeds]
+
+
+def _sql_shipment(weighted: bool = False) -> str:
+    """CTE fragment defining ``ps(src, dst, w)``: `_shipment_edges`, with
+    w = 1 on the distinct form. w is BIGINT like the operator's long
+    column; a HUGEINT w (DuckDB's SUM type) made the PageRank oracle
+    chain 3-4x slower at sf0.1."""
+    w = "SUM(CAST(l_quantity AS BIGINT))" if weighted else "1"
+    return f"""
+    ps AS MATERIALIZED (
+        SELECT l_partkey + 1000000 AS src, l_suppkey AS dst,
+               CAST({w} AS BIGINT) AS w
+        FROM lineitem GROUP BY 1, 2)"""
+
+
 # ---------------------------------------------------------------------------
 # Dedup family
 # ---------------------------------------------------------------------------
@@ -926,7 +1008,7 @@ def _kcore_oracle() -> str:
     degree count -> survivor filter -> edge restriction, per round, all
     integer. MATERIALIZED everywhere — each round references the previous
     edge set three times."""
-    return 'WITH\n    kitems AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),\n    ke0 AS MATERIALIZED (\n        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v\n        FROM kitems a JOIN kitems b\n          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),\n    kd0 AS MATERIALIZED (\n        SELECT n, COUNT(*) AS c FROM (\n            SELECT u AS n FROM ke0 UNION ALL SELECT v FROM ke0) GROUP BY n),\n    ka0 AS MATERIALIZED (SELECT n FROM kd0 WHERE c >= 60),\n    ke1 AS MATERIALIZED (\n        SELECT u, v FROM ke0\n        WHERE u IN (SELECT n FROM ka0) AND v IN (SELECT n FROM ka0)),\n    kd1 AS MATERIALIZED (\n        SELECT n, COUNT(*) AS c FROM (\n            SELECT u AS n FROM ke1 UNION ALL SELECT v FROM ke1) GROUP BY n),\n    ka1 AS MATERIALIZED (SELECT n FROM kd1 WHERE c >= 60),\n    ke2 AS MATERIALIZED (\n        SELECT u, v FROM ke1\n        WHERE u IN (SELECT n FROM ka1) AND v IN (SELECT n FROM ka1)),\n    kd2 AS MATERIALIZED (\n        SELECT n, COUNT(*) AS c FROM (\n            SELECT u AS n FROM ke2 UNION ALL SELECT v FROM ke2) GROUP BY n),\n    ka2 AS MATERIALIZED (SELECT n FROM kd2 WHERE c >= 60),\n    ke3 AS MATERIALIZED (\n        SELECT u, v FROM ke2\n        WHERE u IN (SELECT n FROM ka2) AND v IN (SELECT n FROM ka2)),\n    kd3 AS MATERIALIZED (\n        SELECT n, COUNT(*) AS c FROM (\n            SELECT u AS n FROM ke3 UNION ALL SELECT v FROM ke3) GROUP BY n),\n    ka3 AS MATERIALIZED (SELECT n FROM kd3 WHERE c >= 60),\n    ke4 AS MATERIALIZED (\n        SELECT u, v FROM ke3\n        WHERE u IN (SELECT n FROM ka3) AND v IN (SELECT n FROM ka3)),\n    kdf AS (\n        SELECT n, COUNT(*) AS c FROM (\n            SELECT u AS n FROM ke4 UNION ALL SELECT v FROM ke4) GROUP BY n)\n    SELECT n AS node, CAST(c AS BIGINT) AS deg FROM kdf WHERE c >= 60\n    ORDER BY node'
+    return 'WITH' + _sql_copurchase() + ',\n    kd0 AS MATERIALIZED (\n        SELECT n, COUNT(*) AS c FROM (\n            SELECT u AS n FROM copurchase UNION ALL SELECT v FROM copurchase) GROUP BY n),\n    ka0 AS MATERIALIZED (SELECT n FROM kd0 WHERE c >= 60),\n    ke1 AS MATERIALIZED (\n        SELECT u, v FROM copurchase\n        WHERE u IN (SELECT n FROM ka0) AND v IN (SELECT n FROM ka0)),\n    kd1 AS MATERIALIZED (\n        SELECT n, COUNT(*) AS c FROM (\n            SELECT u AS n FROM ke1 UNION ALL SELECT v FROM ke1) GROUP BY n),\n    ka1 AS MATERIALIZED (SELECT n FROM kd1 WHERE c >= 60),\n    ke2 AS MATERIALIZED (\n        SELECT u, v FROM ke1\n        WHERE u IN (SELECT n FROM ka1) AND v IN (SELECT n FROM ka1)),\n    kd2 AS MATERIALIZED (\n        SELECT n, COUNT(*) AS c FROM (\n            SELECT u AS n FROM ke2 UNION ALL SELECT v FROM ke2) GROUP BY n),\n    ka2 AS MATERIALIZED (SELECT n FROM kd2 WHERE c >= 60),\n    ke3 AS MATERIALIZED (\n        SELECT u, v FROM ke2\n        WHERE u IN (SELECT n FROM ka2) AND v IN (SELECT n FROM ka2)),\n    kd3 AS MATERIALIZED (\n        SELECT n, COUNT(*) AS c FROM (\n            SELECT u AS n FROM ke3 UNION ALL SELECT v FROM ke3) GROUP BY n),\n    ka3 AS MATERIALIZED (SELECT n FROM kd3 WHERE c >= 60),\n    ke4 AS MATERIALIZED (\n        SELECT u, v FROM ke3\n        WHERE u IN (SELECT n FROM ka3) AND v IN (SELECT n FROM ka3)),\n    kdf AS (\n        SELECT n, COUNT(*) AS c FROM (\n            SELECT u AS n FROM ke4 UNION ALL SELECT v FROM ke4) GROUP BY n)\n    SELECT n AS node, CAST(c AS BIGINT) AS deg FROM kdf WHERE c >= 60\n    ORDER BY node'
 
 
 @register(
@@ -947,18 +1029,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase/co-citation cores locate template/boilerplate clusters."""
     from gearpump_spark.operators.graph import kcore
 
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     return kcore(edges, k=60, n_rounds=4).orderBy("node")
 
 
@@ -966,14 +1037,10 @@ def _lpa_oracle() -> str:
     """Unrolled 3-round synchronous LPA mirroring operators/graph.py
     label_propagation exactly: neighbor-label vote counts -> argmax with
     (count DESC, label ASC) tie-break, per round."""
-    head = """WITH
-    kitems AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e AS MATERIALIZED (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM kitems a JOIN kitems b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    head = f"""WITH{_sql_copurchase()},
     nb AS MATERIALIZED (
-        SELECT u AS n, v AS nbr FROM e UNION ALL SELECT v AS n, u AS nbr FROM e),
+        SELECT u AS n, v AS nbr FROM copurchase
+        UNION ALL SELECT v AS n, u AS nbr FROM copurchase),
     l0 AS MATERIALIZED (SELECT DISTINCT n, n AS label FROM nb)"""
     rounds = []
     for i in range(3):
@@ -1012,18 +1079,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed, labels (node-sized) are the only per-round state."""
     from gearpump_spark.operators.graph import label_propagation
 
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     return label_propagation(edges, n_rounds=3).orderBy("node")
 
 
@@ -1602,12 +1658,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lineage cut per round via localCheckpoint (operators/graph.py)."""
     from gearpump_spark.operators.graph import pagerank
 
-    li = table(spark, sf_dir, "lineitem")
-    edges = li.select(
-        (F.col("l_partkey") + F.lit(1_000_000)).alias("src"),
-        F.col("l_suppkey").alias("dst"),
-    ).distinct()
-    ranks = pagerank(edges, max_iter=10, tol=1e-7)
+    ranks = pagerank(_shipment_edges(spark, sf_dir), max_iter=10, tol=1e-7)
     return ranks.select(
         "node_id", F.round("rank", 8).cast("double").alias("rank")
     ).orderBy("node_id")
@@ -1631,20 +1682,7 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is proximity-ranked, not corpus-sized."""
     from gearpump_spark.operators.graph import personalized_pagerank
 
-    li = table(spark, sf_dir, "lineitem")
-    # BOTH directions: the plain-pagerank digraph points part -> supplier
-    # only, which makes every supplier dangling — a walk restarted AT
-    # suppliers would never leave the seed set. The bipartite
-    # supplier <-> part walk diffuses: seeds -> their parts -> co-supplying
-    # suppliers -> ...
-    ps = li.select(
-        (F.col("l_partkey") + F.lit(1_000_000)).alias("src"),
-        F.col("l_suppkey").alias("dst"),
-    ).distinct()
-    edges = ps.unionByName(
-        ps.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    seeds = [r[0] for r in ps.select("dst").distinct().orderBy("dst").limit(5).collect()]
+    edges, seeds = _personalized_shipment(spark, sf_dir)
     ranks = personalized_pagerank(edges, seeds, max_iter=10, tol=1e-9)
     return (
         ranks.where(F.col("rank") > 1e-9)
@@ -1653,117 +1691,63 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_int_oracle(n_iter: int = 10, scale: int = 10**12) -> str:
+def _pagerank_int_oracle(
+    weighted: bool, personalized: bool, n_iter: int = 10, scale: int = 10**12
+) -> str:
     """Unrolled n_iter-step CTE chain mirroring operators/graph.py
-    pagerank_int exactly — fixed iterations + all-integer arithmetic make
-    the fixpoint loop SQL-expressible (float PageRank is not: its sums
-    are summation-order-dependent).
+    _pagerank_int_loop, the one superstep behind all four integer
+    PageRank variants. Fixed iterations + all-integer arithmetic make the
+    fixpoint SQL-expressible (float PageRank is not: its sums are
+    summation-order-dependent). Like the operator, the chain always
+    splits rank as (r * w) // tw in that product-then-floor order
+    (uniform edges carry w = 1, so this is r // out_deg) and restarts to
+    ``seeds`` with k = COUNT(*) (the global variant restarts to every
+    node). Only the prelude differs: the shipment edges, weighted or not,
+    both directions plus the 5 lowest supplier ids as seeds when
+    personalized.
 
-    Every CTE is MATERIALIZED: pr{{k+1}} references pr{{k}} twice (dangling
-    mass + contributions), so DuckDB's default CTE inlining re-evaluates
-    the chain 2^n_iter times (>5 min at sf0.01); materialization makes it
-    one pass per step (~0.5 s)."""
+    Every CTE is MATERIALIZED: pr<i+1> references pr<i> twice
+    (dangling mass + contributions), so DuckDB's default CTE inlining
+    re-evaluates the chain 2^n_iter times (>5 min at sf0.01);
+    materialization makes it one pass per step (~0.5 s)."""
+    if personalized:
+        edges = "SELECT src, dst, w FROM ps UNION ALL SELECT dst, src, w FROM ps"
+        seeds = "SELECT DISTINCT dst AS node_id FROM ps ORDER BY node_id LIMIT 5"
+    else:
+        edges, seeds = "SELECT src, dst, w FROM ps", "SELECT node_id FROM nodes"
     blocks = [
-        f"""
-    edges AS MATERIALIZED (
-        SELECT DISTINCT l_partkey + 1000000 AS src, l_suppkey AS dst
-        FROM lineitem),
+        f"""{_sql_shipment(weighted)},
+    edges AS MATERIALIZED ({edges}),
     nodes AS MATERIALIZED (
         SELECT src AS node_id FROM edges UNION SELECT dst FROM edges),
-    nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM nodes),
-    outd AS MATERIALIZED (SELECT src, COUNT(*) AS od FROM edges GROUP BY src),
-    pr0 AS MATERIALIZED (SELECT node_id, CAST({scale} // nn.n AS BIGINT) AS r
-            FROM nodes CROSS JOIN nn)"""
-    ]
-    for k in range(n_iter):
-        blocks.append(
-            f""",
-    d{k} AS MATERIALIZED (SELECT COALESCE(SUM(r), 0) AS dm FROM pr{k}
-             WHERE node_id NOT IN (SELECT src FROM outd)),
-    c{k} AS MATERIALIZED (SELECT e.dst AS node_id, SUM(p.r // o.od) AS im
-             FROM edges e JOIN outd o ON e.src = o.src
-             JOIN pr{k} p ON p.node_id = e.src GROUP BY e.dst),
-    pr{k + 1} AS MATERIALIZED (
-        SELECT n.node_id,
-               CAST((15 * {scale}) // (100 * nn.n)
-                    + (85 * (COALESCE(c.im, 0) + d{k}.dm // nn.n)) // 100
-                 AS BIGINT) AS r
-        FROM nodes n CROSS JOIN nn CROSS JOIN d{k}
-        LEFT JOIN c{k} c USING (node_id))"""
-        )
-    return (
-        "WITH"
-        + "".join(blocks)
-        + f"\n    SELECT node_id, r FROM pr{n_iter} ORDER BY node_id"
-    )
-
-
-@register(
-    "graph_pagerank_int",
-    oracle=_pagerank_int_oracle(10),
-    desc="BIT-REPRODUCIBLE integer PageRank (micro-unit ranks, floor-"
-    "division steps): same part->supplier graph and superstep plan as "
-    "graph_pagerank, but every step is integer arithmetic, so the whole "
-    "10-iteration fixpoint hash-matches a DuckDB CTE chain exactly — the "
-    "auditable variant a governance pipeline can re-verify bit-for-bit",
-)
-def graph_pagerank_int(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """operators/graph.py pagerank_int: one shuffle per superstep,
-    localCheckpoint lineage cuts, all-BIGINT arithmetic."""
-    from gearpump_spark.operators.graph import pagerank_int
-
-    li = table(spark, sf_dir, "lineitem")
-    edges = li.select(
-        (F.col("l_partkey") + F.lit(1_000_000)).alias("src"),
-        F.col("l_suppkey").alias("dst"),
-    ).distinct()
-    return pagerank_int(edges, n_iter=10).orderBy("node_id")
-
-
-def _ppr_int_oracle(n_iter: int = 10, scale: int = 10**12, k: int = 5) -> str:
-    """Unrolled CTE chain mirroring operators/graph.py
-    personalized_pagerank_int exactly (fixed iterations + all-integer
-    floor-division arithmetic make the RWR fixpoint SQL-expressible; the
-    float variant graph_pagerank_personalized stays rows-only). Same
-    MATERIALIZED discipline as _pagerank_int_oracle: each pr{{k}} is
-    referenced twice per step, so inlining would re-evaluate 2^n_iter
-    times."""
-    blocks = [
-        f"""
-    ps AS MATERIALIZED (
-        SELECT DISTINCT l_partkey + 1000000 AS src, l_suppkey AS dst
-        FROM lineitem),
-    edges AS MATERIALIZED (
-        SELECT src, dst FROM ps UNION SELECT dst, src FROM ps),
-    nodes AS MATERIALIZED (
-        SELECT src AS node_id FROM edges UNION SELECT dst FROM edges),
-    seeds AS MATERIALIZED (
-        SELECT node_id FROM (SELECT DISTINCT dst AS node_id FROM ps)
-        ORDER BY node_id LIMIT {k}),
-    outd AS MATERIALIZED (SELECT src, COUNT(*) AS od FROM edges GROUP BY src),
+    seeds AS MATERIALIZED ({seeds}),
+    kk AS MATERIALIZED (SELECT COUNT(*) AS k FROM seeds),
+    outw AS MATERIALIZED (
+        SELECT src, CAST(SUM(w) AS BIGINT) AS tw FROM edges GROUP BY src),
     pr0 AS MATERIALIZED (
         SELECT n.node_id,
                CAST(CASE WHEN s.node_id IS NOT NULL
-                         THEN {scale} // {k} ELSE 0 END AS BIGINT) AS r
-        FROM nodes n LEFT JOIN seeds s ON s.node_id = n.node_id)"""
+                         THEN {scale} // kk.k ELSE 0 END AS BIGINT) AS r
+        FROM nodes n CROSS JOIN kk LEFT JOIN seeds s ON s.node_id = n.node_id)"""
     ]
     for i in range(n_iter):
         blocks.append(
             f""",
     d{i} AS MATERIALIZED (SELECT COALESCE(SUM(r), 0) AS dm FROM pr{i}
-             WHERE node_id NOT IN (SELECT src FROM outd)),
-    c{i} AS MATERIALIZED (SELECT e.dst AS node_id, SUM(p.r // o.od) AS im
-             FROM edges e JOIN outd o ON e.src = o.src
+             WHERE node_id NOT IN (SELECT src FROM outw)),
+    c{i} AS MATERIALIZED (SELECT e.dst AS node_id,
+                                 SUM((p.r * e.w) // o.tw) AS im
+             FROM edges e JOIN outw o ON e.src = o.src
              JOIN pr{i} p ON p.node_id = e.src GROUP BY e.dst),
     pr{i + 1} AS MATERIALIZED (
         SELECT n.node_id,
                CAST(CASE WHEN s.node_id IS NOT NULL
-                         THEN (15 * {scale}) // (100 * {k}) ELSE 0 END
+                         THEN (15 * {scale}) // (100 * kk.k) ELSE 0 END
                     + (85 * (COALESCE(c.im, 0)
                              + CASE WHEN s.node_id IS NOT NULL
-                                    THEN d{i}.dm // {k} ELSE 0 END)) // 100
+                                    THEN d{i}.dm // kk.k ELSE 0 END)) // 100
                  AS BIGINT) AS r
-        FROM nodes n CROSS JOIN d{i}
+        FROM nodes n CROSS JOIN kk CROSS JOIN d{i}
         LEFT JOIN c{i} c ON c.node_id = n.node_id
         LEFT JOIN seeds s ON s.node_id = n.node_id)"""
         )
@@ -1775,8 +1759,25 @@ def _ppr_int_oracle(n_iter: int = 10, scale: int = 10**12, k: int = 5) -> str:
 
 
 @register(
+    "graph_pagerank_int",
+    oracle=_pagerank_int_oracle(weighted=False, personalized=False),
+    desc="BIT-REPRODUCIBLE integer PageRank (micro-unit ranks, floor-"
+    "division steps): same part->supplier graph and superstep plan as "
+    "graph_pagerank, but every step is integer arithmetic, so the whole "
+    "10-iteration fixpoint hash-matches a DuckDB CTE chain exactly — the "
+    "auditable variant a governance pipeline can re-verify bit-for-bit",
+)
+def graph_pagerank_int(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """operators/graph.py pagerank_int: one shuffle per superstep,
+    localCheckpoint lineage cuts, all-BIGINT arithmetic."""
+    from gearpump_spark.operators.graph import pagerank_int
+
+    return pagerank_int(_shipment_edges(spark, sf_dir), n_iter=10).orderBy("node_id")
+
+
+@register(
     "graph_pagerank_personalized_int",
-    oracle=_ppr_int_oracle(10),
+    oracle=_pagerank_int_oracle(weighted=False, personalized=True),
     desc="BIT-REPRODUCIBLE integer personalized PageRank (random walk "
     "with restart to the 5 lowest-id supplier seeds, micro-unit ranks, "
     "floor-division steps) over the bipartite supplier<->part shipment "
@@ -1792,67 +1793,13 @@ def graph_pagerank_personalized_int(spark: SparkSession, sf_dir: str) -> DataFra
     arithmetic; only the k seed ids cross the driver boundary."""
     from gearpump_spark.operators.graph import personalized_pagerank_int
 
-    li = table(spark, sf_dir, "lineitem")
-    ps = li.select(
-        (F.col("l_partkey") + F.lit(1_000_000)).alias("src"),
-        F.col("l_suppkey").alias("dst"),
-    ).distinct()
-    edges = ps.unionByName(
-        ps.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    seeds = [
-        r[0] for r in ps.select("dst").distinct().orderBy("dst").limit(5).collect()
-    ]
+    edges, seeds = _personalized_shipment(spark, sf_dir)
     return personalized_pagerank_int(edges, seeds, n_iter=10).orderBy("node_id")
-
-
-def _pagerank_weighted_int_oracle(n_iter: int = 10, scale: int = 10**12) -> str:
-    """Unrolled CTE chain mirroring operators/graph.py
-    pagerank_weighted_int exactly. Same MATERIALIZED discipline as
-    _pagerank_int_oracle (each pr{{k}} is referenced twice per step).
-    The contribution term keeps the operator's product-then-floor order
-    ((r * w) // tw — floor(r·w/W) != floor(r/W)·w) so the micro-unit
-    truncation is identical across engines."""
-    blocks = [
-        f"""
-    edges AS MATERIALIZED (
-        SELECT l_partkey + 1000000 AS src, l_suppkey AS dst,
-               SUM(CAST(l_quantity AS BIGINT)) AS w
-        FROM lineitem GROUP BY 1, 2),
-    nodes AS MATERIALIZED (
-        SELECT src AS node_id FROM edges UNION SELECT dst FROM edges),
-    nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM nodes),
-    outw AS MATERIALIZED (SELECT src, SUM(w) AS tw FROM edges GROUP BY src),
-    pr0 AS MATERIALIZED (SELECT node_id, CAST({scale} // nn.n AS BIGINT) AS r
-            FROM nodes CROSS JOIN nn)"""
-    ]
-    for k in range(n_iter):
-        blocks.append(
-            f""",
-    d{k} AS MATERIALIZED (SELECT COALESCE(SUM(r), 0) AS dm FROM pr{k}
-             WHERE node_id NOT IN (SELECT src FROM outw)),
-    c{k} AS MATERIALIZED (SELECT e.dst AS node_id,
-                                 SUM((p.r * e.w) // o.tw) AS im
-             FROM edges e JOIN outw o ON e.src = o.src
-             JOIN pr{k} p ON p.node_id = e.src GROUP BY e.dst),
-    pr{k + 1} AS MATERIALIZED (
-        SELECT n.node_id,
-               CAST((15 * {scale}) // (100 * nn.n)
-                    + (85 * (COALESCE(c.im, 0) + d{k}.dm // nn.n)) // 100
-                 AS BIGINT) AS r
-        FROM nodes n CROSS JOIN nn CROSS JOIN d{k}
-        LEFT JOIN c{k} c USING (node_id))"""
-        )
-    return (
-        "WITH"
-        + "".join(blocks)
-        + f"\n    SELECT node_id, r FROM pr{n_iter} ORDER BY node_id"
-    )
 
 
 @register(
     "graph_pagerank_weighted_int",
-    oracle=_pagerank_weighted_int_oracle(10),
+    oracle=_pagerank_int_oracle(weighted=True, personalized=False),
     desc="BIT-REPRODUCIBLE WEIGHTED PageRank (micro-unit ranks, floor-"
     "division steps): the part->supplier shipment graph with edge weight "
     "= total shipped quantity, so rank diffuses proportionally to freight "
@@ -1869,14 +1816,7 @@ def graph_pagerank_weighted_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge <= ~10^4)."""
     from gearpump_spark.operators.graph import pagerank_weighted_int
 
-    li = table(spark, sf_dir, "lineitem")
-    edges = (
-        li.groupBy(
-            (F.col("l_partkey") + F.lit(1_000_000)).alias("src"),
-            F.col("l_suppkey").alias("dst"),
-        )
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("w"))
-    )
+    edges = _shipment_edges(spark, sf_dir, weighted=True)
     return pagerank_weighted_int(edges, n_iter=10).orderBy("node_id")
 
 
@@ -2412,18 +2352,14 @@ def multimodal_audio_samples_real(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "graph_triangle_count",
-    oracle="""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    edges AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)
-    SELECT (SELECT COUNT(*) FROM (SELECT u AS n FROM edges
-                                  UNION SELECT v FROM edges)) AS n_nodes,
-           (SELECT COUNT(*) FROM edges) AS n_edges,
-           (SELECT COUNT(*) FROM edges e1
-            JOIN edges e2 ON e2.u = e1.u AND e2.v > e1.v
-            JOIN edges e3 ON e3.u = e1.v AND e3.v = e2.v) AS n_triangles
+    oracle=f"""
+    WITH {_sql_copurchase()}
+    SELECT (SELECT COUNT(*) FROM (SELECT u AS n FROM copurchase
+                                  UNION SELECT v FROM copurchase)) AS n_nodes,
+           (SELECT COUNT(*) FROM copurchase) AS n_edges,
+           (SELECT COUNT(*) FROM copurchase e1
+            JOIN copurchase e2 ON e2.u = e1.u AND e2.v > e1.v
+            JOIN copurchase e3 ON e3.u = e1.v AND e3.v = e2.v) AS n_triangles
     """,
     desc="exact triangle count over the co-purchase graph via the "
     "degree-ordered node-iterator (oriented wedges + closing-edge "
@@ -2436,39 +2372,24 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.py triangle_count)."""
     from gearpump_spark.operators.graph import triangle_count
 
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     return triangle_count(edges)
 
 
 @register(
     "graph_triangle_estimate",
     oracle=f"""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    edges AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    WITH {_sql_copurchase()},
     kept AS (
-        SELECT u, v FROM edges
+        SELECT u, v FROM copurchase
         WHERE {_SQL_H15.format(seed="'7'", key="(u || ',' || v)")} % 10000 < 2000),
     st AS (
         SELECT COUNT(*) AS n_sampled_triangles FROM kept e1
         JOIN kept e2 ON e2.u = e1.u AND e2.v > e1.v
         JOIN kept e3 ON e3.u = e1.v AND e3.v = e2.v)
-    SELECT (SELECT COUNT(*) FROM (SELECT u AS n FROM edges
-                                  UNION SELECT v FROM edges)) AS n_nodes,
-           (SELECT COUNT(*) FROM edges) AS n_edges,
+    SELECT (SELECT COUNT(*) FROM (SELECT u AS n FROM copurchase
+                                  UNION SELECT v FROM copurchase)) AS n_nodes,
+           (SELECT COUNT(*) FROM copurchase) AS n_edges,
            (SELECT COUNT(*) FROM kept) AS n_sampled_edges,
            (SELECT n_sampled_triangles FROM st) AS n_sampled_triangles,
            (SELECT CAST(n_sampled_triangles * 125.0 AS DOUBLE) FROM st)
@@ -2486,18 +2407,7 @@ def graph_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.py triangle_count_estimate)."""
     from gearpump_spark.operators.graph import triangle_count_estimate
 
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     return triangle_count_estimate(edges, p_bp=2000, seed=7)
 
 
@@ -4903,16 +4813,10 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_link_prediction",
-    oracle="""
-    WITH items AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        WHERE l_orderkey % 10 = 0),
-    edges AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-    adj AS (SELECT u AS n, v AS nb FROM edges
-            UNION ALL SELECT v, u FROM edges),
+    oracle=f"""
+    WITH {_sql_copurchase(sample=True)},
+    adj AS (SELECT u AS n, v AS nb FROM copurchase
+            UNION ALL SELECT v, u FROM copurchase),
     deg AS (SELECT n, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY n),
     wed AS (SELECT a1.n AS c, a1.nb AS x, a2.nb AS y
             FROM adj a1 JOIN adj a2 ON a1.n = a2.n AND a1.nb < a2.nb
@@ -4920,7 +4824,7 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     cn AS (SELECT x, y, CAST(COUNT(*) AS BIGINT) AS common
            FROM wed GROUP BY x, y),
     cand AS (SELECT cn.* FROM cn
-             LEFT JOIN edges e ON e.u = cn.x AND e.v = cn.y
+             LEFT JOIN copurchase e ON e.u = cn.x AND e.v = cn.y
              WHERE e.u IS NULL),
     scored AS (
         SELECT cand.x AS u, cand.y AS v, common,
@@ -4946,18 +4850,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     against existing edges, one TakeOrderedAndProject."""
     from gearpump_spark.operators.graph import link_predict_common_neighbors
 
-    li = table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 10 == 0)
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
+    edges = _copurchase_edges(spark, sf_dir, sample=True)
     return link_predict_common_neighbors(edges, k=20, max_degree=64)
 
 
@@ -5268,16 +5161,10 @@ def text_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_khop_reach",
-    oracle="""
-    WITH RECURSIVE items AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        WHERE l_orderkey % 10 = 0),
-    edges AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-    adj AS (SELECT u AS n, v AS nb FROM edges
-            UNION ALL SELECT v, u FROM edges),
+    oracle=f"""
+    WITH RECURSIVE {_sql_copurchase(sample=True)},
+    adj AS (SELECT u AS n, v AS nb FROM copurchase
+            UNION ALL SELECT v, u FROM copurchase),
     srcs AS (SELECT DISTINCT n FROM adj WHERE n % 97 = 0),
     bfs(node, d) AS (
         SELECT n, CAST(0 AS BIGINT) FROM srcs
@@ -5299,18 +5186,7 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(sum of frontier edges), never all-pairs."""
     from gearpump_spark.operators.graph import khop_distances
 
-    li = table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 10 == 0)
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
+    edges = _copurchase_edges(spark, sf_dir, sample=True)
     nodes = edges.select(F.col("src").alias("n")).union(
         edges.select(F.col("dst").alias("n"))
     )
@@ -5893,17 +5769,11 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_degree_distribution",
-    oracle="""
-    WITH items AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        WHERE l_orderkey % 10 = 0),
-    edges AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    oracle=f"""
+    WITH {_sql_copurchase(sample=True)},
     deg AS (
         SELECT n, CAST(COUNT(*) AS BIGINT) AS d FROM (
-            SELECT u AS n FROM edges UNION ALL SELECT v FROM edges)
+            SELECT u AS n FROM copurchase UNION ALL SELECT v FROM copurchase)
         GROUP BY n)
     SELECT CAST(LENGTH(BIN(d)) - 1 AS BIGINT) AS log2_bin,
            CAST(COUNT(*) AS BIGINT) AS n_nodes,
@@ -5919,21 +5789,10 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two map-side-combinable aggs (degree, then histogram) — the cheap
     pre-flight a 100 TB graph job runs to pick its skew strategy."""
-    li = table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 10 == 0)
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
+    edges = _copurchase_edges(spark, sf_dir, sample=True)
     deg = (
-        edges.select(F.col("u").alias("n"))
-        .union(edges.select(F.col("v").alias("n")))
+        edges.select(F.col("src").alias("n"))
+        .union(edges.select(F.col("dst").alias("n")))
         .groupBy("n")
         .agg(F.count("*").cast("long").alias("d"))
     )
@@ -6369,22 +6228,18 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_clustering_coeff",
-    oracle="""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    und AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    oracle=f"""
+    WITH {_sql_copurchase()},
     deg AS (
         SELECT n, COUNT(*) AS d FROM (
-            SELECT u AS n FROM und UNION ALL SELECT v FROM und)
+            SELECT u AS n FROM copurchase UNION ALL SELECT v FROM copurchase)
         GROUP BY n),
     oriented AS (
         SELECT CASE WHEN (du, u) < (dv, v) THEN u ELSE v END AS s,
                CASE WHEN (du, u) < (dv, v) THEN v ELSE u END AS t
-        FROM und
-        JOIN deg d1 ON d1.n = und.u
-        JOIN deg d2 ON d2.n = und.v,
+        FROM copurchase
+        JOIN deg d1 ON d1.n = copurchase.u
+        JOIN deg d2 ON d2.n = copurchase.v,
         LATERAL (SELECT d1.d AS du, d2.d AS dv) x),
     wedges AS (
         SELECT e1.s, e1.t AS t1, e2.t AS t2
@@ -6422,18 +6277,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-way union; top-100 cut is TakeOrdered."""
     from gearpump_spark.operators.graph import clustering_coefficient
 
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     return clustering_coefficient(edges, top_n=100)
 
 
@@ -7224,13 +7068,10 @@ def similarity_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_jaccard_neighbors",
-    oracle="""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    und AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-    adj AS (SELECT u AS n, v AS m FROM und UNION ALL SELECT v, u FROM und),
+    oracle=f"""
+    WITH {_sql_copurchase()},
+    adj AS (SELECT u AS n, v AS m FROM copurchase
+            UNION ALL SELECT v, u FROM copurchase),
     deg AS (SELECT n, COUNT(*) AS d FROM adj GROUP BY n),
     -- hub cap (super-node exclusion): wedge cost is sum(deg(center)^2)
     -- and has NO orientation trick, so centers above 64 neighbors are
@@ -7268,20 +7109,10 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the exchange instead of 17×|adj|) and shuffle_hash-hinted;
     the cn >= 3 floor prunes the quadratic tail before ranking; top-50
     is TakeOrdered."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    ).localCheckpoint(eager=False)  # adj (x2), both wedge sides, degrees
-    adj = und.select(F.col("u").alias("n"), F.col("v").alias("m")).unionAll(
-        und.select(F.col("v").alias("n"), F.col("u").alias("m"))
+    # adj (x2), both wedge sides, degrees
+    und = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
+    adj = und.select(F.col("src").alias("n"), F.col("dst").alias("m")).unionAll(
+        und.select(F.col("dst").alias("n"), F.col("src").alias("m"))
     )
     deg = adj.groupBy("n").agg(F.count("*").alias("d"))
     centers = adj.join(
@@ -7387,13 +7218,10 @@ def multimodal_jpeg_lossless_real(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "graph_assortativity",
-    oracle="""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    und AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-    adj AS (SELECT u AS n, v AS m FROM und UNION ALL SELECT v, u FROM und),
+    oracle=f"""
+    WITH {_sql_copurchase()},
+    adj AS (SELECT u AS n, v AS m FROM copurchase
+            UNION ALL SELECT v, u FROM copurchase),
     deg AS (SELECT n, COUNT(*) AS d FROM adj GROUP BY n),
     ends AS (
         SELECT dx.d AS x, dy.d AS y
@@ -7425,20 +7253,10 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two shuffles (degree agg, two degree joins collapse to one keyed
     exchange each) then a keyless integer aggregate — the one-number
     skew diagnostic to run before choosing salting constants."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    ).localCheckpoint(eager=False)  # both adjacency directions
-    adj = und.select(F.col("u").alias("n"), F.col("v").alias("m")).unionAll(
-        und.select(F.col("v").alias("n"), F.col("u").alias("m"))
+    # both adjacency directions
+    und = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
+    adj = und.select(F.col("src").alias("n"), F.col("dst").alias("m")).unionAll(
+        und.select(F.col("dst").alias("n"), F.col("src").alias("m"))
     )
     deg = adj.groupBy("n").agg(F.count("*").alias("d"))
     dx = deg.select(F.col("n"), F.col("d").alias("x"))
@@ -7799,16 +7617,10 @@ def text_kl_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_harmonic_centrality",
-    oracle="""
-    WITH RECURSIVE items AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        WHERE l_orderkey % 10 = 0),
-    edges AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-    adj AS (SELECT u AS n, v AS nb FROM edges
-            UNION ALL SELECT v, u FROM edges),
+    oracle=f"""
+    WITH RECURSIVE {_sql_copurchase(sample=True)},
+    adj AS (SELECT u AS n, v AS nb FROM copurchase
+            UNION ALL SELECT v, u FROM copurchase),
     srcs AS (SELECT DISTINCT n FROM adj WHERE n % 97 = 0),
     bfs(seed, node, d) AS (
         SELECT n, n, CAST(0 AS BIGINT) FROM srcs
@@ -7846,18 +7658,7 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     round; per-seed work is bounded by its 4-hop ball, never the graph."""
     from gearpump_spark.operators.graph import khop_distances_labeled
 
-    li = table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 10 == 0)
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
+    edges = _copurchase_edges(spark, sf_dir, sample=True)
     nodes = edges.select(F.col("src").alias("n")).union(
         edges.select(F.col("dst").alias("n"))
     )
@@ -8781,64 +8582,9 @@ def multimodal_bmp_rle8_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pixel_stats(synthesize_payloads(docs, bmp_rle8_payload)).orderBy("doc_id")
 
 
-def _ppr_weighted_int_oracle(n_iter: int = 10, scale: int = 10**12, k: int = 5) -> str:
-    """Unrolled CTE chain mirroring operators/graph.py
-    personalized_pagerank_weighted_int exactly — the _ppr_int_oracle
-    template with weight-proportional contributions ((r·w) // W, the
-    product-then-floor order of the weighted family). Same MATERIALIZED
-    discipline: each pr{{k}} is referenced twice per step."""
-    blocks = [
-        f"""
-    ps AS MATERIALIZED (
-        SELECT l_partkey + 1000000 AS src, l_suppkey AS dst,
-               SUM(CAST(l_quantity AS BIGINT)) AS w
-        FROM lineitem GROUP BY 1, 2),
-    edges AS MATERIALIZED (
-        SELECT src, dst, w FROM ps
-        UNION ALL SELECT dst, src, w FROM ps),
-    nodes AS MATERIALIZED (
-        SELECT src AS node_id FROM edges UNION SELECT dst FROM edges),
-    seeds AS MATERIALIZED (
-        SELECT node_id FROM (SELECT DISTINCT dst AS node_id FROM ps)
-        ORDER BY node_id LIMIT {k}),
-    outw AS MATERIALIZED (SELECT src, SUM(w) AS tw FROM edges GROUP BY src),
-    pr0 AS MATERIALIZED (
-        SELECT n.node_id,
-               CAST(CASE WHEN s.node_id IS NOT NULL
-                         THEN {scale} // {k} ELSE 0 END AS BIGINT) AS r
-        FROM nodes n LEFT JOIN seeds s ON s.node_id = n.node_id)"""
-    ]
-    for i in range(n_iter):
-        blocks.append(
-            f""",
-    d{i} AS MATERIALIZED (SELECT COALESCE(SUM(r), 0) AS dm FROM pr{i}
-             WHERE node_id NOT IN (SELECT src FROM outw)),
-    c{i} AS MATERIALIZED (SELECT e.dst AS node_id,
-                                 SUM((p.r * e.w) // o.tw) AS im
-             FROM edges e JOIN outw o ON e.src = o.src
-             JOIN pr{i} p ON p.node_id = e.src GROUP BY e.dst),
-    pr{i + 1} AS MATERIALIZED (
-        SELECT n.node_id,
-               CAST(CASE WHEN s.node_id IS NOT NULL
-                         THEN (15 * {scale}) // (100 * {k}) ELSE 0 END
-                    + (85 * (COALESCE(c.im, 0)
-                             + CASE WHEN s.node_id IS NOT NULL
-                                    THEN d{i}.dm // {k} ELSE 0 END)) // 100
-                 AS BIGINT) AS r
-        FROM nodes n CROSS JOIN d{i}
-        LEFT JOIN c{i} c ON c.node_id = n.node_id
-        LEFT JOIN seeds s ON s.node_id = n.node_id)"""
-        )
-    return (
-        "WITH"
-        + "".join(blocks)
-        + f"\n    SELECT node_id, r FROM pr{n_iter} ORDER BY node_id"
-    )
-
-
 @register(
     "graph_pagerank_weighted_personalized_int",
-    oracle=_ppr_weighted_int_oracle(10),
+    oracle=_pagerank_int_oracle(weighted=True, personalized=True),
     desc="BIT-REPRODUCIBLE weighted personalized PageRank (random walk "
     "with restart over the shipment-volume-weighted supplier<->part "
     "graph, seeds = 5 lowest supplier ids): the recommendation-scoring "
@@ -8855,17 +8601,7 @@ def graph_pagerank_weighted_personalized_int(
     driver boundary."""
     from gearpump_spark.operators.graph import personalized_pagerank_weighted_int
 
-    li = table(spark, sf_dir, "lineitem")
-    ps = li.groupBy(
-        (F.col("l_partkey") + F.lit(1_000_000)).alias("src"),
-        F.col("l_suppkey").alias("dst"),
-    ).agg(F.sum(F.col("l_quantity").cast("long")).alias("w"))
-    edges = ps.unionByName(
-        ps.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    )
-    seeds = [
-        r[0] for r in ps.select("dst").distinct().orderBy("dst").limit(5).collect()
-    ]
+    edges, seeds = _personalized_shipment(spark, sf_dir, weighted=True)
     return personalized_pagerank_weighted_int(edges, seeds, n_iter=10).orderBy(
         "node_id"
     )

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from gearpump_spark.operators import dedup as D
 from gearpump_spark.operators import similarity as S
-from gearpump_spark.operators.graph import pagerank, pagerank_numpy_reference
+from gearpump_spark.operators.graph import pagerank
 from gearpump_spark.operators import multimodal as MM
 from gearpump_spark.functions import text as TX
 
@@ -149,6 +149,62 @@ def test_ivf_topk_recall_vs_exact(spark, sf_dir):
 
 
 # --- PageRank vs power iteration (FIXTURES.md §B.6) -----------------------
+
+
+def pagerank_numpy_reference(edge_list, damping=0.85, max_iter=20, tol=1e-6):
+    """Tiny power-iteration oracle for tests (FIXTURES.md §B.6)."""
+    import numpy as np
+
+    nodes = sorted({a for a, _ in edge_list} | {b for _, b in edge_list})
+    idx = {v: i for i, v in enumerate(nodes)}
+    n = len(nodes)
+    out_deg = {v: 0 for v in nodes}
+    for a, _ in edge_list:
+        out_deg[a] += 1
+    r = np.full(n, 1.0 / n)
+    for _ in range(max_iter):
+        nr = np.full(n, (1.0 - damping) / n)
+        dangling = sum(r[idx[v]] for v in nodes if out_deg[v] == 0)
+        nr += damping * dangling / n
+        for a, b in edge_list:
+            nr[idx[b]] += damping * r[idx[a]] / out_deg[a]
+        if np.abs(nr - r).max() < tol:
+            r = nr
+            break
+        r = nr
+    return {v: float(r[idx[v]]) for v in nodes}
+
+
+def personalized_pagerank_numpy_reference(
+    edge_list, seeds, damping=0.85, max_iter=20, tol=1e-6
+):
+    """Tiny RWR oracle mirroring personalized_pagerank exactly."""
+    import numpy as np
+
+    nodes = sorted({a for a, _ in edge_list} | {b for _, b in edge_list})
+    idx = {v: i for i, v in enumerate(nodes)}
+    n = len(nodes)
+    k = len(seeds)
+    out_deg = {v: 0 for v in nodes}
+    for a, _ in edge_list:
+        out_deg[a] += 1
+    r = np.zeros(n)
+    for s in seeds:
+        r[idx[s]] = 1.0 / k
+    for _ in range(max_iter):
+        nr = np.zeros(n)
+        for s in seeds:
+            nr[idx[s]] += (1.0 - damping) / k
+        dangling = sum(r[idx[v]] for v in nodes if out_deg[v] == 0)
+        for s in seeds:
+            nr[idx[s]] += damping * dangling / k
+        for a, b in edge_list:
+            nr[idx[b]] += damping * r[idx[a]] / out_deg[a]
+        if np.abs(nr - r).max() < tol:
+            r = nr
+            break
+        r = nr
+    return {v: float(r[idx[v]]) for v in nodes}
 
 
 def test_pagerank_matches_numpy(spark):
@@ -2504,6 +2560,105 @@ class TestKhopDistances:
         assert got == {1: 0, 2: 1}
 
 
+def _undirected_neighbors(edge_list):
+    import collections
+
+    nbrs = collections.defaultdict(set)
+    for a, b in edge_list:
+        if a != b:
+            nbrs[a].add(b)
+            nbrs[b].add(a)
+    return nbrs
+
+
+class TestKhopDistancesLabeled:
+    def _run(self, spark, edge_list, sources, r):
+        from gearpump_spark.operators.graph import khop_distances_labeled
+
+        e = spark.createDataFrame(edge_list, "src long, dst long")
+        s = spark.createDataFrame([(x,) for x in sources], "n long")
+        rows = khop_distances_labeled(e, s, n_rounds=r).collect()
+        got = {(row.seed, row.node): row.dist for row in rows}
+        assert len(got) == len(rows), "one row per (seed, node)"
+        return got
+
+    @staticmethod
+    def _per_seed_bfs(edge_list, sources, r):
+        nbrs = _undirected_neighbors(edge_list)
+        want = {}
+        for seed in set(sources):
+            dist, frontier = {seed: 0}, {seed}
+            for d in range(1, r + 1):
+                frontier = {nb for n in frontier for nb in nbrs[n] if nb not in dist}
+                dist.update({n: d for n in frontier})
+            want.update({(seed, n): d for n, d in dist.items()})
+        return want
+
+    def test_matches_per_seed_bfs(self, spark):
+        import random
+
+        rng = random.Random(11)
+        # duplicates in both directions and self-loops included
+        edges = [(rng.randint(0, 25), rng.randint(0, 25)) for _ in range(45)]
+        sources = [0, 7, 7, 19]
+        got = self._run(spark, edges, sources, r=3)
+        assert got == self._per_seed_bfs(edges, sources, 3)
+
+    def test_frontiers_die_before_n_rounds(self, spark):
+        # every seed's ball is exhausted after 2 hops, so round 3 finds an
+        # empty frontier and the loop exits early; the result is unchanged
+        edges = [(1, 2), (2, 3), (10, 11), (11, 10), (20, 20)]
+        sources = [1, 10, 20]
+        got = self._run(spark, edges, sources, r=6)
+        assert got == self._per_seed_bfs(edges, sources, 6)
+        assert got == {
+            (1, 1): 0, (1, 2): 1, (1, 3): 2,
+            (10, 10): 0, (10, 11): 1,
+            (20, 20): 0,
+        }
+
+
+@pytest.mark.parametrize("broadcast_max_edges", [5_000_000, 0])
+def test_clustering_coefficient_matches_brute_force(spark, broadcast_max_edges):
+    """Per-node degree, triangle count and 2·tri/(d·(d−1)) against a
+    pure-Python count, on both wedge/closing strategies. Node 99 has
+    degree 1, so its coefficient is NULL."""
+    import itertools
+    import random
+
+    from gearpump_spark.operators.graph import clustering_coefficient
+
+    rng = random.Random(5)
+    edges = [(rng.randint(0, 15), rng.randint(0, 15)) for _ in range(50)]
+    edges += list(itertools.combinations(range(30, 35), 2))  # a 5-clique
+    edges += [(99, 0), (0, 99)]
+    nbrs = _undirected_neighbors(edges)
+    want = []
+    for v, nb in nbrs.items():
+        d = len(nb)
+        tri = sum(1 for a, b in itertools.combinations(nb, 2) if b in nbrs[a])
+        coeff = 2.0 * tri / (d * (d - 1)) if d >= 2 else None
+        want.append((v, d, tri, coeff))
+    want.sort(key=lambda t: (-t[1], t[0]))
+
+    e = spark.createDataFrame(edges, "src long, dst long")
+    for top_n in (len(want), 5):
+        got = clustering_coefficient(
+            e, top_n=top_n, broadcast_max_edges=broadcast_max_edges
+        ).collect()
+        assert [(r.node, r.degree, r.n_triangles) for r in got] == [
+            (v, d, t) for v, d, t, _ in want[:top_n]
+        ]
+        for r, (_, _, _, c) in zip(got, want):
+            if c is None:
+                assert r.coeff is None, r
+            else:
+                assert abs(r.coeff - c) <= 5e-5, (r, c)
+    by_node = {r.node: r for r in clustering_coefficient(e, top_n=len(want)).collect()}
+    assert by_node[99].degree == 1 and by_node[99].coeff is None
+    assert all(by_node[v].coeff == 1.0 for v in range(30, 35))
+
+
 def test_top_principal_component_matches_numpy(spark):
     """Power iteration recovers numpy's dominant right singular vector
     (up to sign) and its eigenvalue of X^T X / n on a spiked dataset."""
@@ -2698,10 +2853,7 @@ def test_personalized_pagerank_matches_numpy(spark):
     """RWR golden: the distributed loop matches the sequential reference
     on a small directed graph with a dangling node, within float-sum
     reorder tolerance."""
-    from gearpump_spark.operators.graph import (
-        personalized_pagerank,
-        personalized_pagerank_numpy_reference,
-    )
+    from gearpump_spark.operators.graph import personalized_pagerank
 
     edge_list = [
         (1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 1), (6, 3), (2, 6),
@@ -2787,6 +2939,24 @@ def test_personalized_pagerank_int_matches_pure_python(spark):
     assert got == r
     # restart mass concentrates near the seeds
     assert got[1] > got[7] and got[6] > got[7]
+
+
+def test_float_pagerank_empty_graph_same_schema_and_nothing_cached(spark):
+    """An edge-free input: both float wrappers return the same empty
+    (node_id, rank) frame, and the node set persisted to count the graph
+    is released — no entry is left in the session's cache manager."""
+    from gearpump_spark.operators.graph import personalized_pagerank
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    edges = spark.createDataFrame([], "src long, dst long")
+    plain = pagerank(edges)
+    pers = personalized_pagerank(edges, [1])
+    assert plain.columns == ["node_id", "rank"]
+    assert plain.schema == pers.schema
+    assert plain.collect() == [] and pers.collect() == []
+    assert cache.isEmpty()
 
 
 def test_personalized_pagerank_rejects_unknown_and_duplicate_seeds(spark):
