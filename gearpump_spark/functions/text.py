@@ -4,6 +4,16 @@ All pure Column expressions (codegen'd JVM-side — zero Python per row):
 tokenization, quality stats, stopword/punctuation ratios, a stopword-based
 language-ID heuristic, and content fingerprints. Each has an exact ANSI-SQL
 equivalent so the driver can oracle-check the queries built on them.
+
+This module is the only one that knows the whitespace rule. Every token
+form has one DataFrame function here and one DuckDB SQL twin, named
+``sql_<form>``, that the oracles format in: `tokens`, `lower_tokens`,
+`normalize_text`, `normalized_words` and `ngrams`. The exploded form is
+``F.explode(tokens(...))`` on one side and ``UNNEST(sql_tokens(...))`` on
+the other. The split class is `WS_RE`, ``[ \\t\\n\\f\\r]``: RE2's
+``\\s``, which DuckDB uses. Java's ``\\s`` also matches U+000B (vertical
+tab), so a Spark split on ``\\s+`` and its oracle disagree on any text that
+carries one.
 """
 
 from __future__ import annotations
@@ -27,12 +37,77 @@ EN_STOPWORDS = LANG_PROFILES["en"]
 # ([ \t\n\f\r]) rather than Java's \s, which also matches U+000B —
 # the DuckDB oracles evaluate \s with RE2, and the two engines MUST
 # split identically or hash checks diverge on \x0b-bearing text.
-WS_RE = "[ \\t\\n\\f\\r]+"
+_WS = " \\t\\n\\f\\r"
+WS_RE = f"[{_WS}]+"
+
+# BPE-style pre-tokenizer pieces: letter runs, digit runs, and single
+# characters that are neither those nor whitespace. One pattern for both
+# engines, over the same whitespace class.
+PIECE_RE = f"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{_WS}]"
 
 
 def tokens(text: Column) -> Column:
     """Whitespace tokens, empties dropped."""
     return F.filter(F.split(text, WS_RE), lambda t: t != "")
+
+
+def sql_tokens(text: str = "text") -> str:
+    """DuckDB twin of `tokens`; ``text`` is a SQL expression."""
+    return f"LIST_FILTER(REGEXP_SPLIT_TO_ARRAY({text}, '{WS_RE}'), w -> w <> '')"
+
+
+def lower_tokens(text: Column) -> Column:
+    """`tokens`, each lowercased."""
+    return F.transform(tokens(text), F.lower)
+
+
+def sql_lower_tokens(text: str = "text") -> str:
+    """DuckDB twin of `lower_tokens`."""
+    return sql_tokens(f"LOWER({text})")
+
+
+def normalize_text(col: Column) -> Column:
+    """Canonical form for exact dedup: lowercase, collapse whitespace."""
+    return F.trim(F.regexp_replace(F.lower(col), WS_RE, " "))
+
+
+def sql_normalize_text(text: str = "text") -> str:
+    """DuckDB twin of `normalize_text`."""
+    return f"TRIM(REGEXP_REPLACE(LOWER({text}), '{WS_RE}', ' ', 'g'))"
+
+
+def normalized_words(text: Column) -> Column:
+    """`normalize_text` split on its single spaces. Unlike `lower_tokens`,
+    empty or all-whitespace text gives one empty word, not none."""
+    return F.split(normalize_text(text), " ")
+
+
+def sql_normalized_words(text: str = "text") -> str:
+    """DuckDB twin of `normalized_words`."""
+    return f"STRING_SPLIT({sql_normalize_text(text)}, ' ')"
+
+
+def ngrams(tk: Column, n: int) -> Column:
+    """Word n-grams of the token array ``tk``, space-joined, in order;
+    empty when ``tk`` has fewer than ``n`` tokens.
+
+    Built with slice + zip_with rather than per-index element_at, so ``tk``
+    is evaluated a constant number of times per row even when it is an
+    expression: Catalyst inlines an expression into every element_at call
+    of a lambda, one full tokenize per n-gram."""
+    m = F.greatest(F.size(tk) - (n - 1), F.lit(0))
+    grams = F.slice(tk, 1, m)
+    for j in range(1, n):
+        grams = F.zip_with(
+            grams, F.slice(tk, j + 1, m), lambda a, b: F.concat(a, F.lit(" "), b)
+        )
+    return grams
+
+
+def sql_ngrams(tk: str, n: int) -> str:
+    """DuckDB twin of `ngrams`; ``tk`` names a list column."""
+    gram = " || ' ' || ".join([f"{tk}[i]"] + [f"{tk}[i + {j}]" for j in range(1, n)])
+    return f"LIST_TRANSFORM(RANGE(1, LEN({tk}) - {n} + 2), i -> {gram})"
 
 
 def token_count(text: Column) -> Column:
@@ -118,7 +193,7 @@ def pii_counts(text: Column) -> dict[str, Column]:
 
 def lang_scores(text: Column) -> dict[str, Column]:
     """Per-language stopword hit counts."""
-    lowered = F.transform(tokens(text), lambda t: F.lower(t))
+    lowered = lower_tokens(text)
     return {
         lang: F.size(F.filter(lowered, lambda t: t.isin(*words))).cast("bigint")
         for lang, words in LANG_PROFILES.items()

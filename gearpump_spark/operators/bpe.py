@@ -37,7 +37,7 @@ def _word_counts(docs: DataFrame, text_col: str) -> DataFrame:
     corpus-level aggregation training pays."""
     return (
         docs.select(
-            F.explode(F.transform(TX.tokens(F.col(text_col)), F.lower)).alias("word")
+            F.explode(TX.lower_tokens(F.col(text_col))).alias("word")
         )
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
@@ -364,7 +364,7 @@ def wordpiece_vocab(
     )
     chars = (
         docs.select(
-            F.explode(F.transform(TX.tokens(F.col(text_col)), F.lower)).alias(
+            F.explode(TX.lower_tokens(F.col(text_col))).alias(
                 "w"
             )
         )

@@ -49,9 +49,7 @@ def hashed_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, j, x): the r7 64-bucket signed hashed-unigram features
     plus the bias row j=64, x=1 for every doc. Tokens collapse map-side
     into at most 65 rows per document regardless of length."""
-    tok = docs.select(
-        "doc_id", F.explode(TX.tokens(F.col(text_col))).alias("w0")
-    ).select("doc_id", F.lower(F.col("w0")).alias("w"))
+    tok = docs.select("doc_id", F.explode(TX.lower_tokens(F.col(text_col))).alias("w"))
     return (
         tok.select(
             "doc_id",
@@ -83,9 +81,7 @@ def keyword_teacher_labels(
     """(doc_id, y): the heuristic teacher rule — y = 1 when positive
     marker words outnumber negative ones. The CCNet/fastText bootstrap
     pattern: heuristic labels in, a generalizing classifier out."""
-    tok = docs.select(
-        "doc_id", F.explode(TX.tokens(F.col(text_col))).alias("w0")
-    ).select("doc_id", F.lower(F.col("w0")).alias("w"))
+    tok = docs.select("doc_id", F.explode(TX.lower_tokens(F.col(text_col))).alias("w"))
     counts = tok.groupBy("doc_id").agg(
         F.sum(F.when(F.col("w").isin(*pos_words), 1).otherwise(0)).alias("pos"),
         F.sum(F.when(F.col("w").isin(*neg_words), 1).otherwise(0)).alias("neg"),
@@ -122,9 +118,7 @@ def keyword_teacher_multiclass(
     array_position's first-occurrence semantics, which DuckDB's
     list_position mirrors exactly). The CCNet/fastText bootstrap pattern
     extended to k classes; a doc with no marker words lands in class 0."""
-    tok = docs.select(
-        "doc_id", F.explode(TX.tokens(F.col(text_col))).alias("w0")
-    ).select("doc_id", F.lower(F.col("w0")).alias("w"))
+    tok = docs.select("doc_id", F.explode(TX.lower_tokens(F.col(text_col))).alias("w"))
     counts = tok.groupBy("doc_id").agg(
         *[
             F.sum(F.when(F.col("w").isin(*ws), 1).otherwise(0))
@@ -277,7 +271,7 @@ def lr_margin_expr(weights: "dict[int, int]", text_col: str = "text") -> Column:
             for c in (F.lit(j).cast("long"), F.lit(weights.get(j, 0)))
         ]
     )
-    tokens = F.transform(TX.tokens(F.col(text_col)), lambda t: F.lower(t))
+    tokens = TX.lower_tokens(F.col(text_col))
 
     def term(t: Column) -> Column:
         bucket = seeded_hash15(t, 9) % N_BUCKETS

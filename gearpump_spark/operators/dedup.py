@@ -24,13 +24,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from gearpump_spark.functions.text import WS_RE
+from gearpump_spark.functions.text import (
+    lower_tokens,
+    ngrams,
+    normalize_text,
+    normalized_words,
+)
 from gearpump_spark.operators.hashing import seeded_md5
-
-
-def normalize_text(col: Column) -> Column:
-    """Canonical form for exact dedup: lowercase, collapse whitespace."""
-    return F.trim(F.regexp_replace(F.lower(col), WS_RE, " "))
 
 
 def fingerprint(col: Column) -> Column:
@@ -53,25 +53,16 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 
 
 def word_shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingle array, JVM-side (no UDF).
-
-    Built with slice + zip_with rather than per-index element_at: Catalyst
-    inlines the tokenizer expression into every element_at call (one full
-    regex split per element — quadratic per row), whereas the zip_with
-    formulation evaluates the tokenizer a constant number of times per row.
-    """
+    """Word n-gram shingle array, JVM-side (no UDF): `ngrams` over the
+    `normalized_words` of ``text``."""
     norm = normalize_text(text)
-    ws = F.split(norm, " ")
-    m = F.greatest(F.size(ws) - (n - 1), F.lit(0))
-    sh = F.slice(ws, 1, m)
-    for j in range(1, n):
-        sh = F.zip_with(sh, F.slice(ws, j + 1, m), lambda a, b: F.concat(a, F.lit(" "), b))
+    ws = normalized_words(text)
     # Short docs (< n words) have no n-grams; emit the whole normalized
     # text as their single shingle so they still participate in MinHash/
     # Jaccard — short near-identical docs are the most duplicate-prone
     # class, and silently dropping them breaks recall. DuckDB mirror:
     # CASE WHEN LEN(ws) < n THEN [ARRAY_TO_STRING(ws, ' ')] ELSE ... END.
-    return F.when(F.size(ws) < n, F.array(norm)).otherwise(sh)
+    return F.when(F.size(ws) < n, F.array(norm)).otherwise(ngrams(ws, n))
 
 
 def _minhash_cols(k: int) -> list[Column]:
@@ -330,9 +321,8 @@ def simhash32(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     expression-level (64 agg columns), no UDF. Returns (id, simhash: long).
     """
     tok = docs.select(
-        F.col(id_col),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("w"),
-    ).filter(F.col("w") != "")
+        F.col(id_col), F.explode(lower_tokens(F.col(text_col))).alias("w")
+    )
     h32 = F.conv(F.substring(F.md5(F.col("w").cast("binary")), 1, 8), 16, 10).cast("long")
     tok = tok.select(id_col, h32.alias("h"))
     votes = tok.groupBy(id_col).agg(
@@ -482,13 +472,7 @@ def duplicate_spans(
     """
     from pyspark.sql import Window as W
 
-    tk = F.split(normalize_text(F.col(text_col)), " ")
-    base = docs.select(F.col(id_col), tk.alias("tk"))
-    # guard: F.sequence(1, 0) is DESCENDING in Spark (r3 lesson) — docs
-    # shorter than n tokens contribute zero windows, not a crash
-    starts = F.when(
-        F.size("tk") >= n, F.sequence(F.lit(1), F.size("tk") - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
+    base = docs.select(F.col(id_col), normalized_words(F.col(text_col)).alias("tk"))
     # The fingerprint relation feeds the frequency aggregate AND the flag
     # join, and the flagged relation feeds the per-doc counts AND the
     # run detection — fully lazy, each leg re-ran the tokenize + per-
@@ -496,9 +480,9 @@ def duplicate_spans(
     # window). Lazy localCheckpoints (r11 shared-relation discipline).
     win = base.select(
         id_col,
-        F.posexplode(
-            F.transform(starts, lambda i: F.md5(F.concat_ws(" ", F.slice("tk", i, n))))
-        ).alias("pos", "fp"),
+        F.posexplode(F.transform(ngrams(F.col("tk"), n), lambda g: F.md5(g))).alias(
+            "pos", "fp"
+        ),
     ).localCheckpoint(eager=False)
     freq = win.groupBy("fp").agg(F.count("*").alias("c"))
     flagged = (

@@ -60,7 +60,7 @@ def tokenized_docs(
     upstream of every inline lexical relation. One row per input row
     (zero-token docs keep an empty array)."""
     return docs.select(
-        F.col(id_col), F.transform(TX.tokens(F.col(text_col)), F.lower).alias("tk")
+        F.col(id_col), TX.lower_tokens(F.col(text_col)).alias("tk")
     )
 
 
@@ -238,7 +238,7 @@ def phrase_match(
         raise ValueError("phrase needs at least 2 terms")
     toks = docs.select(
         F.col(id_col),
-        F.posexplode(F.transform(TX.tokens(F.col(text_col)), F.lower)).alias(
+        F.posexplode(TX.lower_tokens(F.col(text_col))).alias(
             "pos", "word"
         ),
     )
@@ -280,7 +280,7 @@ def positional_index_write(
 
     toks = docs.select(
         F.col(id_col),
-        F.posexplode(F.transform(TX.tokens(F.col(text_col)), F.lower)).alias(
+        F.posexplode(TX.lower_tokens(F.col(text_col))).alias(
             "pos", "word"
         ),
     )

@@ -22,10 +22,9 @@ from gearpump_spark.queries._util import dec, dsum, sql_dsum
 
 @register(
     "wordcount",
-    oracle="""
+    oracle=f"""
     SELECT word, COUNT(*) AS n
-    FROM (SELECT UNNEST(REGEXP_SPLIT_TO_ARRAY(text, '\\s+')) AS word FROM documents)
-    WHERE word <> ''
+    FROM (SELECT UNNEST({TX.sql_tokens()}) AS word FROM documents)
     GROUP BY word
     ORDER BY n DESC, word
     """,
@@ -40,8 +39,7 @@ def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's per-task HashMap — but with spill + codegen."""
     docs = table(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(F.split(F.col("text"), TX.WS_RE)).alias("word"))
-        .filter(F.col("word") != "")
+        docs.select(F.explode(TX.tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), "word")

@@ -21,19 +21,19 @@ from gearpump_spark.operators.hashing import SQL_H15 as _SQL_H15
 from gearpump_spark.functions import text as TX
 from gearpump_spark.queries import register
 
-# Shared DuckDB CTE: normalized word 3-gram shingles per document.
-# Mirrors operators/dedup.py word_shingles()+normalize_text() exactly.
-_SQL_SHINGLES = """
+
+def _sql_shingles(n: int) -> str:
+    """CTE fragment defining ``shingled(doc_id, shingle)``: the normalized
+    word n-gram shingles of operators/dedup.py word_shingles()."""
+    return f"""
     shingled AS (
         SELECT doc_id,
-               UNNEST(CASE WHEN LEN(ws) < 3 THEN [ARRAY_TO_STRING(ws, ' ')]
-                      ELSE LIST_TRANSFORM(RANGE(1, LEN(ws) - 1),
-                           i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END) AS shingle
-        FROM (SELECT doc_id,
-                     STRING_SPLIT(TRIM(REGEXP_REPLACE(LOWER(text), '\\s+', ' ', 'g')), ' ') AS ws
-              FROM documents)
+               UNNEST(CASE WHEN LEN(ws) < {n} THEN [ARRAY_TO_STRING(ws, ' ')]
+                      ELSE {TX.sql_ngrams("ws", n)} END) AS shingle
+        FROM (SELECT doc_id, {TX.sql_normalized_words()} AS ws FROM documents)
     )
 """
+
 
 # Graph inputs. Each DataFrame builder has one DuckDB CTE twin that the
 # oracles format in, so every graph query and its oracle read one graph.
@@ -124,8 +124,8 @@ def _sql_shipment(weighted: bool = False) -> str:
 
 @register(
     "dedup_exact",
-    oracle="""
-    SELECT MD5(TRIM(REGEXP_REPLACE(LOWER(text), '\\s+', ' ', 'g'))) AS fp,
+    oracle=f"""
+    SELECT MD5({TX.sql_normalize_text()}) AS fp,
            MIN(doc_id) AS keep_id, COUNT(*) AS n_dups
     FROM documents GROUP BY 1 ORDER BY keep_id
     """,
@@ -139,7 +139,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_minhash_signature",
     oracle=f"""
-    WITH {_SQL_SHINGLES}
+    WITH {_sql_shingles(3)}
     SELECT doc_id,
            MIN(MD5('0|' || shingle)) AS h0, MIN(MD5('1|' || shingle)) AS h1,
            MIN(MD5('2|' || shingle)) AS h2, MIN(MD5('3|' || shingle)) AS h3,
@@ -155,7 +155,7 @@ def dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_minhash_lsh_pairs",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
+    WITH {_sql_shingles(3)},
     sig AS (
         SELECT doc_id,
                MIN(MD5('0|' || shingle)) AS h0, MIN(MD5('1|' || shingle)) AS h1,
@@ -190,7 +190,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup_canonical_pick extends the CTE chain (split below) with the
 # keep-the-best-copy selection.
 _SQL_CLUSTERS_CTES = f"""
-    WITH RECURSIVE {_SQL_SHINGLES},
+    WITH RECURSIVE {_sql_shingles(3)},
     sig AS (
         SELECT doc_id,
                MIN(MD5('0|' || shingle)) AS h0, MIN(MD5('1|' || shingle)) AS h1,
@@ -336,7 +336,7 @@ def dedup_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
+    WITH {_sql_shingles(3)},
     sh AS (SELECT DISTINCT doc_id, shingle FROM shingled),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
     inter AS (
@@ -365,7 +365,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_containment",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
+    WITH {_sql_shingles(3)},
     sh AS (SELECT DISTINCT doc_id, shingle FROM shingled),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
     inter AS (
@@ -535,7 +535,7 @@ _SQL_TEST_BUCKET = _SQL_H15.format(seed="'0'", key="doc_id") + " % 10000 < 1000"
 @register(
     "dedup_contamination",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
+    WITH {_sql_shingles(3)},
     sp AS (SELECT doc_id,
                   CASE WHEN {_SQL_TEST_BUCKET} THEN 'test' ELSE 'train' END AS split
            FROM documents),
@@ -579,10 +579,7 @@ _SIMHASH_FP = " + ".join(
     "dedup_simhash",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, UNNEST(LIST_FILTER(
-            STRING_SPLIT(TRIM(REGEXP_REPLACE(LOWER(text), '\\s+', ' ', 'g')), ' '),
-            w -> w <> '')) AS w
-        FROM documents),
+        SELECT doc_id, UNNEST({TX.sql_lower_tokens()}) AS w FROM documents),
     h AS (SELECT doc_id,
                  CAST(('0x' || SUBSTR(MD5(w), 1, 8)) AS BIGINT) AS hv
           FROM tok),
@@ -602,10 +599,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_duplicate_spans",
-    oracle=r"""
+    oracle=rf"""
     WITH tok AS (
         SELECT doc_id,
-               STRING_SPLIT(TRIM(REGEXP_REPLACE(LOWER(text), '\s+', ' ', 'g')), ' ') AS tk
+               {TX.sql_normalized_words()} AS tk
         FROM documents),
     win AS (
         SELECT doc_id, CAST(i AS INT) - 1 AS pos,
@@ -1087,18 +1084,18 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Text analysis
 # ---------------------------------------------------------------------------
 
-_SQL_TOKS = """
-    toks AS (
-        SELECT doc_id, lang, text,
-               LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> '') AS tk
-        FROM documents)
-"""
+def _sql_toks(lower: bool = False) -> str:
+    """CTE fragment defining ``toks(doc_id, lang, source, text, tk)``: each
+    document with its whitespace tokens, lowercased when ``lower``."""
+    tk = TX.sql_lower_tokens() if lower else TX.sql_tokens()
+    return f"""
+    toks AS (SELECT doc_id, lang, source, text, {tk} AS tk FROM documents)"""
 
 
 @register(
     "text_doc_stats",
     oracle=f"""
-    WITH {_SQL_TOKS}
+    WITH {_sql_toks()}
     SELECT doc_id,
            CAST(LEN(tk) AS BIGINT) AS n_tokens,
            CAST(LENGTH(text) AS BIGINT) AS n_chars,
@@ -1134,7 +1131,7 @@ def text_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_lang_profile",
     oracle=f"""
-    WITH {_SQL_TOKS}
+    WITH {_sql_toks()}
     SELECT lang, COUNT(*) AS n_docs,
            CAST(SUM(LEN(tk)) AS BIGINT) AS total_tokens,
            CAST(CAST(SUM(LEN(tk)) AS DOUBLE) / COUNT(*) AS DOUBLE) AS avg_tokens,
@@ -1161,7 +1158,7 @@ def text_lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_lang_id",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
         SELECT doc_id, lang,
                LEN(LIST_FILTER(lt, w -> w IN ('the','a','of','and','to','in','is'))) AS s_en,
@@ -1169,8 +1166,7 @@ def text_lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                LEN(LIST_FILTER(lt, w -> w IN ('le','la','de','et','les','des'))) AS s_fr,
                LEN(LIST_FILTER(lt, w -> w IN ('der','die','das','und','ist','ein'))) AS s_de
         FROM (SELECT doc_id, lang,
-                     LIST_TRANSFORM(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                                w -> w <> ''), w -> LOWER(w)) AS lt
+                     {TX.sql_lower_tokens()} AS lt
               FROM documents))
     SELECT doc_id, lang,
            CASE WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_de AND s_en >= 1 THEN 'en'
@@ -1191,7 +1187,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_quality",
-    oracle="""
+    oracle=f"""
     WITH q AS (
         SELECT doc_id,
                LEAST(CAST(LEN(tk) AS DOUBLE) / 20.0, 1.0)
@@ -1201,7 +1197,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
                             w -> w IN ('the','a','of','and','to','in','is'))) > 0
                        THEN 1.0 ELSE 0.5 END) AS quality
         FROM (SELECT doc_id, text,
-                     LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> '') AS tk
+                     {TX.sql_tokens()} AS tk
               FROM documents))
     SELECT doc_id, quality FROM q WHERE quality >= 0.5 ORDER BY doc_id
     """,
@@ -1218,9 +1214,9 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           MD5(TRIM(REGEXP_REPLACE(LOWER(text), '\\s+', ' ', 'g'))) AS fp
+           MD5({TX.sql_normalize_text()}) AS fp
     FROM documents ORDER BY doc_id
     """,
     desc="deterministic 128-bit content fingerprint per document",
@@ -1502,10 +1498,10 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_token_count",
-    oracle=r"""
+    oracle=rf"""
     SELECT doc_id,
-           CAST(LEN(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\s+'), w -> w <> '')) AS BIGINT) AS n_ws_tokens,
-           CAST(LEN(REGEXP_EXTRACT_ALL(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_pieces,
+           CAST(LEN({TX.sql_tokens()}) AS BIGINT) AS n_ws_tokens,
+           CAST(LEN(REGEXP_EXTRACT_ALL(text, '{TX.PIECE_RE}')) AS BIGINT) AS n_pieces,
            CAST(LEN(REGEXP_EXTRACT_ALL(LOWER(text), '[a-z]+')) AS BIGINT) AS n_words
     FROM documents ORDER BY doc_id
     """,
@@ -1517,11 +1513,8 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     letter runs, digit runs, and single punctuation — the standard
     pre-segmentation before a real BPE merge table is applied."""
     docs = table(spark, sf_dir, "documents")
-    ws = F.filter(F.split("text", TX.WS_RE), lambda w: w != "")
-    pieces = F.regexp_extract_all(
-        # explicit RE2 whitespace set, not Java \s (which adds U+000B)
-        F.col("text"), F.lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\f\\r]"), F.lit(0)
-    )
+    ws = TX.tokens(F.col("text"))
+    pieces = F.regexp_extract_all(F.col("text"), F.lit(TX.PIECE_RE), F.lit(0))
     words = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"[a-z]+"), F.lit(0))
     return docs.select(
         "doc_id",
@@ -1843,7 +1836,7 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_repetition",
     oracle=f"""
-    WITH {_SQL_SHINGLES}
+    WITH {_sql_shingles(3)}
     SELECT doc_id,
            COUNT(*) AS n_shingles,
            COUNT(DISTINCT shingle) AS n_distinct,
@@ -1878,12 +1871,8 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_gopher_rules",
-    oracle="""
-    WITH t AS (
-        SELECT doc_id, text,
-               LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '[ \\t\\n\\f\\r]+'),
-                           w -> w <> '') AS tk
-        FROM documents),
+    oracle=f"""
+    WITH {_sql_toks()},
     m AS (
         SELECT doc_id,
                CAST(LEN(tk) AS BIGINT) AS n_words,
@@ -1902,7 +1891,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(LEN(LIST_FILTER(LIST_TRANSFORM(tk, w -> LOWER(w)),
                     w -> w IN ('the','be','to','of','and','that','have','with')))
                     AS BIGINT) AS stopword_hits
-        FROM t)
+        FROM toks)
     SELECT doc_id, n_words, mean_word_len, frac_alpha_words, symbol_ratio,
            stopword_hits,
            (n_words BETWEEN 50 AND 100000
@@ -2038,12 +2027,7 @@ _BLOCKLIST = ("spark", "merge", "vector")
 @register(
     "text_blocklist_filter",
     oracle=f"""
-    WITH t AS (
-        SELECT doc_id,
-               LIST_FILTER(LIST_TRANSFORM(
-                   REGEXP_SPLIT_TO_ARRAY(LOWER(text), '[ \\t\\n\\f\\r]+'),
-                   w -> w), w -> w <> '') AS tk
-        FROM documents)
+    WITH {_sql_toks(lower=True)}
     SELECT doc_id,
            CAST(LEN(tk) AS BIGINT) AS n_tokens,
            CAST(LEN(LIST_FILTER(tk, w -> w IN {_BLOCKLIST!r})) AS BIGINT)
@@ -2054,7 +2038,7 @@ _BLOCKLIST = ("spark", "merge", "vector")
            (CASE WHEN LEN(tk) = 0 THEN 0.0
                  ELSE CAST(LEN(LIST_FILTER(tk, w -> w IN {_BLOCKLIST!r}))
                            AS DOUBLE) / LEN(tk) END) < 0.10 AS kept
-    FROM t ORDER BY doc_id
+    FROM toks ORDER BY doc_id
     """,
     desc="blocklist screening (C4-style badwords filter): per-doc count "
     "and fraction of exact-token blocklist hits plus the keep decision — "
@@ -2067,10 +2051,7 @@ def text_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms — still a literal set (Catalyst converts large isin to a hash
     set); beyond that, a broadcast join on exploded tokens."""
     docs = table(spark, sf_dir, "documents")
-    ltk = F.filter(
-        F.split(F.lower(F.col("text")), TX.WS_RE), lambda t: t != ""
-    )
-    d = docs.select("doc_id", ltk.alias("tk"))
+    d = docs.select("doc_id", TX.lower_tokens(F.col("text")).alias("tk"))
     n = F.size("tk")
     n_blocked = F.size(F.filter("tk", lambda w: w.isin(*_BLOCKLIST)))
     frac = F.when(n == 0, F.lit(0.0)).otherwise(n_blocked.cast("double") / n)
@@ -2085,7 +2066,7 @@ def text_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_lang_confusion",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
         SELECT doc_id, lang,
                LEN(LIST_FILTER(lt, w -> w IN ('the','a','of','and','to','in','is'))) AS s_en,
@@ -2093,8 +2074,7 @@ def text_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                LEN(LIST_FILTER(lt, w -> w IN ('le','la','de','et','les','des'))) AS s_fr,
                LEN(LIST_FILTER(lt, w -> w IN ('der','die','das','und','ist','ein'))) AS s_de
         FROM (SELECT doc_id, lang,
-                     LIST_TRANSFORM(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                                w -> w <> ''), w -> LOWER(w)) AS lt
+                     {TX.sql_lower_tokens()} AS lt
               FROM documents)),
     pred AS (
         SELECT lang,
@@ -2123,12 +2103,9 @@ def text_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_vocab_coverage",
-    oracle="""
+    oracle=f"""
     WITH words AS (
-        SELECT LOWER(w) AS word FROM (
-            SELECT UNNEST(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                      w -> w <> '')) AS w
-            FROM documents)),
+        SELECT UNNEST({TX.sql_lower_tokens()}) AS word FROM documents),
     freq AS (SELECT word, COUNT(*) AS n FROM words GROUP BY word),
     ranked AS (
         SELECT word, n, ROW_NUMBER() OVER (ORDER BY n DESC, word) AS rk FROM freq),
@@ -2146,9 +2123,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: word frequency is one partial-agg shuffle; the top-V cut is a
     TakeOrdered (never a global sort); the final scalar join broadcasts."""
     docs = table(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(F.filter(F.split("text", TX.WS_RE), lambda w: w != "")).alias("w")
-    ).select(F.lower("w").alias("word"))
+    words = docs.select(F.explode(TX.lower_tokens(F.col("text"))).alias("word"))
     freq = words.groupBy("word").agg(F.count("*").alias("n"))
     total = freq.agg(F.sum("n").alias("total"))
     top = freq.orderBy(F.desc("n"), "word").limit(64)
@@ -2209,17 +2184,10 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_boilerplate",
-    oracle="""
-    WITH sh AS (
-        SELECT doc_id,
-               UNNEST(CASE WHEN LEN(ws) < 2 THEN [ARRAY_TO_STRING(ws, ' ')]
-                      ELSE LIST_TRANSFORM(RANGE(1, LEN(ws)),
-                           i -> ws[i] || ' ' || ws[i+1]) END) AS shingle
-        FROM (SELECT doc_id,
-                     STRING_SPLIT(TRIM(REGEXP_REPLACE(LOWER(text), '\\s+', ' ', 'g')), ' ') AS ws
-              FROM documents)),
+    oracle=f"""
+    WITH {_sql_shingles(2)},
     bp AS (
-        SELECT shingle FROM sh
+        SELECT shingle FROM shingled
         GROUP BY shingle
         HAVING COUNT(DISTINCT doc_id) >=
                CEIL(0.02 * (SELECT COUNT(*) FROM documents)))
@@ -2229,7 +2197,7 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS n_boilerplate,
            CAST(ROUND(CAST(SUM(CASE WHEN bp.shingle IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
                       / COUNT(*), 4) AS DOUBLE) AS bp_frac
-    FROM sh LEFT JOIN bp ON sh.shingle = bp.shingle
+    FROM shingled sh LEFT JOIN bp ON sh.shingle = bp.shingle
     GROUP BY sh.doc_id
     ORDER BY sh.doc_id
     """,
@@ -2416,24 +2384,32 @@ def graph_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _sql_chunks(size: int, stride: int, src: str = "documents") -> str:
+    """CTE fragment defining ``chunks(doc_id, chunk_idx, tok_start,
+    n_tokens, chunk_text)`` over the ``text`` of ``src``: the token windows
+    of operators/chunking.py chunk_by_tokens."""
+    return f"""
+    chunk_starts AS (
+        SELECT doc_id, tk,
+               UNNEST(GENERATE_SERIES(0, LEN(tk) - 1, {stride})) AS start
+        FROM (SELECT doc_id, {TX.sql_tokens()} AS tk FROM {src})
+        WHERE LEN(tk) > 0),
+    chunks AS (
+        SELECT doc_id,
+               CAST(start // {stride} AS BIGINT) AS chunk_idx,
+               CAST(start AS BIGINT) AS tok_start,
+               CAST(LEN(tk[start + 1 : start + {size}]) AS BIGINT) AS n_tokens,
+               ARRAY_TO_STRING(tk[start + 1 : start + {size}], ' ') AS chunk_text
+        FROM chunk_starts
+        WHERE start = 0 OR LEN(tk) > start + {size - stride})"""
+
+
 @register(
     "text_chunk_windows",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> '') AS tk
-        FROM documents),
-    st AS (
-        SELECT doc_id, tk, UNNEST(GENERATE_SERIES(0, LEN(tk) - 1, 24)) AS start
-        FROM toks WHERE LEN(tk) > 0)
-    SELECT doc_id,
-           CAST(start // 24 AS BIGINT) AS chunk_idx,
-           CAST(start AS BIGINT) AS tok_start,
-           CAST(LEN(tk[start + 1 : start + 32]) AS BIGINT) AS n_tokens,
-           ARRAY_TO_STRING(tk[start + 1 : start + 32], ' ') AS chunk_text
-    FROM st
-    WHERE start = 0 OR LEN(tk) > start + 8
-    ORDER BY doc_id, chunk_idx
+    oracle=f"""
+    WITH {_sql_chunks(32, 24)}
+    SELECT doc_id, chunk_idx, tok_start, n_tokens, chunk_text
+    FROM chunks ORDER BY doc_id, chunk_idx
     """,
     desc="overlapping token-window chunking (size 32, stride 24) for "
     "context construction — pure narrow map, zero shuffles",
@@ -2453,7 +2429,7 @@ _SQL_SNAP = "(" + _SQL_H15.format(seed="'7'", key="doc_id") + " % 10000) < 8000"
     oracle=f"""
     WITH fp AS (
         SELECT doc_id,
-               MD5(TRIM(REGEXP_REPLACE(LOWER(text), '\\s+', ' ', 'g'))) AS fp,
+               MD5({TX.sql_normalize_text()}) AS fp,
                {_SQL_SNAP} AS in_snap
         FROM documents),
     keep AS (SELECT fp, MIN(doc_id) AS doc_id FROM fp WHERE NOT in_snap GROUP BY fp)
@@ -2474,11 +2450,8 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_doc_freq",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> '') AS tk
-        FROM documents),
+    oracle=f"""
+    WITH {_sql_toks()},
     dw AS (SELECT DISTINCT doc_id, UNNEST(LIST_TRANSFORM(tk, w -> LOWER(w))) AS word
            FROM toks),
     dfc AS (SELECT word, COUNT(*) AS df_count FROM dw GROUP BY word),
@@ -2496,7 +2469,7 @@ def text_doc_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     dw = docs.select(
         F.explode(
-            F.array_distinct(F.transform(TX.tokens(F.col("text")), F.lower))
+            F.array_distinct(TX.lower_tokens(F.col("text")))
         ).alias("word")
     )
     dfc = dw.groupBy("word").agg(F.count("*").cast("long").alias("df_count"))
@@ -2513,13 +2486,8 @@ def text_doc_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_tfidf_topterms",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               LIST_TRANSFORM(
-                   LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> ''),
-                   w -> LOWER(w)) AS tk
-        FROM documents),
+    oracle=f"""
+    WITH {_sql_toks(lower=True)},
     tf AS (SELECT doc_id, UNNEST(tk) AS word FROM toks),
     tfc AS (SELECT doc_id, word, COUNT(*) AS tf FROM tf GROUP BY doc_id, word),
     dfc AS (SELECT word, COUNT(DISTINCT doc_id) AS df FROM tf GROUP BY word),
@@ -2556,7 +2524,7 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-reading the materialized blocks. Deliberately left lazy.
     words = docs.select(
         "doc_id",
-        F.explode(F.transform(TX.tokens(F.col("text")), F.lower)).alias("word"),
+        F.explode(TX.lower_tokens(F.col("text"))).alias("word"),
     )
     tf = words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
     df_ = words.groupBy("word").agg(F.countDistinct("doc_id").alias("df"))
@@ -2583,15 +2551,13 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "text_bm25_topk",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               LIST_TRANSFORM(
-                   LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> ''),
-                   w -> LOWER(w)) AS tk
-        FROM documents),
+def _sql_bm25(require_all: bool = False) -> str:
+    """CTE chain ending at ``pivoted(doc_id, score)``: the engine-exact
+    rational BM25 scorer of operators/retrieval.py bm25_topk for the query
+    'vector merge stream'. ``require_all`` keeps only the documents that
+    contain every query term."""
+    having = "\n        HAVING COUNT(*) = 3" if require_all else ""
+    return f"""{_sql_toks(lower=True)},
     dl AS (SELECT doc_id, CAST(LEN(tk) AS BIGINT) AS dl FROM toks),
     words AS (SELECT doc_id, UNNEST(tk) AS word FROM toks),
     qw AS (SELECT doc_id, word FROM words
@@ -2612,7 +2578,13 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
                COALESCE(MAX(CASE WHEN word = 'vector' THEN s END), 0.0)
              + COALESCE(MAX(CASE WHEN word = 'merge' THEN s END), 0.0)
              + COALESCE(MAX(CASE WHEN word = 'stream' THEN s END), 0.0) AS score
-        FROM terms GROUP BY doc_id)
+        FROM terms GROUP BY doc_id{having})"""
+
+
+@register(
+    "text_bm25_topk",
+    oracle=f"""
+    WITH {_sql_bm25()}
     SELECT doc_id, score FROM pivoted
     ORDER BY score DESC, doc_id LIMIT 10
     """,
@@ -2642,35 +2614,8 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_bm25_topk_and",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               LIST_TRANSFORM(
-                   LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> ''),
-                   w -> LOWER(w)) AS tk
-        FROM documents),
-    dl AS (SELECT doc_id, CAST(LEN(tk) AS BIGINT) AS dl FROM toks),
-    words AS (SELECT doc_id, UNNEST(tk) AS word FROM toks),
-    qw AS (SELECT doc_id, word FROM words
-           WHERE word IN ('vector', 'merge', 'stream')),
-    tfc AS (SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf
-            FROM qw GROUP BY doc_id, word),
-    dfc AS (SELECT word, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-            FROM qw GROUP BY word),
-    tot AS (SELECT CAST((SELECT COUNT(*) FROM documents) AS BIGINT) AS n,
-                   CAST((SELECT SUM(LEN(tk)) FROM toks) AS BIGINT) AS t),
-    terms AS (
-        SELECT f.doc_id, f.word,
-               (22.0 * f.tf * t * (2 * n - 2 * d.df + 1)) /
-               ((10.0 * f.tf * t + 3.0 * t + 9.0 * l.dl * n) * (2 * d.df + 1)) AS s
-        FROM tfc f JOIN dfc d USING (word) JOIN dl l USING (doc_id), tot),
-    pivoted AS (
-        SELECT doc_id,
-               COALESCE(MAX(CASE WHEN word = 'vector' THEN s END), 0.0)
-             + COALESCE(MAX(CASE WHEN word = 'merge' THEN s END), 0.0)
-             + COALESCE(MAX(CASE WHEN word = 'stream' THEN s END), 0.0) AS score
-        FROM terms GROUP BY doc_id
-        HAVING COUNT(*) = 3)
+    oracle=f"""
+    WITH {_sql_bm25(require_all=True)}
     SELECT doc_id, score FROM pivoted
     ORDER BY score DESC, doc_id LIMIT 10
     """,
@@ -2687,13 +2632,8 @@ def text_bm25_topk_and(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_phrase_match",
-    oracle=r"""
-    WITH toks AS (
-        SELECT doc_id,
-               LIST_TRANSFORM(
-                   LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\s+'), w -> w <> ''),
-                   w -> LOWER(w)) AS tk
-        FROM documents),
+    oracle=rf"""
+    WITH {_sql_toks(lower=True)},
     pos AS (
         SELECT doc_id, tk[i + 1] AS word, i AS pos
         FROM toks, UNNEST(RANGE(0, LEN(tk))) AS u(i)),
@@ -2738,8 +2678,7 @@ def _bpe_train_blocks(
     bpe_words AS MATERIALIZED (
       SELECT doc_id, {word_expr} AS word
       FROM documents,
-           UNNEST(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                              x -> x <> '')) AS t(w)),
+           UNNEST({TX.sql_tokens()}) AS t(w)),
     v0 AS MATERIALIZED (
       SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt,
              {base_expr} AS s
@@ -3165,26 +3104,17 @@ def text_sentencepiece_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_chunk_pack",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> '') AS tk
-        FROM documents),
-    st AS (
-        SELECT doc_id, tk, UNNEST(GENERATE_SERIES(0, LEN(tk) - 1, 32)) AS start
-        FROM toks WHERE LEN(tk) > 0),
-    chunks AS (
-        SELECT doc_id,
-               CAST(start // 32 AS BIGINT) AS chunk_idx,
-               CAST(LEN(tk[start + 1 : start + 32]) AS BIGINT) AS n_tokens,
-               doc_id || ':' || CAST(start // 32 AS BIGINT) AS key
-        FROM st),
+    oracle=f"""
+    WITH {_sql_chunks(32, 32)},
+    keyed AS (
+        SELECT doc_id, chunk_idx, n_tokens, doc_id || ':' || chunk_idx AS key
+        FROM chunks),
     packed AS (
         SELECT doc_id, chunk_idx, n_tokens,
                CAST(CONCAT('0x', SUBSTR(MD5('1' || '|' || key), 1, 15)) AS BIGINT)
                  % 10000 % 8 AS shard,
                MD5('0' || '|' || key) AS h, key
-        FROM chunks),
+        FROM keyed),
     binned AS (
         SELECT doc_id, chunk_idx, n_tokens,
                shard * 1099511627776
@@ -3217,21 +3147,15 @@ def pipeline_chunk_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_pmi_bigrams",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               LIST_TRANSFORM(
-                   LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> ''),
-                   w -> LOWER(w)) AS tk
-        FROM documents),
+    oracle=f"""
+    WITH {_sql_toks(lower=True)},
     u AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS n
           FROM (SELECT UNNEST(tk) AS word FROM toks) GROUP BY word),
     tot AS (SELECT CAST(SUM(n) AS BIGINT) AS nu FROM u),
-    bi AS (SELECT tk[i] AS w1, tk[i + 1] AS w2
-           FROM toks, UNNEST(RANGE(1, LEN(tk))) AS r(i)
-           WHERE LEN(tk) >= 2),
-    b AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS n12
-          FROM bi GROUP BY w1, w2),
+    bi AS (SELECT UNNEST({TX.sql_ngrams("tk", 2)}) AS bg FROM toks),
+    b AS (SELECT SPLIT_PART(bg, ' ', 1) AS w1, SPLIT_PART(bg, ' ', 2) AS w2,
+                 CAST(COUNT(*) AS BIGINT) AS n12
+          FROM bi GROUP BY bg),
     nb AS (SELECT CAST(SUM(n12) AS BIGINT) AS nbt FROM b),
     top AS (SELECT w1, w2, n12 FROM b ORDER BY n12 DESC, w1, w2 LIMIT 50)
     SELECT t.w1, t.w2, t.n12,
@@ -3260,7 +3184,7 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     50-row top-k (broadcast); totals are 1-row cross joins. The top-k
     plans as TakeOrderedAndProject — never a global sort."""
     docs = table(spark, sf_dir, "documents")
-    tk = F.transform(TX.tokens(F.col("text")), F.lower)
+    tk = TX.lower_tokens(F.col("text"))
     # The tokenized corpus feeds the unigram and bigram legs, the unigram
     # counts feed THREE consumers (total + both top-pair joins) and the
     # bigram counts two (total + top-k) — fully lazy, every consumer
@@ -3274,21 +3198,12 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     nu = uni.agg(F.sum("n").cast("long").alias("nu"))
-    pairs = F.transform(
-        F.sequence(F.lit(1), F.size("tk") - 1),
-        lambda i: F.struct(
-            F.element_at(F.col("tk"), i).alias("w1"),
-            F.element_at(F.col("tk"), i + 1).alias("w2"),
-        ),
-    )
-    bi = (
-        toks.where(F.size("tk") >= 2)
-        .select(F.explode(pairs).alias("p"))
-        .select("p.w1", "p.w2")
-    )
+    pair = F.split(F.col("bg"), " ")
     b = (
-        bi.groupBy("w1", "w2")
+        toks.select(F.explode(TX.ngrams(F.col("tk"), 2)).alias("bg"))
+        .groupBy("bg")
         .agg(F.count("*").cast("long").alias("n12"))
+        .select(pair[0].alias("w1"), pair[1].alias("w2"), "n12")
         .localCheckpoint(eager=False)
     )
     nb = b.agg(F.sum("n12").cast("long").alias("nbt"))
@@ -3326,18 +3241,9 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_rare_bigram_frac",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               LIST_TRANSFORM(
-                   LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> ''),
-                   w -> LOWER(w)) AS tk
-        FROM documents),
-    bi AS (
-        SELECT doc_id,
-               UNNEST(LIST_TRANSFORM(RANGE(1, LEN(tk)),
-                      i -> tk[i] || ' ' || tk[i + 1])) AS bg
-        FROM toks WHERE LEN(tk) >= 2),
+    oracle=f"""
+    WITH {_sql_toks(lower=True)},
+    bi AS (SELECT doc_id, UNNEST({TX.sql_ngrams("tk", 2)}) AS bg FROM toks),
     c AS (SELECT bg, COUNT(*) AS c2 FROM bi GROUP BY bg),
     j AS (SELECT doc_id, CASE WHEN c2 <= 2 THEN 1 ELSE 0 END AS rare
           FROM bi JOIN c USING (bg))
@@ -3358,15 +3264,8 @@ def text_rare_bigram_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget: one groupBy on bigram (vocab-sized, map-side combined), the
     count join reuses that key, one final groupBy on doc_id."""
     docs = table(spark, sf_dir, "documents")
-    tk = F.transform(TX.tokens(F.col("text")), F.lower)
-    base = docs.select("doc_id", tk.alias("tk")).where(F.size("tk") >= 2)
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.size("tk") - 1),
-        lambda i: F.concat_ws(
-            " ", F.element_at(F.col("tk"), i), F.element_at(F.col("tk"), i + 1)
-        ),
-    )
-    bi = base.select("doc_id", F.explode(bigrams).alias("bg"))
+    base = docs.select("doc_id", TX.lower_tokens(F.col("text")).alias("tk"))
+    bi = base.select("doc_id", F.explode(TX.ngrams(F.col("tk"), 2)).alias("bg"))
     c = bi.groupBy("bg").agg(F.count("*").alias("c2"))
     j = bi.join(c, "bg").select(
         "doc_id", F.when(F.col("c2") <= 2, F.lit(1)).otherwise(F.lit(0)).alias("rare")
@@ -3586,18 +3485,9 @@ def multimodal_png_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_chunk_exact",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> '') AS tk
-        FROM documents),
-    st AS (
-        SELECT doc_id, tk, UNNEST(GENERATE_SERIES(0, LEN(tk) - 1, 32)) AS start
-        FROM toks WHERE LEN(tk) > 0),
-    ch AS (
-        SELECT doc_id, CAST(start // 32 AS BIGINT) AS chunk_idx,
-               MD5(ARRAY_TO_STRING(tk[start + 1 : start + 32], ' ')) AS fp
-        FROM st),
+    oracle=f"""
+    WITH {_sql_chunks(32, 32)},
+    ch AS (SELECT doc_id, chunk_idx, MD5(chunk_text) AS fp FROM chunks),
     r AS (
         SELECT doc_id, chunk_idx, fp,
                ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id, chunk_idx) AS rn,
@@ -3769,7 +3659,7 @@ def multimodal_gif_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_lsh_recall",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
+    WITH {_sql_shingles(3)},
     samp AS (SELECT doc_id FROM documents
              WHERE CAST(CONCAT('0x', SUBSTR(MD5('9' || '|' || doc_id), 1, 15)) AS BIGINT) % 10000 < 2000),
     sh AS (SELECT DISTINCT s.doc_id, s.shingle FROM shingled s
@@ -4522,7 +4412,7 @@ def text_bpe_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, vocab = bpe_train_vocab(docs, n_merges=16)
     words = docs.select(
         "doc_id",
-        F.explode(F.transform(TX.tokens(F.col("text")), F.lower)).alias("word"),
+        F.explode(TX.lower_tokens(F.col("text"))).alias("word"),
     )
     agg = (
         words.join(vocab.select("word", F.size("syms").alias("n_syms")), "word")
@@ -4943,10 +4833,7 @@ def sample_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_cdc_chunks",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id,
-               LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> '') AS tk
-        FROM documents),
+    WITH {_sql_toks()},
     b AS (
         SELECT doc_id, tk,
                LIST_FILTER(RANGE(1, LEN(tk)),
@@ -5047,36 +4934,9 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("q_id", "rank")
 
 
-# BM25 CTE chain shared with text_bm25_topk (same engine-exact rational
-# scorer), parameterized only by the rank depth the fusion consumes.
-_SQL_BM25_RANKS = """
-    toks AS (
-        SELECT doc_id,
-               LIST_TRANSFORM(
-                   LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> ''),
-                   w -> LOWER(w)) AS tk
-        FROM documents),
-    dl AS (SELECT doc_id, CAST(LEN(tk) AS BIGINT) AS dl FROM toks),
-    words AS (SELECT doc_id, UNNEST(tk) AS word FROM toks),
-    qw AS (SELECT doc_id, word FROM words
-           WHERE word IN ('vector', 'merge', 'stream')),
-    tfc AS (SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf
-            FROM qw GROUP BY doc_id, word),
-    dfc AS (SELECT word, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-            FROM qw GROUP BY word),
-    tot AS (SELECT CAST((SELECT COUNT(*) FROM documents) AS BIGINT) AS n,
-                   CAST((SELECT SUM(LEN(tk)) FROM toks) AS BIGINT) AS t),
-    terms AS (
-        SELECT f.doc_id, f.word,
-               (22.0 * f.tf * t * (2 * n - 2 * d.df + 1)) /
-               ((10.0 * f.tf * t + 3.0 * t + 9.0 * l.dl * n) * (2 * d.df + 1)) AS s
-        FROM tfc f JOIN dfc d USING (word) JOIN dl l USING (doc_id), tot),
-    pivoted AS (
-        SELECT doc_id,
-               COALESCE(MAX(CASE WHEN word = 'vector' THEN s END), 0.0)
-             + COALESCE(MAX(CASE WHEN word = 'merge' THEN s END), 0.0)
-             + COALESCE(MAX(CASE WHEN word = 'stream' THEN s END), 0.0) AS score
-        FROM terms GROUP BY doc_id),
+# The BM25 chain plus the top-50 lexical rank list the fusion queries
+# consume.
+_SQL_BM25_RANKS = f"""{_sql_bm25()},
     lex AS (
         SELECT doc_id, r FROM (
             SELECT doc_id,
@@ -5197,13 +5057,8 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_oov_rate",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               LIST_TRANSFORM(
-                   LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> ''),
-                   w -> LOWER(w)) AS tk
-        FROM documents),
+    oracle=f"""
+    WITH {_sql_toks(lower=True)},
     words AS (SELECT doc_id, UNNEST(tk) AS word FROM toks),
     vocab AS (
         SELECT word FROM (
@@ -5235,11 +5090,8 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. At a real 32k vocab the broadcast is still KBs."""
     docs = table(spark, sf_dir, "documents")
     words = docs.select(
-        "doc_id",
-        F.explode(
-            F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
-        ).alias("w"),
-    ).select("doc_id", F.lower("w").alias("word"))
+        "doc_id", F.explode(TX.lower_tokens(F.col("text"))).alias("word")
+    )
     vocab = (
         words.groupBy("word")
         .agg(F.count("*").alias("cnt"))
@@ -5678,10 +5530,9 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_zipf_fit",
-    oracle="""
+    oracle=f"""
     WITH w AS (
-        SELECT UNNEST(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(LOWER(text), '\\s+'),
-                                  x -> x <> '')) AS word
+        SELECT UNNEST({TX.sql_lower_tokens()}) AS word
         FROM documents),
     cnts AS (SELECT word, COUNT(*) AS cnt FROM w GROUP BY word),
     top AS (SELECT word, cnt FROM cnts ORDER BY cnt DESC, word LIMIT 256),
@@ -5700,8 +5551,8 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM terms)
     SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM cnts) AS n_types,
            CAST(n AS BIGINT) AS n_fit,
-           CAST(CAST(ROUND(n * sxy - sx * sy, 6) AS DECIMAL(18,6)) AS DOUBLE)
-           / CAST(CAST(ROUND(n * sxx - sx * sx, 6) AS DECIMAL(18,6)) AS DOUBLE)
+           CAST(CAST(ROUND(n * sxy - CAST(sx AS DECIMAL(38,6)) * sy, 6) AS DECIMAL(18,6)) AS DOUBLE)
+           / CAST(CAST(ROUND(n * sxx - CAST(sx AS DECIMAL(38,6)) * sx, 6) AS DECIMAL(18,6)) AS DOUBLE)
              AS zipf_slope
     FROM agg
     """,
@@ -5720,9 +5571,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     cnts = (
         docs.select(
-            F.explode(
-                F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
-            ).alias("word")
+            F.explode(TX.lower_tokens(F.col("text"))).alias("word")
         )
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
@@ -5745,7 +5594,9 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its precision-overflow scale-reduction path (Spark reduces scale on
     # wide products, DuckDB doesn't — the r6 zipf lesson); products are
     # exact, ROUND(...,6) shrinks the unscaled value below 2^53 before
-    # the only two double casts, and the slope is one IEEE division.
+    # the only two double casts, and the slope is one IEEE division. DuckDB
+    # types a product of two DECIMAL(18,6) as DECIMAL(18,12), which
+    # overflows once sx * sy reaches 10^6, so the oracle widens sx first.
     agg = terms.agg(
         F.count("*").cast("decimal(10,0)").alias("n"),
         F.sum("x").cast("decimal(18,6)").alias("sx"),
@@ -7757,11 +7608,10 @@ def _padded_trigrams(tok: DataFrame, *keys: str) -> DataFrame:
 
 @register(
     "text_qgram_lang_distance",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
         SELECT lang,
-               UNNEST(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                  w -> w <> '')) AS w
+               UNNEST({TX.sql_tokens()}) AS w
         FROM documents),
     tg AS (
         SELECT lang,
@@ -7848,22 +7698,18 @@ def text_qgram_lang_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_DUP_LADDER = (2, 3, 4, 6, 8)
+_SQL_DUP_LADDER = " UNION ALL ".join(
+    f"SELECT doc_id, {s} AS s, UNNEST({TX.sql_ngrams('tk', s)}) AS g FROM toks"
+    for s in _DUP_LADDER
+)
+
+
 @register(
     "text_longest_dup_ngram",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                           w -> w <> '') AS tk
-        FROM documents),
-    sh AS (
-        SELECT doc_id, s,
-               UNNEST(LIST_TRANSFORM(RANGE(1, LEN(tk) - s + 2),
-                   i -> ARRAY_TO_STRING(
-                       LIST_SLICE(tk, CAST(i AS INT), CAST(i + s - 1 AS INT)),
-                       ' '))) AS g
-        FROM toks CROSS JOIN (SELECT UNNEST([2, 3, 4, 6, 8]) AS s)
-        WHERE LEN(tk) >= s),
+    oracle=f"""
+    WITH {_sql_toks()},
+    sh AS ({_SQL_DUP_LADDER}),
     dup AS (
         SELECT doc_id, s, g, COUNT(*) AS c
         FROM sh GROUP BY 1, 2, 3 HAVING COUNT(*) >= 2),
@@ -7896,20 +7742,14 @@ def text_longest_dup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     base = docs.select("doc_id", TX.tokens(F.col("text")).alias("tk"))
-    sdf = spark.createDataFrame([(s,) for s in (2, 3, 4, 6, 8)], "s int")
-    sh = (
-        base.crossJoin(F.broadcast(sdf))
-        .where(F.size("tk") >= F.col("s"))
-        .select(
-            "doc_id",
-            "s",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("tk") - F.col("s") + 1),
-                    lambda i: F.array_join(F.slice(F.col("tk"), i, F.col("s")), " "),
-                )
-            ).alias("g"),
+    ladder = F.array(
+        *(
+            F.struct(F.lit(s).alias("s"), TX.ngrams(F.col("tk"), s).alias("gs"))
+            for s in _DUP_LADDER
         )
+    )
+    sh = base.select("doc_id", F.inline(ladder)).select(
+        "doc_id", "s", F.explode("gs").alias("g")
     )
     dup = (
         sh.groupBy("doc_id", "s", "g")
@@ -7982,15 +7822,14 @@ def multimodal_tiff_packbits_real(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "sample_curriculum_order",
-    oracle="""
+    oracle=f"""
     WITH sc AS (
         SELECT doc_id,
                CAST(CASE WHEN LEN(tk) = 0 THEN 0
                     ELSE (1000000 * LEN(LIST_DISTINCT(tk))) // LEN(tk) END
                  AS BIGINT) AS score
         FROM (SELECT doc_id,
-                     LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                 w -> w <> '') AS tk
+                     {TX.sql_tokens()} AS tk
               FROM documents))
     SELECT doc_id, score,
            CAST(ROW_NUMBER() OVER (ORDER BY score, doc_id) AS BIGINT)
@@ -8035,11 +7874,7 @@ def sample_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_hashed_ngram_features",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, LOWER(w) AS w FROM (
-            SELECT doc_id,
-                   UNNEST(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                      t -> t <> '')) AS w
-            FROM documents)),
+        SELECT doc_id, UNNEST({TX.sql_lower_tokens()}) AS w FROM documents),
     h AS (
         SELECT doc_id,
                {_SQL_H15.format(seed="'9'", key="w")} % 64 AS bucket,
@@ -8065,9 +7900,7 @@ def text_hashed_ngram_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.hashing import seeded_hash15
 
     docs = table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(TX.tokens(F.col("text"))).alias("w0")
-    ).select("doc_id", F.lower(F.col("w0")).alias("w"))
+    tok = docs.select("doc_id", F.explode(TX.lower_tokens(F.col("text"))).alias("w"))
     h = tok.select(
         "doc_id",
         (seeded_hash15(F.col("w"), 9) % 64).alias("bucket"),
@@ -8114,11 +7947,7 @@ def _quality_lr_oracle(
     blocks = [
         f"""
     tok AS (
-        SELECT doc_id, LOWER(w) AS w FROM (
-            SELECT doc_id,
-                   UNNEST(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                      t -> t <> '')) AS w
-            FROM documents)),
+        SELECT doc_id, UNNEST({TX.sql_lower_tokens()}) AS w FROM documents),
     fx AS MATERIALIZED (
         SELECT doc_id, CAST({h9} % 64 AS BIGINT) AS j,
                CAST(SUM(CASE WHEN {h10} % 2 = 0 THEN 1 ELSE -1 END)
@@ -8313,11 +8142,7 @@ def _quality_lr_multiclass_oracle(
     blocks = [
         f"""
     tok AS (
-        SELECT doc_id, LOWER(w) AS w FROM (
-            SELECT doc_id,
-                   UNNEST(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                      t -> t <> '')) AS w
-            FROM documents)),
+        SELECT doc_id, UNNEST({TX.sql_lower_tokens()}) AS w FROM documents),
     fx AS MATERIALIZED (
         SELECT doc_id, CAST({h9} % 64 AS BIGINT) AS j,
                CAST(SUM(CASE WHEN {h10} % 2 = 0 THEN 1 ELSE -1 END)
@@ -8455,7 +8280,7 @@ def text_quality_lr_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pipeline_quality_dedup_pack",
     oracle=_quality_lr_blocks(n_steps=8)
-    + """,
+    + f""",
     zq AS (
         SELECT f.doc_id, SUM(w.w * f.x) AS z
         FROM fx f JOIN w8 w USING (j) GROUP BY f.doc_id),
@@ -8463,29 +8288,18 @@ def text_quality_lr_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, text FROM (
             SELECT d.doc_id, d.text,
                    MIN(d.doc_id) OVER (PARTITION BY
-                       MD5(TRIM(REGEXP_REPLACE(LOWER(d.text), '\\s+', ' ',
-                                               'g')))) AS keeper
+                       MD5({TX.sql_normalize_text("d.text")})) AS keeper
             FROM documents d JOIN zq ON zq.doc_id = d.doc_id AND zq.z >= 0)
-        WHERE doc_id = keeper),
-    toks AS (
-        SELECT doc_id,
-               LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> '') AS tk
-        FROM surv),
-    st AS (
-        SELECT doc_id, tk, UNNEST(GENERATE_SERIES(0, LEN(tk) - 1, 32)) AS start
-        FROM toks WHERE LEN(tk) > 0),
-    chunks AS (
-        SELECT doc_id,
-               CAST(start // 32 AS BIGINT) AS chunk_idx,
-               CAST(LEN(tk[start + 1 : start + 32]) AS BIGINT) AS n_tokens,
-               doc_id || ':' || CAST(start // 32 AS BIGINT) AS key
-        FROM st),
+        WHERE doc_id = keeper),{_sql_chunks(32, 32, "surv")},
+    keyed AS (
+        SELECT doc_id, chunk_idx, n_tokens, doc_id || ':' || chunk_idx AS key
+        FROM chunks),
     packed AS (
         SELECT doc_id, chunk_idx, n_tokens,
                CAST(CONCAT('0x', SUBSTR(MD5('1' || '|' || key), 1, 15)) AS BIGINT)
                  % 10000 % 8 AS shard,
                MD5('0' || '|' || key) AS h, key
-        FROM chunks),
+        FROM keyed),
     binned AS (
         SELECT doc_id, chunk_idx, n_tokens,
                shard * 1099511627776
@@ -8609,11 +8423,10 @@ def graph_pagerank_weighted_personalized_int(
 
 @register(
     "text_lang_attribution",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
         SELECT doc_id, lang,
-               UNNEST(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                  w -> w <> '')) AS w
+               UNNEST({TX.sql_tokens()}) AS w
         FROM documents),
     tg AS (
         SELECT doc_id, lang,
@@ -8737,21 +8550,12 @@ def text_lang_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_bigram_lm_perplexity",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id,
-               LIST_TRANSFORM(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                          w -> w <> ''), w -> LOWER(w)) AS tk
-        FROM documents),
+    oracle=f"""
+    WITH {_sql_toks(lower=True)},
     ucnt AS (SELECT w, COUNT(*) AS cu
-             FROM (SELECT UNNEST(tk) AS w FROM tok) GROUP BY w),
+             FROM (SELECT UNNEST(tk) AS w FROM toks) GROUP BY w),
     vv AS (SELECT COUNT(*) AS v FROM ucnt),
-    bg AS (
-        SELECT doc_id,
-               UNNEST(LIST_TRANSFORM(RANGE(1, LEN(tk)),
-                   i -> tk[CAST(i AS INT)] || ' '
-                        || tk[CAST(i + 1 AS INT)])) AS b
-        FROM tok WHERE LEN(tk) >= 2),
+    bg AS (SELECT doc_id, UNNEST({TX.sql_ngrams("tk", 2)}) AS b FROM toks),
     bcnt AS (SELECT b, COUNT(*) AS cb FROM bg GROUP BY b),
     scored AS (
         SELECT g.doc_id,
@@ -8789,7 +8593,7 @@ def text_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared-relation discipline): tokenize runs once.
     base = docs.select(
         "doc_id",
-        F.transform(TX.tokens(F.col("text")), lambda w: F.lower(w)).alias("tk"),
+        TX.lower_tokens(F.col("text")).alias("tk"),
     ).localCheckpoint(eager=False)
     ucnt = (
         base.select(F.explode("tk").alias("w"))
@@ -8802,16 +8606,7 @@ def text_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exploded bigram-string relation costs more than re-exploding it
     # from the checkpointed arrays, and the bg->bcnt scoring join
     # re-uses bg's own (b) exchange.
-    bg = base.where(F.size("tk") >= 2).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(tk) - 1),"
-                " i -> concat(element_at(tk, CAST(i AS INT)), ' ',"
-                " element_at(tk, CAST(i + 1 AS INT))))"
-            )
-        ).alias("b"),
-    )
+    bg = base.select("doc_id", F.explode(TX.ngrams(F.col("tk"), 2)).alias("b"))
     bcnt = bg.groupBy("b").agg(F.count("*").alias("cb"))
     scored = (
         bg.join(bcnt, "b")
@@ -8853,20 +8648,11 @@ def text_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_trigram_lm_perplexity",
-    oracle="""
-    WITH base AS (
-        SELECT doc_id,
-               LIST_TRANSFORM(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                          t -> t <> ''), t -> LOWER(t)) AS tk
-        FROM documents),
-    ucnt AS (SELECT UNNEST(tk) AS w FROM base),
+    oracle=f"""
+    WITH {_sql_toks(lower=True)},
+    ucnt AS (SELECT UNNEST(tk) AS w FROM toks),
     vv AS (SELECT COUNT(DISTINCT w) AS v FROM ucnt),
-    tg AS (
-        SELECT doc_id,
-               UNNEST(LIST_TRANSFORM(RANGE(1, LEN(tk) - 1),
-                   i -> tk[CAST(i AS INT)] || ' ' || tk[CAST(i + 1 AS INT)]
-                        || ' ' || tk[CAST(i + 2 AS INT)])) AS g
-        FROM base WHERE LEN(tk) >= 3),
+    tg AS (SELECT doc_id, UNNEST({TX.sql_ngrams("tk", 3)}) AS g FROM toks),
     tcnt AS (SELECT g, COUNT(*) AS ct FROM tg GROUP BY g),
     ctx AS (SELECT SPLIT_PART(g, ' ', 1) || ' ' || SPLIT_PART(g, ' ', 2) AS c,
                    COUNT(*) AS cc
@@ -8910,7 +8696,7 @@ def text_trigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan. Lazy localCheckpoints (r11 shared-relation discipline).
     base = docs.select(
         "doc_id",
-        F.transform(TX.tokens(F.col("text")), lambda w: F.lower(w)).alias("tk"),
+        TX.lower_tokens(F.col("text")).alias("tk"),
     ).localCheckpoint(eager=False)
     vv = (
         base.select(F.explode("tk").alias("w"))
@@ -8920,17 +8706,7 @@ def text_trigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (~3x the token text) measured SLOWER than re-exploding it from the
     # checkpointed arrays, and the tg->tcnt scoring join re-uses tg's
     # own (g) exchange anyway.
-    tg = base.where(F.size("tk") >= 3).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(tk) - 2),"
-                " i -> concat(element_at(tk, CAST(i AS INT)), ' ',"
-                " element_at(tk, CAST(i + 1 AS INT)), ' ',"
-                " element_at(tk, CAST(i + 2 AS INT))))"
-            )
-        ).alias("g"),
-    )
+    tg = base.select("doc_id", F.explode(TX.ngrams(F.col("tk"), 3)).alias("g"))
     tcnt = tg.groupBy("g").agg(F.count("*").alias("ct"))
     ctx_key = F.concat_ws(
         " ", F.split(F.col("g"), " ").getItem(0), F.split(F.col("g"), " ").getItem(1)
@@ -8976,39 +8752,24 @@ def text_trigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_backoff_lm_score",
-    oracle="""
-    WITH base AS (
-        SELECT doc_id,
-               LIST_TRANSFORM(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                          t -> t <> ''), t -> LOWER(t)) AS tk
-        FROM documents),
-    trn AS (SELECT doc_id, tk FROM base WHERE doc_id % 2 = 0),
+    oracle=f"""
+    WITH {_sql_toks(lower=True)},
+    trn AS (SELECT doc_id, tk FROM toks WHERE doc_id % 2 = 0),
     n_tok AS (SELECT CAST(SUM(LEN(tk)) AS BIGINT) AS n FROM trn),
     vsz AS (SELECT COUNT(DISTINCT w) AS v
             FROM (SELECT UNNEST(tk) AS w FROM trn)),
-    tgt AS (
-        SELECT s['w1'] AS w1, s['w2'] AS w2, s['w3'] AS w3 FROM (
-            SELECT UNNEST(LIST_TRANSFORM(RANGE(1, LEN(tk) - 1),
-                i -> {'w1': tk[CAST(i AS INT)], 'w2': tk[CAST(i + 1 AS INT)],
-                      'w3': tk[CAST(i + 2 AS INT)]})) AS s
-            FROM trn WHERE LEN(tk) >= 3)),
+    tgt AS (SELECT UNNEST({TX.sql_ngrams("tk", 3)}) AS g FROM trn),
     tga AS (
-        SELECT doc_id, s['w1'] AS w1, s['w2'] AS w2, s['w3'] AS w3 FROM (
-            SELECT doc_id,
-                   UNNEST(LIST_TRANSFORM(RANGE(1, LEN(tk) - 1),
-                i -> {'w1': tk[CAST(i AS INT)], 'w2': tk[CAST(i + 1 AS INT)],
-                      'w3': tk[CAST(i + 2 AS INT)]})) AS s
-            FROM base WHERE LEN(tk) >= 3)),
-    tcnt AS (SELECT w1, w2, w3, COUNT(*) AS ct FROM tgt GROUP BY 1, 2, 3),
-    c12 AS (SELECT w1, w2, COUNT(*) AS cc FROM tgt GROUP BY 1, 2),
-    bgt AS (
-        SELECT s['b1'] AS b1, s['b2'] AS b2 FROM (
-            SELECT UNNEST(LIST_TRANSFORM(RANGE(1, LEN(tk)),
-                i -> {'b1': tk[CAST(i AS INT)],
-                      'b2': tk[CAST(i + 1 AS INT)]})) AS s
-            FROM trn WHERE LEN(tk) >= 2)),
-    bcnt AS (SELECT b1, b2, COUNT(*) AS bc FROM bgt GROUP BY 1, 2),
-    c2 AS (SELECT b1 AS h1, COUNT(*) AS hc FROM bgt GROUP BY 1),
+        SELECT doc_id, g, SPLIT_PART(g, ' ', 1) AS w1,
+               SPLIT_PART(g, ' ', 2) AS w2, SPLIT_PART(g, ' ', 3) AS w3
+        FROM (SELECT doc_id, UNNEST({TX.sql_ngrams("tk", 3)}) AS g FROM toks)),
+    tcnt AS (SELECT g, COUNT(*) AS ct FROM tgt GROUP BY 1),
+    c12 AS (SELECT SPLIT_PART(g, ' ', 1) || ' ' || SPLIT_PART(g, ' ', 2) AS h,
+                   COUNT(*) AS cc
+            FROM tgt GROUP BY 1),
+    bgt AS (SELECT UNNEST({TX.sql_ngrams("tk", 2)}) AS b FROM trn),
+    bcnt AS (SELECT b, COUNT(*) AS bc FROM bgt GROUP BY 1),
+    c2 AS (SELECT SPLIT_PART(b, ' ', 1) AS h1, COUNT(*) AS hc FROM bgt GROUP BY 1),
     ucnt AS (SELECT w, COUNT(*) AS uc
              FROM (SELECT UNNEST(tk) AS w FROM trn) GROUP BY 1),
     scored AS (
@@ -9034,9 +8795,9 @@ def text_trigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
                            AS DECIMAL(18,6))
                END AS t
         FROM tga t
-        LEFT JOIN tcnt tc ON tc.w1 = t.w1 AND tc.w2 = t.w2 AND tc.w3 = t.w3
-        LEFT JOIN c12 cx ON cx.w1 = t.w1 AND cx.w2 = t.w2
-        LEFT JOIN bcnt bc ON bc.b1 = t.w2 AND bc.b2 = t.w3
+        LEFT JOIN tcnt tc ON tc.g = t.g
+        LEFT JOIN c12 cx ON cx.h = t.w1 || ' ' || t.w2
+        LEFT JOIN bcnt bc ON bc.b = t.w2 || ' ' || t.w3
         LEFT JOIN c2 h ON h.h1 = t.w2
         LEFT JOIN ucnt u ON u.w = t.w3
         CROSS JOIN n_tok n CROSS JOIN vsz v),
@@ -9083,7 +8844,7 @@ def text_backoff_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every count table and the scoring stream read the blocks.
     base = docs.select(
         "doc_id",
-        F.transform(TX.tokens(F.col("text")), lambda w: F.lower(w)).alias("tk"),
+        TX.lower_tokens(F.col("text")).alias("tk"),
     ).localCheckpoint(eager=False)
     train = base.where(F.col("doc_id") % 2 == 0)
     n_tok = train.agg(F.sum(F.size("tk")).cast("long").alias("n"))
@@ -9394,7 +9155,7 @@ def sample_domain_reweight_int(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_lsh_scurve",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
+    WITH {_sql_shingles(3)},
     nn AS (SELECT LEAST(10000, 1500000 // COUNT(*)) AS rate FROM documents),
     samp AS (SELECT doc_id FROM documents CROSS JOIN nn
              WHERE CAST(CONCAT('0x', SUBSTR(MD5('11' || '|' || doc_id), 1, 15))
@@ -9587,19 +9348,11 @@ _DSIR_SEED = 13
 @register(
     "sample_dsir_select",
     oracle=f"""
-    WITH base AS (
-        SELECT doc_id, source,
-               LIST_TRANSFORM(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                          t -> t <> ''), t -> LOWER(t)) AS tk
-        FROM documents),
+    WITH {_sql_toks(lower=True)},
     feats AS (
-        SELECT doc_id, source, UNNEST(tk) AS g FROM base
+        SELECT doc_id, source, UNNEST(tk) AS g FROM toks
         UNION ALL
-        SELECT doc_id, source,
-               UNNEST(LIST_TRANSFORM(RANGE(1, LEN(tk)),
-                   i -> tk[CAST(i AS INT)] || ' ' || tk[CAST(i + 1 AS INT)]))
-                 AS g
-        FROM base WHERE LEN(tk) >= 2),
+        SELECT doc_id, source, UNNEST({TX.sql_ngrams("tk", 2)}) AS g FROM toks),
     fb AS (SELECT doc_id, source,
                   {_SQL_H15.format(seed="'13'", key="g")} % {_DSIR_BUCKETS} AS b
            FROM feats),
@@ -9663,19 +9416,11 @@ def sample_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "doc_id",
         "source",
-        F.transform(TX.tokens(F.col("text")), lambda w: F.lower(w)).alias("tk"),
+        TX.lower_tokens(F.col("text")).alias("tk"),
     )
     uni = base.select("doc_id", "source", F.explode("tk").alias("g"))
-    big = base.where(F.size("tk") >= 2).select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(tk) - 1),"
-                " i -> concat(element_at(tk, CAST(i AS INT)), ' ',"
-                " element_at(tk, CAST(i + 1 AS INT))))"
-            )
-        ).alias("g"),
+    big = base.select(
+        "doc_id", "source", F.explode(TX.ngrams(F.col("tk"), 2)).alias("g")
     )
     # The hashed feature relation feeds FIVE legs (tc, rc, tt, rt and the
     # scoring sum) and each leg otherwise re-runs tokenize + both explodes

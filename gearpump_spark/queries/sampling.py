@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gearpump_spark.datasets import table
+from gearpump_spark.functions import text as TX
 from gearpump_spark.operators import sampling as SP
 from gearpump_spark.queries import register
 
@@ -139,13 +140,13 @@ def sample_bottom_k(spark: SparkSession, sf_dir: str) -> DataFrame:
                             w -> w IN ('the','a','of','and','to','in','is'))) > 0
                        THEN 1.0 ELSE 0.5 END) AS quality
         FROM (SELECT doc_id, lang, text,
-                     LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), w -> w <> '') AS tk
+                     {TX.sql_tokens()} AS tk
               FROM documents)),
     kept AS (SELECT doc_id, lang, text FROM scored WHERE quality >= 0.5),
     deduped AS (
         SELECT MIN(doc_id) AS doc_id, MIN(lang) AS lang
         FROM kept
-        GROUP BY MD5(TRIM(REGEXP_REPLACE(LOWER(text), '\\s+', ' ', 'g')))),
+        GROUP BY MD5({TX.sql_normalize_text()})),
     sampled AS (
         SELECT doc_id, lang FROM deduped
         WHERE {_SQL_BUCKET.format(seed="'0'", key="doc_id")} < 5000)
@@ -158,7 +159,6 @@ def pipeline_quality_dedup_sample(spark: SparkSession, sf_dir: str) -> DataFrame
     """The composed shape a real curation job has. At 100 TB: the quality
     filter is scan-local, dedup shuffles only (fp, doc_id, lang), and the
     sample filter runs before the final count shuffle."""
-    from gearpump_spark.functions import text as TX
     from gearpump_spark.operators.dedup import fingerprint
 
     docs = table(spark, sf_dir, "documents")

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gearpump_spark.datasets import table
+from gearpump_spark.functions import text as TX
 from gearpump_spark.operators import sketches as SK
 from gearpump_spark.queries import register
 
@@ -169,12 +170,8 @@ def sketch_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CMS_W, _CMS_D = 512, 3
-_SQL_WORDS = """
-    words AS (
-        SELECT LOWER(w) AS word FROM (
-            SELECT UNNEST(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                      w -> w <> '')) AS w
-            FROM documents))
+_SQL_WORDS = f"""
+    words AS (SELECT UNNEST({TX.sql_lower_tokens()}) AS word FROM documents)
 """
 
 
@@ -210,12 +207,8 @@ def sketch_countmin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells, mergeable across partitions/batches by cell-wise sum, then
     broadcast for probing — frequency estimates over 100 TB in constant
     sketch memory (operators/sketches.py countmin_build/estimate)."""
-    from gearpump_spark.functions.text import WS_RE
-
     docs = table(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(F.filter(F.split("text", WS_RE), lambda w: w != "")).alias("w")
-    ).select(F.lower("w").alias("word"))
+    words = docs.select(F.explode(TX.lower_tokens(F.col("text"))).alias("word"))
     cms = SK.countmin_build(words, "word", width=_CMS_W, depth=_CMS_D)
     exact = words.groupBy("word").agg(F.count("*").alias("exact_n"))
     est = SK.countmin_estimate(cms, words, "word", width=_CMS_W, depth=_CMS_D)
@@ -372,10 +365,7 @@ def sketch_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sketch_kmv_distinct",
     oracle=f"""
     WITH w AS (
-        SELECT DISTINCT LOWER(word) AS word FROM (
-            SELECT UNNEST(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                                      t -> t <> '')) AS word
-            FROM documents)),
+        SELECT DISTINCT UNNEST({TX.sql_lower_tokens()}) AS word FROM documents),
     h AS (SELECT {_SQL_H15_T.format(seed="'4'", key="word")} AS h FROM w),
     kmin AS (SELECT h FROM h ORDER BY h LIMIT 64)
     SELECT CAST(64 AS BIGINT) AS k,
@@ -395,11 +385,7 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined) then a global TakeOrdered of k values — never a full
     sort; O(k) memory per partition."""
     docs = table(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(
-            F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
-        ).alias("w")
-    ).select(F.lower("w").alias("word"))
+    words = docs.select(F.explode(TX.lower_tokens(F.col("text"))).alias("word"))
     return SK.kmv_distinct(words, "word", k=64, seed=4)
 
 
@@ -615,8 +601,7 @@ def sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH w AS (
         SELECT source,
-               UNNEST(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(LOWER(text), '\\s+'),
-                                  x -> x <> '')) AS word
+               UNNEST({TX.sql_lower_tokens()}) AS word
         FROM documents),
     regs AS (
         SELECT source,
@@ -651,9 +636,7 @@ def sketch_hll_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     words = docs.select(
         "source",
-        F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
-        ).alias("word"),
+        F.explode(TX.lower_tokens(F.col("text"))).alias("word"),
     )
     regs = words.groupBy("source").agg(
         F.countDistinct(seeded_hash15(F.col("word"), 44) % 4096).alias("v_regs"),

@@ -46,7 +46,8 @@ def duck():
 #     python -m pytest tests/ -q -m "slow or not slow"
 # Marking is centralized here (collection hook) rather than scattered
 # decorators so the list is auditable in one place; parametrized entries
-# are matched by their full bracketed id.
+# are matched by their full bracketed id. tests/test_text_whitespace.py
+# keeps only its four formerly-Java-\s queries in the default lane.
 SLOW_TESTS = {
     "test_byte_level_round_trips_non_ascii",
     "test_byte_level_trainer_matches_pure_python_golden",
@@ -56,6 +57,14 @@ SLOW_TESTS = {
     "test_end_of_word_variant_matches_reference_and_learns_word_units",
     "test_fixed_window_gbk",
     "test_global_positions_rank_matches_sequential",
+    "test_graph_query_golden_hash[pipeline_quality_dedup_pack]",
+    "test_graph_query_golden_hash[text_bpe_bytes]",
+    "test_graph_query_golden_hash[text_bpe_exact]",
+    "test_graph_query_golden_hash[text_bpe_tokens]",
+    "test_graph_query_golden_hash[text_quality_lr_int]",
+    "test_graph_query_golden_hash[text_quality_lr_multiclass]",
+    "test_graph_query_golden_hash[text_quality_lr_stream_score]",
+    "test_graph_query_golden_hash[text_sentencepiece_tokens]",
     "test_hll_monoid_windowed_distinct",
     "test_ivf_persistent_index_query_no_corpus_exchange",
     "test_ivf_topk_recall_vs_exact",
@@ -115,6 +124,69 @@ SLOW_TESTS = {
     "test_trainer_matches_pure_python_golden",
     "test_trainer_property_matches_reference",
     "test_unigram_property_matches_reference",
+    "test_vertical_tab_split_matches_oracle[dedup_canonical_pick]",
+    "test_vertical_tab_split_matches_oracle[dedup_cdc_chunks]",
+    "test_vertical_tab_split_matches_oracle[dedup_chunk_exact]",
+    "test_vertical_tab_split_matches_oracle[dedup_clusters]",
+    "test_vertical_tab_split_matches_oracle[dedup_clusters_twophase]",
+    "test_vertical_tab_split_matches_oracle[dedup_containment]",
+    "test_vertical_tab_split_matches_oracle[dedup_contamination]",
+    "test_vertical_tab_split_matches_oracle[dedup_duplicate_spans]",
+    "test_vertical_tab_split_matches_oracle[dedup_exact]",
+    "test_vertical_tab_split_matches_oracle[dedup_incremental]",
+    "test_vertical_tab_split_matches_oracle[dedup_lsh_recall]",
+    "test_vertical_tab_split_matches_oracle[dedup_lsh_scurve]",
+    "test_vertical_tab_split_matches_oracle[dedup_minhash_lsh_pairs]",
+    "test_vertical_tab_split_matches_oracle[dedup_minhash_signature]",
+    "test_vertical_tab_split_matches_oracle[dedup_ngram_jaccard]",
+    "test_vertical_tab_split_matches_oracle[dedup_savings_report]",
+    "test_vertical_tab_split_matches_oracle[dedup_simhash]",
+    "test_vertical_tab_split_matches_oracle[dedup_soft_weights]",
+    "test_vertical_tab_split_matches_oracle[doc_fingerprint]",
+    "test_vertical_tab_split_matches_oracle[pipeline_chunk_pack]",
+    "test_vertical_tab_split_matches_oracle[pipeline_quality_dedup_pack]",
+    "test_vertical_tab_split_matches_oracle[pipeline_quality_dedup_sample]",
+    "test_vertical_tab_split_matches_oracle[sample_cluster_split]",
+    "test_vertical_tab_split_matches_oracle[sample_curriculum_order]",
+    "test_vertical_tab_split_matches_oracle[sample_dsir_select]",
+    "test_vertical_tab_split_matches_oracle[sketch_countmin_words]",
+    "test_vertical_tab_split_matches_oracle[text_backoff_lm_score]",
+    "test_vertical_tab_split_matches_oracle[text_bigram_lm_perplexity]",
+    "test_vertical_tab_split_matches_oracle[text_blocklist_filter]",
+    "test_vertical_tab_split_matches_oracle[text_bm25_topk]",
+    "test_vertical_tab_split_matches_oracle[text_bm25_topk_and]",
+    "test_vertical_tab_split_matches_oracle[text_boilerplate]",
+    "test_vertical_tab_split_matches_oracle[text_bpe_bytes]",
+    "test_vertical_tab_split_matches_oracle[text_bpe_exact]",
+    "test_vertical_tab_split_matches_oracle[text_bpe_tokens]",
+    "test_vertical_tab_split_matches_oracle[text_chunk_windows]",
+    "test_vertical_tab_split_matches_oracle[text_doc_freq]",
+    "test_vertical_tab_split_matches_oracle[text_doc_stats]",
+    "test_vertical_tab_split_matches_oracle[text_gopher_rules]",
+    "test_vertical_tab_split_matches_oracle[text_hashed_ngram_features]",
+    "test_vertical_tab_split_matches_oracle[text_hybrid_rrf]",
+    "test_vertical_tab_split_matches_oracle[text_lang_attribution]",
+    "test_vertical_tab_split_matches_oracle[text_lang_confusion]",
+    "test_vertical_tab_split_matches_oracle[text_lang_id]",
+    "test_vertical_tab_split_matches_oracle[text_lang_profile]",
+    "test_vertical_tab_split_matches_oracle[text_longest_dup_ngram]",
+    "test_vertical_tab_split_matches_oracle[text_phrase_match]",
+    "test_vertical_tab_split_matches_oracle[text_pmi_bigrams]",
+    "test_vertical_tab_split_matches_oracle[text_qgram_lang_distance]",
+    "test_vertical_tab_split_matches_oracle[text_quality]",
+    "test_vertical_tab_split_matches_oracle[text_quality_lr_int]",
+    "test_vertical_tab_split_matches_oracle[text_quality_lr_multiclass]",
+    "test_vertical_tab_split_matches_oracle[text_quality_lr_stream_score]",
+    "test_vertical_tab_split_matches_oracle[text_rare_bigram_frac]",
+    "test_vertical_tab_split_matches_oracle[text_repetition]",
+    "test_vertical_tab_split_matches_oracle[text_retrieval_eval]",
+    "test_vertical_tab_split_matches_oracle[text_sentencepiece_tokens]",
+    "test_vertical_tab_split_matches_oracle[text_tfidf_topterms]",
+    "test_vertical_tab_split_matches_oracle[text_token_count]",
+    "test_vertical_tab_split_matches_oracle[text_trigram_lm_perplexity]",
+    "test_vertical_tab_split_matches_oracle[text_vocab_coverage]",
+    "test_vertical_tab_split_matches_oracle[text_wordpiece_tokens]",
+    "test_vertical_tab_split_matches_oracle[wordcount]",
     "test_wordpiece_property_matches_reference",
     "test_wordpiece_tokenize_matches_pure_python",
 }

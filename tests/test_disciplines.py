@@ -11,6 +11,11 @@ enforced mechanically.
    recomputes once per leg unless pinned (dedup_semantic was 8×, the
    triangle estimator 3×). The known multi-consumer flagships must show a
    materialized shared scan (ExistingRDD) in their physical plan.
+
+3. One whitespace rule. functions/text.py owns the split class and every
+   token form built on it, each with its DuckDB twin; a second spelling
+   elsewhere is how four queries came to split on Java's \\s (which
+   matches U+000B) against oracles using RE2's \\s (which does not).
 """
 
 from __future__ import annotations
@@ -30,6 +35,21 @@ def _query_sources() -> str:
     )
 
 
+def _call_spans(src: str, opener: str):
+    """Source text of each ``opener(...)`` call, to its matching paren."""
+    for m in re.finditer(re.escape(opener), src):
+        depth, i = 0, m.end() - 1
+        while i < len(src):
+            if src[i] == "(":
+                depth += 1
+            elif src[i] == ")":
+                depth -= 1
+                if depth == 0:
+                    break
+            i += 1
+        yield src[m.start() : i + 1]
+
+
 def test_wedge_operators_capped_at_call_sites():
     """Every queries/-side call of a Σdeg² wedge operator passes an
     explicit max_degree cap (the operator default stays None = exact, so
@@ -45,19 +65,9 @@ def test_wedge_operators_capped_at_call_sites():
         # no \s* before the paren: prose mentions in docstrings write
         # "fn (..."; real call sites never put a space there (and the
         # repo is black-formatted, which enforces exactly that)
-        for m in re.finditer(rf"{fn}\(", src):
-            # crude but effective: the cap kwarg must appear within the
-            # call's argument span (to the matching close paren)
-            depth, i = 0, m.end() - 1
-            while i < len(src):
-                if src[i] == "(":
-                    depth += 1
-                elif src[i] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                i += 1
-            span = src[m.start() : i]
+        # crude but effective: the cap kwarg must appear within the
+        # call's argument span (to the matching close paren)
+        for span in _call_spans(src, f"{fn}("):
             assert "max_degree" in span, (
                 f"{fn} called without an explicit max_degree cap in a "
                 "registered-query module — the r5 sf1 runaway; pass the "
@@ -85,3 +95,27 @@ def test_multi_consumer_flagships_pin_shared_subplan(spark):
             "the physical plan — the multi-consumer recompute bug of r4 "
             "is back (docs/BENCH_NOTES_r5.md)."
         )
+
+
+def test_whitespace_split_only_in_text_module():
+    """Outside functions/text.py no file under gearpump_spark/ splits on
+    whitespace itself: no DuckDB REGEXP_SPLIT_TO_ARRAY, no F.split over
+    WS_RE or a \\s class, and no \\s+ pattern in any spelling."""
+    text_module = ROOT / "gearpump_spark" / "functions" / "text.py"
+    found = []
+    for path in sorted((ROOT / "gearpump_spark").rglob("*.py")):
+        if path == text_module:
+            continue
+        src = path.read_text()
+        rel = path.relative_to(ROOT)
+        if "REGEXP_SPLIT_TO_ARRAY(" in src:
+            found.append(f"{rel}: REGEXP_SPLIT_TO_ARRAY(")
+        for span in _call_spans(src, "F.split("):
+            if "WS_RE" in span or "\\s" in span:
+                found.append(f"{rel}: {span}")
+        if re.search(r"\\{1,2}s\+", src):
+            found.append(f"{rel}: a \\s+ pattern")
+    assert not found, (
+        "whitespace split outside functions/text.py; use TX.tokens / "
+        "TX.lower_tokens / TX.ngrams or their TX.sql_* twins: " + "; ".join(found)
+    )
