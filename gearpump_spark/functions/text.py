@@ -5,15 +5,15 @@ tokenization, quality stats, stopword/punctuation ratios, a stopword-based
 language-ID heuristic, and content fingerprints. Each has an exact ANSI-SQL
 equivalent so the driver can oracle-check the queries built on them.
 
-This module is the only one that knows the whitespace rule. Every token
-form has one DataFrame function here and one DuckDB SQL twin, named
-``sql_<form>``, that the oracles format in: `tokens`, `lower_tokens`,
-`normalize_text`, `normalized_words` and `ngrams`. The exploded form is
-``F.explode(tokens(...))`` on one side and ``UNNEST(sql_tokens(...))`` on
-the other. The split class is `WS_RE`, ``[ \\t\\n\\f\\r]``: RE2's
-``\\s``, which DuckDB uses. Java's ``\\s`` also matches U+000B (vertical
-tab), so a Spark split on ``\\s+`` and its oracle disagree on any text that
-carries one.
+This module is the only one that knows the whitespace rule. Every
+token form has one DataFrame function here and one DuckDB SQL twin,
+named ``sql_<form>``, that the oracles format in: `tokens`,
+`lower_tokens`, `normalize_text`, `normalized_words`, `ngrams` and
+`letter_runs`. The exploded form is ``F.explode(tokens(...))`` on one
+side and ``UNNEST(sql_tokens(...))`` on the other. The split class is
+`WS_RE`, ``[ \\t\\n\\f\\r]``: RE2's ``\\s``, which DuckDB uses. Java's
+``\\s`` also matches U+000B (vertical tab), so a Spark split on ``\\s+``
+and its oracle disagree on any text that carries one.
 """
 
 from __future__ import annotations
@@ -44,6 +44,9 @@ WS_RE = f"[{_WS}]+"
 # characters that are neither those nor whitespace. One pattern for both
 # engines, over the same whitespace class.
 PIECE_RE = f"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{_WS}]"
+
+# Lowercase letter runs (see `letter_runs`).
+LETTER_RE = "[a-z]+"
 
 
 def tokens(text: Column) -> Column:
@@ -108,6 +111,18 @@ def sql_ngrams(tk: str, n: int) -> str:
     """DuckDB twin of `ngrams`; ``tk`` names a list column."""
     gram = " || ' ' || ".join([f"{tk}[i]"] + [f"{tk}[i + {j}]" for j in range(1, n)])
     return f"LIST_TRANSFORM(RANGE(1, LEN({tk}) - {n} + 2), i -> {gram})"
+
+
+def letter_runs(text: Column) -> Column:
+    """Runs of ASCII letters in the lowercased text, in order: the word
+    form of the unigram-statistics queries, which drops digits and
+    punctuation where `lower_tokens` keeps them."""
+    return F.regexp_extract_all(F.lower(text), F.lit(LETTER_RE), F.lit(0))
+
+
+def sql_letter_runs(text: str = "text") -> str:
+    """DuckDB twin of `letter_runs`."""
+    return f"REGEXP_EXTRACT_ALL(LOWER({text}), '{LETTER_RE}')"
 
 
 def token_count(text: Column) -> Column:

@@ -96,18 +96,13 @@ def cdc_chunks(
     tk = TX.tokens(F.col(text_col))
     base = docs.select(F.col(id_col), tk.alias("tk")).filter(F.size("tk") > 0)
     n = F.size("tk")
-    win = lambda i: F.concat(  # noqa: E731 — 2-token window ending at cut i
-        F.element_at("tk", i), F.lit(" "), F.element_at("tk", i + 1)
+    # the 2-token window at 0-based index i ends at cut i + 1; a 1-token
+    # doc has no window, so it stays one whole-doc chunk
+    cuts = F.transform(
+        TX.ngrams(F.col("tk"), 2),
+        lambda g, i: F.when(seeded_hash15(g, seed) % modulus == 0, i + 1),
     )
-    # F.sequence(1, 0) DESCENDS in Spark — a 1-token doc must yield an
-    # empty boundary list (one whole-doc chunk), not a bogus [1, 0] scan
-    bpos = F.when(
-        n > 1,
-        F.filter(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: seeded_hash15(win(i), seed) % modulus == 0,
-        ),
-    ).otherwise(F.array().cast("array<int>"))
+    bpos = F.filter(cuts, lambda c: c.isNotNull())
     seg = base.select(
         id_col,
         "tk",

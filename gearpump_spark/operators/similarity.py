@@ -1,43 +1,67 @@
 """Vector similarity search over embedding columns (array<float>).
 
-- cosine_topk        — exact brute-force top-k, JVM-side expressions
-                       (zip_with + aggregate fold — no Python in the loop)
-- lsh_project        — random-hyperplane LSH bucketing (the scale path:
-                       candidate generation within buckets only)
-- cosine_topk_lsh    — bucketed approximate top-k
+Exact search:
+- cosine_topk           — brute-force top-k, query side broadcast
+- hard_negatives        — cosine_topk restricted to other-label vectors
+- semantic_dedup        — SemDeDup: cluster, then prune near-duplicate
+                          pairs within each cluster
+
+Approximate search:
+- lsh_project, cosine_topk_lsh      — random-hyperplane LSH buckets
+- ivf_train_centroids, ivf_assign,
+  cosine_topk_ivf                   — IVF inverted lists (FAISS-style)
+- ivf_write_index, ivf_topk_from_index — the IVF lists as a persistent
+                                      bucketed table
+
+Clustering and quantization:
+- kmeans_train, kmeans_assign — float Lloyd's k-means
+- kmeans_int                  — bit-reproducible integer k-means
+- pq_train_codebook, pq_encode, pq_topk_adc,
+  pq_topk_ivfadc              — product quantization and its ADC search
+- quantize_embeddings_int4    — nibble-packed int4 codes
+- random_projection           — integer Johnson–Lindenstrauss projection
+
+Diagnostics:
+- centroid_outliers           — farthest vectors from their group centroid
+- top_principal_component(s)  — power iteration with deflation
+
+The vector arithmetic itself (`dot`, `l2_norm`, `cosine`, the distance
+folds, micro-unit quantization and the seeded pick) lives in
+functions/vector.py; `dot`, `l2_norm` and `cosine` are re-exported here.
 
 Scale: brute force is O(|Q|·|C|·d) — fine when one side broadcasts
 (typical: a few thousand probe vectors against a sharded corpus; the
 corpus side never shuffles). For corpus×corpus the LSH path bounds
-comparisons to per-bucket pairs. Hyperplanes are seeded determinstically
+comparisons to per-bucket pairs. Hyperplanes are seeded deterministically
 from md5 so results are reproducible across engines and runs (SimHash-LSH,
 Charikar 2002; IVF-style bucketing as in FAISS).
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from gearpump_spark.functions import vector as V
+from gearpump_spark.functions.vector import cosine, dot, l2_norm
 
-def _to_double(arr: Column) -> Column:
-    return F.transform(arr, lambda x: x.cast("double"))
+
+def _cosine_sim(q_vec: str, c_vec: str) -> Column:
+    return F.round(cosine(F.col(q_vec), F.col(c_vec)), 4).alias("cosine_sim")
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product (deterministic summation order)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+def _top_k(scored: DataFrame, k: int, q_id: str, c_id: str) -> DataFrame:
+    """Per-query top-k of (q_id, c_id, cosine_sim) rows, ties to the lower
+    corpus id; only the per-query window shuffles (|Q|·k partials)."""
+    w = W.partitionBy(q_id).orderBy(F.desc("cosine_sim"), F.col(c_id))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(q_id, c_id, "cosine_sim", "rank")
     )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    a, b = _to_double(a), _to_double(b)
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
 def cosine_topk(
@@ -56,18 +80,10 @@ def cosine_topk(
     scan stays partitioned, so the whole search is shuffle-free except the
     final per-query top-k (rows = |Q|·k partials).
     """
-    from pyspark.sql import Window as W
-
-    sim = F.round(cosine(F.col(q_vec), F.col(c_vec)), 4).alias("cosine_sim")
     scored = corpus.crossJoin(F.broadcast(queries)).select(
-        F.col(q_id), F.col(c_id), sim
+        F.col(q_id), F.col(c_id), _cosine_sim(q_vec, c_vec)
     )
-    w = W.partitionBy(q_id).orderBy(F.desc("cosine_sim"), F.col(c_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, c_id, "cosine_sim", "rank")
-    )
+    return _top_k(scored, k, q_id, c_id)
 
 
 def _hyperplane(seed: int, dim: int) -> list[float]:
@@ -93,7 +109,7 @@ def lsh_project(
     Scale: adds one narrow projection — bucketing is map-side; the payoff
     is that downstream joins/groupBys key on (bucket) instead of all-pairs.
     """
-    v = _to_double(F.col(vec_col))
+    v = V.to_double(F.col(vec_col))
     bucket = F.lit(0).cast("long")
     for p in range(n_planes):
         plane = F.array(*[F.lit(c) for c in _hyperplane(p, dim)])
@@ -119,28 +135,19 @@ def cosine_topk_lsh(
     Scale: equi-join on bucket replaces the cross join — comparisons drop
     by ~2^n_planes; the join is an ordinary hash shuffle both sides.
     """
-    from pyspark.sql import Window as W
-
     qb = lsh_project(queries, q_vec, dim, n_planes, "bucket")
     cb = lsh_project(corpus, c_vec, dim, n_planes, "bucket")
-    sim = F.round(cosine(F.col(q_vec), F.col(c_vec)), 4).alias("cosine_sim")
-    scored = cb.join(F.broadcast(qb), "bucket").select(F.col(q_id), F.col(c_id), sim)
-    w = W.partitionBy(q_id).orderBy(F.desc("cosine_sim"), F.col(c_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, c_id, "cosine_sim", "rank")
+    scored = cb.join(F.broadcast(qb), "bucket").select(
+        F.col(q_id), F.col(c_id), _cosine_sim(q_vec, c_vec)
     )
+    return _top_k(scored, k, q_id, c_id)
 
 
-def _sq_dist(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def _centroid_candidates(v: Column, centroids: list[list[float]]) -> Column:
-    """(distance, cid) candidate array against every centroid.
+def _candidates(v: Column, centroids: list[list], dist=V.sq_dist) -> Column:
+    """(distance, cid) candidate array against every centroid;
+    ``array_min`` of it picks the nearest, ties to the lowest cid.
+    ``dist`` is `sq_dist` for float centroids and `int_sq_dist` for
+    micro-unit ones.
 
     The centroid table enters the plan as ONE nested-array Literal node
     (array<array<double>>) iterated by `transform`, not as nlist separate
@@ -149,11 +156,41 @@ def _centroid_candidates(v: Column, centroids: list[list[float]]) -> Column:
     (round-1 VERDICT "What's wrong" #5). The literal ships with the task
     closure exactly once per executor, same as a broadcast variable.
     """
-    cents = F.lit([[float(x) for x in c] for c in centroids])
     return F.transform(
-        cents,
-        lambda c, i: F.struct(_sq_dist(v, c).alias("d"), i.cast("int").alias("cid")),
+        F.lit(centroids),
+        lambda c, i: F.struct(dist(v, c).alias("d"), i.cast("int").alias("cid")),
     )
+
+
+def _lowest_id_vectors(
+    corpus: DataFrame, vec_col: str, id_col: str, n: int
+) -> list[list[float]]:
+    return [
+        [float(x) for x in r[0]]
+        for r in corpus.orderBy(id_col).limit(n).select(vec_col).collect()
+    ]
+
+
+def _lloyd_step(
+    corpus: DataFrame, v: Column, cents: list[list[float]]
+) -> list[list[float]]:
+    """One distributed Lloyd round: assign every vector to its nearest
+    centroid, then take per-cluster coordinate means; an empty cluster
+    keeps its centroid. Only nlist·dim means reach the driver."""
+    assigned = corpus.select(
+        F.array_min(_candidates(v, cents))["cid"].alias("cid"), v.alias("v")
+    )
+    rows = (
+        assigned.select("cid", F.posexplode("v").alias("pos", "x"))
+        .groupBy("cid", "pos")
+        .agg(F.avg("x").alias("m"))
+        .groupBy("cid")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+        .select("cid", F.transform("pm", lambda s: s["m"]).alias("centroid"))
+        .collect()
+    )
+    new = {r["cid"]: [float(x) for x in r["centroid"]] for r in rows}
+    return [new.get(i, cents[i]) for i in range(len(cents))]
 
 
 def ivf_train_centroids(
@@ -176,26 +213,10 @@ def ivf_train_centroids(
     nlist·dim rows via posexplode+groupBy — only those reach the driver.
     At 100 TB you train on a bounded sample (df.sample) exactly like
     FAISS trains on a subset; the refinement math is unchanged."""
-    seeds = [
-        [float(x) for x in r[0]]
-        for r in corpus.orderBy(id_col).limit(nlist).select(vec_col).collect()
-    ]
+    seeds = _lowest_id_vectors(corpus, vec_col, id_col, nlist)
     if not refine:
         return seeds
-    v = _to_double(F.col(vec_col))
-    cands = _centroid_candidates(v, seeds)
-    assigned = corpus.select(F.array_min(cands)["cid"].alias("cid"), v.alias("v"))
-    means = (
-        assigned.select("cid", F.posexplode("v").alias("pos", "x"))
-        .groupBy("cid", "pos")
-        .agg(F.avg("x").alias("m"))
-        .groupBy("cid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select("cid", F.transform("pm", lambda s: s["m"]).alias("centroid"))
-        .collect()
-    )
-    refined = {r["cid"]: [float(x) for x in r["centroid"]] for r in means}
-    return [refined.get(i, seeds[i]) for i in range(len(seeds))]
+    return _lloyd_step(corpus, V.to_double(F.col(vec_col)), seeds)
 
 
 def ivf_assign(df: DataFrame, vec_col: str, centroids: list[list[float]],
@@ -204,8 +225,8 @@ def ivf_assign(df: DataFrame, vec_col: str, centroids: list[list[float]],
 
     nprobe=1 builds the inverted lists (corpus side); nprobe>1 is the
     query side's multi-list probe. Pure JVM expressions, no shuffle."""
-    v = _to_double(F.col(vec_col))
-    cands = _centroid_candidates(v, centroids)
+    cents = [[float(x) for x in c] for c in centroids]
+    cands = _candidates(V.to_double(F.col(vec_col)), cents)
     probes = F.slice(F.array_sort(cands), 1, nprobe)
     return df.withColumn(out_col, F.explode(F.transform(probes, lambda s: s["cid"])))
 
@@ -230,19 +251,29 @@ def cosine_topk_ivf(
     index); the probe join is an equi-join on cid with the small query side
     broadcast — same shuffle-free shape as cosine_topk. ``refine=False``
     skips the Lloyd pass (closed-form seed centroids → oracle-checkable)."""
-    from pyspark.sql import Window as W
-
     cents = ivf_train_centroids(corpus, c_vec, nlist, c_id, refine=refine)
     lists_ = ivf_assign(corpus, c_vec, cents, "cid", nprobe=1)
-    probes = ivf_assign(queries, q_vec, cents, "cid", nprobe=nprobe)
-    sim = F.round(cosine(F.col(q_vec), F.col(c_vec)), 4).alias("cosine_sim")
-    scored = lists_.join(F.broadcast(probes), "cid").select(F.col(q_id), F.col(c_id), sim)
-    w = W.partitionBy(q_id).orderBy(F.desc("cosine_sim"), F.col(c_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, c_id, "cosine_sim", "rank")
+    return _ivf_probe(lists_, queries, cents, nprobe, k, q_id, c_id, q_vec, c_vec)
+
+
+def _ivf_probe(
+    lists_: DataFrame,
+    queries: DataFrame,
+    centroids: list[list[float]],
+    nprobe: int,
+    k: int,
+    q_id: str,
+    c_id: str,
+    q_vec: str,
+    c_vec: str,
+) -> DataFrame:
+    """Score each query against the inverted lists of its nprobe nearest
+    centroids only: an equi-join on cid with the query side broadcast."""
+    probes = ivf_assign(queries, q_vec, centroids, "cid", nprobe=nprobe)
+    scored = lists_.join(F.broadcast(probes), "cid").select(
+        F.col(q_id), F.col(c_id), _cosine_sim(q_vec, c_vec)
     )
+    return _top_k(scored, k, q_id, c_id)
 
 
 def kmeans_train(
@@ -264,26 +295,11 @@ def kmeans_train(
     PageRankController.scala:38-70). At 100 TB: train on a bounded
     df.sample like FAISS — the loop body is unchanged.
     """
-    cents = [
-        [float(x) for x in r[0]]
-        for r in corpus.orderBy(id_col).limit(k).select(vec_col).collect()
-    ]
-    v = _to_double(F.col(vec_col))
+    cents = _lowest_id_vectors(corpus, vec_col, id_col, k)
+    v = V.to_double(F.col(vec_col))
     it = 0
     for it in range(1, max_iter + 1):
-        cands = _centroid_candidates(v, cents)
-        assigned = corpus.select(F.array_min(cands)["cid"].alias("cid"), v.alias("v"))
-        rows = (
-            assigned.select("cid", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cid")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cid", F.transform("pm", lambda s: s["m"]).alias("centroid"))
-            .collect()
-        )
-        new = {r["cid"]: [float(x) for x in r["centroid"]] for r in rows}
-        nxt = [new.get(i, cents[i]) for i in range(len(cents))]
+        nxt = _lloyd_step(corpus, v, cents)
         shift = max(
             sum((a - b) ** 2 for a, b in zip(old, cur)) for old, cur in zip(cents, nxt)
         )
@@ -328,10 +344,8 @@ def centroid_outliers(
     the final per-label top-k window (k partials per label under
     TakeOrdered-style ranking).
     """
-    from pyspark.sql import Window as W
-
     vs = F.transform(
-        _to_double(F.col(vec_col)),
+        V.to_double(F.col(vec_col)),
         lambda x: F.round(x * scale, 0).cast("long"),
     )
     e = emb.select(F.col(id_col), F.col(label_col), vs.alias("_vs"))
@@ -404,18 +418,8 @@ def ivf_topk_from_index(
     """Query a persistent IVF index written by ivf_write_index: probe
     assignment is a narrow map over the (small) query side, the candidate
     join reads the bucketed lists — no corpus-side exchange."""
-    from pyspark.sql import Window as W
-
     lists_ = spark.table(table_name)
-    probes = ivf_assign(queries, q_vec, centroids, "cid", nprobe=nprobe)
-    sim = F.round(cosine(F.col(q_vec), F.col(c_vec)), 4).alias("cosine_sim")
-    scored = lists_.join(F.broadcast(probes), "cid").select(F.col(q_id), F.col(c_id), sim)
-    w = W.partitionBy(q_id).orderBy(F.desc("cosine_sim"), F.col(c_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, c_id, "cosine_sim", "rank")
-    )
+    return _ivf_probe(lists_, queries, centroids, nprobe, k, q_id, c_id, q_vec, c_vec)
 
 
 def semantic_dedup(
@@ -490,8 +494,8 @@ def semantic_dedup(
     normed = assigned.select(
         F.col(id_col),
         "cluster",
-        _to_double(F.col(vec_col)).alias("_v"),
-        l2_norm(_to_double(F.col(vec_col))).alias("_nm"),
+        V.to_double(F.col(vec_col)).alias("_v"),
+        l2_norm(V.to_double(F.col(vec_col))).alias("_nm"),
     )
     n_salts = 16
     a = normed.select(
@@ -517,13 +521,7 @@ def semantic_dedup(
         64, int(emb.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     )
     pair_cs = F.round(
-        F.aggregate(
-            F.zip_with("_va", "_vb", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / (F.col("_na") * F.col("_nb")),
-        4,
+        dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")), 4
     )
     drops = (
         a.repartition(n_pair_parts, "cluster", "_salt")
@@ -580,22 +578,27 @@ def quantize_embeddings_int4(
     return base.select(id_col, "scale", packed.alias("packed"))
 
 
+def _seed_vectors(base: DataFrame, k: int) -> list[list[int]]:
+    """The micro-unit vectors ``v`` of the k rows of ``base`` first in the
+    seeded (md5(__id), __id) order: one bounded collect of k rows."""
+    rows = base.orderBy(*V.seed_order("__id")).limit(k).collect()
+    return [[int(x) for x in r.v] for r in rows]
+
+
 def kmeans_int(
     corpus: DataFrame,
     vec_col: str,
     k: int = 4,
     n_iter: int = 3,
     id_col: str = "vec_id",
-    offset: float = 2.0,
-    scale: int = 10**6,
 ) -> DataFrame:
     """BIT-REPRODUCIBLE Lloyd's k-means (companion to graph.pagerank_int):
     float k-means can never be hash-checked across engines because both
     the distance sums and the centroid means depend on summation order;
-    this variant quantizes each coordinate to BIGINT micro-units —
-    floor((v + offset) * scale), offset chosen so values are positive and
-    floor division is engine-independent — and runs a FIXED number of
-    Lloyd rounds in pure integer arithmetic:
+    this variant quantizes each coordinate to BIGINT micro-units
+    (functions/vector.py micro_units: positive, so floor division is
+    engine-independent) and runs a FIXED number of Lloyd rounds in pure
+    integer arithmetic:
 
       seeds    = the k vectors with lowest (md5(id), id)   [decorrelated
                  from insertion order, deterministic everywhere]
@@ -609,42 +612,20 @@ def kmeans_int(
     single nested-array literal (no shuffle, no join); the update shuffles
     only (cid, pos, sum, count) partial-agg rows; the driver sees k·dim
     integers per round, never vectors. Quantization error is bounded by
-    1/scale per coordinate — at 10^-6 it is far below any embedding's
-    noise floor, so cluster quality is indistinguishable from float.
+    1e-6 per coordinate — far below any embedding's noise floor, so
+    cluster quality is indistinguishable from float.
     """
-    vq = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor((x.cast("double") + F.lit(offset)) * F.lit(float(scale))).cast(
-            "long"
-        ),
+    base = corpus.select(
+        F.col(id_col).alias("__id"), V.micro_units(F.col(vec_col)).alias("v")
     )
-    base = corpus.select(F.col(id_col).alias("__id"), vq.alias("v"))
+    cents = _seed_vectors(base, k)
 
-    seed_rows = (
-        base.orderBy(F.md5(F.col("__id").cast("string")), "__id").limit(k).collect()
-    )
-    cents = [[int(x) for x in r.v] for r in seed_rows]
-
-    def _cands(cents_now: list[list[int]]) -> Column:
-        lit = F.lit(cents_now)  # ONE nested-array literal, not k·dim nodes
-        return F.transform(
-            lit,
-            lambda c, i: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("v"),
-                        F.transform(c, lambda x: x.cast("long")),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                i.cast("int").alias("cid"),
-            ),
-        )
+    def nearest(cents_now: list[list[int]]) -> Column:
+        # ONE nested-array literal, not k·dim nodes
+        return F.array_min(_candidates(F.col("v"), cents_now, V.int_sq_dist))["cid"]
 
     for _ in range(n_iter):
-        assigned = base.select(F.array_min(_cands(cents))["cid"].alias("cid"), "v")
+        assigned = base.select(nearest(cents).alias("cid"), "v")
         rows = (
             assigned.select("cid", F.posexplode("v").alias("pos", "x"))
             .groupBy("cid", "pos")
@@ -660,8 +641,7 @@ def kmeans_int(
         ]
 
     return base.select(
-        F.col("__id").alias(id_col),
-        F.array_min(_cands(cents))["cid"].cast("bigint").alias("cluster"),
+        F.col("__id").alias(id_col), nearest(cents).cast("bigint").alias("cluster")
     )
 
 
@@ -676,8 +656,6 @@ def pq_train_codebook(
     id_col: str = "vec_id",
     m: int = 8,
     k: int = 16,
-    offset: float = 2.0,
-    scale: int = 10**6,
 ) -> list[list[list[int]]]:
     """Seeded PQ codebook: cb[sub][cid] is the sub-vector (micro-unit
     BIGINT coordinates) of the cid-th seed vector, seeds being the k
@@ -692,51 +670,68 @@ def pq_train_codebook(
     as ivf_seeded is to ivf — the ENCODE and ADC paths (the parts that
     touch 100 TB) are identical either way.
     """
-    vq = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor((x.cast("double") + F.lit(offset)) * F.lit(float(scale))).cast(
-            "long"
-        ),
+    base = corpus.select(
+        F.col(id_col).alias("__id"), V.micro_units(F.col(vec_col)).alias("v")
     )
-    seed_rows = (
-        corpus.select(F.col(id_col).alias("__id"), vq.alias("v"))
-        .orderBy(F.md5(F.col("__id").cast("string")), "__id")
-        .limit(k)
-        .collect()
-    )
-    if len(seed_rows) < k:
-        raise ValueError(f"corpus has {len(seed_rows)} rows < k={k} PQ centroids")
-    dim = len(seed_rows[0].v)
+    seeds = _seed_vectors(base, k)
+    if len(seeds) < k:
+        raise ValueError(f"corpus has {len(seeds)} rows < k={k} PQ centroids")
+    dim = len(seeds[0])
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     d_sub = dim // m
-    return [
-        [[int(x) for x in r.v[mm * d_sub : (mm + 1) * d_sub]] for r in seed_rows]
-        for mm in range(m)
-    ]
+    return [[v[mm * d_sub : (mm + 1) * d_sub] for v in seeds] for mm in range(m)]
 
 
 def _pq_sub_cands(vq_col: str, codebook_m: list[list[int]], lo: int, d_sub: int) -> Column:
     """array<struct<d,cid>> of (sq-dist to centroid, cid) for one subspace
     — array_min picks (min dist, lowest cid), the deterministic argmin.
-    Same nested-literal shape as kmeans_int._cands: ONE literal node for
-    the subspace's centroid matrix, distances via zip_with+aggregate fold
+    Same nested-literal shape as kmeans_int: ONE literal node for the
+    subspace's centroid matrix, distances via zip_with+aggregate fold
     (pure JVM, no Python in the loop)."""
     sub = F.slice(F.col(vq_col), lo + 1, d_sub)
-    return F.transform(
-        F.lit(codebook_m),
-        lambda c, i: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    sub,
-                    F.transform(c, lambda x: x.cast("long")),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("d"),
-            i.cast("int").alias("cid"),
-        ),
+    return _candidates(sub, codebook_m, V.int_sq_dist)
+
+
+def _pq_nearest(vq_col: str, codebook: list[list[list[int]]]) -> list[Column]:
+    """Per subspace, the nearest codebook centroid as a (d, cid) struct."""
+    d_sub = len(codebook[0][0])
+    return [
+        F.array_min(_pq_sub_cands(vq_col, cb_m, mm * d_sub, d_sub))
+        for mm, cb_m in enumerate(codebook)
+    ]
+
+
+def _adc_table(vq_col: str, codebook: list[list[list[int]]]) -> Column:
+    """dt[sub][cid] = integer sq-dist of the vector's sub-vector to every
+    centroid of that subspace: the query side of asymmetric distance."""
+    d_sub = len(codebook[0][0])
+    return F.array(
+        *[
+            F.transform(_pq_sub_cands(vq_col, cb_m, mm * d_sub, d_sub), lambda s: s["d"])
+            for mm, cb_m in enumerate(codebook)
+        ]
+    )
+
+
+def _adc_top_k(
+    joined: DataFrame, m: int, k: int, q_id_col: str, id_col: str
+) -> DataFrame:
+    """Score (codes, _dt) rows as the sum of m table lookups and keep the
+    per-query top-k by (adc_dist, id)."""
+    adc = reduce(
+        lambda a, b: a + b,
+        [
+            F.element_at(F.element_at("_dt", i), F.element_at("codes", i) + 1)
+            for i in range(1, m + 1)
+        ],
+    )
+    scored = joined.select(q_id_col, id_col, adc.cast("bigint").alias("adc_dist"))
+    w = W.partitionBy(q_id_col).orderBy("adc_dist", id_col)
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(q_id_col, id_col, "adc_dist", F.col("rank").cast("bigint").alias("rank"))
     )
 
 
@@ -745,8 +740,6 @@ def pq_encode(
     codebook: list[list[list[int]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    offset: float = 2.0,
-    scale: int = 10**6,
 ) -> DataFrame:
     """(id, codes: array<int> length m, err: bigint): encode each vector
     as its per-subspace nearest-centroid ids — dim floats become m small
@@ -757,23 +750,10 @@ def pq_encode(
     rides along as m literal arrays (k*dim ints, broadcast-by-closure).
     Encoding 100 TB of embeddings is a single scan-shaped stage.
     """
-    m = len(codebook)
-    d_sub = len(codebook[0][0])
-    vq = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor((x.cast("double") + F.lit(offset)) * F.lit(float(scale))).cast(
-            "long"
-        ),
-    )
-    base = df.select(F.col(id_col).alias(id_col), vq.alias("_vq"))
-    mins = [
-        F.array_min(_pq_sub_cands("_vq", codebook[mm], mm * d_sub, d_sub))
-        for mm in range(m)
-    ]
+    base = df.select(id_col, V.micro_units(F.col(vec_col)).alias("_vq"))
+    mins = _pq_nearest("_vq", codebook)
     codes = F.array(*[mn["cid"] for mn in mins])
-    err = mins[0]["d"]
-    for mn in mins[1:]:
-        err = err + mn["d"]
+    err = reduce(lambda a, b: a + b, [mn["d"] for mn in mins])
     return base.select(id_col, codes.alias("codes"), err.cast("bigint").alias("err"))
 
 
@@ -785,8 +765,6 @@ def pq_topk_adc(
     vec_col: str = "q_vec",
     q_id_col: str = "q_id",
     id_col: str = "vec_id",
-    offset: float = 2.0,
-    scale: int = 10**6,
 ) -> DataFrame:
     """Asymmetric-distance top-k (the FAISS IVF-PQ query path): each query
     precomputes a distance table dt[sub][cid] = sq-dist(query-sub,
@@ -800,43 +778,10 @@ def pq_topk_adc(
     per-query top-k ranks on (adc_dist, id). Distances are exact integer
     sums, so rankings are engine-independent (ties broken by id).
     """
-    mm_ = len(codebook)
-    d_sub = len(codebook[0][0])
-    vq = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor((x.cast("double") + F.lit(offset)) * F.lit(float(scale))).cast(
-            "long"
-        ),
-    )
-    qbase = queries.select(F.col(q_id_col).alias(q_id_col), vq.alias("_vq"))
-    dt = F.array(
-        *[
-            F.transform(
-                _pq_sub_cands("_vq", codebook[mm], mm * d_sub, d_sub),
-                lambda s: s["d"],
-            )
-            for mm in range(mm_)
-        ]
-    )
-    qtab = qbase.select(q_id_col, dt.alias("_dt"))
-
+    qbase = queries.select(q_id_col, V.micro_units(F.col(vec_col)).alias("_vq"))
+    qtab = qbase.select(q_id_col, _adc_table("_vq", codebook).alias("_dt"))
     joined = corpus_codes.crossJoin(F.broadcast(qtab))
-    adc = F.element_at(F.element_at("_dt", 1), F.element_at("codes", 1) + 1)
-    for i in range(2, mm_ + 1):
-        adc = adc + F.element_at(
-            F.element_at("_dt", i), F.element_at("codes", i) + 1
-        )
-    scored = joined.select(
-        q_id_col, id_col, adc.cast("bigint").alias("adc_dist")
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(q_id_col).orderBy("adc_dist", id_col)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(q_id_col, id_col, "adc_dist", F.col("rank").cast("bigint").alias("rank"))
-    )
+    return _adc_top_k(joined, len(codebook), k, q_id_col, id_col)
 
 
 def pq_topk_ivfadc(
@@ -850,8 +795,6 @@ def pq_topk_ivfadc(
     q_vec_col: str = "q_vec",
     q_id_col: str = "q_id",
     id_col: str = "vec_id",
-    offset: float = 2.0,
-    scale: int = 10**6,
 ) -> DataFrame:
     """IVF-PQ (the full FAISS architecture, non-residual variant): the
     corpus shards into nlist inverted lists by nearest coarse centroid
@@ -880,21 +823,10 @@ def pq_topk_ivfadc(
         for cid in range(nlist)
     ]
 
-    def _vq(col: str) -> Column:
-        return F.transform(
-            F.col(col),
-            lambda x: F.floor(
-                (x.cast("double") + F.lit(offset)) * F.lit(float(scale))
-            ).cast("long"),
-        )
-
     # corpus: coarse argmin + PQ codes in one narrow projection
-    cbase = corpus.select(F.col(id_col).alias(id_col), _vq(vec_col).alias("_vq"))
+    cbase = corpus.select(id_col, V.micro_units(F.col(vec_col)).alias("_vq"))
     coarse_cands = _pq_sub_cands("_vq", coarse, 0, m * d_sub)
-    mins = [
-        F.array_min(_pq_sub_cands("_vq", codebook[mm], mm * d_sub, d_sub))
-        for mm in range(m)
-    ]
+    mins = _pq_nearest("_vq", codebook)
     lists_ = cbase.select(
         id_col,
         F.array_min(coarse_cands)["cid"].alias("cid"),
@@ -902,39 +834,17 @@ def pq_topk_ivfadc(
     )
 
     # queries: nprobe probe cids + the ADC distance table, one narrow map
-    qbase = queries.select(F.col(q_id_col).alias(q_id_col), _vq(q_vec_col).alias("_vq"))
+    qbase = queries.select(q_id_col, V.micro_units(F.col(q_vec_col)).alias("_vq"))
     probes = F.transform(
         F.slice(F.array_sort(_pq_sub_cands("_vq", coarse, 0, m * d_sub)), 1, nprobe),
         lambda s: s["cid"],
     )
-    dt = F.array(
-        *[
-            F.transform(
-                _pq_sub_cands("_vq", codebook[mm], mm * d_sub, d_sub),
-                lambda s: s["d"],
-            )
-            for mm in range(m)
-        ]
-    )
     qtab = qbase.select(
-        q_id_col, F.explode(probes).alias("cid"), dt.alias("_dt")
+        q_id_col, F.explode(probes).alias("cid"), _adc_table("_vq", codebook).alias("_dt")
     )
 
     joined = lists_.join(F.broadcast(qtab), "cid")
-    adc = F.element_at(F.element_at("_dt", 1), F.element_at("codes", 1) + 1)
-    for i in range(2, m + 1):
-        adc = adc + F.element_at(
-            F.element_at("_dt", i), F.element_at("codes", i) + 1
-        )
-    scored = joined.select(q_id_col, id_col, adc.cast("bigint").alias("adc_dist"))
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(q_id_col).orderBy("adc_dist", id_col)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(q_id_col, id_col, "adc_dist", F.col("rank").cast("bigint").alias("rank"))
-    )
+    return _adc_top_k(joined, m, k, q_id_col, id_col)
 
 
 def _jl_signs(seed: int, out_dim: int, dim: int) -> list[list[int]]:
@@ -987,21 +897,13 @@ def random_projection(
     """
     signs = _jl_signs(seed, out_dim, dim)
     vq = F.transform(
-        _to_double(F.col(vec_col)),
+        V.to_double(F.col(vec_col)),
         lambda x: F.round(x * scale, 0).cast("long"),
     )
     base = df.withColumn("_vq", vq)
     comps = F.array(
         *[
-            F.aggregate(
-                F.zip_with(
-                    F.col("_vq"),
-                    F.array(*[F.lit(s) for s in signs[j]]),
-                    lambda v, s: v * s.cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
+            V.int_dot(F.col("_vq"), F.array(*[F.lit(s) for s in signs[j]]))
             for j in range(out_dim)
         ]
     )
@@ -1031,20 +933,12 @@ def hard_negatives(
     negative slots. At 100 TB swap the exact scan for the IVF probe
     (ivf_topk_from_index) and apply the same filter to its candidates.
     """
-    from pyspark.sql import Window as W
-
-    sim = F.round(cosine(F.col(a_vec), F.col(c_vec)), 4).alias("cosine_sim")
     scored = (
         corpus.crossJoin(F.broadcast(anchors))
         .where(F.col(c_label) != F.col(a_label))
-        .select(F.col(a_id), F.col(c_id), sim)
+        .select(F.col(a_id), F.col(c_id), _cosine_sim(a_vec, c_vec))
     )
-    w = W.partitionBy(a_id).orderBy(F.desc("cosine_sim"), F.col(c_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(a_id, c_id, "cosine_sim", "rank")
-    )
+    return _top_k(scored, k, a_id, c_id)
 
 
 def top_principal_component(
@@ -1070,37 +964,7 @@ def top_principal_component(
     corpus is scanned once per iteration with no shuffle beyond the
     dimension aggregate (explode → groupBy(pos), combiner-friendly).
     """
-    import hashlib
-
-    dim = len(emb.select(vec_col).first()[0])
-    v = [
-        int(hashlib.md5(f"{seed}|{j}".encode()).hexdigest()[:8], 16)
-        / float(2**31)
-        - 1.0
-        for j in range(dim)
-    ]
-    norm = sum(x * x for x in v) ** 0.5
-    v = [x / norm for x in v]
-    n_rows = emb.count()
-    lam = 0.0
-    for _ in range(n_iter):
-        vlit = F.array(*[F.lit(float(x)) for x in v])
-        proj = dot(_to_double(F.col(vec_col)), vlit)
-        contrib = emb.select(
-            F.posexplode(
-                F.transform(_to_double(F.col(vec_col)), lambda x: x * proj)
-            ).alias("pos", "c")
-        )
-        sums = (
-            contrib.groupBy("pos").agg(F.sum("c").alias("s")).orderBy("pos").collect()
-        )
-        w = [r.s for r in sums]
-        norm = sum(x * x for x in w) ** 0.5
-        if norm == 0.0:
-            break
-        lam = norm / n_rows
-        v = [x / norm for x in w]
-    return v, lam
+    return top_principal_components(emb, vec_col, 1, n_iter, seed)[0]
 
 
 def top_principal_components(
@@ -1125,8 +989,6 @@ def top_principal_components(
     order. Same determinism class as the single-PC probe: float matvec →
     rows-only + numpy golden.
     """
-    import hashlib
-
     dim = len(emb.select(vec_col).first()[0])
     n_rows = emb.count()
     found: list[tuple[list[float], float]] = []
@@ -1138,13 +1000,7 @@ def top_principal_components(
         return w
 
     for t in range(n_components):
-        v = [
-            int(hashlib.md5(f"{seed + t}|{j}".encode()).hexdigest()[:8], 16)
-            / float(2**31)
-            - 1.0
-            for j in range(dim)
-        ]
-        v = _ortho(v)
+        v = _ortho(_hyperplane(seed + t, dim))
         norm = sum(x * x for x in v) ** 0.5
         if norm == 0.0:
             break
@@ -1152,10 +1008,10 @@ def top_principal_components(
         lam = 0.0
         for _ in range(n_iter):
             vlit = F.array(*[F.lit(float(x)) for x in v])
-            proj = dot(_to_double(F.col(vec_col)), vlit)
+            proj = dot(V.to_double(F.col(vec_col)), vlit)
             contrib = emb.select(
                 F.posexplode(
-                    F.transform(_to_double(F.col(vec_col)), lambda x: x * proj)
+                    F.transform(V.to_double(F.col(vec_col)), lambda x: x * proj)
                 ).alias("pos", "c")
             )
             sums = (

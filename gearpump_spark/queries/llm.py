@@ -19,6 +19,7 @@ from gearpump_spark.operators import sampling as SP
 from gearpump_spark.operators import similarity as S
 from gearpump_spark.operators.hashing import SQL_H15 as _SQL_H15
 from gearpump_spark.functions import text as TX
+from gearpump_spark.functions import vector as V
 from gearpump_spark.queries import register
 
 
@@ -605,9 +606,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                {TX.sql_normalized_words()} AS tk
         FROM documents),
     win AS (
-        SELECT doc_id, CAST(i AS INT) - 1 AS pos,
-               MD5(ARRAY_TO_STRING(tk[i:i+7], ' ')) AS fp
-        FROM tok, UNNEST(RANGE(1, GREATEST(LEN(tk) - 7, 0) + 1)) AS t(i)),
+        SELECT doc_id, CAST(i AS INT) - 1 AS pos, MD5(g[i]) AS fp
+        FROM (SELECT doc_id, {TX.sql_ngrams("tk", 8)} AS g FROM tok),
+             UNNEST(RANGE(1, LEN(g) + 1)) AS t(i)),
     freq AS (SELECT fp, COUNT(*) AS c FROM win GROUP BY fp),
     flagged AS (
         SELECT w.doc_id, w.pos, (f.c >= 2) AS dup
@@ -646,51 +647,73 @@ def dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "similarity_topk",
-    oracle="""
-    WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings WHERE vec_id < 5),
-    scored AS (
-        SELECT q.q_id, c.vec_id,
-               ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(c.embedding) + 1),
-                              i -> CAST(c.embedding[i] AS DOUBLE) * CAST(q.q_vec[i] AS DOUBLE)))
-                     / (SQRT(LIST_SUM(LIST_TRANSFORM(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                        * SQRT(LIST_SUM(LIST_TRANSFORM(q.q_vec, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-                     4) AS cosine_sim
-        FROM embeddings c CROSS JOIN q)
-    SELECT q_id, vec_id, cosine_sim, rank FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                                     ORDER BY cosine_sim DESC, vec_id) AS rank
-        FROM scored)
-    WHERE rank <= 5 ORDER BY q_id, rank
-    """,
-    desc="brute-force cosine top-k ANN baseline (query side broadcast)",
-)
-def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
+def _probes(emb: DataFrame, n: int = 5) -> DataFrame:
+    """The probe set of the vector queries, (q_id, q_vec): the embeddings
+    with vec_id < n."""
+    return emb.filter(F.col("vec_id") < n).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    out = S.cosine_topk(q, emb, k=5)
+
+
+def _sql_probes(n: int = 5) -> str:
+    """DuckDB twin of `_probes`."""
+    return f"SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings WHERE vec_id < {n}"
+
+
+def _ranked(out: DataFrame) -> DataFrame:
+    """A cosine top-k operator's result as the vector queries return it."""
     return out.select(
         "q_id", "vec_id", "cosine_sim", F.col("rank").cast("bigint").alias("rank")
     ).orderBy("q_id", "rank")
 
 
-def _lsh_plane_component_sql(p: int) -> str:
-    """Hyperplane p component j (= list index i - 1), the exact double
+def _sql_top_k(src: str, score: str = "cosine_sim DESC", cols: str = "cosine_sim") -> str:
+    """The per-query top-5 of the scored relation ``src`` (q_id, vec_id,
+    ...), ranked by ``score`` with ties to the lower vec_id — the
+    row_number window of the Spark operators."""
+    return f"""SELECT q_id, vec_id, {cols}, CAST(rank AS BIGINT) AS rank FROM (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
+                    ORDER BY {score}, vec_id) AS rank
+        FROM {src}) WHERE rank <= 5
+    ORDER BY q_id, rank"""
+
+
+def _sql_cos4(a: str, b: str) -> str:
+    """round(cosine, 4), the similarity every cosine query reports."""
+    return f"ROUND({V.sql_cosine(a, b)}, 4)"
+
+
+@register(
+    "similarity_topk",
+    oracle=f"""
+    WITH q AS ({_sql_probes()}),
+    scored AS (
+        SELECT q.q_id, c.vec_id, {_sql_cos4("c.embedding", "q.q_vec")} AS cosine_sim
+        FROM embeddings c CROSS JOIN q)
+    {_sql_top_k("scored")}
+    """,
+    desc="brute-force cosine top-k ANN baseline (query side broadcast)",
+)
+def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = table(spark, sf_dir, "embeddings")
+    return _ranked(S.cosine_topk(_probes(emb), emb, k=5))
+
+
+def _lsh_plane_sql(p: int) -> str:
+    """Hyperplane p as a list, component j the exact double
     operators/similarity.py _hyperplane computes: u32(md5('p|j')[:8])/2^31 - 1."""
     return (
-        f"(CAST(('0x' || SUBSTR(MD5(CONCAT('{p}', '|', CAST(i - 1 AS VARCHAR))), 1, 8))"
+        "LIST_TRANSFORM(RANGE(0, 64), j -> "
+        f"CAST(('0x' || SUBSTR(MD5(CONCAT('{p}', '|', CAST(j AS VARCHAR))), 1, 8))"
         " AS BIGINT) / 2147483648.0 - 1.0)"
     )
 
 
-# bucket bits for dim=64, n_planes=4 — the registered LSH query's shape
+# bucket bits for dim=64, n_planes=4 — the registered LSH query's shape;
+# the planes are the one-row CTE hp(h0..h3)
+_LSH_PLANES_SQL = ", ".join(f"{_lsh_plane_sql(p)} AS h{p}" for p in range(4))
 _LSH_BUCKET_SQL = " + ".join(
-    "(CASE WHEN LIST_SUM(LIST_TRANSFORM(RANGE(1, 65), "
-    f"i -> CAST(embedding[i] AS DOUBLE) * {_lsh_plane_component_sql(p)})) > 0 "
-    f"THEN {1 << p} ELSE 0 END)"
+    f"(CASE WHEN {V.sql_dot('embedding', f'hp.h{p}')} > 0 THEN {1 << p} ELSE 0 END)"
     for p in range(4)
 )
 
@@ -704,25 +727,16 @@ _LSH_BUCKET_SQL = " + ".join(
     # hence the full result, are oracle-expressible (converted from
     # rows-only in r4).
     oracle=f"""
-    WITH pl AS (
-        SELECT vec_id, embedding,
-               {_LSH_BUCKET_SQL} AS bucket
-        FROM embeddings),
+    WITH hp AS (SELECT {_LSH_PLANES_SQL}),
+    pl AS (
+        SELECT vec_id, embedding, {_LSH_BUCKET_SQL} AS bucket
+        FROM embeddings, hp),
     q AS (SELECT vec_id AS q_id, embedding AS q_vec, bucket
           FROM pl WHERE vec_id < 5),
     scored AS (
-        SELECT q.q_id, c.vec_id,
-               ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(c.embedding) + 1),
-                              i -> CAST(c.embedding[i] AS DOUBLE) * CAST(q.q_vec[i] AS DOUBLE)))
-                     / (SQRT(LIST_SUM(LIST_TRANSFORM(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                        * SQRT(LIST_SUM(LIST_TRANSFORM(q.q_vec, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-                     4) AS cosine_sim
+        SELECT q.q_id, c.vec_id, {_sql_cos4("c.embedding", "q.q_vec")} AS cosine_sim
         FROM pl c JOIN q ON c.bucket = q.bucket)
-    SELECT q_id, vec_id, cosine_sim, CAST(rank AS BIGINT) AS rank FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                    ORDER BY cosine_sim DESC, vec_id) AS rank
-        FROM scored) WHERE rank <= 5
-    ORDER BY q_id, rank
+    {_sql_top_k("scored")}
     """,
     desc="LSH-bucketed approximate cosine top-k (seeded-md5 random "
     "hyperplanes, scale path) — deterministic by construction, exact "
@@ -730,13 +744,7 @@ _LSH_BUCKET_SQL = " + ".join(
 )
 def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    out = S.cosine_topk_lsh(q, emb, dim=64, k=5, n_planes=4)
-    return out.select(
-        "q_id", "vec_id", "cosine_sim", F.col("rank").cast("bigint").alias("rank")
-    ).orderBy("q_id", "rank")
+    return _ranked(S.cosine_topk_lsh(_probes(emb), emb, dim=64, k=5, n_planes=4))
 
 
 @register(
@@ -749,22 +757,36 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd pass), shard the corpus into inverted lists, probe the 3 nearest
     lists per query. See operators/similarity.py for the scale story."""
     emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    return _ranked(S.cosine_topk_ivf(_probes(emb), emb, nlist=8, nprobe=3, k=5))
+
+
+def _sql_ivf_seeded(n_queries: int) -> str:
+    """CTEs of the seeded IVF search (nlist=8, nprobe=3): cent(cid, cvec)
+    = the 8 lowest-id embeddings, corpus_assign = every vector with its
+    nearest centroid, probes(q_id, q_vec, cid) = the 3 nearest centroids
+    of each vector with vec_id < n_queries. Distances are the same
+    squared-L2 fold similarity._candidates computes."""
+    near = (
+        "ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY "
+        f"{V.sql_sq_dist('e.embedding', 'c.cvec')}, c.cid) AS rn"
     )
-    out = S.cosine_topk_ivf(q, emb, nlist=8, nprobe=3, k=5)
-    return out.select(
-        "q_id", "vec_id", "cosine_sim", F.col("rank").cast("bigint").alias("rank")
-    ).orderBy("q_id", "rank")
-
-
-# squared L2 between a corpus embedding e and centroid embedding c, as the
-# same left-fold of (e_i - c_i)^2 doubles that _sq_dist computes
-_IVF_SQDIST_SQL = (
-    "LIST_SUM(LIST_TRANSFORM(RANGE(1, 65), i -> "
-    "(CAST({e}[i] AS DOUBLE) - CAST({c}[i] AS DOUBLE)) * "
-    "(CAST({e}[i] AS DOUBLE) - CAST({c}[i] AS DOUBLE))))"
-)
+    return f"""cent AS (
+        SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cvec
+        FROM embeddings ORDER BY vec_id LIMIT 8),
+    corpus_assign AS (
+        SELECT vec_id, embedding, cid FROM (
+            SELECT e.vec_id, e.embedding, c.cid, {near}
+            FROM embeddings e CROSS JOIN cent c)
+        WHERE rn = 1),
+    probes AS (
+        SELECT q_id, q_vec, cid FROM (
+            SELECT e.vec_id AS q_id, e.embedding AS q_vec, c.cid, {near}
+            FROM embeddings e CROSS JOIN cent c
+            WHERE e.vec_id < {n_queries})
+        WHERE rn <= 3),
+    ivf_scored AS (
+        SELECT p.q_id, a.vec_id, {_sql_cos4("a.embedding", "p.q_vec")} AS cosine_sim
+        FROM corpus_assign a JOIN probes p USING (cid))"""
 
 
 @register(
@@ -775,39 +797,8 @@ _IVF_SQDIST_SQL = (
     # the bucket-local ranking exactly. Keeps `similarity_topk_ivf`
     # (refined) registered alongside as the recall-tuned variant.
     oracle=f"""
-    WITH cent AS (
-        SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cvec
-        FROM embeddings ORDER BY vec_id LIMIT 8),
-    corpus_assign AS (
-        SELECT vec_id, embedding, cid FROM (
-            SELECT e.vec_id, e.embedding, c.cid,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                       {_IVF_SQDIST_SQL.format(e='e.embedding', c='c.cvec')},
-                       c.cid) AS rn
-            FROM embeddings e CROSS JOIN cent c)
-        WHERE rn = 1),
-    probes AS (
-        SELECT q_id, q_vec, cid FROM (
-            SELECT e.vec_id AS q_id, e.embedding AS q_vec, c.cid,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                       {_IVF_SQDIST_SQL.format(e='e.embedding', c='c.cvec')},
-                       c.cid) AS rn
-            FROM embeddings e CROSS JOIN cent c
-            WHERE e.vec_id < 5)
-        WHERE rn <= 3),
-    scored AS (
-        SELECT p.q_id, a.vec_id,
-               ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(a.embedding) + 1),
-                              i -> CAST(a.embedding[i] AS DOUBLE) * CAST(p.q_vec[i] AS DOUBLE)))
-                     / (SQRT(LIST_SUM(LIST_TRANSFORM(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                        * SQRT(LIST_SUM(LIST_TRANSFORM(p.q_vec, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-                     4) AS cosine_sim
-        FROM corpus_assign a JOIN probes p USING (cid))
-    SELECT q_id, vec_id, cosine_sim, CAST(rank AS BIGINT) AS rank FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                    ORDER BY cosine_sim DESC, vec_id) AS rank
-        FROM scored) WHERE rank <= 5
-    ORDER BY q_id, rank
+    WITH {_sql_ivf_seeded(5)}
+    {_sql_top_k("ivf_scored")}
     """,
     desc="IVF approximate cosine top-k with closed-form seed centroids "
     "(no Lloyd refinement): the whole pipeline — inverted lists, nprobe "
@@ -818,50 +809,60 @@ _IVF_SQDIST_SQL = (
 )
 def similarity_topk_ivf_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    out = S.cosine_topk_ivf(q, emb, nlist=8, nprobe=3, k=5, refine=False)
-    return out.select(
-        "q_id", "vec_id", "cosine_sim", F.col("rank").cast("bigint").alias("rank")
-    ).orderBy("q_id", "rank")
+    out = S.cosine_topk_ivf(_probes(emb), emb, nlist=8, nprobe=3, k=5, refine=False)
+    return _ranked(out)
+
+
+def _sql_micro() -> str:
+    """CTE micro(vec_id, pos, vi): every embedding coordinate in BIGINT
+    micro units (functions/vector.py micro_units), pos 0-based — the
+    (vector, coordinate) relation the integer oracles work on."""
+    return f"""micro AS MATERIALIZED (
+        SELECT vec_id, CAST(i AS BIGINT) - 1 AS pos, qv[i] AS vi
+        FROM (SELECT vec_id, {V.sql_micro_units("embedding")} AS qv FROM embeddings),
+             UNNEST(RANGE(1, LEN(qv) + 1)) AS t(i))"""
+
+
+def _sql_seeds(k: int) -> str:
+    """CTE seeds(vec_id, cid): the k embeddings first in the seeded
+    (md5(id), id) order, cid 0-based in that order."""
+    return f"""seeds AS MATERIALIZED (
+        SELECT vec_id,
+               CAST(ROW_NUMBER() OVER (ORDER BY {V.sql_seed_order()}) AS BIGINT) - 1 AS cid
+        FROM embeddings
+        ORDER BY {V.sql_seed_order()} LIMIT {k})"""
 
 
 # Shared DuckDB CTE chain for product quantization (m=8 subspaces of 8
 # dims, k=16 seeded centroids, micro-unit BIGINT coordinates — mirrors
 # operators/similarity.py pq_train_codebook/pq_encode exactly):
-#   sub    = per-(vector, subspace, dim) micro-unit coordinates
-#   cb     = the codebook: sub-vectors of the 16 lowest-(md5(id), id) seeds
+#   pqsub  = per-(vector, subspace, dim) micro-unit coordinates
+#   pqcb   = the codebook: sub-vectors of the 16 lowest-(md5(id), id) seeds
 #   pqd    = integer sq-dist of every (vector, subspace) to every centroid
 #   pqcode = the deterministic argmin (ties -> lowest cid) = the PQ code
-_SQL_PQ = """
+#   qdt    = pqd of the probe vectors (vec_id < 5): their ADC tables
+_SQL_PQ = f"""
+    {_sql_micro()},
     pqsub AS MATERIALIZED (
-        SELECT vec_id,
-               (CAST(i AS BIGINT) - 1) // 8 AS m,
-               (CAST(i AS BIGINT) - 1) % 8 AS j,
-               CAST(FLOOR((CAST(embedding[CAST(i AS INT)] AS DOUBLE) + 2.0)
-                          * 1000000) AS BIGINT) AS vi
-        FROM embeddings, range(1, 65) t(i)),
-    pqseeds AS MATERIALIZED (
-        SELECT vec_id,
-               CAST(ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                       vec_id) AS BIGINT) - 1 AS cid
-        FROM embeddings
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
+        SELECT vec_id, pos // 8 AS m, pos % 8 AS j, vi FROM micro),
+    {_sql_seeds(16)},
     pqcb AS MATERIALIZED (
         SELECT s.cid, u.m, u.j, u.vi AS ci
-        FROM pqseeds s JOIN pqsub u ON u.vec_id = s.vec_id),
+        FROM seeds s JOIN pqsub u ON u.vec_id = s.vec_id),
     pqd AS MATERIALIZED (
-        SELECT u.vec_id, u.m, c.cid,
-               SUM((u.vi - c.ci) * (u.vi - c.ci)) AS dist
+        SELECT u.vec_id, u.m, c.cid, {V.sql_int_sq_dist("u.vi", "c.ci")} AS dist
         FROM pqsub u JOIN pqcb c ON c.m = u.m AND c.j = u.j
         GROUP BY 1, 2, 3),
     pqcode AS MATERIALIZED (
         SELECT vec_id, m, cid, dist FROM (
             SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m
                        ORDER BY dist, cid) AS rn
-            FROM pqd) WHERE rn = 1)
+            FROM pqd) WHERE rn = 1),
+    qdt AS (SELECT vec_id AS q_id, m, cid, dist AS qd FROM pqd WHERE vec_id < 5)
 """
+_SQL_ADC_TOP_K = _sql_top_k(
+    "adc", score="adc_dist", cols="CAST(adc_dist AS BIGINT) AS adc_dist"
+)
 
 
 @register(
@@ -903,20 +904,11 @@ def embedding_quantize_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     "similarity_topk_pq_adc",
     oracle=f"""
     WITH {_SQL_PQ},
-    qdt AS (
-        SELECT u.vec_id AS q_id, u.m, c.cid,
-               SUM((u.vi - c.ci) * (u.vi - c.ci)) AS qd
-        FROM pqsub u JOIN pqcb c ON c.m = u.m AND c.j = u.j
-        WHERE u.vec_id < 5 GROUP BY 1, 2, 3),
     adc AS (
         SELECT t.q_id, a.vec_id, SUM(t.qd) AS adc_dist
         FROM pqcode a JOIN qdt t ON t.m = a.m AND t.cid = a.cid
         GROUP BY 1, 2)
-    SELECT q_id, vec_id, CAST(adc_dist AS BIGINT) AS adc_dist,
-           CAST(rank AS BIGINT) AS rank
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                     ORDER BY adc_dist, vec_id) AS rank FROM adc)
-    WHERE rank <= 5 ORDER BY q_id, rank
+    {_SQL_ADC_TOP_K}
     """,
     desc="PQ asymmetric-distance top-k (the FAISS IVF-PQ query path): "
     "each query precomputes an 8x16 integer distance table once, every "
@@ -933,10 +925,7 @@ def similarity_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     cb = S.pq_train_codebook(emb)
     codes = S.pq_encode(emb, cb).select("vec_id", "codes")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    return S.pq_topk_adc(q, codes, cb, k=5).orderBy("q_id", "rank")
+    return S.pq_topk_adc(_probes(emb), codes, cb, k=5).orderBy("q_id", "rank")
 
 
 @register(
@@ -959,11 +948,6 @@ def similarity_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
                        ORDER BY cdist, cid) AS rn
             FROM pqcoarse WHERE vec_id < 5) WHERE rn <= 3),
-    qdt AS (
-        SELECT u.vec_id AS q_id, u.m, c.cid,
-               SUM((u.vi - c.ci) * (u.vi - c.ci)) AS qd
-        FROM pqsub u JOIN pqcb c ON c.m = u.m AND c.j = u.j
-        WHERE u.vec_id < 5 GROUP BY 1, 2, 3),
     adc AS (
         SELECT t.q_id, a.vec_id, SUM(t.qd) AS adc_dist
         FROM pqcode a
@@ -971,11 +955,7 @@ def similarity_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN qprobes p ON p.cid = ca.cid
         JOIN qdt t ON t.q_id = p.q_id AND t.m = a.m AND t.cid = a.cid
         GROUP BY 1, 2)
-    SELECT q_id, vec_id, CAST(adc_dist AS BIGINT) AS adc_dist,
-           CAST(rank AS BIGINT) AS rank
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                     ORDER BY adc_dist, vec_id) AS rank FROM adc)
-    WHERE rank <= 5 ORDER BY q_id, rank
+    {_SQL_ADC_TOP_K}
     """,
     desc="IVF-PQ top-k (the full FAISS search architecture, non-residual "
     "variant): corpus shards into 8 inverted lists by nearest coarse "
@@ -992,10 +972,7 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     works: 4-byte codes, bucketed lists, no corpus shuffle."""
     emb = table(spark, sf_dir, "embeddings")
     cb = S.pq_train_codebook(emb)
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    return S.pq_topk_ivfadc(q, emb, cb, nlist=8, nprobe=3, k=5).orderBy(
+    return S.pq_topk_ivfadc(_probes(emb), emb, cb, nlist=8, nprobe=3, k=5).orderBy(
         "q_id", "rank"
     )
 
@@ -1396,21 +1373,15 @@ def multimodal_audio_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 # iterative graph compute
 # ---------------------------------------------------------------------------
 
-_SQL_COS = """
-    ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(a.embedding) + 1),
-                   i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-          / (SQRT(LIST_SUM(LIST_TRANSFORM(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-             * SQRT(LIST_SUM(LIST_TRANSFORM(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4)
-"""
-
-
 @register(
     "dedup_embedding_cosine",
     oracle=f"""
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label, {_SQL_COS} AS cosine_sim
-    FROM embeddings a JOIN embeddings b
-      ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE {_SQL_COS} >= 0.30
+    SELECT * FROM (
+        SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label,
+               {_sql_cos4("a.embedding", "b.embedding")} AS cosine_sim
+        FROM embeddings a JOIN embeddings b
+          ON a.label = b.label AND a.vec_id < b.vec_id)
+    WHERE cosine_sim >= 0.30
     ORDER BY id_a, id_b
     """,
     desc="embedding-cosine near-dup pairs, blocked by label (the IVF-style "
@@ -1421,7 +1392,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked pair generation: self-join ONLY within a label block (the
     quantizer cell), never the full cross product. Scale: pairs per block
     ~ (n/blocks)^2; shuffle keys on label; cosine is a JVM-side fold
-    (operators/similarity.cosine) rounded before thresholding so the
+    (functions/vector.py cosine) rounded before thresholding so the
     boundary is engine-stable."""
     emb = table(spark, sf_dir, "embeddings")
     a = emb.select(
@@ -1431,7 +1402,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("id_b"), F.col("label").alias("label_b"),
         F.col("embedding").alias("vec_b"),
     )
-    cos = F.round(S.cosine(F.col("vec_a"), F.col("vec_b")), 4)
+    cos = F.round(V.cosine(F.col("vec_a"), F.col("vec_b")), 4)
     return (
         a.join(b, (F.col("label") == F.col("label_b")) & (F.col("id_a") < F.col("id_b")))
         .withColumn("cosine_sim", cos)
@@ -1439,15 +1410,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b", "label", "cosine_sim")
         .orderBy("id_a", "id_b")
     )
-
-
-def _cos_pair_sql(x: str, y: str) -> str:
-    """DuckDB cosine between two named list columns, rounded to 4 — the
-    same fold the Spark side computes via operators/similarity.cosine."""
-    return f"""ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN({x}) + 1),
-                   i -> CAST({x}[i] AS DOUBLE) * CAST({y}[i] AS DOUBLE)))
-          / (SQRT(LIST_SUM(LIST_TRANSFORM({x}, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))
-             * SQRT(LIST_SUM(LIST_TRANSFORM({y}, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))), 4)"""
 
 
 @register(
@@ -1459,7 +1421,7 @@ def _cos_pair_sql(x: str, y: str) -> str:
                          FROM embeddings)),
     scored AS (
         SELECT e.vec_id, e.embedding, c.cid,
-               {_cos_pair_sql('e.embedding', 'c.cvec')} AS cs
+               {_sql_cos4("e.embedding", "c.cvec")} AS cs
         FROM embeddings e, cent c),
     assigned AS (
         SELECT vec_id, embedding, cid AS cluster FROM (
@@ -1470,7 +1432,7 @@ def _cos_pair_sql(x: str, y: str) -> str:
         SELECT DISTINCT b.vec_id
         FROM assigned a JOIN assigned b
           ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-        WHERE {_cos_pair_sql('a.embedding', 'b.embedding')} >= 0.30)
+        WHERE {_sql_cos4("a.embedding", "b.embedding")} >= 0.30)
     SELECT vec_id, CAST(cluster AS BIGINT) AS cluster FROM assigned
     WHERE vec_id NOT IN (SELECT vec_id FROM drops)
     ORDER BY vec_id
@@ -1502,7 +1464,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id,
            CAST(LEN({TX.sql_tokens()}) AS BIGINT) AS n_ws_tokens,
            CAST(LEN(REGEXP_EXTRACT_ALL(text, '{TX.PIECE_RE}')) AS BIGINT) AS n_pieces,
-           CAST(LEN(REGEXP_EXTRACT_ALL(LOWER(text), '[a-z]+')) AS BIGINT) AS n_words
+           CAST(LEN({TX.sql_letter_runs()}) AS BIGINT) AS n_words
     FROM documents ORDER BY doc_id
     """,
     desc="token counting: whitespace tokens + BPE-style piece segmentation "
@@ -1515,7 +1477,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     ws = TX.tokens(F.col("text"))
     pieces = F.regexp_extract_all(F.col("text"), F.lit(TX.PIECE_RE), F.lit(0))
-    words = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"[a-z]+"), F.lit(0))
+    words = TX.letter_runs(F.col("text"))
     return docs.select(
         "doc_id",
         F.size(ws).cast("bigint").alias("n_ws_tokens"),
@@ -4284,55 +4246,45 @@ def dedup_fuzzy_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("name_a", "name_b")
 
 
-def _kmeans_int_oracle(k: int = 4, dim: int = 64, n_iter: int = 3) -> str:
+def _kmeans_int_oracle(k: int = 4, n_iter: int = 3) -> str:
     """Unrolled Lloyd rounds mirroring operators/similarity.py kmeans_int:
     fixed iterations + integer micro-unit arithmetic make the fixpoint
     SQL-expressible (float k-means is summation-order-dependent). All
-    CTEs MATERIALIZED — each round references the previous twice."""
+    CTEs MATERIALIZED — each round references the previous twice; a{i}
+    assigns every vector to its nearest centroid of round i."""
     blocks = [
         f"""
-    q AS MATERIALIZED (
-      SELECT vec_id, CAST(i AS BIGINT) AS idx,
-             CAST(FLOOR((CAST(embedding[CAST(i AS INT)] AS DOUBLE) + 2.0)
-                        * 1000000) AS BIGINT) AS vi
-      FROM embeddings, range(1, {dim + 1}) t(i)),
-    seeds AS MATERIALIZED (
-      SELECT vec_id,
-             CAST(ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                     vec_id) AS BIGINT) - 1 AS cid
-      FROM embeddings
-      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {k}),
+    {_sql_micro()},
+    {_sql_seeds(k)},
     c0 AS MATERIALIZED (
-      SELECT s.cid, q.idx, q.vi AS ci FROM seeds s JOIN q ON q.vec_id = s.vec_id)"""
+      SELECT s.cid, q.pos, q.vi AS ci FROM seeds s JOIN micro q ON q.vec_id = s.vec_id)"""
     ]
-    for i in range(n_iter):
+    for i in range(n_iter + 1):
         blocks.append(
             f""",
     a{i} AS MATERIALIZED (
       SELECT vec_id, cid FROM (
         SELECT q.vec_id, c.cid,
                ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                   ORDER BY SUM((q.vi - c.ci) * (q.vi - c.ci)), c.cid) AS rn
-        FROM q JOIN c{i} c USING (idx)
-        GROUP BY q.vec_id, c.cid) WHERE rn = 1),
-    c{i + 1} AS MATERIALIZED (
-      SELECT prev.cid, prev.idx, COALESCE(u.nc, prev.ci) AS ci
-      FROM c{i} prev LEFT JOIN (
-         SELECT a.cid, q.idx, SUM(q.vi) // COUNT(*) AS nc
-         FROM a{i} a JOIN q ON q.vec_id = a.vec_id GROUP BY a.cid, q.idx) u
-      ON u.cid = prev.cid AND u.idx = prev.idx)"""
+                   ORDER BY {V.sql_int_sq_dist("q.vi", "c.ci")}, c.cid) AS rn
+        FROM micro q JOIN c{i} c USING (pos)
+        GROUP BY q.vec_id, c.cid) WHERE rn = 1)"""
         )
+        if i < n_iter:
+            blocks.append(
+                f""",
+    c{i + 1} AS MATERIALIZED (
+      SELECT prev.cid, prev.pos, COALESCE(u.nc, prev.ci) AS ci
+      FROM c{i} prev LEFT JOIN (
+         SELECT a.cid, q.pos, SUM(q.vi) // COUNT(*) AS nc
+         FROM a{i} a JOIN micro q ON q.vec_id = a.vec_id GROUP BY a.cid, q.pos) u
+      ON u.cid = prev.cid AND u.pos = prev.pos)"""
+            )
     return (
         "WITH"
         + "".join(blocks)
         + f"""
-    SELECT vec_id, cid AS cluster FROM (
-        SELECT q.vec_id, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                   ORDER BY SUM((q.vi - c.ci) * (q.vi - c.ci)), c.cid) AS rn
-        FROM q JOIN c{n_iter} c USING (idx)
-        GROUP BY q.vec_id, c.cid) WHERE rn = 1
-    ORDER BY vec_id"""
+    SELECT vec_id, cid AS cluster FROM a{n_iter} ORDER BY vec_id"""
     )
 
 
@@ -4652,7 +4604,7 @@ def multimodal_phash_int(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_random_projection",
-    oracle="""
+    oracle=f"""
     WITH u AS (
         SELECT vec_id, CAST(i AS BIGINT) - 1 AS pos,
                CAST(ROUND(CAST(embedding[CAST(i AS INT)] AS DOUBLE) * 1000)
@@ -4671,7 +4623,7 @@ def multimodal_phash_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg AS (
         SELECT vec_id, LIST(c ORDER BY j) AS cs FROM comp GROUP BY vec_id)
     SELECT vec_id, ARRAY_TO_STRING(cs, ',') AS proj,
-           CAST(LIST_SUM(LIST_TRANSFORM(cs, c -> c * c)) AS BIGINT) AS pnorm2
+           CAST({V.sql_int_dot("cs", "cs")} AS BIGINT) AS pnorm2
     FROM agg ORDER BY vec_id
     """,
     desc="Johnson-Lindenstrauss random projection 64->16 dims: dense "
@@ -4691,13 +4643,10 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = table(spark, sf_dir, "embeddings")
     out = random_projection(emb, "embedding", dim=64, out_dim=16, seed=7)
-    pnorm2 = F.aggregate(
-        F.col("proj"), F.lit(0).cast("long"), lambda acc, x: acc + x * x
-    )
     return out.select(
         "vec_id",
         F.array_join("proj", ",").alias("proj"),
-        pnorm2.alias("pnorm2"),
+        V.int_dot(F.col("proj"), F.col("proj")).alias("pnorm2"),
     ).orderBy("vec_id")
 
 
@@ -4837,9 +4786,9 @@ def sample_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     b AS (
         SELECT doc_id, tk,
                LIST_FILTER(RANGE(1, LEN(tk)),
-                   i -> {_SQL_H15.format(seed="'9'", key="(tk[i] || ' ' || tk[i+1])")}
-                        % 8 = 0) AS bpos
-        FROM toks WHERE LEN(tk) > 0),
+                   i -> {_SQL_H15.format(seed="'9'", key="g[i]")} % 8 = 0) AS bpos
+        FROM (SELECT doc_id, tk, {TX.sql_ngrams("tk", 2)} AS g FROM toks)
+        WHERE LEN(tk) > 0),
     seg AS (
         SELECT doc_id, tk,
                LIST_PREPEND(0, bpos) AS starts,
@@ -4890,27 +4839,15 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "similarity_hard_negatives",
-    oracle="""
+    oracle=f"""
     WITH anchors AS (
         SELECT vec_id AS q_id, embedding AS q_vec, label AS q_label
         FROM embeddings WHERE vec_id < 5),
     scored AS (
-        SELECT a.q_id, e.vec_id,
-               ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(e.embedding) + 1),
-                         i -> CAST(e.embedding[i] AS DOUBLE)
-                              * CAST(a.q_vec[i] AS DOUBLE)))
-                     / (SQRT(LIST_SUM(LIST_TRANSFORM(e.embedding,
-                              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                        * SQRT(LIST_SUM(LIST_TRANSFORM(a.q_vec,
-                              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-                     4) AS cosine_sim
+        SELECT a.q_id, e.vec_id, {_sql_cos4("e.embedding", "a.q_vec")} AS cosine_sim
         FROM embeddings e CROSS JOIN anchors a
         WHERE e.label <> a.q_label)
-    SELECT q_id, vec_id, cosine_sim, CAST(rank AS BIGINT) AS rank FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                    ORDER BY cosine_sim DESC, vec_id) AS rank
-        FROM scored) WHERE rank <= 5
-    ORDER BY q_id, rank
+    {_sql_top_k("scored")}
     """,
     desc="hard-negative mining for contrastive training: per anchor the "
     "top-5 most-similar vectors with a DIFFERENT label — near-misses "
@@ -4928,10 +4865,24 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("q_vec"),
         F.col("label").alias("q_label"),
     )
-    out = hard_negatives(anchors, emb, k=5)
-    return out.select(
-        "q_id", "vec_id", "cosine_sim", F.col("rank").cast("bigint").alias("rank")
-    ).orderBy("q_id", "rank")
+    return _ranked(hard_negatives(anchors, emb, k=5))
+
+
+# The semantic ranker of the fusion and eval queries: every embedding's
+# round(cosine, 4) to doc 0's vector, keyed as doc_id.
+_SQL_DOC0_COS = f"""qv AS (SELECT embedding AS q_vec FROM embeddings WHERE vec_id = 0),
+    cos AS (
+        SELECT e.vec_id AS doc_id, {_sql_cos4("e.embedding", "q.q_vec")} AS sim
+        FROM embeddings e CROSS JOIN qv q)"""
+
+
+def _doc0_cosine(emb: DataFrame) -> DataFrame:
+    """DataFrame twin of `_SQL_DOC0_COS`: (doc_id, sim)."""
+    qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_vec"))
+    return emb.crossJoin(F.broadcast(qv)).select(
+        F.col("vec_id").alias("doc_id"),
+        F.round(V.cosine(F.col("embedding"), F.col("q_vec")), 4).alias("sim"),
+    )
 
 
 # The BM25 chain plus the top-50 lexical rank list the fusion queries
@@ -4950,18 +4901,7 @@ _SQL_BM25_RANKS = f"""{_sql_bm25()},
     "text_hybrid_rrf",
     oracle=f"""
     WITH {_SQL_BM25_RANKS},
-    qv AS (SELECT embedding AS q_vec FROM embeddings WHERE vec_id = 0),
-    cos AS (
-        SELECT e.vec_id AS doc_id,
-               ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(e.embedding) + 1),
-                         i -> CAST(e.embedding[i] AS DOUBLE)
-                              * CAST(q.q_vec[i] AS DOUBLE)))
-                     / (SQRT(LIST_SUM(LIST_TRANSFORM(e.embedding,
-                              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                        * SQRT(LIST_SUM(LIST_TRANSFORM(q.q_vec,
-                              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-                     4) AS sim
-        FROM embeddings e CROSS JOIN qv q),
+    {_SQL_DOC0_COS},
     sem AS (
         SELECT doc_id, r FROM (
             SELECT doc_id,
@@ -4991,7 +4931,6 @@ def text_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from gearpump_spark.operators.retrieval import bm25_topk, rrf_fuse
-    from gearpump_spark.operators.similarity import cosine
 
     docs = table(spark, sf_dir, "documents")
     lexw = W.orderBy(F.desc("score"), F.col("doc_id"))
@@ -4999,14 +4938,7 @@ def text_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25_topk(docs, ("vector", "merge", "stream"), k=50)
         .withColumn("rank", F.row_number().over(lexw))
     )
-    emb = table(spark, sf_dir, "embeddings")
-    qv = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_vec")
-    )
-    scored = emb.crossJoin(F.broadcast(qv)).select(
-        F.col("vec_id").alias("doc_id"),
-        F.round(cosine(F.col("embedding"), F.col("q_vec")), 4).alias("sim"),
-    )
+    scored = _doc0_cosine(table(spark, sf_dir, "embeddings"))
     semw = W.orderBy(F.desc("sim"), F.col("doc_id"))
     sem = (
         scored.orderBy(F.desc("sim"), "doc_id")
@@ -5118,7 +5050,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_matryoshka",
-    oracle="""
+    oracle=f"""
     WITH q AS (
         SELECT vec_id,
                LIST_TRANSFORM(embedding[1:16],
@@ -5128,12 +5060,10 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM embeddings)
     SELECT vec_id,
            ARRAY_TO_STRING(pq, ',') AS prefix,
-           CAST(LIST_SUM(LIST_TRANSFORM(pq, x -> x * x)) AS BIGINT)
-             AS prefix_norm2,
-           CAST(LIST_SUM(LIST_TRANSFORM(fq, x -> x * x)) AS BIGINT)
-             AS full_norm2,
-           CAST(LIST_SUM(LIST_TRANSFORM(pq, x -> x * x)) AS DOUBLE)
-             / LIST_SUM(LIST_TRANSFORM(fq, x -> x * x)) AS energy_ratio
+           CAST({V.sql_int_dot("pq", "pq")} AS BIGINT) AS prefix_norm2,
+           CAST({V.sql_int_dot("fq", "fq")} AS BIGINT) AS full_norm2,
+           CAST({V.sql_int_dot("pq", "pq")} AS DOUBLE)
+             / {V.sql_int_dot("fq", "fq")} AS energy_ratio
     FROM q ORDER BY vec_id
     """,
     desc="Matryoshka (MRL) prefix truncation 64->16 dims: the first-16 "
@@ -5155,9 +5085,7 @@ def embedding_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
         fx(F.slice("embedding", 1, 16)).alias("pq"),
         fx(F.col("embedding")).alias("fq"),
     )
-    n2 = lambda c: F.aggregate(  # noqa: E731
-        c, F.lit(0).cast("long"), lambda a, x: a + x * x
-    )
+    n2 = lambda c: V.int_dot(c, c)  # noqa: E731
     return q.select(
         "vec_id",
         F.array_join("pq", ",").alias("prefix"),
@@ -5434,10 +5362,9 @@ _SQL_RS_COEF = (
         FROM q),
     pr AS (
         SELECT a.vec_id AS id_a, b2.vec_id AS id_b, a.bucket,
-               LIST_SUM(LIST_TRANSFORM(RANGE(1, 65),
-                        i -> a.qv[i] * b2.qv[i])) AS dot,
-               LIST_SUM(LIST_TRANSFORM(a.qv, x -> x * x)) AS na,
-               LIST_SUM(LIST_TRANSFORM(b2.qv, x -> x * x)) AS nb
+               {V.sql_int_dot("a.qv", "b2.qv")} AS dot,
+               {V.sql_int_dot("a.qv", "a.qv")} AS na,
+               {V.sql_int_dot("b2.qv", "b2.qv")} AS nb
         FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id)
     SELECT id_a, id_b, CAST(bucket AS BIGINT) AS bucket,
            ROUND(CAST(dot AS DOUBLE) / (SQRT(CAST(na AS DOUBLE))
@@ -5479,11 +5406,7 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = F.lit(0).cast("long")
     for p in range(n_planes):
         plane = F.array(*[F.lit(c) for c in _rs_plane(p)])
-        proj = F.aggregate(
-            F.zip_with(F.col("qv"), plane, lambda x, c: x * c),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        )
+        proj = V.int_dot(F.col("qv"), plane)
         bucket = bucket + F.when(proj > 0, F.lit(1 << p).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
@@ -5494,9 +5417,7 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = b.select(
         F.col("vec_id").alias("id_b"), F.col("qv").alias("qb"), "bucket"
     )
-    isum = lambda col: F.aggregate(  # noqa: E731
-        col, F.lit(0).cast("long"), lambda acc, x: acc + x
-    )
+    qa, qb = F.col("qa"), F.col("qb")
     pairs = (
         a.join(c, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -5504,9 +5425,9 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "id_a",
             "id_b",
             "bucket",
-            isum(F.zip_with("qa", "qb", lambda x, y: x * y)).alias("dot"),
-            isum(F.transform("qa", lambda x: x * x)).alias("na"),
-            isum(F.transform("qb", lambda x: x * x)).alias("nb"),
+            V.int_dot(qa, qb).alias("dot"),
+            V.int_dot(qa, qa).alias("na"),
+            V.int_dot(qb, qb).alias("nb"),
         )
     )
     return (
@@ -5765,18 +5686,7 @@ def dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_retrieval_eval",
     oracle=f"""
     WITH {_SQL_BM25_RANKS},
-    qv AS (SELECT embedding AS q_vec FROM embeddings WHERE vec_id = 0),
-    cos AS (
-        SELECT e.vec_id AS doc_id,
-               ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(e.embedding) + 1),
-                         i -> CAST(e.embedding[i] AS DOUBLE)
-                              * CAST(q.q_vec[i] AS DOUBLE)))
-                     / (SQRT(LIST_SUM(LIST_TRANSFORM(e.embedding,
-                              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                        * SQRT(LIST_SUM(LIST_TRANSFORM(q.q_vec,
-                              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-                     4) AS sim
-        FROM embeddings e CROSS JOIN qv q),
+    {_SQL_DOC0_COS},
     sem AS (
         SELECT doc_id, r FROM (
             SELECT doc_id,
@@ -5814,7 +5724,6 @@ def text_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from gearpump_spark.operators.retrieval import bm25_topk, tokenized_docs
-    from gearpump_spark.operators.similarity import cosine
 
     docs = table(spark, sf_dir, "documents")
     terms = ("vector", "merge", "stream")
@@ -5828,12 +5737,7 @@ def text_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25_topk(docs, terms, k=10, toks=toks)
         .select("doc_id", F.row_number().over(lexw).cast("bigint").alias("r"))
     )
-    emb = table(spark, sf_dir, "embeddings")
-    qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_vec"))
-    scored = emb.crossJoin(F.broadcast(qv)).select(
-        F.col("vec_id").alias("doc_id"),
-        F.round(cosine(F.col("embedding"), F.col("q_vec")), 4).alias("sim"),
-    )
+    scored = _doc0_cosine(table(spark, sf_dir, "embeddings"))
     semw = W.orderBy(F.desc("sim"), F.col("doc_id"))
     sem = (
         scored.orderBy(F.desc("sim"), "doc_id")
@@ -5946,9 +5850,9 @@ def multimodal_exif_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_unigram_logprob",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-        SELECT doc_id, UNNEST(REGEXP_EXTRACT_ALL(LOWER(text), '[a-z]+')) AS tok
+        SELECT doc_id, UNNEST({TX.sql_letter_runs()}) AS tok
         FROM documents),
     vocab AS (SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok),
     total AS (SELECT SUM(c) AS n FROM vocab),
@@ -5986,9 +5890,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r11 shared-relation discipline): tokenize once, vocab agg once.
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"[a-z]+"), F.lit(0))
-        ).alias("tok"),
+        F.explode(TX.letter_runs(F.col("text"))).alias("tok"),
     ).localCheckpoint(eager=False)
     vocab = (
         toks.groupBy("tok").agg(F.count("*").alias("c")).localCheckpoint(eager=False)
@@ -6135,51 +6037,14 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "similarity_ivf_recall",
     oracle=f"""
-    WITH cent AS (
-        SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cvec
-        FROM embeddings ORDER BY vec_id LIMIT 8),
-    corpus_assign AS (
-        SELECT vec_id, embedding, cid FROM (
-            SELECT e.vec_id, e.embedding, c.cid,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                       {_IVF_SQDIST_SQL.format(e='e.embedding', c='c.cvec')},
-                       c.cid) AS rn
-            FROM embeddings e CROSS JOIN cent c)
-        WHERE rn = 1),
-    probes AS (
-        SELECT q_id, q_vec, cid FROM (
-            SELECT e.vec_id AS q_id, e.embedding AS q_vec, c.cid,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                       {_IVF_SQDIST_SQL.format(e='e.embedding', c='c.cvec')},
-                       c.cid) AS rn
-            FROM embeddings e CROSS JOIN cent c
-            WHERE e.vec_id < 25)
-        WHERE rn <= 3),
-    ivf AS (
-        SELECT q_id, vec_id FROM (
-            SELECT s.*, ROW_NUMBER() OVER (PARTITION BY q_id
-                        ORDER BY cosine_sim DESC, vec_id) AS rank FROM (
-                SELECT p.q_id, a.vec_id,
-                       ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(a.embedding) + 1),
-                              i -> CAST(a.embedding[i] AS DOUBLE) * CAST(p.q_vec[i] AS DOUBLE)))
-                         / (SQRT(LIST_SUM(LIST_TRANSFORM(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                            * SQRT(LIST_SUM(LIST_TRANSFORM(p.q_vec, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-                         4) AS cosine_sim
-                FROM corpus_assign a JOIN probes p USING (cid)) s)
-        WHERE rank <= 5),
-    brute AS (
-        SELECT q_id, vec_id FROM (
-            SELECT s.*, ROW_NUMBER() OVER (PARTITION BY q_id
-                        ORDER BY cosine_sim DESC, vec_id) AS rank FROM (
-                SELECT q.vec_id AS q_id, e.vec_id,
-                       ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(e.embedding) + 1),
-                              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE)))
-                         / (SQRT(LIST_SUM(LIST_TRANSFORM(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                            * SQRT(LIST_SUM(LIST_TRANSFORM(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-                         4) AS cosine_sim
-                FROM embeddings e CROSS JOIN embeddings q
-                WHERE q.vec_id < 25) s)
-        WHERE rank <= 5)
+    WITH {_sql_ivf_seeded(25)},
+    ivf AS ({_sql_top_k("ivf_scored")}),
+    brute_scored AS (
+        SELECT q.vec_id AS q_id, e.vec_id,
+               {_sql_cos4("e.embedding", "q.embedding")} AS cosine_sim
+        FROM embeddings e CROSS JOIN embeddings q
+        WHERE q.vec_id < 25),
+    brute AS ({_sql_top_k("brute_scored")})
     SELECT b.q_id,
            CAST(COUNT(i.vec_id) AS BIGINT) AS n_hits,
            CAST(COUNT(i.vec_id) AS DOUBLE) / 5.0 AS recall_at_5
@@ -6197,9 +6062,7 @@ def similarity_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (corpus never shuffles); IVF side probes 3/8 lists. The
     recall join keys on (q_id, vec_id) — 125 rows per side."""
     emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 25).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
+    q = _probes(emb, 25)
     truth = S.cosine_topk(q, emb, k=5).select("q_id", "vec_id")
     approx = S.cosine_topk_ivf(q, emb, nlist=8, nprobe=3, k=5, refine=False).select(
         "q_id", "vec_id", F.lit(1).alias("_hit")
@@ -6345,21 +6208,13 @@ def multimodal_alaw_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_center_project",
-    oracle="""
-    WITH q AS (
-        SELECT vec_id,
-               LIST_TRANSFORM(embedding,
-                   x -> CAST(FLOOR((CAST(x AS DOUBLE) + 2.0) * 1000000)
-                             AS BIGINT)) AS qv
-        FROM embeddings),
-    dims AS (
-        SELECT vec_id, CAST(i AS INT) - 1 AS j, qv[CAST(i AS INT)] AS v
-        FROM q, UNNEST(RANGE(1, LEN(qv) + 1)) t(i)),
+    oracle=f"""
+    WITH {_sql_micro()},
     mean AS (
         -- CAST: SUM(BIGINT) is HUGEINT in DuckDB; keep everything BIGINT
-        SELECT j, CAST(SUM(v) // COUNT(*) AS BIGINT) AS m FROM dims GROUP BY j),
+        SELECT pos, CAST(SUM(vi) // COUNT(*) AS BIGINT) AS m FROM micro GROUP BY pos),
     centered AS (
-        SELECT d.vec_id, d.j, d.v - m.m AS c FROM dims d JOIN mean m USING (j)),
+        SELECT d.vec_id, d.pos AS j, d.vi - m.m AS c FROM micro d JOIN mean m USING (pos)),
     ranked AS (
         SELECT vec_id, j, c,
                ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -6384,12 +6239,7 @@ def embedding_center_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-vector agg: the corpus is scanned twice, nothing but (dim) longs
     and per-vector scalars ever shuffle."""
     emb = table(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor((x.cast("double") + F.lit(2.0)) * F.lit(1000000.0)).cast(
-            "long"
-        ),
-    )
+    qv = V.micro_units(F.col("embedding"))
     # The exploded (vec_id, j, v) relation feeds the per-dim mean AND the
     # centering join, and the centered relation feeds the norm aggregate
     # AND the peak window — fully lazy, each leg re-ran the posexplode
@@ -6579,11 +6429,7 @@ def embedding_quantize_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(BIT_COUNT(XOR(w.w_lo, q.q_lo))
                     + BIT_COUNT(XOR(w.w_hi, q.q_hi)) AS INT) AS hamming
         FROM words w CROSS JOIN q WHERE w.vec_id <> q.q_id)
-    SELECT q_id, vec_id, hamming, CAST(rank AS BIGINT) AS rank FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                    ORDER BY hamming, vec_id) AS rank
-        FROM scored) WHERE rank <= 5
-    ORDER BY q_id, rank
+    {_sql_top_k("scored", score="hamming", cols="hamming")}
     """,
     desc="Hamming-space top-k over sign-quantized embeddings: XOR + "
     "popcount per candidate (2 ALU ops against 64 float multiplies for "
@@ -6633,8 +6479,6 @@ def similarity_topk_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r5 addition: MMR diversified re-ranking (unrolled greedy, exact oracle)
 # ---------------------------------------------------------------------------
 
-# round(cosine, 4) between two embedding lists in DuckDB — same tree as
-# _cos_pair_sql but parameterized on arbitrary vector expressions.
 _MMR_LAMBDA = 0.7
 
 
@@ -6643,11 +6487,7 @@ _MMR_LAMBDA = 0.7
     oracle=f"""
     WITH scored AS (
         SELECT q.vec_id AS q_id, e.vec_id, e.embedding,
-               ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(e.embedding) + 1),
-                      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE)))
-                 / (SQRT(LIST_SUM(LIST_TRANSFORM(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                    * SQRT(LIST_SUM(LIST_TRANSFORM(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-                 4) AS rel
+               {_sql_cos4("e.embedding", "q.embedding")} AS rel
         FROM embeddings e CROSS JOIN embeddings q
         WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id),
     cand AS (
@@ -6664,12 +6504,8 @@ _MMR_LAMBDA = 0.7
         WHERE rn <= 8),
     pairs AS (
         SELECT a.q_id, a.vec_id AS a_id, b.vec_id AS b_id,
-               CAST(ROUND(
-               LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(a.embedding) + 1),
-                      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-                 / (SQRT(LIST_SUM(LIST_TRANSFORM(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                    * SQRT(LIST_SUM(LIST_TRANSFORM(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-                 * 10000) AS BIGINT) AS s10k
+               CAST(ROUND({V.sql_cosine("a.embedding", "b.embedding")} * 10000)
+                    AS BIGINT) AS s10k
         FROM cand a JOIN cand b
           ON a.q_id = b.q_id AND a.vec_id <> b.vec_id),
     s1 AS (
@@ -6730,10 +6566,8 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    sim_qc = F.round(S.cosine(F.col("q_vec"), F.col("embedding")), 4)
+    q = _probes(emb, 10)
+    sim_qc = F.round(V.cosine(F.col("q_vec"), F.col("embedding")), 4)
     scored = (
         emb.crossJoin(F.broadcast(q))
         .where(F.col("vec_id") != F.col("q_id"))
@@ -6763,7 +6597,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "a_id",
             "b_id",
-            F.round(S.cosine(F.col("a_vec"), F.col("b_vec")) * 10000)
+            F.round(V.cosine(F.col("a_vec"), F.col("b_vec")) * 10000)
             .cast("long")
             .alias("s10k"),
         )
@@ -6847,19 +6681,11 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE rn <= 50),
     rerank AS (
         SELECT p.q_id, p.vec_id,
-               ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(e.embedding) + 1),
-                      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qe.embedding[i] AS DOUBLE)))
-                 / (SQRT(LIST_SUM(LIST_TRANSFORM(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                    * SQRT(LIST_SUM(LIST_TRANSFORM(qe.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-                 4) AS cosine_sim
+               {_sql_cos4("e.embedding", "qe.embedding")} AS cosine_sim
         FROM prefilter p
         JOIN embeddings e ON e.vec_id = p.vec_id
         JOIN embeddings qe ON qe.vec_id = p.q_id)
-    SELECT q_id, vec_id, cosine_sim, CAST(rank AS BIGINT) AS rank FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                    ORDER BY cosine_sim DESC, vec_id) AS rank
-        FROM rerank) WHERE rank <= 5
-    ORDER BY q_id, rank
+    {_sql_top_k("rerank")}
     """,
     desc="two-stage binary search: Hamming top-50 prefilter over sign "
     "words (XOR+popcount, 16 bytes/vector) then exact cosine re-rank of "
@@ -6905,7 +6731,7 @@ def similarity_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            F.round(S.cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine_sim"),
+            F.round(V.cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine_sim"),
         )
     )
     w2 = W.partitionBy("q_id").orderBy(F.desc("cosine_sim"), "vec_id")
@@ -7406,9 +7232,9 @@ def multimodal_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_kl_source_drift",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-        SELECT source, UNNEST(REGEXP_EXTRACT_ALL(LOWER(text), '[a-z]+')) AS tok
+        SELECT source, UNNEST({TX.sql_letter_runs()}) AS tok
         FROM documents),
     sc AS (SELECT source, tok, COUNT(*) AS c FROM toks GROUP BY source, tok),
     stot AS (SELECT source, SUM(c) AS t FROM sc GROUP BY source),
@@ -7441,9 +7267,7 @@ def text_kl_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"[a-z]+"), F.lit(0))
-        ).alias("tok"),
+        F.explode(TX.letter_runs(F.col("text"))).alias("tok"),
     )
     sc = toks.groupBy("source", "tok").agg(F.count("*").alias("c"))
     ws = W.partitionBy("source")
@@ -8978,7 +8802,7 @@ def _domain_reweight_oracle(n_steps: int = _DRW_N_STEPS) -> str:
     blocks = [
         f"""
     toks AS (
-        SELECT source, UNNEST(REGEXP_EXTRACT_ALL(LOWER(text), '[a-z]+')) AS tok
+        SELECT source, UNNEST({TX.sql_letter_runs()}) AS tok
         FROM documents),
     vocab AS (SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok),
     total AS (SELECT SUM(c) AS n FROM vocab),
@@ -9062,9 +8886,7 @@ def sample_domain_reweight_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"[a-z]+"), F.lit(0))
-        ).alias("tok"),
+        F.explode(TX.letter_runs(F.col("text"))).alias("tok"),
     )
     vocab = toks.groupBy("tok").agg(F.count("*").alias("c"))
     total = vocab.agg(F.sum("c").alias("n"))

@@ -19,12 +19,48 @@ Catalyst owns all rewrites.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable
+from contextlib import contextmanager
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gearpump_spark.session import ensure_runtime_conf
+
+# External connectors the pip pyspark distribution does not bundle: the
+# error text that marks each one missing, and the guidance that follows
+# "<Connector> source/sink" in the raised message.
+_AVRO_MISSING = ("Failed to find data source: avro",)
+_AVRO_NEEDS = (
+    "Avro needs the spark-avro module on the classpath "
+    "(spark-submit --packages org.apache.spark:spark-avro_2.13:<spark-version>); "
+    "not present in this environment"
+)
+_KAFKA_MISSING = ("Failed to find data source: kafka",)
+_KAFKA_NEEDS = (
+    "needs the spark-sql-kafka connector jar "
+    "(spark-submit --packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>, "
+    "e.g. :4.1.2 to match this Spark); not present in this environment"
+)
+_JDBC_MISSING = ("No suitable driver", "ClassNotFoundException", "JDBC_NO_SUITABLE_DRIVER")
+_JDBC_NEEDS = (
+    "needs a JDBC driver jar on the classpath "
+    "(spark-submit --jars <driver>.jar, e.g. postgresql.jar "
+    "or phoenix-client.jar for HBase); none is present in "
+    "this environment"
+)
+
+
+@contextmanager
+def _connector_gate(markers: tuple[str, ...], message: str):
+    """Turn a missing-connector failure (an error whose text carries one
+    of ``markers``) into NotImplementedError(message); re-raise any other."""
+    try:
+        yield
+    except Exception as e:
+        if any(m in str(e) for m in markers):
+            raise NotImplementedError(message) from e
+        raise
 
 
 class GearContext:
@@ -86,16 +122,8 @@ class GearContext:
         the pip pyspark distribution does not bundle spark-avro, so this
         raises with deployment guidance when the jar is absent (same gating
         contract as the Kafka connector)."""
-        try:
+        with _connector_gate(_AVRO_MISSING, _AVRO_NEEDS):
             return Stream(self.spark.read.format("avro").load(path), ts_col)
-        except Exception as e:
-            if "Failed to find data source: avro" in str(e):
-                raise NotImplementedError(
-                    "Avro needs the spark-avro module on the classpath "
-                    "(spark-submit --packages org.apache.spark:spark-avro_2.13:<spark-version>); "
-                    "not present in this environment"
-                ) from e
-            raise
 
     def from_jdbc(
         self,
@@ -128,22 +156,8 @@ class GearContext:
             )
         for k, v in options.items():
             reader = reader.option(k, v)
-        try:
+        with _connector_gate(_JDBC_MISSING, "JDBC source " + _JDBC_NEEDS):
             return Stream(reader.load())
-        except Exception as e:
-            msg = str(e)
-            if (
-                "No suitable driver" in msg
-                or "ClassNotFoundException" in msg
-                or "JDBC_NO_SUITABLE_DRIVER" in msg
-            ):
-                raise NotImplementedError(
-                    "JDBC source needs a JDBC driver jar on the classpath "
-                    "(spark-submit --jars <driver>.jar, e.g. postgresql.jar "
-                    "or phoenix-client.jar for HBase); none is present in "
-                    "this environment"
-                ) from e
-            raise
 
     def from_orc(self, path: str, ts_col: str | None = None) -> "Stream":
         """ORC source (columnar like parquet: predicate pushdown, column
@@ -197,16 +211,8 @@ class GearContext:
             )
         for k, v in options.items():
             reader = reader.option(k, v)
-        try:
+        with _connector_gate(_KAFKA_MISSING, "Kafka source " + _KAFKA_NEEDS):
             return Stream(reader.load(), "timestamp")
-        except Exception as e:
-            if "Failed to find data source: kafka" in str(e):
-                raise NotImplementedError(
-                    "Kafka source needs the spark-sql-kafka connector jar "
-                    "(spark-submit --packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>, "
-                    "e.g. :4.1.2 to match this Spark); not present in this environment"
-                ) from e
-            raise
 
 
 class Stream:
@@ -358,16 +364,8 @@ class Stream:
     def sink_avro(self, path: str, mode: str = "overwrite") -> None:
         """Avro sink — gated exactly like from_avro when the external
         spark-avro module is absent."""
-        try:
+        with _connector_gate(_AVRO_MISSING, _AVRO_NEEDS):
             self.df.write.mode(mode).format("avro").save(path)
-        except Exception as e:
-            if "Failed to find data source: avro" in str(e):
-                raise NotImplementedError(
-                    "Avro needs the spark-avro module on the classpath "
-                    "(spark-submit --packages org.apache.spark:spark-avro_2.13:<spark-version>); "
-                    "not present in this environment"
-                ) from e
-            raise
 
     def sink_orc(self, path: str, mode: str = "overwrite") -> None:
         """ORC sink — columnar alternative when the downstream reader is
@@ -423,7 +421,7 @@ class Stream:
         else:
             cols.append(F.to_json(F.struct(*self.df.columns)).alias("value"))
         out = self.df.select(*cols)
-        try:
+        with _connector_gate(_KAFKA_MISSING, "Kafka sink " + _KAFKA_NEEDS):
             if out.isStreaming:
                 writer = (
                     out.writeStream.format("kafka")
@@ -444,14 +442,6 @@ class Stream:
                 writer = writer.option(k, v)
             writer.save()
             return None
-        except Exception as e:
-            if "Failed to find data source: kafka" in str(e):
-                raise NotImplementedError(
-                    "Kafka sink needs the spark-sql-kafka connector jar "
-                    "(spark-submit --packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>, "
-                    "e.g. :4.1.2 to match this Spark); not present in this environment"
-                ) from e
-            raise
 
     def sink_jdbc(
         self,
@@ -480,22 +470,8 @@ class Stream:
             writer = writer.option("driver", driver)
         for k, v in options.items():
             writer = writer.option(k, v)
-        try:
+        with _connector_gate(_JDBC_MISSING, "JDBC sink " + _JDBC_NEEDS):
             writer.save()
-        except Exception as e:
-            msg = str(e)
-            if (
-                "No suitable driver" in msg
-                or "ClassNotFoundException" in msg
-                or "JDBC_NO_SUITABLE_DRIVER" in msg
-            ):
-                raise NotImplementedError(
-                    "JDBC sink needs a JDBC driver jar on the classpath "
-                    "(spark-submit --jars <driver>.jar, e.g. postgresql.jar "
-                    "or phoenix-client.jar for HBase); none is present in "
-                    "this environment"
-                ) from e
-            raise
 
     def sink_noop_stream(self, **options):
         """Null sink for throughput benchmarks (SOL processor analog)."""

@@ -57,7 +57,10 @@ SLOW_TESTS = {
     "test_end_of_word_variant_matches_reference_and_learns_word_units",
     "test_fixed_window_gbk",
     "test_global_positions_rank_matches_sequential",
+    "test_graph_query_golden_hash[embedding_top_pc]",
+    "test_graph_query_golden_hash[embedding_top_pcs]",
     "test_graph_query_golden_hash[pipeline_quality_dedup_pack]",
+    "test_graph_query_golden_hash[sample_domain_reweight_int]",
     "test_graph_query_golden_hash[text_bpe_bytes]",
     "test_graph_query_golden_hash[text_bpe_exact]",
     "test_graph_query_golden_hash[text_bpe_tokens]",

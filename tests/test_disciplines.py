@@ -16,6 +16,11 @@ enforced mechanically.
    token form built on it, each with its DuckDB twin; a second spelling
    elsewhere is how four queries came to split on Java's \\s (which
    matches U+000B) against oracles using RE2's \\s (which does not).
+
+4. One vector layer. functions/vector.py owns the dot, norm, cosine and
+   distance folds, micro-unit quantization and the seeded pick, each
+   with its DuckDB twin: a float fold whose twin is spelled elsewhere can
+   reorder its sum and move the last bit of every result built on it.
 """
 
 from __future__ import annotations
@@ -97,10 +102,38 @@ def test_multi_consumer_flagships_pin_shared_subplan(spark):
         )
 
 
+def test_vector_arithmetic_only_in_vector_module():
+    """Outside functions/vector.py no file under gearpump_spark/ spells a
+    DuckDB norm fold (SQRT(LIST_SUM(), a micro-unit quantization
+    (x + 2.0) * 1000000 in either engine's spelling, or a settable
+    quantization offset (F.lit(offset))."""
+    vector_module = ROOT / "gearpump_spark" / "functions" / "vector.py"
+    patterns = {
+        "SQRT(LIST_SUM(": re.compile(r"SQRT\(LIST_SUM\(", re.I),
+        "a + 2.0) * 1000000 quantization": re.compile(
+            r"2\.0\)\)?\s*\*\s*(F\.lit\()?1000000"
+        ),
+        "F.lit(offset)": re.compile(r"F\.lit\(offset\)"),
+    }
+    found = [
+        f"{path.relative_to(ROOT)}: {label}"
+        for path in sorted((ROOT / "gearpump_spark").rglob("*.py"))
+        if path != vector_module
+        for label, pat in patterns.items()
+        if pat.search(path.read_text())
+    ]
+    assert not found, (
+        "vector arithmetic outside functions/vector.py; use V.dot / "
+        "V.l2_norm / V.cosine / V.micro_units or their V.sql_* twins: "
+        + "; ".join(found)
+    )
+
+
 def test_whitespace_split_only_in_text_module():
     """Outside functions/text.py no file under gearpump_spark/ splits on
     whitespace itself: no DuckDB REGEXP_SPLIT_TO_ARRAY, no F.split over
-    WS_RE or a \\s class, and no \\s+ pattern in any spelling."""
+    WS_RE or a \\s class, and no \\s+ pattern in any spelling. Nor does
+    it extract lowercase letter runs ([a-z]+), the other token form."""
     text_module = ROOT / "gearpump_spark" / "functions" / "text.py"
     found = []
     for path in sorted((ROOT / "gearpump_spark").rglob("*.py")):
@@ -115,7 +148,9 @@ def test_whitespace_split_only_in_text_module():
                 found.append(f"{rel}: {span}")
         if re.search(r"\\{1,2}s\+", src):
             found.append(f"{rel}: a \\s+ pattern")
+        if "[a-z]+" in src:
+            found.append(f"{rel}: a [a-z]+ letter-run pattern")
     assert not found, (
         "whitespace split outside functions/text.py; use TX.tokens / "
-        "TX.lower_tokens / TX.ngrams or their TX.sql_* twins: " + "; ".join(found)
+        "TX.lower_tokens / TX.ngrams / TX.letter_runs or their TX.sql_* twins: " + "; ".join(found)
     )

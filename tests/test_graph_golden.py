@@ -1,20 +1,23 @@
-"""Golden result hashes at sf0.001 for the 17 registered graph queries
-and the 67 queries that tokenize text.
+"""Golden result hashes at sf0.001 for the 17 registered graph queries,
+the queries that tokenize text, and the vector queries.
 
 test_oracle_parity compares each query with its DuckDB oracle, and both
 sides now read one shared input: the co-purchase or shipment graph (the
-DataFrame builders and CTE fragments at the top of queries/llm.py), or
-the token forms of functions/text.py and their SQL twins. A change to a
-shared input would move the two sides together and still pass there.
-These hashes pin the results themselves; they were recorded from the
-implementations that still built every graph input and spelled every
-whitespace split by hand.
+DataFrame builders and CTE fragments at the top of queries/llm.py), the
+token forms of functions/text.py, or the vector forms of
+functions/vector.py, each with its SQL twin. A change to a shared input
+would move the two sides together and still pass there. These hashes pin
+the results themselves; they were recorded from the implementations
+that still built every graph input, spelled every whitespace split and
+wrote every vector fold by hand.
 
 The hash is the driver contract checker's own (``value_hash`` over
 ``norm``, tools/drive_contract.py), so a mismatch here reads the same as a
-driver-sim mismatch. The rows-only float PageRank queries are included:
-they round ranks to 8 decimals, far above float-sum reordering noise.
-"""
+driver-sim mismatch. The rows-only queries are included where two runs of
+the recording implementation gave the same hash: the float PageRank
+queries round ranks to 8 decimals, far above float-sum reordering noise,
+and the refined IVF top-k, float k-means and power-iteration principal
+component queries gave one hash on 2, 4 and 8 local cores."""
 
 from __future__ import annotations
 
@@ -36,6 +39,7 @@ GOLDEN_SF001 = {
     "dedup_containment": "3123cb6dba9760d3",
     "dedup_contamination": "4b3c91b2d6e53a86",
     "dedup_duplicate_spans": "129a65f5dae56ec4",
+    "dedup_embedding_cosine": "877bbd6e2f8b19a1",
     "dedup_exact": "efbdbee799fc7a29",
     "dedup_incremental": "b04f030a8d8ebf66",
     "dedup_lsh_recall": "78927cf189698b21",
@@ -44,9 +48,22 @@ GOLDEN_SF001 = {
     "dedup_minhash_signature": "b1a08703c0abe7a7",
     "dedup_ngram_jaccard": "1478d6fc0dfd1f5d",
     "dedup_savings_report": "c848a34f07c1dedd",
+    "dedup_semantic": "3ed9ec3c963ab46e",
     "dedup_simhash": "e0cce61a3b1fa65a",
     "dedup_soft_weights": "ad3ecc6464583afb",
     "doc_fingerprint": "aa2f3fe9b40472cd",
+    "embedding_center_project": "e782d0c145ca798f",
+    "embedding_covariance": "cd3d9b3f8d6fd3e4",
+    "embedding_matryoshka": "e54e98f560a14834",
+    "embedding_outliers": "8161bd1736a87419",
+    "embedding_quantize_binary": "4f8ee74b42f563d6",
+    "embedding_quantize_int4": "cd8353c8759f2acd",
+    "embedding_quantize_int8": "dbc7bc966040ba1e",
+    "embedding_quantize_pq": "b9bb0c6d07edbc30",
+    "embedding_random_projection": "d4896c2d4ec04f17",
+    "embedding_top_pc": "bd18875bf5307cd9",
+    "embedding_top_pc_int": "5c88a3c3fb40d8da",
+    "embedding_top_pcs": "a03910c38117c6e7",
     "graph_assortativity": "d7f826c8e99f2877",
     "graph_clustering_coeff": "c5ed8435406d4604",
     "graph_degree_distribution": "658cd35439fd3ada",
@@ -64,12 +81,27 @@ GOLDEN_SF001 = {
     "graph_pagerank_weighted_personalized_int": "7c86e86b2e03d5ad",
     "graph_triangle_count": "dd3554f640b2d4dd",
     "graph_triangle_estimate": "6a565584b08b333c",
+    "kmeans_clusters": "50662bda0388ec15",
+    "kmeans_clusters_int": "75b9e53cb08d2ee8",
     "pipeline_chunk_pack": "1f182749cfa8ca22",
     "pipeline_quality_dedup_pack": "32ba69e7eb8d76fa",
     "pipeline_quality_dedup_sample": "19806659ee472741",
     "sample_cluster_split": "e722df1f5a5aa16f",
     "sample_curriculum_order": "99dbc78be453be2a",
+    "sample_domain_reweight_int": "db03473c64a0088d",
     "sample_dsir_select": "38e0a1526c5f1851",
+    "similarity_binary_rerank": "8e1f36634d55d564",
+    "similarity_hard_negatives": "d93dad9a79cb391e",
+    "similarity_ivf_recall": "9bea5fe3a32ffe94",
+    "similarity_mmr_rerank": "1f12dac4e64db9e7",
+    "similarity_range_search": "850b407680e7976e",
+    "similarity_topk": "f3e30cec9bb211db",
+    "similarity_topk_hamming": "0361a03687e76783",
+    "similarity_topk_ivf": "34a908af0ee4f28e",
+    "similarity_topk_ivf_seeded": "f3e30cec9bb211db",
+    "similarity_topk_ivfpq": "8a77fcdd02c82720",
+    "similarity_topk_lsh": "eb0fd153a5d3ebd2",
+    "similarity_topk_pq_adc": "98398181501ea8a4",
     "sketch_countmin_words": "869613ff8b4b4613",
     "sketch_hll_sparse": "475a2681f299c790",
     "sketch_kmv_distinct": "b3439d8198133b05",
@@ -88,6 +120,7 @@ GOLDEN_SF001 = {
     "text_gopher_rules": "bd41f28d3e617501",
     "text_hashed_ngram_features": "d87d56b5e0c34e2d",
     "text_hybrid_rrf": "55915488a36a82eb",
+    "text_kl_source_drift": "735359984f264666",
     "text_lang_attribution": "df58f38b45dbaea1",
     "text_lang_confusion": "030445ae47cdd301",
     "text_lang_id": "3d28ca31211bdd1d",
@@ -108,6 +141,7 @@ GOLDEN_SF001 = {
     "text_tfidf_topterms": "764e293922679986",
     "text_token_count": "121f49a643fbfab1",
     "text_trigram_lm_perplexity": "d28559b6ecb0df34",
+    "text_unigram_logprob": "493acdb109b69b56",
     "text_vocab_coverage": "52ec420665e96b35",
     "text_wordpiece_tokens": "621197dbd24041fc",
     "text_zipf_fit": "8b75f7a62c51e591",
@@ -115,8 +149,13 @@ GOLDEN_SF001 = {
 }
 
 
+VECTOR_QUERIES = ("dedup_embedding_cosine", "dedup_semantic")
+PINNED_PREFIXES = ("graph_", "similarity_", "embedding_", "kmeans_")
+
+
 def test_golden_covers_every_graph_query():
-    assert {n for n in REGISTRY if n.startswith("graph_")} <= set(GOLDEN_SF001)
+    pinned = {n for n in REGISTRY if n.startswith(PINNED_PREFIXES)}
+    assert pinned | set(VECTOR_QUERIES) <= set(GOLDEN_SF001)
 
 
 @pytest.mark.parametrize("name", sorted(GOLDEN_SF001))
