@@ -3,9 +3,9 @@
 This module is the only one that knows the vector arithmetic. Every
 vector form has one DataFrame function here and one DuckDB SQL twin,
 named ``sql_<form>``, that the oracles format in: `dot`, `int_dot`,
-`l2_norm`, `cosine`, `sq_dist`, `int_sq_dist`, `micro_units` and
-`seed_order`. A twin takes SQL expressions naming list columns and
-returns a SQL expression.
+`l2_norm`, `cosine`, `sq_dist`, `int_sq_dist`, `micro_units`,
+`milli_units` and `seed_order`. A twin takes SQL expressions naming list
+columns and returns a SQL expression.
 
 The fold order is part of each form. Floating-point addition is not
 associative: the order in which the products of a dot product or a norm
@@ -33,6 +33,12 @@ from pyspark.sql import functions as F
 # embedding's noise floor.
 MICRO_OFFSET = 2.0
 MICRO_SCALE = 1_000_000
+
+# Milli-unit fixed point: round(x * MILLI_SCALE) as BIGINT, half away from
+# zero in both engines (Spark's HALF_UP on the exact double, DuckDB's
+# ROUND). Signed, so integer sums and products over the units keep the
+# sign of the coordinates they stand for.
+MILLI_SCALE = 1000
 
 
 def to_double(arr: Column) -> Column:
@@ -130,6 +136,16 @@ def sql_micro_units(arr: str) -> str:
         f"LIST_TRANSFORM({arr}, x -> CAST(FLOOR((CAST(x AS DOUBLE) + {MICRO_OFFSET})"
         f" * {MICRO_SCALE}) AS BIGINT))"
     )
+
+
+def milli_units(arr: Column, scale: int = MILLI_SCALE) -> Column:
+    """Each coordinate as a BIGINT count of 1/``scale`` units, rounded."""
+    return F.transform(arr, lambda x: F.round(x.cast("double") * scale, 0).cast("long"))
+
+
+def sql_milli_units(arr: str, scale: int = MILLI_SCALE) -> str:
+    """DuckDB twin of `milli_units`."""
+    return f"LIST_TRANSFORM({arr}, x -> CAST(ROUND(CAST(x AS DOUBLE) * {scale}) AS BIGINT))"
 
 
 def seed_order(id_col: str) -> list[Column]:

@@ -322,20 +322,20 @@ def centroid_outliers(
     label_col: str = "label",
     vec_col: str = "embedding",
     k: int = 5,
-    scale: int = 1000,
 ) -> DataFrame:
     """Per-group embedding outliers: the k vectors farthest (squared L2)
     from their group's centroid — the standard contamination / mislabel
     screen over an embedding table.
 
-    Cross-engine exactness: floats are fixed-pointed to round(v*scale)
-    BIGINTs, and the score is the all-integer identity
+    Cross-engine exactness: floats are fixed-pointed to milli-unit
+    BIGINTs (V.milli_units), and the score is the all-integer identity
         score = sum_d (c * v_d - S_d)^2  =  c^2 * ||v - mean||^2
     (c = group count, S_d = per-dim integer sum), so no float summation
-    order can diverge and the oracle is exact. With |v| <= ~2 and scale
-    1e3 the per-dim term is < 2^62 up to c ~ 1e5 rows/group; beyond that
-    (true 100 TB groups) switch scoring to double against a broadcast
-    mean — the plan shape is identical, the oracle becomes tolerance.
+    order can diverge and the oracle is exact. With |v| <= ~2 (2000 milli
+    units) the per-dim term is < 2^62 up to c ~ 1e5 rows/group; beyond
+    that (true 100 TB groups) switch scoring to double against a
+    broadcast mean — the plan shape is identical, the oracle becomes
+    tolerance.
 
     Scale: the per-(label,pos) integer sums are a tiny aggregate (explode
     is map-side combined); they fold into one array row per label and
@@ -344,10 +344,7 @@ def centroid_outliers(
     the final per-label top-k window (k partials per label under
     TakeOrdered-style ranking).
     """
-    vs = F.transform(
-        V.to_double(F.col(vec_col)),
-        lambda x: F.round(x * scale, 0).cast("long"),
-    )
+    vs = V.milli_units(F.col(vec_col))
     e = emb.select(F.col(id_col), F.col(label_col), vs.alias("_vs"))
     stats = (
         e.select(label_col, F.posexplode("_vs").alias("pos", "x"))
@@ -876,17 +873,16 @@ def random_projection(
     dim: int = 64,
     out_dim: int = 16,
     seed: int = 7,
-    scale: int = 1000,
     out_col: str = "proj",
 ) -> DataFrame:
     """Johnson–Lindenstrauss dimensionality reduction with a dense ±1
     sign matrix (Achlioptas 2003, database-friendly variant): component
-    j of the output is sum_pos sign(j, pos) * round(v_pos * scale) — an
-    ALL-INTEGER fold over fixed-point coordinates, so the projection is
-    bit-identical across engines, runs, and partitionings. E[dot
-    products] are preserved up to the 1/out_dim JL distortion; divide by
-    sqrt(out_dim)/scale downstream when absolute scale matters (kept
-    integer here so the oracle is exact).
+    j of the output is sum_pos sign(j, pos) * round(v_pos * 1000) — an
+    ALL-INTEGER fold over milli-unit coordinates (V.milli_units), so the
+    projection is bit-identical across engines, runs, and partitionings.
+    E[dot products] are preserved up to the 1/out_dim JL distortion;
+    divide by sqrt(out_dim)/1000 downstream when absolute scale matters
+    (kept integer here so the oracle is exact).
 
     Scale shape: ZERO shuffles — one narrow map per row (out_dim integer
     folds of length dim; higher-order array expressions evaluate outside
@@ -896,11 +892,7 @@ def random_projection(
     within JL tolerance (tested).
     """
     signs = _jl_signs(seed, out_dim, dim)
-    vq = F.transform(
-        V.to_double(F.col(vec_col)),
-        lambda x: F.round(x * scale, 0).cast("long"),
-    )
-    base = df.withColumn("_vq", vq)
+    base = df.withColumn("_vq", V.milli_units(F.col(vec_col)))
     comps = F.array(
         *[
             V.int_dot(F.col("_vq"), F.array(*[F.lit(s) for s in signs[j]]))

@@ -2103,12 +2103,11 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_outliers",
-    oracle="""
+    oracle=f"""
     WITH e AS (
-        SELECT vec_id, label, CAST(i AS BIGINT) AS pos,
-               CAST(ROUND(CAST(v AS DOUBLE) * 1000, 0) AS BIGINT) AS vs
+        SELECT vec_id, label, CAST(i AS BIGINT) AS pos, vs
         FROM (SELECT vec_id, label,
-                     UNNEST(embedding) AS v,
+                     UNNEST({V.sql_milli_units("embedding")}) AS vs,
                      UNNEST(RANGE(0, LEN(embedding))) AS i
               FROM embeddings)),
     stats AS (
@@ -4606,10 +4605,9 @@ def multimodal_phash_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     "embedding_random_projection",
     oracle=f"""
     WITH u AS (
-        SELECT vec_id, CAST(i AS BIGINT) - 1 AS pos,
-               CAST(ROUND(CAST(embedding[CAST(i AS INT)] AS DOUBLE) * 1000)
-                    AS BIGINT) AS x
-        FROM embeddings, range(1, 65) t(i)),
+        SELECT vec_id, CAST(i AS BIGINT) - 1 AS pos, mu[CAST(i AS INT)] AS x
+        FROM (SELECT vec_id, {V.sql_milli_units("embedding")} AS mu
+              FROM embeddings), range(1, 65) t(i)),
     s AS (
         SELECT CAST(j.j AS BIGINT) AS j, CAST(p.pos AS BIGINT) AS pos,
                CASE WHEN CAST(CONCAT('0x',
@@ -5053,10 +5051,8 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH q AS (
         SELECT vec_id,
-               LIST_TRANSFORM(embedding[1:16],
-                   v -> CAST(ROUND(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS pq,
-               LIST_TRANSFORM(embedding,
-                   v -> CAST(ROUND(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS fq
+               {V.sql_milli_units("embedding[1:16]")} AS pq,
+               {V.sql_milli_units("embedding")} AS fq
         FROM embeddings)
     SELECT vec_id,
            ARRAY_TO_STRING(pq, ',') AS prefix,
@@ -5077,13 +5073,10 @@ def embedding_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan-local: slice + two integer folds per row; at 100 TB pair
     with random_projection/int8 quantization as the storage ladder."""
     emb = table(spark, sf_dir, "embeddings")
-    fx = lambda c: F.transform(  # noqa: E731
-        c, lambda x: F.round(x.cast("double") * 1000, 0).cast("long")
-    )
     q = emb.select(
         "vec_id",
-        fx(F.slice("embedding", 1, 16)).alias("pq"),
-        fx(F.col("embedding")).alias("fq"),
+        V.milli_units(F.slice("embedding", 1, 16)).alias("pq"),
+        V.milli_units(F.col("embedding")).alias("fq"),
     )
     n2 = lambda c: V.int_dot(c, c)  # noqa: E731
     return q.select(
@@ -5095,13 +5088,18 @@ def embedding_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
+def _first_milli_units(emb: DataFrame, dim: int) -> DataFrame:
+    """Columns q1..q{dim}: the first ``dim`` embedding coordinates in milli
+    units, one column each, for the one-pass moment aggregates."""
+    mu = emb.select(V.milli_units(F.slice("embedding", 1, dim)).alias("_mu"))
+    return mu.select(*[F.element_at("_mu", i).alias(f"q{i}") for i in range(1, dim + 1)])
+
+
 @register(
     "embedding_covariance",
-    oracle="""
+    oracle=f"""
     WITH v AS (
-        SELECT vec_id,
-               LIST_TRANSFORM(embedding[1:8],
-                   x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
+        SELECT vec_id, {V.sql_milli_units("embedding[1:8]")} AS qv
         FROM embeddings),
     e AS (SELECT vec_id, i, qv[i] AS q FROM v, UNNEST(RANGE(1, 9)) AS t(i)),
     s AS (SELECT i, SUM(CAST(q AS DECIMAL(38,0))) AS si,
@@ -5119,7 +5117,7 @@ def embedding_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY i, j
     """,
     desc="exact covariance matrix of the first 8 embedding dimensions in "
-    "fixed-point micro-units (the PCA/whitening input): integer moment "
+    "fixed-point milli-units (the PCA/whitening input): integer moment "
     "sums S_i, S_ij accumulated as exact decimals, cov = S_ij/n - "
     "(S_i/n)(S_j/n) — a fixed IEEE op sequence on exact operands, "
     "bit-identical cross-engine; upper triangle, 36 rows",
@@ -5132,14 +5130,7 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries 2,080 columns or tiles into a few passes; corpus is scanned
     once, never shuffled."""
     emb = table(spark, sf_dir, "embeddings")
-    qd = emb.select(
-        *[
-            F.round(F.element_at("embedding", i).cast("double") * 1000, 0)
-            .cast("long")
-            .alias(f"q{i}")
-            for i in range(1, 9)
-        ]
-    )
+    qd = _first_milli_units(emb, 8)
     aggs = [F.count("*").cast("long").alias("n")]
     aggs += [
         F.sum(F.col(f"q{i}").cast("decimal(38,0)")).alias(f"s{i}")
@@ -5179,7 +5170,7 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _top_pc_int_oracle(n_iter: int = 8) -> str:
     """Unrolled integer max-norm power iteration over the exact scatter
     matrix C = n*S_ij - S_i*S_j of the first 8 embedding dims (same
-    micro-unit quantization as embedding_covariance). Every step is
+    milli-unit quantization as embedding_covariance). Every step is
     sign-magnitude floor division on non-negative magnitudes (DuckDB //
     floors, Spark DIV truncates — they agree only on non-negatives, so
     negatives never reach a division), making the 8-iteration fixpoint
@@ -5187,11 +5178,9 @@ def _top_pc_int_oracle(n_iter: int = 8) -> str:
     covariance (it is n^2*cov), so the result IS the top PC direction in
     1e5 micro-units."""
     blocks = [
-        """
+        f"""
     v8 AS MATERIALIZED (
-        SELECT vec_id,
-               LIST_TRANSFORM(embedding[1:8],
-                   x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
+        SELECT vec_id, {V.sql_milli_units("embedding[1:8]")} AS qv
         FROM embeddings),
     e AS MATERIALIZED (
         SELECT vec_id, i, qv[i] AS q FROM v8, UNNEST(RANGE(1, 9)) AS t(i)),
@@ -5268,14 +5257,7 @@ def embedding_top_pc_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     steps bit-for-bit."""
     emb = table(spark, sf_dir, "embeddings")
     dim = 8
-    qd = emb.select(
-        *[
-            F.round(F.element_at("embedding", i).cast("double") * 1000, 0)
-            .cast("long")
-            .alias(f"q{i}")
-            for i in range(1, dim + 1)
-        ]
-    )
+    qd = _first_milli_units(emb, dim)
     aggs = [F.count("*").cast("long").alias("n")]
     aggs += [F.sum(f"q{i}").cast("long").alias(f"s{i}") for i in range(1, dim + 1)]
     aggs += [
@@ -5348,9 +5330,7 @@ _SQL_RS_COEF = (
                    LEN(BIN(GREATEST((COUNT(*) - 1) // 8, 1))))) AS k
         FROM embeddings),
     q AS (
-        SELECT vec_id,
-               LIST_TRANSFORM(embedding,
-                   x -> CAST(ROUND(CAST(x AS DOUBLE) * 100) AS BIGINT)) AS qv
+        SELECT vec_id, {V.sql_milli_units("embedding", scale=100)} AS qv
         FROM embeddings),
     b AS (
         SELECT vec_id, qv,
@@ -5397,12 +5377,7 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     n = emb.count()
     n_planes = min(16, max(6, (max((n - 1) // 8, 1)).bit_length()))
-    q = emb.select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * 100, 0).cast("long")
-        ).alias("qv"),
-    )
+    q = emb.select("vec_id", V.milli_units(F.col("embedding"), scale=100).alias("qv"))
     bucket = F.lit(0).cast("long")
     for p in range(n_planes):
         plane = F.array(*[F.lit(c) for c in _rs_plane(p)])

@@ -71,6 +71,25 @@ def get_spark(
         # (docs/SCALING.md grew a binary header from exactly this).
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Stream checkpoints (offsets, commits, source logs, state deltas)
+        # go through the Hadoop FileSystem API, not Spark's default
+        # FileContext one. Without the native Hadoop library the local
+        # filesystem forks a shell command to set or read a file's
+        # permissions; an atomic checkpoint-file write forks 20 times
+        # through FileContext and 4 through FileSystem, and the forks are
+        # most of a trigger's time. The FileSystem manager writes the same
+        # files (a temp file renamed into place, .crc included), and its
+        # reads verify Hadoop's .crc, which FileContext's reads of the
+        # offset log do not. It checks for an existing file and then
+        # renames, where FileContext renames without overwrite in one step
+        # that HDFS makes atomic. Local only: get_spark always builds
+        # local[N]. Sessions built elsewhere and passed through
+        # ensure_runtime_conf keep FileContext.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

@@ -18,9 +18,10 @@ enforced mechanically.
    matches U+000B) against oracles using RE2's \\s (which does not).
 
 4. One vector layer. functions/vector.py owns the dot, norm, cosine and
-   distance folds, micro-unit quantization and the seeded pick, each
-   with its DuckDB twin: a float fold whose twin is spelled elsewhere can
-   reorder its sum and move the last bit of every result built on it.
+   distance folds, micro- and milli-unit quantization and the seeded
+   pick, each with its DuckDB twin: a float fold whose twin is spelled
+   elsewhere can reorder its sum and move the last bit of every result
+   built on it.
 """
 
 from __future__ import annotations
@@ -105,8 +106,10 @@ def test_multi_consumer_flagships_pin_shared_subplan(spark):
 def test_vector_arithmetic_only_in_vector_module():
     """Outside functions/vector.py no file under gearpump_spark/ spells a
     DuckDB norm fold (SQRT(LIST_SUM(), a micro-unit quantization
-    (x + 2.0) * 1000000 in either engine's spelling, or a settable
-    quantization offset (F.lit(offset))."""
+    (x + 2.0) * 1000000 in either engine's spelling, a settable
+    quantization offset (F.lit(offset)), or a milli-unit (or hundredth)
+    rounding round(x * 1000) in either engine's spelling, with a literal
+    or a settable scale."""
     vector_module = ROOT / "gearpump_spark" / "functions" / "vector.py"
     patterns = {
         "SQRT(LIST_SUM(": re.compile(r"SQRT\(LIST_SUM\(", re.I),
@@ -114,6 +117,12 @@ def test_vector_arithmetic_only_in_vector_module():
             r"2\.0\)\)?\s*\*\s*(F\.lit\()?1000000"
         ),
         "F.lit(offset)": re.compile(r"F\.lit\(offset\)"),
+        "F.round(x * 1000, 0) milli units": re.compile(
+            r"F\.round\(.*\*\s*(1000?|scale),\s*0\)"
+        ),
+        "ROUND(CAST(x AS DOUBLE) * 1000) milli units": re.compile(
+            r"ROUND\(CAST\(.{0,60} AS DOUBLE\)\s*\*\s*1000?(,\s*0)?\)", re.I
+        ),
     }
     found = [
         f"{path.relative_to(ROOT)}: {label}"
@@ -124,7 +133,8 @@ def test_vector_arithmetic_only_in_vector_module():
     ]
     assert not found, (
         "vector arithmetic outside functions/vector.py; use V.dot / "
-        "V.l2_norm / V.cosine / V.micro_units or their V.sql_* twins: "
+        "V.l2_norm / V.cosine / V.micro_units / V.milli_units or their V.sql_* "
+        "twins: "
         + "; ".join(found)
     )
 

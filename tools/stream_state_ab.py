@@ -1,7 +1,10 @@
 """A/B the Structured Streaming state-store provider (HDFSBacked vs
 RocksDB) on the bench's stateful workload — the OPTIMIZATION_r10 "Not
-yet optimized" item. Each arm runs in its OWN SparkSession (the provider
-class is fixed at first use per checkpoint) with the exact bench shape:
+yet optimized" item. Each arm runs in its OWN SparkSession, built by
+gearpump_spark.session.get_spark, so it writes checkpoints through the same
+file manager as every Stream-API pipeline; the provider class is set on
+the session before the query starts (it is fixed in a checkpoint at first
+use). Each arm runs the exact bench shape:
 rate-micro-batch 20M rows/trigger -> watermark 0s -> 10s window x 64
 keys -> count, update mode, noop sink; rate = median of the best half of
 steady-state batches (bench.py's estimator, batchId >= 3).
@@ -49,20 +52,15 @@ PROVIDERS = {
 
 
 def measure(provider_class: str) -> dict:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName(f"state_ab_{provider_class.rsplit('.', 1)[-1]}")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.streaming.stateStore.providerClass", provider_class)
-        .getOrCreate()
+    from gearpump_spark.session import get_spark
+
+    spark = get_spark(
+        f"state_ab_{provider_class.rsplit('.', 1)[-1]}", cpus=CPUS, shuffle_partitions=CPUS
     )
     spark.sparkContext.setLogLevel("ERROR")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider_class)
     src = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", ROWS)
