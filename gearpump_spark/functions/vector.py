@@ -40,6 +40,11 @@ MICRO_SCALE = 1_000_000
 # sign of the coordinates they stand for.
 MILLI_SCALE = 1000
 
+# Width of the fixture embeddings. Oracles that spell a per-coordinate
+# range and callers that pass a width take it from here, so a table of
+# another width fails in both engines alike instead of in one.
+EMBED_DIM = 64
+
 
 def to_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))

@@ -870,7 +870,7 @@ def _jl_signs(seed: int, out_dim: int, dim: int) -> list[list[int]]:
 def random_projection(
     df: DataFrame,
     vec_col: str = "embedding",
-    dim: int = 64,
+    dim: int = V.EMBED_DIM,
     out_dim: int = 16,
     seed: int = 7,
     out_col: str = "proj",

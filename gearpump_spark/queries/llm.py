@@ -703,7 +703,7 @@ def _lsh_plane_sql(p: int) -> str:
     """Hyperplane p as a list, component j the exact double
     operators/similarity.py _hyperplane computes: u32(md5('p|j')[:8])/2^31 - 1."""
     return (
-        "LIST_TRANSFORM(RANGE(0, 64), j -> "
+        f"LIST_TRANSFORM(RANGE(0, {V.EMBED_DIM}), j -> "
         f"CAST(('0x' || SUBSTR(MD5(CONCAT('{p}', '|', CAST(j AS VARCHAR))), 1, 8))"
         " AS BIGINT) / 2147483648.0 - 1.0)"
     )
@@ -744,7 +744,7 @@ _LSH_BUCKET_SQL = " + ".join(
 )
 def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    return _ranked(S.cosine_topk_lsh(_probes(emb), emb, dim=64, k=5, n_planes=4))
+    return _ranked(S.cosine_topk_lsh(_probes(emb), emb, dim=V.EMBED_DIM, k=5, n_planes=4))
 
 
 @register(
@@ -4607,14 +4607,14 @@ def multimodal_phash_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH u AS (
         SELECT vec_id, CAST(i AS BIGINT) - 1 AS pos, mu[CAST(i AS INT)] AS x
         FROM (SELECT vec_id, {V.sql_milli_units("embedding")} AS mu
-              FROM embeddings), range(1, 65) t(i)),
+              FROM embeddings), range(1, {V.EMBED_DIM + 1}) t(i)),
     s AS (
         SELECT CAST(j.j AS BIGINT) AS j, CAST(p.pos AS BIGINT) AS pos,
                CASE WHEN CAST(CONCAT('0x',
                         SUBSTR(MD5('7|' || j.j || '|' || p.pos), 1, 15))
                         AS BIGINT) % 2 = 0
                     THEN 1 ELSE -1 END AS sgn
-        FROM range(0, 16) j(j) CROSS JOIN range(0, 64) p(pos)),
+        FROM range(0, 16) j(j) CROSS JOIN range(0, {V.EMBED_DIM}) p(pos)),
     comp AS (
         SELECT vec_id, j, SUM(sgn * x) AS c
         FROM u JOIN s USING (pos) GROUP BY vec_id, j),
@@ -4640,7 +4640,7 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.similarity import random_projection
 
     emb = table(spark, sf_dir, "embeddings")
-    out = random_projection(emb, "embedding", dim=64, out_dim=16, seed=7)
+    out = random_projection(emb, "embedding", dim=V.EMBED_DIM, out_dim=16, seed=7)
     return out.select(
         "vec_id",
         F.array_join("proj", ",").alias("proj"),
@@ -5301,7 +5301,7 @@ def embedding_top_pc_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("i")
 
 
-def _rs_plane(p: int, dim: int = 64) -> list[int]:
+def _rs_plane(p: int, dim: int = V.EMBED_DIM) -> list[int]:
     """Integer LSH hyperplane for range search: coefficient j of plane p is
     (int(md5('rs{p}|{j}')[:8], 16) % 2001) - 1000 ∈ [-1000, 1000] — pure
     integer, so the projection SIGN is exact on both engines (the float
@@ -5336,7 +5336,7 @@ _SQL_RS_COEF = (
         SELECT vec_id, qv,
                LIST_SUM(LIST_TRANSFORM(RANGE(0, (SELECT k FROM np)),
                    p -> CASE WHEN
-                   LIST_SUM(LIST_TRANSFORM(RANGE(1, 65),
+                   LIST_SUM(LIST_TRANSFORM(RANGE(1, {V.EMBED_DIM + 1}),
                        j -> qv[j] * {_SQL_RS_COEF.format(p="p")}))
                    > 0 THEN CAST(POW(2, p) AS BIGINT) ELSE 0 END)) AS bucket
         FROM q),
@@ -6331,15 +6331,16 @@ def multimodal_tiff_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the lo/hi word is 1 iff embedding[j] > 0 (ties at 0 stay 0). Two UINT32-
 # range words per 64-dim vector, kept in BIGINT so neither engine touches
 # the sign bit.
-_SQL_SIGN_WORDS = """
+_HALF_DIM = V.EMBED_DIM // 2
+_SQL_SIGN_WORDS = f"""
         SELECT vec_id,
-               CAST(LIST_SUM(LIST_TRANSFORM(RANGE(1, 33),
+               CAST(LIST_SUM(LIST_TRANSFORM(RANGE(1, {_HALF_DIM + 1}),
                    i -> CASE WHEN CAST(embedding[CAST(i AS INT)] AS DOUBLE) > 0
                              THEN CAST(POW(2, i - 1) AS BIGINT) ELSE 0 END))
                    AS BIGINT) AS w_lo,
-               CAST(LIST_SUM(LIST_TRANSFORM(RANGE(33, 65),
+               CAST(LIST_SUM(LIST_TRANSFORM(RANGE({_HALF_DIM + 1}, {V.EMBED_DIM + 1}),
                    i -> CASE WHEN CAST(embedding[CAST(i AS INT)] AS DOUBLE) > 0
-                             THEN CAST(POW(2, i - 33) AS BIGINT) ELSE 0 END))
+                             THEN CAST(POW(2, i - {_HALF_DIM + 1}) AS BIGINT) ELSE 0 END))
                    AS BIGINT) AS w_hi
         FROM embeddings"""
 
@@ -6363,7 +6364,11 @@ def _sign_words(emb: DataFrame) -> DataFrame:
             lambda acc, x: acc + x,
         )
 
-    return emb.select("vec_id", word(0, 32).alias("w_lo"), word(32, 64).alias("w_hi"))
+    return emb.select(
+        "vec_id",
+        word(0, _HALF_DIM).alias("w_lo"),
+        word(_HALF_DIM, V.EMBED_DIM).alias("w_hi"),
+    )
 
 
 @register(

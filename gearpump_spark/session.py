@@ -9,6 +9,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory holding the gearpump_spark package.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Runtime-settable confs we require for deterministic, oracle-comparable
 # results. Applied defensively by query entry points because the driver may
 # hand us a session we didn't build.
@@ -90,6 +93,14 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
+        # Python workers fork from gearpump_spark.pyworker, which stops
+        # them re-reading pyspark.zip's directory 16 times per task (see
+        # that module). The daemon is started as `python -m`, so the
+        # directory holding this package goes on the worker path: without
+        # it a driver run from another cwd fails every Python UDF. Local
+        # only, as above; sessions built elsewhere keep pyspark.daemon.
+        .config("spark.python.daemon.module", "gearpump_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

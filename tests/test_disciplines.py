@@ -109,7 +109,7 @@ def test_vector_arithmetic_only_in_vector_module():
     (x + 2.0) * 1000000 in either engine's spelling, a settable
     quantization offset (F.lit(offset)), or a milli-unit (or hundredth)
     rounding round(x * 1000) in either engine's spelling, with a literal
-    or a settable scale."""
+    or a settable scale, or a literal embedding-width range (V.EMBED_DIM)."""
     vector_module = ROOT / "gearpump_spark" / "functions" / "vector.py"
     patterns = {
         "SQRT(LIST_SUM(": re.compile(r"SQRT\(LIST_SUM\(", re.I),
@@ -123,6 +123,7 @@ def test_vector_arithmetic_only_in_vector_module():
         "ROUND(CAST(x AS DOUBLE) * 1000) milli units": re.compile(
             r"ROUND\(CAST\(.{0,60} AS DOUBLE\)\s*\*\s*1000?(,\s*0)?\)", re.I
         ),
+        "RANGE(1, 65) embedding width": re.compile(r"RANGE\((0, 64|1, 65|33, 65)\)", re.I),
     }
     found = [
         f"{path.relative_to(ROOT)}: {label}"
@@ -137,6 +138,22 @@ def test_vector_arithmetic_only_in_vector_module():
         "twins: "
         + "; ".join(found)
     )
+
+
+def test_fixture_embeddings_are_embed_dim_wide(spark, sf_dir, duck):
+    """The oracles that spell a per-coordinate range and the callers that
+    pass a width take V.EMBED_DIM; the embeddings are that wide in both
+    engines."""
+    from pyspark.sql import functions as F
+
+    from gearpump_spark.datasets import table
+    from gearpump_spark.functions import vector as V
+
+    emb = table(spark, sf_dir, "embeddings")
+    assert {r[0] for r in emb.select(F.size("embedding")).distinct().collect()} == {V.EMBED_DIM}
+    assert duck.execute("SELECT DISTINCT LEN(embedding) FROM embeddings").fetchall() == [
+        (V.EMBED_DIM,)
+    ]
 
 
 def test_whitespace_split_only_in_text_module():
