@@ -211,7 +211,7 @@ def main() -> None:
     from gearpump_spark.session import get_spark
     from gearpump_spark.queries import all_queries
 
-    spark = get_spark("gearpump_bench", cpus=CPUS, shuffle_partitions=CPUS)
+    spark = get_spark("gearpump_bench", cpus=CPUS)
     # Round-1 postmortem (VERDICT.md "What's wrong" #1): the driver failed
     # to recover the JSON line because Spark WARN noise (streaming-stop
     # TaskKilled messages) interleaved with / followed it in the captured

@@ -58,15 +58,44 @@ def table(
     ensure_runtime_conf(spark)
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    df = _ts_micros(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     if parallelize is None:
         parallelize = name not in ALWAYS_BROADCAST
     if parallelize:
         target = spark.sparkContext.defaultParallelism
         if _few_splits(f"{sf_dir}/{name}.parquet", target):
             df = df.repartition(target)
+    return df
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str, flush: bool = False) -> DataFrame:
+    """One of the driver's parquet tables as a file-source stream, with
+    `table()`'s ts rule. The path goes through stream_source_path, so a
+    single-file fixture streams like a directory one.
+
+    flush=True unions the flush sentinel (Watermark.MAX) into the source
+    before the ts conversion: it advances the watermark past every open
+    window; drop it with before_flush() after the watermark."""
+    from gearpump_spark.session import ensure_runtime_conf
+    from gearpump_spark.streaming.core import flush_sentinel_source, stream_source_path
+
+    ensure_runtime_conf(spark)
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; have {TABLES}")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = spark.read.parquet(path).schema
+    df = spark.readStream.schema(schema).parquet(stream_source_path(path))
+    if flush:
+        df = df.union(flush_sentinel_source(spark, schema))
+    return _ts_micros(df)
+
+
+def _ts_micros(df: DataFrame) -> DataFrame:
+    """`ts` read as epoch nanos (a TIMESTAMP(NANOS) column under
+    legacy.parquet.nanosAsLong) becomes a µs TimestampType by truncating
+    division — the same ns→µs semantics as DuckDB's CAST(ts AS TIMESTAMP)."""
+    if dict(df.dtypes).get("ts") == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
 
 

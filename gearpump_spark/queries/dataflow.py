@@ -1,8 +1,8 @@
 """Dataflow parity queries — the reference's own operator surface
-(SURVEY.md §2.A/B/D/E) re-expressed Spark-first, in batch form so the
-driver can oracle-check them. The streaming forms of the same operators
-live in gearpump_spark.streaming and are pytest-verified (watermarks and
-stateful output are not SQL-expressible).
+(SURVEY.md §2.A/B/D/E) re-expressed Spark-first. The streaming queries
+run on the Stream API over a fixture stream (datasets.stream_table),
+drain through run_to_completion, and are oracle-checked against batch
+SQL like the rest.
 """
 
 from __future__ import annotations
@@ -10,10 +10,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gearpump_spark.datasets import table
+from gearpump_spark.datasets import stream_table, table
 from gearpump_spark.functions import text as TX
 from gearpump_spark.queries import register
 from gearpump_spark.queries._util import dec, dsum, sql_dsum
+from gearpump_spark.stream import Stream
+from gearpump_spark.streaming.core import (
+    before_flush,
+    run_to_completion,
+    stream_dedup,
+    stream_stream_interval_join,
+)
 
 # ---------------------------------------------------------------------------
 # Wordcount — the reference's canonical example
@@ -78,17 +85,56 @@ def q_gbk_combine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Event-time windows (Window(size, step) → tumbling & sliding)
 # ---------------------------------------------------------------------------
 
-
-@register(
-    "q_window_tumbling",
-    oracle=f"""
+# One oracle per batch/stream twin pair: both twins return the same rows.
+WINDOW_TUMBLING_ORACLE = f"""
     SELECT MAKE_TIMESTAMP(CAST(FLOOR(EPOCH(CAST(ts AS TIMESTAMP)) / 300) * 300 AS BIGINT) * 1000000)
              AS window_start,
            event_type, COUNT(*) AS n, {sql_dsum('value')} AS total_value
     FROM events
     GROUP BY 1, event_type
     ORDER BY window_start, event_type
-    """,
+    """
+WINDOW_SLIDING_ORACLE = f"""
+    SELECT MAKE_TIMESTAMP(CAST(FLOOR(EPOCH(CAST(ts AS TIMESTAMP)) / 300) * 300 - o.off AS BIGINT) * 1000000)
+             AS window_start,
+           COUNT(*) AS n, {sql_dsum('value')} AS total_value
+    FROM events CROSS JOIN (SELECT UNNEST([0, 300]) AS off) o
+    GROUP BY 1
+    ORDER BY window_start
+    """
+# q_session_window in queries/temporal.py imports it from here: importing
+# temporal from this module would register its queries before these ones
+# and change the registry order.
+SESSION_WINDOW_ORACLE = """
+    WITH flagged AS (
+        SELECT user_id, ts,
+               CASE WHEN LAG(ts) OVER w IS NULL
+                      OR ts - LAG(ts) OVER w >= INTERVAL 30 MINUTE
+                    THEN 1 ELSE 0 END AS new_s
+        FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+    sess AS (
+        SELECT user_id, ts,
+               SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
+                                ROWS UNBOUNDED PRECEDING) AS sid
+        FROM flagged)
+    SELECT user_id, MIN(ts) AS session_start,
+           MAX(ts) + INTERVAL 30 MINUTE AS session_end,
+           COUNT(*) AS n_events
+    FROM sess GROUP BY user_id, sid
+    ORDER BY user_id, session_start
+    """
+
+
+def _flushed_events(spark: SparkSession, sf_dir: str) -> Stream:
+    """The events stream closed by the flush sentinel: watermarked on ts,
+    sentinel dropped after the watermark operator."""
+    ev = stream_table(spark, sf_dir, "events", flush=True)
+    return Stream(ev, "ts").with_watermark("0 seconds").filter(before_flush("ts"))
+
+
+@register(
+    "q_window_tumbling",
+    oracle=WINDOW_TUMBLING_ORACLE,
     desc="tumbling event-time window (size==step): 5-minute buckets "
     "(reference: streaming/.../state/impl/Window.scala:22-49, WindowConfig.scala:21)",
 )
@@ -113,14 +159,7 @@ def q_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_window_tumbling_stream",
-    oracle=f"""
-    SELECT MAKE_TIMESTAMP(CAST(FLOOR(EPOCH(CAST(ts AS TIMESTAMP)) / 300) * 300 AS BIGINT) * 1000000)
-             AS window_start,
-           event_type, COUNT(*) AS n, {sql_dsum('value')} AS total_value
-    FROM events
-    GROUP BY 1, event_type
-    ORDER BY window_start, event_type
-    """,
+    oracle=WINDOW_TUMBLING_ORACLE,
     desc="the q_window_tumbling aggregation run through a REAL "
     "Structured Streaming pipeline under the driver oracle gate: file "
     "source + a far-future flush-sentinel source (the reference's "
@@ -139,38 +178,12 @@ def q_window_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     events. Append mode means each pane is emitted exactly once, when
     the watermark passes its end — the reference's final-pane-only
     GroupByKey contract (GroupByKeyTranslator.java:67-79)."""
-    import uuid
-
-    from gearpump_spark.streaming.core import (
-        flush_sentinel_source,
-        run_to_completion,
-        stream_source_path,
-        windowed_aggregate,
-    )
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.simpleString() == "bigint"
-    data = spark.readStream.schema(raw_schema).parquet(
-        stream_source_path(f"{sf_dir}/events.parquet")
-    )
-    # Sentinel source: the fixture dir is read-only, so Watermark.MAX
-    # arrives via a second file source unioned in (session-scoped temp,
-    # cleaned at exit). Built schema-generically (ts may surface as raw
-    # epoch nanos under nanosAsLong or as a native timestamp); non-ts
-    # fields ride NULL — the sentinel advances the clock and is dropped
-    # before aggregation.
-    sentinel = flush_sentinel_source(spark, raw_schema, "ts", ts_is_long)
-    ev = data.union(sentinel)
-    if ts_is_long:
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    agg = windowed_aggregate(
-        ev,
-        "ts",
-        "5 minutes",
-        None,
-        ["event_type"],
-        [F.count("*").alias("n"), dsum("value").alias("total_value")],
-        drop_flush_sentinel=True,
+    agg = (
+        _flushed_events(spark, sf_dir)
+        .key_by("event_type")
+        .windowed("5 minutes")
+        .agg(F.count("*").alias("n"), dsum("value").alias("total_value"))
+        .to_df()
     )
     out = run_to_completion(
         agg.select(
@@ -179,21 +192,14 @@ def q_window_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "total_value",
         ),
-        f"window_tumbling_stream_{uuid.uuid4().hex[:8]}",
+        "window_tumbling_stream",
     )
     return out.orderBy("window_start", "event_type")
 
 
 @register(
     "q_window_sliding",
-    oracle=f"""
-    SELECT MAKE_TIMESTAMP(CAST(FLOOR(EPOCH(CAST(ts AS TIMESTAMP)) / 300) * 300 - o.off AS BIGINT) * 1000000)
-             AS window_start,
-           COUNT(*) AS n, {sql_dsum('value')} AS total_value
-    FROM events CROSS JOIN (SELECT UNNEST([0, 300]) AS off) o
-    GROUP BY 1
-    ORDER BY window_start
-    """,
+    oracle=WINDOW_SLIDING_ORACLE,
     desc="sliding event-time window (step<size): 10-minute window, 5-minute slide "
     "(reference: streaming/.../state/impl/WindowState.scala:48-159 — interval-split "
     "partial aggregates with Group.minus retraction)",
@@ -214,14 +220,7 @@ def q_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_window_sliding_stream",
-    oracle=f"""
-    SELECT MAKE_TIMESTAMP(CAST(FLOOR(EPOCH(CAST(ts AS TIMESTAMP)) / 300) * 300 - o.off AS BIGINT) * 1000000)
-             AS window_start,
-           COUNT(*) AS n, {sql_dsum('value')} AS total_value
-    FROM events CROSS JOIN (SELECT UNNEST([0, 300]) AS off) o
-    GROUP BY 1
-    ORDER BY window_start
-    """,
+    oracle=WINDOW_SLIDING_ORACLE,
     desc="the q_window_sliding aggregation run through a REAL Structured "
     "Streaming pipeline under the driver oracle gate: overlapping "
     "10-minute windows sliding every 5 minutes, so each event belongs "
@@ -239,38 +238,16 @@ def q_window_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     store holds size/step=2 open panes per key instead of 1 — same
     map-side partial-agg shuffle as the batch twin, state bounded by
     the watermark; the memory sink holds |panes| rows, never events."""
-    import uuid
-
-    from gearpump_spark.streaming.core import (
-        flush_sentinel_source,
-        run_to_completion,
-        stream_source_path,
-        windowed_aggregate,
-    )
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.simpleString() == "bigint"
-    data = spark.readStream.schema(raw_schema).parquet(
-        stream_source_path(f"{sf_dir}/events.parquet")
-    )
-    sentinel = flush_sentinel_source(spark, raw_schema, "ts", ts_is_long)
-    ev = data.union(sentinel)
-    if ts_is_long:
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    agg = windowed_aggregate(
-        ev,
-        "ts",
-        "10 minutes",
-        "5 minutes",
-        [],
-        [F.count("*").alias("n"), dsum("value").alias("total_value")],
-        drop_flush_sentinel=True,
+    agg = (
+        _flushed_events(spark, sf_dir)
+        .key_by()
+        .windowed("10 minutes", "5 minutes")
+        .agg(F.count("*").alias("n"), dsum("value").alias("total_value"))
+        .to_df()
     )
     out = run_to_completion(
-        agg.select(
-            F.col("window.start").alias("window_start"), "n", "total_value"
-        ),
-        f"window_sliding_stream_{uuid.uuid4().hex[:8]}",
+        agg.select(F.col("window.start").alias("window_start"), "n", "total_value"),
+        "window_sliding_stream",
     )
     return out.orderBy("window_start")
 
@@ -302,36 +279,18 @@ def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_dedup); the aggregation reuses the tumbling query's shuffle
     shape. The doubled source is the test harness for redelivery —
     production replay arrives from the checkpointed source for free."""
-    import uuid
-
-    from gearpump_spark.streaming.core import (
-        flush_sentinel_source,
-        run_to_completion,
-        stream_dedup,
-        stream_source_path,
-        windowed_aggregate,
-    )
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.simpleString() == "bigint"
-    path = stream_source_path(f"{sf_dir}/events.parquet")
-    once = spark.readStream.schema(raw_schema).parquet(path)
-    twice = spark.readStream.schema(raw_schema).parquet(path)
-    sentinel = flush_sentinel_source(spark, raw_schema, "ts", ts_is_long)
-    ev = once.union(twice).union(sentinel)
-    if ts_is_long:
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    keys = [f.name for f in ev.schema.fields if f.name != "ts"]
-    deduped = stream_dedup(ev, keys, ts_col="ts")
-    agg = windowed_aggregate(
-        deduped,
-        "ts",
-        "5 minutes",
-        None,
-        ["event_type"],
-        [F.count("*").alias("n"), dsum("value").alias("total_value")],
-        drop_flush_sentinel=True,
-        set_watermark=False,  # stream_dedup already set it
+    once = stream_table(spark, sf_dir, "events", flush=True)
+    twice = stream_table(spark, sf_dir, "events")
+    ev = once.union(twice)
+    keys = [c for c in ev.columns if c != "ts"]
+    # stream_dedup sets the watermark; the window agg reuses it.
+    agg = (
+        Stream(stream_dedup(ev, keys, ts_col="ts"), "ts")
+        .filter(before_flush("ts"))
+        .key_by("event_type")
+        .windowed("5 minutes")
+        .agg(F.count("*").alias("n"), dsum("value").alias("total_value"))
+        .to_df()
     )
     out = run_to_completion(
         agg.select(
@@ -340,31 +299,14 @@ def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "total_value",
         ),
-        f"stream_dedup_replay_{uuid.uuid4().hex[:8]}",
+        "stream_dedup_replay",
     )
     return out.orderBy("window_start", "event_type")
 
 
 @register(
     "q_session_window_stream",
-    oracle="""
-    WITH flagged AS (
-        SELECT user_id, ts,
-               CASE WHEN LAG(ts) OVER w IS NULL
-                      OR ts - LAG(ts) OVER w >= INTERVAL 30 MINUTE
-                    THEN 1 ELSE 0 END AS new_s
-        FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-    sess AS (
-        SELECT user_id, ts,
-               SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sid
-        FROM flagged)
-    SELECT user_id, MIN(ts) AS session_start,
-           MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-           COUNT(*) AS n_events
-    FROM sess GROUP BY user_id, sid
-    ORDER BY user_id, session_start
-    """,
+    oracle=SESSION_WINDOW_ORACLE,
     desc="MERGING (session) windows through a REAL streaming pipeline "
     "under the driver oracle gate — the one window type the reference "
     "rejects outright (GroupByKeyTranslator.java:43-47 throws on "
@@ -382,31 +324,11 @@ def q_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming evidence family: stateless map, tumbling, sliding,
     dedup, and MERGING window state all oracle-gated in their real
     execution mode."""
-    import uuid
-
-    from gearpump_spark.streaming.core import (
-        flush_sentinel_source,
-        run_to_completion,
-        session_window_aggregate,
-        stream_source_path,
-    )
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.simpleString() == "bigint"
-    data = spark.readStream.schema(raw_schema).parquet(
-        stream_source_path(f"{sf_dir}/events.parquet")
-    )
-    sentinel = flush_sentinel_source(spark, raw_schema, "ts", ts_is_long)
-    ev = data.union(sentinel)
-    if ts_is_long:
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    agg = session_window_aggregate(
-        ev,
-        "ts",
-        "30 minutes",
-        ["user_id"],
-        [F.count("*").alias("n_events")],
-        drop_flush_sentinel=True,
+    agg = (
+        _flushed_events(spark, sf_dir)
+        .key_by(F.session_window("ts", "30 minutes").alias("session"), "user_id")
+        .agg(F.count("*").alias("n_events"))
+        .to_df()
     )
     out = run_to_completion(
         agg.select(
@@ -415,7 +337,7 @@ def q_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("session.end").alias("session_end"),
             "n_events",
         ),
-        f"session_window_stream_{uuid.uuid4().hex[:8]}",
+        "session_window_stream",
     )
     return out.orderBy("user_id", "session_start")
 
@@ -444,35 +366,17 @@ def q_running_aggregate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission log the sink folds is |event_type| x n_batches rows — both
     independent of corpus size. No sentinel needed: update mode emits
     on every batch regardless of watermark progress."""
-    import uuid
-
-    from gearpump_spark.streaming.core import (
-        run_to_completion,
-        running_aggregate,
-        stream_source_path,
-    )
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.simpleString() == "bigint"
-    ev = spark.readStream.schema(raw_schema).parquet(
-        stream_source_path(f"{sf_dir}/events.parquet")
-    )
-    if ts_is_long:
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    agg = running_aggregate(
-        ev,
-        ["event_type"],
-        [
+    agg = (
+        Stream(stream_table(spark, sf_dir, "events"), "ts")
+        .key_by("event_type")
+        .agg(
             F.count("*").alias("n"),
             F.min("ts").alias("first_ts"),
             F.max("ts").alias("last_ts"),
-        ],
+        )
+        .to_df()
     )
-    out = run_to_completion(
-        agg,
-        f"running_aggregate_stream_{uuid.uuid4().hex[:8]}",
-        output_mode="update",
-    )
+    out = run_to_completion(agg, "running_aggregate_stream", output_mode="update")
     # Fold the per-batch emission log back to the final state with the
     # same monoid — running count/min/max are monotone, so the last
     # emission per key IS the max/min over all emissions.
@@ -484,6 +388,29 @@ def q_running_aggregate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("last_ts").alias("last_ts"),
         )
         .orderBy("event_type")
+    )
+
+
+def _event_side(spark: SparkSession, sf_dir: str, event_type: str, flush: bool = False) -> DataFrame:
+    """One event type of the events stream as a join side: user_id,
+    {event_type}_id, {event_type}_ts. With flush, the sentinel rides
+    along: the event-type filter keeps it (its event_type is NULL), and
+    its join key is -1, not NULL. A NULL key would drop it: the outer
+    join's equi-condition makes Catalyst infer isnotnull(user_id) on the
+    preserved side's opposite input and push it below the watermark
+    operator (the no-pushdown guarantee covers only predicates ON the
+    watermark column), so the sentinel would never advance the clock —
+    observed as the last day's unmatched rows never flushing. -1 matches
+    no real user, and the far-future ts satisfies no interval."""
+    ev = stream_table(spark, sf_dir, "events", flush=flush)
+    keep, user = F.col("event_type") == event_type, F.col("user_id")
+    if flush:
+        keep = keep | ~before_flush("ts")
+        user = F.when(before_flush("ts"), user).otherwise(F.lit(-1))
+    return ev.where(keep).select(
+        user.alias("user_id"),
+        F.col("event_id").alias(f"{event_type}_id"),
+        F.col("ts").alias(f"{event_type}_ts"),
     )
 
 
@@ -517,49 +444,15 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams once on the equi-key. Inner-join matches emit as they pair
     (no watermark wait), so a single availableNow batch yields exactly
     the batch join."""
-    import uuid
-
-    from gearpump_spark.streaming.core import (
-        run_to_completion,
-        stream_source_path,
-    )
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.simpleString() == "bigint"
-    path = stream_source_path(f"{sf_dir}/events.parquet")
-
-    def side(event_type: str, prefix: str) -> DataFrame:
-        s = spark.readStream.schema(raw_schema).parquet(path)
-        if ts_is_long:
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return (
-            s.where(F.col("event_type") == event_type)
-            .select(
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            )
-            .withWatermark(f"{prefix}_ts", "0 seconds")
-        )
-
-    clicks = side("click", "click")
-    purchases = side("purchase", "purchase")
-    j = clicks.join(
-        purchases,
-        (F.col("click_user") == F.col("purchase_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 DAY")),
-        "inner",
+    j = stream_stream_interval_join(
+        _event_side(spark, sf_dir, "click"),
+        _event_side(spark, sf_dir, "purchase"),
+        key="user_id", left_ts="click_ts", right_ts="purchase_ts",
+        lower="0 seconds", upper="1 day",
     )
     out = run_to_completion(
-        j.select(
-            F.col("click_user").alias("user_id"),
-            F.col("click_id"),
-            F.col("purchase_id"),
-            F.col("click_ts"),
-            F.col("purchase_ts"),
-        ),
-        f"stream_stream_join_{uuid.uuid4().hex[:8]}",
+        j.select("l.user_id", "click_id", "purchase_id", "click_ts", "purchase_ts"),
+        "stream_stream_join",
     )
     return out.orderBy("click_id", "purchase_id")
 
@@ -591,69 +484,17 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the inner join; outer emission adds no state, it changes WHEN
     eviction emits (row + NULLs instead of silent drop). The sentinel
     is one far-future row per side."""
-    import uuid
-
-    from gearpump_spark.streaming.core import (
-        before_flush,
-        flush_sentinel_source,
-        run_to_completion,
-        stream_source_path,
-    )
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ts_is_long = raw_schema["ts"].dataType.simpleString() == "bigint"
-    path = stream_source_path(f"{sf_dir}/events.parquet")
-
-    def side(event_type: str, prefix: str) -> DataFrame:
-        s = spark.readStream.schema(raw_schema).parquet(path)
-        # The sentinel unions in BEFORE the event-type filter drops its
-        # NULL payload: project first, filter the real rows, then union
-        # so the far-future row reaches this side's watermark operator.
-        proj = [
-            F.col("user_id").alias(f"{prefix}_user"),
-            F.col("event_id").alias(f"{prefix}_id"),
-            F.col("ts").alias(f"{prefix}_ts"),
-        ]
-        real = s.where(F.col("event_type") == event_type).select(*proj)
-        # The sentinel's join key must be NON-NULL: the outer join's
-        # equi-condition makes Catalyst infer isnotnull(user) on the
-        # preserved-side's opposite input and push it below the watermark
-        # operator (the no-pushdown guarantee covers only predicates ON
-        # the watermark column), which would silently drop the sentinel
-        # before it advances the clock — observed as the last day's
-        # unmatched rows never flushing. -1 matches no real user, and the
-        # far-future ts satisfies no interval, so it joins nothing.
-        sent = flush_sentinel_source(spark, raw_schema, "ts", ts_is_long).select(
-            F.coalesce(F.col("user_id"), F.lit(-1)).alias(f"{prefix}_user"),
-            F.col("event_id").alias(f"{prefix}_id"),
-            F.col("ts").alias(f"{prefix}_ts"),
-        )
-        u = real.union(sent)
-        if ts_is_long:
-            u = u.withColumn(
-                f"{prefix}_ts",
-                F.timestamp_micros(F.expr(f"{prefix}_ts div 1000")),
-            )
-        return u.withWatermark(f"{prefix}_ts", "0 seconds")
-
-    clicks = side("click", "click")
-    purchases = side("purchase", "purchase")
-    j = clicks.join(
-        purchases,
-        (F.col("click_user") == F.col("purchase_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 DAY")),
-        "leftOuter",
+    j = stream_stream_interval_join(
+        _event_side(spark, sf_dir, "click", flush=True),
+        _event_side(spark, sf_dir, "purchase", flush=True),
+        key="user_id", left_ts="click_ts", right_ts="purchase_ts",
+        lower="0 seconds", upper="1 day", how="leftOuter",
     )
     out = run_to_completion(
         j.where(before_flush("click_ts")).select(
-            F.col("click_user").alias("user_id"),
-            F.col("click_id"),
-            F.col("purchase_id"),
-            F.col("click_ts"),
-            F.col("purchase_ts"),
+            "l.user_id", "click_id", "purchase_id", "click_ts", "purchase_ts"
         ),
-        f"stream_join_outer_{uuid.uuid4().hex[:8]}",
+        "stream_join_outer",
     )
     return out.orderBy("click_id", "purchase_id")
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gearpump_spark.datasets import table
+from gearpump_spark.datasets import stream_table, table
 from gearpump_spark.operators import dedup as D
 from gearpump_spark.operators import sampling as SP
 from gearpump_spark.operators import similarity as S
@@ -7893,26 +7893,16 @@ def text_quality_lr_stream_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch or Trigger.Continuous and backpressures on source read
     alone. The memory sink here is the test harness; production sinks
     (parquet/kafka) take the same writeStream."""
-    import uuid
-
     from gearpump_spark.operators import classify as CL
-    from gearpump_spark.streaming.core import run_to_completion, stream_source_path
+    from gearpump_spark.streaming.core import run_to_completion
 
     docs = table(spark, sf_dir, "documents")
     fx = CL.hashed_features(docs).localCheckpoint(eager=False)
     lab = CL.keyword_teacher_labels(docs).localCheckpoint(eager=False)
     w = CL.train_lr_int(spark, fx, lab, n_steps=8, lr_den=3)
-    # stream_source_path handles both fixture shapes: driver single-file
-    # fixtures (one-char glob so FileStreamSource derives basePath from
-    # the parent dir) and Spark-written directory fixtures (direct path).
-    stream = spark.readStream.schema(docs.schema).parquet(
-        stream_source_path(f"{sf_dir}/documents.parquet")
-    )
+    stream = stream_table(spark, sf_dir, "documents")
     scored = CL.score_documents(stream, w).select("doc_id", "margin", "pred")
-    out = run_to_completion(
-        scored, f"lr_stream_score_{uuid.uuid4().hex[:8]}"
-    )
-    return out.orderBy("doc_id")
+    return run_to_completion(scored, "lr_stream_score").orderBy("doc_id")
 
 
 _MC_CLASS_WORDS = (

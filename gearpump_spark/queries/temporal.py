@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from gearpump_spark.datasets import table
 from gearpump_spark.operators.temporal import asof_join, range_join, sessionize
 from gearpump_spark.queries import register
+from gearpump_spark.queries.dataflow import SESSION_WINDOW_ORACLE
 
 
 @register(
@@ -184,24 +185,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_session_window",
-    oracle="""
-    WITH flagged AS (
-        SELECT user_id, ts,
-               CASE WHEN LAG(ts) OVER w IS NULL
-                      OR ts - LAG(ts) OVER w >= INTERVAL 30 MINUTE
-                    THEN 1 ELSE 0 END AS new_s
-        FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-    sess AS (
-        SELECT user_id, ts,
-               SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sid
-        FROM flagged)
-    SELECT user_id, MIN(ts) AS session_start,
-           MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-           COUNT(*) AS n_events
-    FROM sess GROUP BY user_id, sid
-    ORDER BY user_id, session_start
-    """,
+    oracle=SESSION_WINDOW_ORACLE,
     desc="native Spark session_window (30-min gap): merging event-time "
     "sessions the reference rejects outright; end = last event + gap",
 )

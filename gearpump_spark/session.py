@@ -52,22 +52,19 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "gearpump_spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or reuse) a local SparkSession.
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS (driver contract) or all cores.
-    Shuffle partitions default to the core count — 200 is wrong for a
-    single host (over-parallelized) and is re-planned by AQE anyway.
+    Shuffle partitions are the core count (32 for all cores) — 200 is
+    wrong for a single host (over-parallelized) and is re-planned by AQE
+    anyway.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or (32 if cpus == "*" else int(cpus))),
-        )
+        .config("spark.sql.shuffle.partitions", "32" if cpus == "*" else str(int(cpus)))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         # No console progress bar: its \r-frames pollute redirected stdout

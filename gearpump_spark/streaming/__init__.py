@@ -8,10 +8,7 @@ from gearpump_spark.streaming.core import (
     before_flush,
     replay_parquet_stream,
     run_to_completion,
-    running_aggregate,
-    windowed_aggregate,
     stateful_running_count,
-    session_window_aggregate,
     stream_dedup,
     stream_scd2_enrich,
     stream_stream_interval_join,
@@ -29,10 +26,7 @@ __all__ = [
     "before_flush",
     "replay_parquet_stream",
     "run_to_completion",
-    "running_aggregate",
-    "windowed_aggregate",
     "stateful_running_count",
-    "session_window_aggregate",
     "stream_dedup",
     "stream_scd2_enrich",
     "stream_stream_interval_join",

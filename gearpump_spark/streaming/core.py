@@ -79,8 +79,8 @@ def stream_source_path(path: str) -> str:
     directories (taken directly); driver fixtures are single FILES,
     where a one-char glob on the last character makes the source resolve
     the parent directory while still matching exactly that one file.
-    Shared by every registered streaming query so both fixture shapes
-    work everywhere (ADVICE r9 #2)."""
+    Only datasets.stream_table, the fixture reader, applies it; the
+    public readers take user paths as given."""
     import os
 
     if os.path.isdir(path):
@@ -114,9 +114,7 @@ def _sentinel_root() -> str:
     return _SENTINEL_ROOT
 
 
-def flush_sentinel_source(
-    spark: SparkSession, schema: Any, ts_col: str = "ts", ts_is_long: bool = False
-) -> DataFrame:
+def flush_sentinel_source(spark: SparkSession, schema: Any, ts_col: str = "ts") -> DataFrame:
     """Watermark.MAX as a second file source: one far-future row matching
     ``schema`` (non-ts fields ride NULL), written ONCE per process per
     schema under the session-scoped temp root and streamed back. Union it
@@ -124,10 +122,12 @@ def flush_sentinel_source(
     window, then drop it with before_flush() after the watermark operator
     (reference: streaming/.../source/Watermark.scala:29-36).
 
-    ts_is_long: the ts field is raw epoch NANOS (nanosAsLong read path)
+    A bigint ts field is raw epoch NANOS (the nanosAsLong read path)
     rather than a native timestamp."""
     import hashlib
     import os
+
+    ts_is_long = schema[ts_col].dataType.simpleString() == "bigint"
 
     def _sent_col(field):
         if field.name == ts_col:
@@ -140,9 +140,7 @@ def flush_sentinel_source(
             c = F.lit(None).cast(field.dataType)
         return c.alias(field.name)
 
-    key = hashlib.md5(
-        f"{ts_col}|{ts_is_long}|{schema.simpleString()}".encode()
-    ).hexdigest()[:12]
+    key = hashlib.md5(f"{ts_col}|{schema.simpleString()}".encode()).hexdigest()[:12]
     with _SENTINEL_WRITE_LOCK:
         path = os.path.join(_sentinel_root(), key)
         if not os.path.isdir(path):
@@ -155,35 +153,6 @@ def flush_sentinel_source(
             ).write.mode("overwrite").parquet(staging)
             os.rename(staging, path)
     return spark.readStream.schema(schema).parquet(path)
-
-
-def windowed_aggregate(
-    stream: DataFrame,
-    ts_col: str,
-    size: str,
-    step: str | None,
-    keys: list[str],
-    aggs: list[Column],
-    watermark_delay: str = "0 seconds",
-    drop_flush_sentinel: bool = False,
-    set_watermark: bool = True,
-) -> DataFrame:
-    """Watermarked tumbling/sliding window aggregation (final-pane
-    semantics under append mode — the reference's only trigger,
-    GroupByKeyTranslator.java:67-79 rejects everything else).
-
-    drop_flush_sentinel: filter rows at/after FLUSH_TS *after* the
-    watermark operator — they advance the clock (Watermark.MAX) but never
-    join an aggregate.
-
-    set_watermark=False when composing after another stateful operator
-    that already set it (stream_dedup, a join) — Spark disallows
-    redefining the watermark downstream."""
-    s = stream.withWatermark(ts_col, watermark_delay) if set_watermark else stream
-    if drop_flush_sentinel:
-        s = s.filter(before_flush(ts_col))
-    w = F.window(F.col(ts_col), size, step) if step else F.window(F.col(ts_col), size)
-    return s.groupBy(w.alias("window"), *keys).agg(*aggs)
 
 
 def _duration_us(spec: str) -> int:
@@ -229,12 +198,6 @@ def assign_windows(
     return df.withColumn(out_col, wins)
 
 
-def running_aggregate(stream: DataFrame, keys: list[str], aggs: list[Column]) -> DataFrame:
-    """NonWindowState: unbounded running aggregate; sink it with
-    outputMode('update') (reference: state/impl/NonWindowState.scala:30-48)."""
-    return stream.groupBy(*keys).agg(*aggs)
-
-
 def run_to_completion(
     df: DataFrame,
     query_name: str,
@@ -244,8 +207,13 @@ def run_to_completion(
     """Drain a bounded stream to its Watermark.MAX end state and return the
     materialized result: availableNow trigger + memory sink, blocking until
     the source is exhausted (the reference blocks until the global clock
-    hits Watermark.MAX, cluster/client/BeamClientContext.scala)."""
+    hits Watermark.MAX, cluster/client/BeamClientContext.scala).
+    The sink view is ``query_name`` plus a unique suffix, so concurrent
+    runs of one query never share a view."""
+    import uuid
+
     spark = df.sparkSession
+    query_name = f"{query_name}_{uuid.uuid4().hex[:8]}"
     writer = (
         df.writeStream.format("memory")
         .queryName(query_name)
@@ -322,28 +290,6 @@ def stateful_running_count(
         outputMode="update",
         timeoutConf=timeout,
     )
-
-
-def session_window_aggregate(
-    stream: DataFrame,
-    ts_col: str,
-    gap: str,
-    keys: list[str],
-    aggs: list[Column],
-    watermark_delay: str = "0 seconds",
-    drop_flush_sentinel: bool = False,
-) -> DataFrame:
-    """Session (merging) windows — the one window type the reference
-    explicitly REJECTS (experiments/beam/.../GroupByKeyTranslator.java:43-47
-    throws on merging WindowFns). Spark's state store merges adjacent
-    sessions under the watermark; append mode emits each session once when
-    it can no longer grow. Batch equivalent: operators/temporal.sessionize."""
-    s = stream.withWatermark(ts_col, watermark_delay)
-    if drop_flush_sentinel:
-        s = s.filter(before_flush(ts_col))
-    return s.groupBy(
-        F.session_window(F.col(ts_col), gap).alias("session"), *keys
-    ).agg(*aggs)
 
 
 def stream_dedup(
@@ -461,10 +407,11 @@ def monoid_windowed_state(
     passes a window's end, that pane is emitted once (append semantics)
     and its slot freed.
 
-    Built-in `windowed_aggregate` compiles to Spark's native window agg —
-    use THAT for sums/counts; this operator is the extension seam for
-    monoids Spark lacks (custom sketches, CRDTs). `lift` maps a pandas
-    Series of values to the monoid; `plus` combines; `zero` is identity.
+    The Stream API's `KeyedStream.windowed(...).agg(...)` compiles to
+    Spark's native window agg — use THAT for sums/counts; this operator
+    is the extension seam for monoids Spark lacks (custom sketches,
+    CRDTs). `lift` maps a pandas Series of values to the monoid; `plus`
+    combines; `zero` is identity.
 
     ``state_codec`` generalizes the monoid VALUE beyond a scalar: an
     (encode: value -> str, decode: str -> value) pair stores each open
@@ -481,6 +428,9 @@ def monoid_windowed_state(
     TreeMap of intervals. With a codec, per-window state size is the
     encoded value (e.g. 2^b HLL registers), constant in the data.
     """
+    # applyInPandasWithState, not Spark 4's transformWithStateInPandas:
+    # the latter's driver worker needs the `protobuf` package, which this
+    # package does not depend on.
     from pyspark.sql.streaming.state import GroupState
 
     size_ms = _duration_us(window_size) // 1000
@@ -658,32 +608,3 @@ def kmv_monoid(k: int = 64, value_col: str = "v", seed: int = 4) -> dict:
             lambda s: [int(x) for x in s.split(",")] if s else [],
         ),
     }
-
-
-def transform_with_state_supported() -> bool:
-    """Whether Spark 4's transformWithStateInPandas path can run here.
-
-    The modern arbitrary-state API (StatefulProcessor: typed state +
-    event-time timers — the closest Spark analog to the reference's
-    PersistentTask, state/api/PersistentTask.scala:36-98) ships a driver
-    worker that hard-requires the `protobuf` python package and the RocksDB
-    state store provider. This rig has no protobuf, so the engine's custom
-    stateful operators use applyInPandasWithState (same semantics, timer
-    expiry emulated with the flush sentinel); on a cluster with protobuf
-    installed the processors port over mechanically.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def require_transform_with_state() -> None:
-    if not transform_with_state_supported():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the `protobuf` package (absent "
-            "in this environment) and the RocksDB state store provider; use "
-            "the applyInPandasWithState operators instead"
-        )

@@ -22,6 +22,10 @@ enforced mechanically.
    pick, each with its DuckDB twin: a float fold whose twin is spelled
    elsewhere can reorder its sum and move the last bit of every result
    built on it.
+
+5. One fixture stream reader. datasets.stream_table owns the streaming
+   read of a fixture table: its path shape, its ts rule and the flush
+   sentinel. A query that opens its own file source repeats all three.
 """
 
 from __future__ import annotations
@@ -181,3 +185,14 @@ def test_whitespace_split_only_in_text_module():
         "whitespace split outside functions/text.py; use TX.tokens / "
         "TX.lower_tokens / TX.ngrams / TX.letter_runs or their TX.sql_* twins: " + "; ".join(found)
     )
+
+
+def test_no_read_stream_in_queries():
+    """No registered-query module opens a stream source itself; they
+    read fixture tables through datasets.stream_table."""
+    found = sorted(
+        path.name
+        for path in (ROOT / "gearpump_spark" / "queries").glob("*.py")
+        if "readStream" in path.read_text()
+    )
+    assert not found, "readStream in a query module; use datasets.stream_table: " + ", ".join(found)

@@ -1,5 +1,6 @@
 """Golden result hashes at sf0.001 for the 17 registered graph queries,
-the queries that tokenize text, and the vector queries.
+the queries that tokenize text, the vector queries and the streaming
+queries.
 
 test_oracle_parity compares each query with its DuckDB oracle, and both
 sides now read one shared input: the co-purchase or shipment graph (the
@@ -17,11 +18,15 @@ driver-sim mismatch. The rows-only queries are included where two runs of
 the recording implementation gave the same hash: the float PageRank
 queries round ranks to 8 decimals, far above float-sum reordering noise,
 and the refined IVF top-k, float k-means and power-iteration principal
-component queries gave one hash on 2, 4 and 8 local cores."""
+component queries gave one hash on 2, 4 and 8 local cores. The
+streaming queries' hashes were recorded while each still read its source
+and built its aggregate by hand, before they moved onto the Stream API."""
 
 from __future__ import annotations
 
+import ast
 import os
+import pathlib
 
 import pytest
 
@@ -86,6 +91,13 @@ GOLDEN_SF001 = {
     "pipeline_chunk_pack": "1f182749cfa8ca22",
     "pipeline_quality_dedup_pack": "32ba69e7eb8d76fa",
     "pipeline_quality_dedup_sample": "19806659ee472741",
+    "q_running_aggregate_stream": "b9be6e4d4757ae81",
+    "q_session_window_stream": "51bbeb4ca3488d15",
+    "q_stream_dedup_replay": "ecad457308c949b2",
+    "q_stream_join_outer": "eeb40ecbb69add0b",
+    "q_stream_stream_join": "be9feab51f4198e3",
+    "q_window_sliding_stream": "f679200bd5e557b0",
+    "q_window_tumbling_stream": "ecad457308c949b2",
     "sample_cluster_split": "e722df1f5a5aa16f",
     "sample_curriculum_order": "99dbc78be453be2a",
     "sample_domain_reweight_int": "db03473c64a0088d",
@@ -153,9 +165,29 @@ VECTOR_QUERIES = ("dedup_embedding_cosine", "dedup_semantic")
 PINNED_PREFIXES = ("graph_", "similarity_", "embedding_", "kmeans_")
 
 
+def _streamed_queries() -> set[str]:
+    """Registered queries whose function drains a stream (calls
+    run_to_completion), read from the query modules' source."""
+    names = set()
+    for path in (pathlib.Path(__file__).parent.parent / "gearpump_spark" / "queries").glob("*.py"):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            calls = {getattr(c.func, "id", None) for c in ast.walk(fn) if isinstance(c, ast.Call)}
+            if "run_to_completion" in calls:
+                names |= {
+                    d.args[0].value
+                    for d in fn.decorator_list
+                    if isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+                }
+    return names
+
+
 def test_golden_covers_every_graph_query():
     pinned = {n for n in REGISTRY if n.startswith(PINNED_PREFIXES)}
-    assert pinned | set(VECTOR_QUERIES) <= set(GOLDEN_SF001)
+    streamed = _streamed_queries()
+    assert len(streamed) >= 8
+    assert pinned | streamed | set(VECTOR_QUERIES) <= set(GOLDEN_SF001)
 
 
 @pytest.mark.parametrize("name", sorted(GOLDEN_SF001))

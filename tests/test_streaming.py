@@ -12,13 +12,14 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from gearpump_spark.stream import Stream
 from gearpump_spark.streaming import (
     FLUSH_EPOCH_SEC,
     FLUSH_TS,
     assign_windows,
+    before_flush,
     replay_parquet_stream,
     run_to_completion,
-    windowed_aggregate,
 )
 
 TS = "ts"
@@ -74,10 +75,10 @@ def test_fixed_window_gbk(spark, tmp_path):
     stream = _stream_from_rows(
         spark, [[("a", 1, 0), ("a", 2, 5), ("a", 5, 15)]], tmp_path, "fixw", flush=True
     )
-    agg = windowed_aggregate(
-        stream, TS, "10 seconds", None, ["k"],
-        [F.sum("v").alias("total"), F.count("*").alias("n")],
-        drop_flush_sentinel=True,
+    agg = (
+        Stream(stream, TS).with_watermark("0 seconds").filter(before_flush(TS))
+        .key_by("k").windowed("10 seconds")
+        .agg(F.sum("v").alias("total"), F.count("*").alias("n")).to_df()
     )
     out = run_to_completion(agg, "fixed_window_gbk", output_mode="append").collect()
     panes = {(r.window.start.second, r.total, r.n) for r in out}
@@ -110,10 +111,10 @@ def test_timestamp_combiner_earliest(spark, tmp_path):
     stream = _stream_from_rows(
         spark, [[("a", 1, 1), ("a", 2, 2), ("b", 5, 3)]], tmp_path, "tscomb", flush=True
     )
-    agg = windowed_aggregate(
-        stream, TS, "10 seconds", None, ["k"],
-        [F.sum("v").alias("total"), F.min(TS).alias("out_ts")],
-        drop_flush_sentinel=True,
+    agg = (
+        Stream(stream, TS).with_watermark("0 seconds").filter(before_flush(TS))
+        .key_by("k").windowed("10 seconds")
+        .agg(F.sum("v").alias("total"), F.min(TS).alias("out_ts")).to_df()
     )
     out = {(r.k, r.total, r.out_ts.second) for r in
            run_to_completion(agg, "ts_combiner", output_mode="append").collect()}
@@ -132,9 +133,9 @@ def test_late_data_dropped_behind_watermark(spark, tmp_path):
 
     def run_drain():
         stream = replay_parquet_stream(spark, path, schema)
-        agg = windowed_aggregate(
-            stream, TS, "10 seconds", None, ["k"],
-            [F.sum("v").alias("total")], watermark_delay="10 seconds",
+        agg = (
+            Stream(stream, TS).with_watermark("10 seconds")
+            .key_by("k").windowed("10 seconds").agg(F.sum("v").alias("total")).to_df()
         )
         q = (
             agg.writeStream.format("parquet").option("path", out)
@@ -205,9 +206,9 @@ def test_streaming_windowed_agg_matches_batch(spark, sf_dir):
         F.timestamp_seconds("sec").alias("ts"),
     ).selectExpr(*[f.name for f in stream_src.schema]).coalesce(1).write.mode("append").parquet(tmp)
     stream = replay_parquet_stream(spark, tmp, stream_src.schema)
-    agg = windowed_aggregate(
-        stream, "ts", "1 hour", None, [], [F.count("*").alias("n")],
-        drop_flush_sentinel=True,
+    agg = (
+        Stream(stream, "ts").with_watermark("0 seconds").filter(before_flush("ts"))
+        .key_by().windowed("1 hour").agg(F.count("*").alias("n")).to_df()
     )
     out = run_to_completion(agg, "stream_win", output_mode="append")
     got = {(r.window.start, r.n) for r in out.collect()}
@@ -218,17 +219,15 @@ def test_streaming_windowed_agg_matches_batch(spark, sf_dir):
 # form sessions [0,10] and [100,115] per key. The reference REJECTS merging
 # windows (GroupByKeyTranslator.java:43-47) — this is strict upside.
 def test_session_window_stream(spark, tmp_path):
-    from gearpump_spark.streaming import session_window_aggregate
-
     stream = _stream_from_rows(
         spark,
         [[("a", 1, 0), ("a", 2, 10), ("a", 3, 100), ("a", 4, 115), ("b", 9, 50)]],
         tmp_path, "sess", flush=True,
     )
-    agg = session_window_aggregate(
-        stream, TS, "30 seconds", ["k"],
-        [F.sum("v").alias("total"), F.count("*").alias("n")],
-        drop_flush_sentinel=True,
+    agg = (
+        Stream(stream, TS).with_watermark("0 seconds").filter(before_flush(TS))
+        .key_by(F.session_window(TS, "30 seconds").alias("session"), "k")
+        .agg(F.sum("v").alias("total"), F.count("*").alias("n")).to_df()
     )
     out = run_to_completion(agg, "sess_win", output_mode="append").collect()
     got = {(r.k, r.session.start.second + 60 * r.session.start.minute, r.total, r.n) for r in out}
@@ -359,21 +358,6 @@ def test_stream_stream_interval_join_left_outer(spark, tmp_path):
     assert got == [(77, 1), (77, 2), (88, None)]
 
 
-def test_transform_with_state_gate():
-    """The modern TWS API is gated: absent protobuf it must raise the
-    explicit NotImplementedError, never crash a query mid-run."""
-    from gearpump_spark.streaming.core import (
-        require_transform_with_state,
-        transform_with_state_supported,
-    )
-
-    if transform_with_state_supported():
-        require_transform_with_state()  # no-op when the dependency exists
-    else:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            require_transform_with_state()
-
-
 # Property test (SURVEY §5: the reference property-tests its Window math,
 # streaming/.../state/impl/WindowSpec.scala) — assign_windows must agree
 # with the definitional set {s : s ≡ 0 (mod step), s ≤ t < s+size} for
@@ -472,11 +456,10 @@ def test_dedup_then_window_pipeline(spark, tmp_path):
     ]
     stream = _stream_from_rows(spark, chunks, tmp_path, "dw_pipe", flush=True)
     deduped = stream_dedup(stream, ["k", "v"], ts_col=TS)
-    agg = windowed_aggregate(
-        deduped, TS, "10 seconds", None, ["k"],
-        [F.sum("v").alias("total"), F.count("*").alias("n")],
-        drop_flush_sentinel=True,
-        set_watermark=False,  # stream_dedup already set it
+    agg = (
+        Stream(deduped, TS).filter(before_flush(TS))  # stream_dedup set the watermark
+        .key_by("k").windowed("10 seconds")
+        .agg(F.sum("v").alias("total"), F.count("*").alias("n")).to_df()
     )
     out = run_to_completion(agg, "dw_pipe_out", output_mode="append").collect()
     panes = {(r.k, r.window.start.second, r.total, r.n) for r in out}
@@ -930,11 +913,6 @@ def test_update_mode_running_aggregate_multibatch_fold(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from gearpump_spark.streaming.core import (
-        run_to_completion,
-        running_aggregate,
-    )
-
     t0 = dt.datetime(2024, 1, 1)
     rows = [
         (t0 + dt.timedelta(minutes=i), ["click", "view"][i % 2], i)
@@ -949,14 +927,15 @@ def test_update_mode_running_aggregate_multibatch_fold(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    agg = running_aggregate(
-        stream,
-        ["event_type"],
-        [
+    agg = (
+        Stream(stream, "ts")
+        .key_by("event_type")
+        .agg(
             F.count("*").alias("n"),
             F.min("ts").alias("first_ts"),
             F.max("ts").alias("last_ts"),
-        ],
+        )
+        .to_df()
     )
     log = run_to_completion(agg, "run_agg_multibatch", output_mode="update")
     assert log.count() > 2  # >|keys| emissions: multiple batches updated

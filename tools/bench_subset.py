@@ -28,7 +28,7 @@ def main() -> None:
     from gearpump_spark.session import get_spark
 
     calib0 = bench.cpu_calibration()
-    spark = get_spark("bench_subset", cpus=CPUS, shuffle_partitions=CPUS)
+    spark = get_spark("bench_subset", cpus=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
     # codegen warmup at sf0.001 + page-cache warm, same as bench.py

@@ -34,7 +34,7 @@ def main() -> None:
         import bench
 
         names = list(bench.HEADLINE)
-    spark = get_spark("explain_capture", cpus=CPUS, shuffle_partitions=CPUS)
+    spark = get_spark("explain_capture", cpus=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
     out_dir = os.path.join(

@@ -50,7 +50,7 @@ def main() -> None:
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out = os.environ.get("SPARK_GRAFT_SF1_DIR", DEFAULT_OUT)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("make_sf1", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("make_sf1", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     os.makedirs(out, exist_ok=True)

@@ -39,7 +39,7 @@ def main() -> None:
     from gearpump_spark.session import get_spark
     from gearpump_spark.queries import all_queries
 
-    spark = get_spark("plan_sweep", cpus=CPUS, shuffle_partitions=CPUS)
+    spark = get_spark("plan_sweep", cpus=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
     names = sys.argv[1:] or list(qs)

@@ -287,7 +287,7 @@ def main() -> None:
     # invocations can be merged into one report afterwards.
     only = os.environ.get("SPARK_GRAFT_SWEEP_ONLY")
     sweep = [n for n in SWEEP if n in set(only.split(","))] if only else SWEEP
-    spark = get_spark("scaling_report", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("scaling_report", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
 

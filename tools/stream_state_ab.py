@@ -56,9 +56,7 @@ def measure(provider_class: str) -> dict:
 
     from gearpump_spark.session import get_spark
 
-    spark = get_spark(
-        f"state_ab_{provider_class.rsplit('.', 1)[-1]}", cpus=CPUS, shuffle_partitions=CPUS
-    )
+    spark = get_spark(f"state_ab_{provider_class.rsplit('.', 1)[-1]}", cpus=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider_class)
     src = (
