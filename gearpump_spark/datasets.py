@@ -99,32 +99,48 @@ def _ts_micros(df: DataFrame) -> DataFrame:
     return df
 
 
+def row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Rows in one of the driver's tables, for strategies sized from the
+    input. A local path sums the ``num_rows`` of its parquet footers and
+    runs no Spark job; any other path (scheme://) counts with a scan."""
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; have {TABLES}")
+    files = _local_parquet_files(f"{sf_dir}/{name}.parquet")
+    if files is None:
+        return table(spark, sf_dir, name).count()
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
+def _local_parquet_files(path: str) -> list[str] | None:
+    """The parquet files of a LOCAL path: the path itself, or every
+    ``.parquet`` file below a directory, recursively, because
+    hive-partitioned layouts keep their files in subdirectories. None
+    for a non-local path (any scheme://) or one that does not exist."""
+    if "://" in path:
+        return None
+    if os.path.isdir(path):
+        return [
+            os.path.join(root, f)
+            for root, _dirs, files in os.walk(path)
+            for f in files
+            if f.endswith(".parquet")
+        ]
+    return [path] if os.path.exists(path) else None
+
+
 def _few_splits(path: str, target: int) -> bool:
     """True when a LOCAL parquet path cannot yield ~target scan splits
     (fixture files are one row group — unsplittable). Non-local paths
     (any scheme://) return False: a real warehouse has enough files/row
-    groups, and forcing a repartition there would shuffle the whole table."""
-    if "://" in path:
-        return False
-    try:
-        if os.path.isdir(path):
-            # count recursively: hive-partitioned layouts keep their
-            # parquet files in subdirectories, not at the top level
-            n_files = sum(
-                1
-                for _root, _dirs, files in os.walk(path)
-                for f in files
-                if f.endswith(".parquet")
-            )
-        elif os.path.exists(path):
-            n_files = 1
-        else:
-            return False  # unreadable/unknown: trust the source's splits
-        # under one file per core: fixture files are single-row-group
-        # (unsplittable), so anything short of `target` files leaves cores
-        # idle in scan-side stages — CPU-bound Arrow UDF stages feel this
-        # hardest. Real warehouses have thousands of splits and never hit
-        # this branch (and any scheme:// path returns False above).
-        return n_files < max(2, target)
-    except OSError:
-        return False
+    groups, and forcing a repartition there would shuffle the whole table.
+    An unreadable or unknown path also returns False: trust the source's
+    splits."""
+    files = _local_parquet_files(path)
+    # under one file per core: fixture files are single-row-group
+    # (unsplittable), so anything short of `target` files leaves cores
+    # idle in scan-side stages — CPU-bound Arrow UDF stages feel this
+    # hardest. Real warehouses have thousands of splits and never hit
+    # this branch (and any scheme:// path returns None above).
+    return files is not None and len(files) < max(2, target)

@@ -92,6 +92,30 @@ def synthesize_payloads(df: DataFrame, make_payload) -> DataFrame:
     )
 
 
+def key_partitions(df: DataFrame) -> int:
+    """Partition count of the exchange that carries a Python stage's key:
+    the session's default parallelism, fixed when the DataFrame is built.
+    AQE never coalesces a numbered repartition; left to AQE, the few bytes
+    of ids fold into one task and the Python stage runs on one core."""
+    return df.sparkSession.sparkContext.defaultParallelism
+
+
+def sorted_python_stage(ids: DataFrame, build, *order: str) -> DataFrame:
+    """``build(ids)`` in ``order``, with every Python stage of ``build``
+    run once per action.
+
+    A global ``orderBy`` above a Python stage runs the stage twice: Spark
+    samples a range sort's input in a job of its own. Here the ids are
+    range-partitioned on the key ``order[0]`` before the stages, so the
+    sample reads only the scan, and the result is sorted within
+    partitions after them. ``build`` must be narrow and keep each row's
+    key (the ``mapInPandas`` seams here and in operators/bpe.py are):
+    then every partition still holds a key range of its own and the
+    output is globally ordered."""
+    ranged = ids.repartitionByRange(key_partitions(ids), order[0])
+    return build(ranged).sortWithinPartitions(*order)
+
+
 def _field_names(schema: str) -> list[str]:
     """Column names of a flat DDL tail ("width int, px_sum bigint")."""
     return [field.split()[0] for field in schema.split(",")]

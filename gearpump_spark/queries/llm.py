@@ -10,10 +10,12 @@ PageRank (iterative) fall back to rows-only checks + pytest goldens.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gearpump_spark.datasets import stream_table, table
+from gearpump_spark.datasets import row_count, stream_table, table
 from gearpump_spark.operators import dedup as D
 from gearpump_spark.operators import sampling as SP
 from gearpump_spark.operators import similarity as S
@@ -1309,6 +1311,18 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+def _decoded_payloads(spark: SparkSession, sf_dir: str, make_payload, decode, *then: str):
+    """``decode`` over one ``make_payload(doc_id)`` payload per document,
+    ordered by doc_id, then ``then``. The synthesis and decode stages run
+    once per action (operators/multimodal.py sorted_python_stage)."""
+    from gearpump_spark.operators.multimodal import sorted_python_stage, synthesize_payloads
+
+    docs = table(spark, sf_dir, "documents").select("doc_id")
+    return sorted_python_stage(
+        docs, lambda ids: decode(synthesize_payloads(ids, make_payload)), "doc_id", *then
+    )
+
+
 @register(
     "multimodal_image_real",
     oracle="""
@@ -1326,17 +1340,14 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     "parser or synthesizer bug on either field breaks the hash",
 )
 def multimodal_image_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gearpump_spark.operators.multimodal import (
-        decode_image_metadata,
-        png_payload,
-        synthesize_payloads,
-    )
+    from gearpump_spark.operators.multimodal import decode_image_metadata, png_payload
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    parsed = decode_image_metadata(synthesize_payloads(docs, png_payload))
-    return parsed.select("doc_id", "format", "width", "height", "n_channels").orderBy(
-        "doc_id"
-    )
+    def decode(payloads):
+        return decode_image_metadata(payloads).select(
+            "doc_id", "format", "width", "height", "n_channels"
+        )
+
+    return _decoded_payloads(spark, sf_dir, png_payload, decode)
 
 
 @register(
@@ -1355,17 +1366,14 @@ def multimodal_image_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     "whole container layout (44-byte header + 4 samples x block align)",
 )
 def multimodal_audio_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gearpump_spark.operators.multimodal import (
-        decode_audio_metadata,
-        synthesize_payloads,
-        wav_payload,
-    )
+    from gearpump_spark.operators.multimodal import decode_audio_metadata, wav_payload
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    parsed = decode_audio_metadata(synthesize_payloads(docs, wav_payload))
-    return parsed.select(
-        "doc_id", "byte_len", "format", "n_channels", "sample_rate", "bits_per_sample"
-    ).orderBy("doc_id")
+    def decode(payloads):
+        return decode_audio_metadata(payloads).select(
+            "doc_id", "byte_len", "format", "n_channels", "sample_rate", "bits_per_sample"
+        )
+
+    return _decoded_payloads(spark, sf_dir, wav_payload, decode)
 
 
 # ---------------------------------------------------------------------------
@@ -1451,10 +1459,10 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = max(8, n // 250) mirrors the paper's corpus-proportional cluster
     count (they use 50k at LAION scale): fixing k would make the pair
     join quadratic in the corpus — measured 36x on a 10x data step before
-    k became data-derived. The count() action to size k is one cheap
-    metadata-ish job, same pattern as IVF's trained-centroid literals."""
+    k became data-derived. k is sized from the parquet footers' row
+    counts (datasets.row_count), so building the query runs no job."""
     emb = table(spark, sf_dir, "embeddings")
-    k = max(8, emb.count() // 250)
+    k = max(8, row_count(spark, sf_dir, "embeddings") // 250)
     return S.semantic_dedup(emb, n_clusters=k, threshold=0.30).orderBy("vec_id")
 
 
@@ -1509,8 +1517,12 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key-predicate subset, NOT limit(): limit takes partition-layout-
     # dependent rows and the processed set would differ across machines
     docs = table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    with_payload = MM.attach_fake_payload(docs)
-    return MM.sample_frames(with_payload, n_frames=3).orderBy("doc_id", "frame_idx")
+    return MM.sorted_python_stage(
+        docs,
+        lambda d: MM.sample_frames(MM.attach_fake_payload(d), n_frames=3),
+        "doc_id",
+        "frame_idx",
+    )
 
 
 @register(
@@ -1545,18 +1557,17 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key-predicate subset, NOT limit(): limit takes partition-layout-
     # dependent rows and the processed set would differ across machines
     docs = table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    with_payload = MM.attach_fake_payload(docs)
-    return (
-        MM.resize_images(with_payload, width=32, height=24)
-        .select(
+
+    def resized(d):
+        return MM.resize_images(MM.attach_fake_payload(d), width=32, height=24).select(
             "doc_id",
             "width",
             "height",
             "byte_len",
             F.md5(F.hex("payload")).alias("payload_hex_md5"),
         )
-        .orderBy("doc_id")
-    )
+
+    return MM.sorted_python_stage(docs, resized, "doc_id")
 
 
 # One fake feature: float32(u32_be(md5(payload + i as 4 BE bytes)[:4]) / 2^32).
@@ -1591,13 +1602,15 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key-predicate subset, NOT limit(): limit takes partition-layout-
     # dependent rows and the processed set would differ across machines
     docs = table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    with_payload = MM.attach_fake_payload(docs)
-    feats = MM.extract_features(with_payload, dim=8)
-    return feats.select(
-        "doc_id",
-        F.aggregate("features", F.lit(0.0), lambda a, x: a + x).alias("feat_sum"),
-        F.size("features").alias("dim"),
-    ).orderBy("doc_id")
+
+    def features(d):
+        return MM.extract_features(MM.attach_fake_payload(d), dim=8).select(
+            "doc_id",
+            F.aggregate("features", F.lit(0.0), lambda a, x: a + x).alias("feat_sum"),
+            F.size("features").alias("dim"),
+        )
+
+    return MM.sorted_python_stage(docs, features, "doc_id")
 
 
 @register(
@@ -2205,14 +2218,9 @@ def _bmp_px_sum_sql(sx: str, sy: str, n: str) -> str:
     "recomputes the sum from pure arithmetic",
 )
 def multimodal_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gearpump_spark.operators.multimodal import (
-        bmp_payload,
-        pixel_stats,
-        synthesize_payloads,
-    )
+    from gearpump_spark.operators.multimodal import bmp_payload, pixel_stats
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_payloads(docs, bmp_payload)).orderBy("doc_id")
+    return _decoded_payloads(spark, sf_dir, bmp_payload, pixel_stats)
 
 
 @register(
@@ -2237,14 +2245,12 @@ def multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         bmp_payload,
         pixel_stats,
         resize_images,
-        synthesize_payloads,
     )
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    resized = resize_images(
-        synthesize_payloads(docs, bmp_payload), width=3, height=2, decoder=PixelDecoder()
-    )
-    return pixel_stats(resized).orderBy("doc_id")
+    def decode(payloads):
+        return pixel_stats(resize_images(payloads, width=3, height=2, decoder=PixelDecoder()))
+
+    return _decoded_payloads(spark, sf_dir, bmp_payload, decode)
 
 
 @register(
@@ -2269,14 +2275,9 @@ def multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     "must reproduce the arithmetic sequence exactly",
 )
 def multimodal_audio_samples_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gearpump_spark.operators.multimodal import (
-        audio_sample_stats,
-        synthesize_payloads,
-        wav_payload,
-    )
+    from gearpump_spark.operators.multimodal import audio_sample_stats, wav_payload
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return audio_sample_stats(synthesize_payloads(docs, wav_payload)).orderBy("doc_id")
+    return _decoded_payloads(spark, sf_dir, wav_payload, audio_sample_stats)
 
 
 @register(
@@ -2802,14 +2803,17 @@ def text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-breaks are total (freq DESC, pair lexicographic), so the merge
     table — and therefore every count — is engine-reproducible."""
     from gearpump_spark.operators.bpe import bpe_tokenize, bpe_train
+    from gearpump_spark.operators.multimodal import sorted_python_stage
 
     docs = table(spark, sf_dir, "documents")
     _guard_bpe_token_length(docs, chars=True)
     merges = bpe_train(docs, n_merges=16)
-    return (
-        bpe_tokenize(docs, merges)
-        .select("doc_id", "n_ws_tokens", "n_bpe_tokens")
-        .orderBy("doc_id")
+    return sorted_python_stage(
+        docs,
+        lambda d: bpe_tokenize(d, merges).select(
+            "doc_id", "n_ws_tokens", "n_bpe_tokens"
+        ),
+        "doc_id",
     )
 
 
@@ -2829,14 +2833,17 @@ def text_bpe_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-level BPE compression stats per document (case-preserving;
     merge table deterministic via total tie-breaks)."""
     from gearpump_spark.operators.bpe import bpe_tokenize_bytes, bpe_train_bytes
+    from gearpump_spark.operators.multimodal import sorted_python_stage
 
     docs = table(spark, sf_dir, "documents")
     _guard_bpe_token_length(docs, chars=False)
     merges = bpe_train_bytes(docs, n_merges=16)
-    return (
-        bpe_tokenize_bytes(docs, merges)
-        .select("doc_id", "n_ws_tokens", "n_bpe_tokens")
-        .orderBy("doc_id")
+    return sorted_python_stage(
+        docs,
+        lambda d: bpe_tokenize_bytes(d, merges).select(
+            "doc_id", "n_ws_tokens", "n_bpe_tokens"
+        ),
+        "doc_id",
     )
 
 
@@ -2927,14 +2934,17 @@ def text_wordpiece_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas + Zipf word cache as BPE — text never shuffles; the
     trainer is bpe_train's one-argmax-row-per-merge loop."""
     from gearpump_spark.operators.bpe import wordpiece_tokenize, wordpiece_vocab
+    from gearpump_spark.operators.multimodal import sorted_python_stage
 
     docs = table(spark, sf_dir, "documents")
     _guard_bpe_token_length(docs, chars=True)
     vocab = wordpiece_vocab(docs, n_merges=16)
-    return (
-        wordpiece_tokenize(docs, vocab)
-        .select("doc_id", "n_ws_tokens", "n_wp_tokens")
-        .orderBy("doc_id")
+    return sorted_python_stage(
+        docs,
+        lambda d: wordpiece_tokenize(d, vocab).select(
+            "doc_id", "n_ws_tokens", "n_wp_tokens"
+        ),
+        "doc_id",
     )
 
 
@@ -3052,14 +3062,17 @@ def text_sentencepiece_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow map + Zipf word cache as the other three encoders — text
     never shuffles, the DP is O(len²) per CACHED word type."""
     from gearpump_spark.operators.bpe import unigram_tokenize, unigram_vocab_scores
+    from gearpump_spark.operators.multimodal import sorted_python_stage
 
     docs = table(spark, sf_dir, "documents")
     _guard_bpe_token_length(docs, chars=True)
     scores = unigram_vocab_scores(docs, n_merges=16)
-    return (
-        unigram_tokenize(docs, scores)
-        .select("doc_id", "n_ws_tokens", "n_sp_tokens", "logprob_micro")
-        .orderBy("doc_id")
+    return sorted_python_stage(
+        docs,
+        lambda d: unigram_tokenize(d, scores).select(
+            "doc_id", "n_ws_tokens", "n_sp_tokens", "logprob_micro"
+        ),
+        "doc_id",
     )
 
 
@@ -3354,14 +3367,9 @@ def embedding_quantize_int4(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the sum from pure arithmetic",
 )
 def multimodal_png_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gearpump_spark.operators.multimodal import (
-        pixel_stats,
-        png_raster_payload,
-        synthesize_payloads,
-    )
+    from gearpump_spark.operators.multimodal import pixel_stats, png_raster_payload
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_payloads(docs, png_raster_payload)).orderBy("doc_id")
+    return _decoded_payloads(spark, sf_dir, png_raster_payload, pixel_stats)
 
 
 @register(
@@ -3401,16 +3409,9 @@ def multimodal_png_adam7_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """operators/multimodal.py png_adam7_payload +
     adam7_pass_stats: Arrow-batched narrow maps, payload bytes never
     shuffle, <=7 output rows per image."""
-    from gearpump_spark.operators.multimodal import (
-        adam7_pass_stats,
-        png_adam7_payload,
-        synthesize_payloads,
-    )
+    from gearpump_spark.operators.multimodal import adam7_pass_stats, png_adam7_payload
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return adam7_pass_stats(synthesize_payloads(docs, png_adam7_payload)).orderBy(
-        "doc_id", "pass_no"
-    )
+    return _decoded_payloads(spark, sf_dir, png_adam7_payload, adam7_pass_stats, "pass_no")
 
 
 @register(
@@ -3434,14 +3435,12 @@ def multimodal_png_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         pixel_stats,
         png_raster_payload,
         resize_images,
-        synthesize_payloads,
     )
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    resized = resize_images(
-        synthesize_payloads(docs, png_raster_payload), width=3, height=2, decoder=PixelDecoder()
-    )
-    return pixel_stats(resized).orderBy("doc_id")
+    def decode(payloads):
+        return pixel_stats(resize_images(payloads, width=3, height=2, decoder=PixelDecoder()))
+
+    return _decoded_payloads(spark, sf_dir, png_raster_payload, decode)
 
 
 @register(
@@ -3571,16 +3570,10 @@ def text_strip_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     "arithmetic oracle — with this only JPEG pixel data remains stubbed",
 )
 def multimodal_gif_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gearpump_spark.operators.multimodal import (
-        GifDecoder,
-        gif_payload,
-        pixel_stats,
-        synthesize_payloads,
-    )
+    from gearpump_spark.operators.multimodal import GifDecoder, gif_payload, pixel_stats
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_payloads(docs, gif_payload), decoder=GifDecoder()).orderBy(
-        "doc_id"
+    return _decoded_payloads(
+        spark, sf_dir, gif_payload, partial(pixel_stats, decoder=GifDecoder())
     )
 
 
@@ -3605,15 +3598,10 @@ def multimodal_gif_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     "checksummed against a closed-form per-frame arithmetic oracle",
 )
 def multimodal_gif_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gearpump_spark.operators.multimodal import (
-        animated_gif_payload,
-        gif_frame_stats,
-        synthesize_payloads,
-    )
+    from gearpump_spark.operators.multimodal import animated_gif_payload, gif_frame_stats
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return gif_frame_stats(synthesize_payloads(docs, animated_gif_payload)).orderBy(
-        "doc_id", "frame_idx"
+    return _decoded_payloads(
+        spark, sf_dir, animated_gif_payload, gif_frame_stats, "frame_idx"
     )
 
 
@@ -3760,16 +3748,10 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pure-arithmetic oracle — every image container now decodes for real",
 )
 def multimodal_jpeg_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gearpump_spark.operators.multimodal import (
-        JpegDecoder,
-        jpeg_payload,
-        pixel_stats,
-        synthesize_payloads,
-    )
+    from gearpump_spark.operators.multimodal import JpegDecoder, jpeg_payload, pixel_stats
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_payloads(docs, jpeg_payload), decoder=JpegDecoder()).orderBy(
-        "doc_id"
+    return _decoded_payloads(
+        spark, sf_dir, jpeg_payload, partial(pixel_stats, decoder=JpegDecoder())
     )
 
 
@@ -3790,16 +3772,10 @@ def multimodal_jpeg_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exactly through the DC-only integer path (closed-form oracle)",
 )
 def multimodal_jpeg12_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gearpump_spark.operators.multimodal import (
-        JpegDecoder,
-        jpeg12_payload,
-        pixel_stats,
-        synthesize_payloads,
-    )
+    from gearpump_spark.operators.multimodal import JpegDecoder, jpeg12_payload, pixel_stats
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_payloads(docs, jpeg12_payload), decoder=JpegDecoder()).orderBy(
-        "doc_id"
+    return _decoded_payloads(
+        spark, sf_dir, jpeg12_payload, partial(pixel_stats, decoder=JpegDecoder())
     )
 
 
@@ -3856,13 +3832,11 @@ def multimodal_jpeg_color_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         JpegDecoder,
         jpeg_color_payload,
         pixel_stats,
-        synthesize_payloads,
     )
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(
-        synthesize_payloads(docs, jpeg_color_payload), decoder=JpegDecoder()
-    ).orderBy("doc_id")
+    return _decoded_payloads(
+        spark, sf_dir, jpeg_color_payload, partial(pixel_stats, decoder=JpegDecoder())
+    )
 
 
 @register(
@@ -3878,13 +3852,11 @@ def multimodal_jpeg_420_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         JpegDecoder,
         jpeg_420_payload,
         pixel_stats,
-        synthesize_payloads,
     )
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(
-        synthesize_payloads(docs, jpeg_420_payload), decoder=JpegDecoder()
-    ).orderBy("doc_id")
+    return _decoded_payloads(
+        spark, sf_dir, jpeg_420_payload, partial(pixel_stats, decoder=JpegDecoder())
+    )
 
 
 @register(
@@ -3967,14 +3939,9 @@ def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "LibraryDecoder codec seam)",
 )
 def multimodal_video_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gearpump_spark.operators.multimodal import (
-        decode_video_metadata,
-        mp4_payload,
-        synthesize_payloads,
-    )
+    from gearpump_spark.operators.multimodal import decode_video_metadata, mp4_payload
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return decode_video_metadata(synthesize_payloads(docs, mp4_payload)).orderBy("doc_id")
+    return _decoded_payloads(spark, sf_dir, mp4_payload, decode_video_metadata)
 
 
 @register(
@@ -4001,13 +3968,9 @@ def multimodal_video_stsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         decode_video_sample_tables,
         mp4_stsd_payload,
-        synthesize_payloads,
     )
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return decode_video_sample_tables(synthesize_payloads(docs, mp4_stsd_payload)).orderBy(
-        "doc_id"
-    )
+    return _decoded_payloads(spark, sf_dir, mp4_stsd_payload, decode_video_sample_tables)
 
 
 @register(
@@ -4101,13 +4064,11 @@ def multimodal_jpeg_dri_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         JpegDecoder,
         jpeg_dri_payload,
         pixel_stats,
-        synthesize_payloads,
     )
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(
-        synthesize_payloads(docs, jpeg_dri_payload), decoder=JpegDecoder()
-    ).orderBy("doc_id")
+    return _decoded_payloads(
+        spark, sf_dir, jpeg_dri_payload, partial(pixel_stats, decoder=JpegDecoder())
+    )
 
 
 @register(
@@ -4123,13 +4084,11 @@ def multimodal_jpeg_422_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         JpegDecoder,
         jpeg_422_payload,
         pixel_stats,
-        synthesize_payloads,
     )
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(
-        synthesize_payloads(docs, jpeg_422_payload), decoder=JpegDecoder()
-    ).orderBy("doc_id")
+    return _decoded_payloads(
+        spark, sf_dir, jpeg_422_payload, partial(pixel_stats, decoder=JpegDecoder())
+    )
 
 
 @register(
@@ -4146,13 +4105,11 @@ def multimodal_jpeg_411_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         JpegDecoder,
         jpeg_411_payload,
         pixel_stats,
-        synthesize_payloads,
     )
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(
-        synthesize_payloads(docs, jpeg_411_payload), decoder=JpegDecoder()
-    ).orderBy("doc_id")
+    return _decoded_payloads(
+        spark, sf_dir, jpeg_411_payload, partial(pixel_stats, decoder=JpegDecoder())
+    )
 
 
 @register(
@@ -4169,13 +4126,11 @@ def multimodal_jpeg_progressive_real(spark: SparkSession, sf_dir: str) -> DataFr
         JpegDecoder,
         jpeg_progressive_payload,
         pixel_stats,
-        synthesize_payloads,
     )
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(
-        synthesize_payloads(docs, jpeg_progressive_payload), decoder=JpegDecoder()
-    ).orderBy("doc_id")
+    return _decoded_payloads(
+        spark, sf_dir, jpeg_progressive_payload, partial(pixel_stats, decoder=JpegDecoder())
+    )
 
 
 @register(
@@ -4189,6 +4144,7 @@ def multimodal_jpeg_progressive_real(spark: SparkSession, sf_dir: str) -> DataFr
 )
 def multimodal_jpeg_refined_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
+        sorted_python_stage,
         synthesize_jpeg_refined_pixel_stats,
     )
 
@@ -4196,7 +4152,7 @@ def multimodal_jpeg_refined_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Fused synth+decode (r11, guide §4): one mapInPandas stage instead of
     # two — payload bytes never cross the Arrow boundary. Same batch seams,
     # composed (see synthesize_jpeg_refined_pixel_stats).
-    return synthesize_jpeg_refined_pixel_stats(docs).orderBy("doc_id")
+    return sorted_python_stage(docs, synthesize_jpeg_refined_pixel_stats, "doc_id")
 
 
 @register(
@@ -4460,6 +4416,7 @@ def multimodal_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-byte hashes reach the banded equi-join."""
     from gearpump_spark.operators.multimodal import (
         ahash_fingerprints,
+        key_partitions,
         noise_pair_payload,
         phash_candidate_pairs,
         synthesize_payloads,
@@ -4469,6 +4426,8 @@ def multimodal_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < 200
     )
     fps = ahash_fingerprints(synthesize_payloads(docs, noise_pair_payload))
+    # both join sides read this one exchange: the Python stage runs once
+    fps = fps.repartition(key_partitions(fps), "doc_id")
     return (
         phash_candidate_pairs(fps, max_hamming=3, hash_col="ahash")
         .select("id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming"))
@@ -4566,10 +4525,14 @@ def _phash_int_oracle() -> str:
 def multimodal_phash_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     """operators/multimodal.py phash_int_fingerprints: decode + DCT hash
     is a narrow Arrow-batched map (payloads never shuffle — only 8-byte
-    hashes do); the twin pairing is a keyed equi-join on doc_id XOR 1,
-    O(1) rows per doc. The banded Hamming scale path for arbitrary
+    hashes do); a doc's twin is doc_id XOR 1, so each twin pair is one
+    window partition keyed on doc_id >> 1, O(1) rows per doc, and the
+    Python stage feeds that one exchange (a self-join read it from both
+    sides, running it twice). The banded Hamming scale path for arbitrary
     corpora is phash_candidate_pairs, already plan-pinned under
     multimodal_ahash_neardup with the same hash column contract."""
+    from pyspark.sql import Window as W
+
     from gearpump_spark.operators.multimodal import (
         noise_pair_payload,
         phash_int_fingerprints,
@@ -4579,24 +4542,22 @@ def multimodal_phash_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < 200
     )
-    fps = phash_int_fingerprints(synthesize_payloads(docs, noise_pair_payload)).select(
-        "doc_id", "phash"
-    )
-    twin = fps.select(
-        F.expr(
-            "CASE WHEN doc_id % 2 = 0 THEN doc_id + 1 ELSE doc_id - 1 END"
-        ).alias("doc_id"),
-        F.col("phash").alias("twin_hash"),
-    )
+    fps = phash_int_fingerprints(synthesize_payloads(docs, noise_pair_payload))
+    pair = W.partitionBy(F.shiftright("doc_id", 1))
+    # a row stays when its twin is present, as in an inner join on the twin
+    # id; its distance is null when either twin's hash is null
+    both, hashed = F.count("doc_id").over(pair) == 2, F.count("phash").over(pair) == 2
     return (
-        fps.join(twin, "doc_id")
-        .select(
+        fps.select(
             "doc_id",
             F.col("phash").cast("bigint").alias("phash_int"),
-            F.bit_count(F.col("phash").bitwiseXOR(F.col("twin_hash")))
+            F.when(hashed, F.bit_count(F.bit_xor("phash").over(pair)))
             .cast("bigint")
             .alias("twin_hamming"),
+            both.alias("both"),
         )
+        .where("both")
+        .drop("both")
         .orderBy("doc_id")
     )
 
@@ -4720,27 +4681,22 @@ def multimodal_video_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode_video_sample_tables(include_timing=True): narrow Arrow map,
     payloads never shuffle; oracle recomputes the two-run arithmetic
     closed-form so the REAL box walk is what's hash-checked."""
-    from gearpump_spark.operators.multimodal import (
-        decode_video_sample_tables,
-        mp4_fps_payload,
-        synthesize_payloads,
-    )
+    from gearpump_spark.operators.multimodal import decode_video_sample_tables, mp4_fps_payload
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    out = decode_video_sample_tables(
-        synthesize_payloads(docs, mp4_fps_payload), include_timing=True
-    )
-    return out.select(
-        "doc_id",
-        "video_codec",
-        "n_video_frames",
-        "video_timescale",
-        "video_stts_duration",
-        (
-            (F.col("video_timescale") * F.col("n_video_frames")).cast("double")
-            / F.col("video_stts_duration")
-        ).alias("avg_fps"),
-    ).orderBy("doc_id")
+    def decode(payloads):
+        return decode_video_sample_tables(payloads, include_timing=True).select(
+            "doc_id",
+            "video_codec",
+            "n_video_frames",
+            "video_timescale",
+            "video_stts_duration",
+            (
+                (F.col("video_timescale") * F.col("n_video_frames")).cast("double")
+                / F.col("video_stts_duration")
+            ).alias("avg_fps"),
+        )
+
+    return _decoded_payloads(spark, sf_dir, mp4_fps_payload, decode)
 
 
 @register(
@@ -5369,13 +5325,13 @@ _SQL_RS_COEF = (
 def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: the corpus never cross-joins — the self-join keys on the
     LSH bucket, the same banded shape as MinHash LSH; plane count grows
-    log2 with the corpus (one eager count — the documented
-    strategy-choice exception), keeping per-bucket occupancy ~8 and the
+    log2 with the corpus (the row count read from the parquet footers,
+    datasets.row_count), keeping per-bucket occupancy ~8 and the
     pair explosion linear. Integer quantization keeps every predicate
     exact. Recall < 1 by construction (bucket-blocked, like every LSH
     method); raise planes / add rotations for precision-recall trade."""
     emb = table(spark, sf_dir, "embeddings")
-    n = emb.count()
+    n = row_count(spark, sf_dir, "embeddings")
     n_planes = min(16, max(6, (max((n - 1) // 8, 1)).bit_length()))
     q = emb.select("vec_id", V.milli_units(F.col("embedding"), scale=100).alias("qv"))
     bucket = F.lit(0).cast("long")
@@ -5580,16 +5536,9 @@ def multimodal_jfif_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """operators/multimodal.py sniff_jfif/decode_jfif_metadata: narrow
     Arrow map, payloads never shuffle; the APP0 segment is transparent
     to every existing decode path (length-skipping marker walks)."""
-    from gearpump_spark.operators.multimodal import (
-        decode_jfif_metadata,
-        jpeg_jfif_payload,
-        synthesize_payloads,
-    )
+    from gearpump_spark.operators.multimodal import decode_jfif_metadata, jpeg_jfif_payload
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return decode_jfif_metadata(synthesize_payloads(docs, jpeg_jfif_payload)).orderBy(
-        "doc_id"
-    )
+    return _decoded_payloads(spark, sf_dir, jpeg_jfif_payload, decode_jfif_metadata)
 
 
 @register(
@@ -5803,13 +5752,9 @@ def multimodal_exif_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators.multimodal import (
         decode_exif_orientation,
         jpeg_exif_payload,
-        synthesize_payloads,
     )
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return decode_exif_orientation(synthesize_payloads(docs, jpeg_exif_payload)).orderBy(
-        "doc_id"
-    )
+    return _decoded_payloads(spark, sf_dir, jpeg_exif_payload, decode_exif_orientation)
 
 
 # ---------------------------------------------------------------------------
@@ -6118,14 +6063,9 @@ def embedding_top_pcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_mulaw_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """operators/multimodal.py _decode_mulaw_data: Arrow-batched narrow
     map; payload bytes never shuffle, only 4 aggregate ints per doc do."""
-    from gearpump_spark.operators.multimodal import (
-        audio_sample_stats,
-        synthesize_payloads,
-        wav_mulaw_payload,
-    )
+    from gearpump_spark.operators.multimodal import audio_sample_stats, wav_mulaw_payload
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return audio_sample_stats(synthesize_payloads(docs, wav_mulaw_payload)).orderBy("doc_id")
+    return _decoded_payloads(spark, sf_dir, wav_mulaw_payload, audio_sample_stats)
 
 
 @register(
@@ -6171,14 +6111,9 @@ def multimodal_mulaw_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_alaw_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """operators/multimodal.py _decode_alaw_data: Arrow-batched narrow
     map; payload bytes never shuffle, only 4 aggregate ints per doc do."""
-    from gearpump_spark.operators.multimodal import (
-        audio_sample_stats,
-        synthesize_payloads,
-        wav_alaw_payload,
-    )
+    from gearpump_spark.operators.multimodal import audio_sample_stats, wav_alaw_payload
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return audio_sample_stats(synthesize_payloads(docs, wav_alaw_payload)).orderBy("doc_id")
+    return _decoded_payloads(spark, sf_dir, wav_alaw_payload, audio_sample_stats)
 
 
 @register(
@@ -6280,14 +6215,9 @@ def multimodal_qoi_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """operators/multimodal.py decode_qoi_arr / encode_qoi: sequential
     per-byte state machine (prev pixel + 64-slot table) inside an
     Arrow-batched narrow map; payloads never shuffle."""
-    from gearpump_spark.operators.multimodal import (
-        pixel_stats,
-        qoi_payload,
-        synthesize_payloads,
-    )
+    from gearpump_spark.operators.multimodal import pixel_stats, qoi_payload
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_payloads(docs, qoi_payload)).orderBy("doc_id")
+    return _decoded_payloads(spark, sf_dir, qoi_payload, pixel_stats)
 
 
 @register(
@@ -6313,14 +6243,9 @@ def multimodal_tiff_pixels_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization makes stored-inverted and stored-direct payloads hash
     identically, which is exactly what the oracle checks (px_sum is the
     NORMALIZED gray sum x3 regardless of id % 3)."""
-    from gearpump_spark.operators.multimodal import (
-        pixel_stats,
-        synthesize_payloads,
-        tiff_payload,
-    )
+    from gearpump_spark.operators.multimodal import pixel_stats, tiff_payload
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_payloads(docs, tiff_payload)).orderBy("doc_id")
+    return _decoded_payloads(spark, sf_dir, tiff_payload, pixel_stats)
 
 
 # ---------------------------------------------------------------------------
@@ -6859,13 +6784,11 @@ def multimodal_jpeg_lossless_real(spark: SparkSession, sf_dir: str) -> DataFrame
         JpegDecoder,
         jpeg_lossless_payload,
         pixel_stats,
-        synthesize_payloads,
     )
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(
-        synthesize_payloads(docs, jpeg_lossless_payload), decoder=JpegDecoder()
-    ).orderBy("doc_id")
+    return _decoded_payloads(
+        spark, sf_dir, jpeg_lossless_payload, partial(pixel_stats, decoder=JpegDecoder())
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -7200,14 +7123,9 @@ def q_fd_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """operators/multimodal.py audio_resample_stats over the existing
     closed-form WAV corpus (mono = even doc ids); narrow Arrow map."""
-    from gearpump_spark.operators.multimodal import (
-        audio_resample_stats,
-        synthesize_payloads,
-        wav_payload,
-    )
+    from gearpump_spark.operators.multimodal import audio_resample_stats, wav_payload
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return audio_resample_stats(synthesize_payloads(docs, wav_payload)).orderBy("doc_id")
+    return _decoded_payloads(spark, sf_dir, wav_payload, audio_resample_stats)
 
 
 @register(
@@ -7614,14 +7532,9 @@ def multimodal_tiff_packbits_real(spark: SparkSession, sf_dir: str) -> DataFrame
     px_sum) rows do. The photometric normalization makes the inverted
     and direct storage classes hash identically, which is what the
     oracle checks."""
-    from gearpump_spark.operators.multimodal import (
-        pixel_stats,
-        synthesize_payloads,
-        tiff_packbits_payload,
-    )
+    from gearpump_spark.operators.multimodal import pixel_stats, tiff_packbits_payload
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_payloads(docs, tiff_packbits_payload)).orderBy("doc_id")
+    return _decoded_payloads(spark, sf_dir, tiff_packbits_payload, pixel_stats)
 
 
 @register(
@@ -8180,14 +8093,9 @@ def multimodal_bmp_rle8_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-D cursor (delta jumps) inside an Arrow-batched narrow map;
     payloads never shuffle. px_sum is storage-order-invariant, so the
     bottom-up flip cancels out of the oracle."""
-    from gearpump_spark.operators.multimodal import (
-        bmp_rle8_payload,
-        pixel_stats,
-        synthesize_payloads,
-    )
+    from gearpump_spark.operators.multimodal import bmp_rle8_payload, pixel_stats
 
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    return pixel_stats(synthesize_payloads(docs, bmp_rle8_payload)).orderBy("doc_id")
+    return _decoded_payloads(spark, sf_dir, bmp_rle8_payload, pixel_stats)
 
 
 @register(
@@ -9033,7 +8941,7 @@ def dedup_lsh_scurve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gearpump_spark.operators import sampling as SP2
 
     all_docs = table(spark, sf_dir, "documents")
-    rate_bp = min(10000, 1_500_000 // all_docs.count())
+    rate_bp = min(10000, 1_500_000 // row_count(spark, sf_dir, "documents"))
     # The ~150-doc hash-stable sample feeds FOUR consumers (the shingle
     # set, both crossJoin sides of the all-pairs id list, the MinHash
     # side) and each otherwise re-runs the FULL-corpus scan + md5 sample
@@ -9331,7 +9239,13 @@ def pipeline_media_dedup_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < 200
     )
-    fps = ahash_fingerprints(synthesize_payloads(docs, noise_pair_payload))
+    # Three consumers (both pair-join sides and the anti-join), each of
+    # which the optimizer reshapes differently, so no shared exchange
+    # survives: the lazy shared-relation checkpoint runs the Python stage
+    # once per action.
+    fps = ahash_fingerprints(synthesize_payloads(docs, noise_pair_payload)).localCheckpoint(
+        eager=False
+    )
     pairs = phash_candidate_pairs(fps, max_hamming=3, hash_col="ahash")
     surv = fps.join(
         pairs.select(F.col("id_b").alias("doc_id")).distinct(),

@@ -100,6 +100,7 @@ SLOW_TESTS = {
     "test_phash_brightness_invariance_and_separation",
     "test_pipeline_quality_dedup_pack_stage_shapes",
     "test_pq_encode_narrow_and_adc_corpus_never_shuffles",
+    "test_python_stages_run_once_per_action",
     "test_quality_lr_int_actually_learns",
     "test_quality_lr_multiclass_actually_learns",
     "test_quality_lr_multiclass_scoring_keyed_broadcast_weights",

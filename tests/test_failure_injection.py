@@ -6,6 +6,9 @@ stops. One byte of a checkpoint file is flipped, new data lands, and the
 query is restarted from the same checkpoint in a fresh session. The
 restart must fail with a checksum error: resuming would replay from, or
 fold into, state that is no longer what was committed.
+
+Task retry. A Python-stage task that raises on its first attempt is
+retried; the result must hash the same as a clean run.
 """
 
 from __future__ import annotations
@@ -116,3 +119,61 @@ def test_checkpoint_file_manager_scope(spark):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "MANAGER None" in out.stdout.splitlines()
+
+
+# One task of the Python stage fails on its first attempt: the payload
+# function raises inside the synthesis seam in partition 0, attempt 0.
+_FLAKY_STAGE = """
+import sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+from gearpump_spark.datasets import table
+from gearpump_spark.operators import multimodal as MM
+from gearpump_spark.queries import all_queries
+from perfbench.oracle import load_contract_functions
+
+sf, marker = sys.argv[1], sys.argv[2]
+value_hash, norm = load_contract_functions(".")
+spark = (SparkSession.builder.master("local[2,2]").config("spark.driver.memory", "512m")
+         .config("spark.ui.enabled", "false").getOrCreate())
+
+def flaky_bmp(i):
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+        open(marker, "w").close()
+        raise RuntimeError("injected failure")
+    return MM.bmp_payload(i)
+
+clean = all_queries()["multimodal_pixels_real"](spark, sf).toPandas()
+docs = table(spark, sf, "documents").select("doc_id")
+retried = MM.sorted_python_stage(
+    docs, lambda d: MM.pixel_stats(MM.synthesize_payloads(d, flaky_bmp)), "doc_id"
+).toPandas()
+print("ROWS", len(clean), len(retried))
+print("ORDERED", list(retried["doc_id"]) == sorted(retried["doc_id"]))
+print("HASH", value_hash(norm(clean)), value_hash(norm(retried)))
+spark.stop()
+"""
+
+
+def test_python_stage_task_retry_same_hash(sf_dir, tmp_path):
+    """A Python-stage task that fails once is retried under
+    spark.task.maxFailures = 2 (master local[2,2]); the retried result
+    hashes the same as a clean run and keeps its key order."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    marker = tmp_path / "raised"
+    out = subprocess.run(
+        [sys.executable, "-c", _FLAKY_STAGE, sf_dir, str(marker)],
+        cwd=root,
+        env={**os.environ, "PYTHONPATH": root},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert marker.exists(), "the injected failure never ran"
+    fields = dict(line.split(" ", 1) for line in out.stdout.splitlines() if " " in line)
+    rows, ordered, hashes = fields["ROWS"].split(), fields["ORDERED"], fields["HASH"].split()
+    assert rows[0] == rows[1] != "0"
+    assert ordered == "True"
+    assert hashes[0] == hashes[1]

@@ -3326,3 +3326,27 @@ def test_dsir_select_semantics(spark):
         r[0] for r in con.execute(REGISTRY["sample_dsir_select"].oracle).fetchall()
     }
     assert {r.doc_id for r in out} == oracle_ids
+
+
+def test_row_count_reads_parquet_footers(spark, sf_dir, tmp_path):
+    """datasets.row_count equals table(...).count() for every fixture
+    table and for a directory of part files with hive subdirectories, and
+    on a local path it runs no Spark job."""
+    from gearpump_spark.datasets import TABLES, row_count, table
+
+    sc = spark.sparkContext
+    sc.setJobGroup("row_count_footers", "row_count")
+    try:
+        counts = {name: row_count(spark, sf_dir, name) for name in TABLES}
+        assert sc.statusTracker().getJobIdsForGroup("row_count_footers") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for name in TABLES:
+        assert counts[name] == table(spark, sf_dir, name).count(), name
+    parts = tmp_path / "documents.parquet"
+    table(spark, sf_dir, "documents").withColumn("part", F.col("doc_id") % 3).repartition(
+        4
+    ).write.partitionBy("part").parquet(str(parts))
+    assert (parts / "part=0").is_dir() and (parts / "_SUCCESS").exists()
+    assert row_count(spark, str(tmp_path), "documents") == counts["documents"]
+    assert table(spark, str(tmp_path), "documents").count() == counts["documents"]

@@ -1462,7 +1462,8 @@ def test_pagerank_weighted_personalized_int_superstep_no_cartesian(spark):
 def test_phash_int_narrow_map_keyed_twin_join(spark, sf_dir):
     """Integer-pHash fingerprints are an Arrow-batched narrow map
     (payload bytes never cross an exchange — only 8-byte hashes do) and
-    the twin pairing is a doc_id-keyed equi-join, never a cartesian."""
+    the twin pairing is keyed on doc_id (a window over doc_id >> 1),
+    never a cartesian."""
     p = plan(QS["multimodal_phash_int"](spark, sf_dir))
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
     # the only Python in the plan is the Arrow decode/hash map
@@ -1606,7 +1607,9 @@ def test_kcore_peel_joins_never_sort(spark):
 def test_jpeg_refined_fused_single_arrow_stage(spark, sf_dir):
     """r11 pin (r10 verdict #5): the refined-progressive tier is ONE
     mapInPandas stage — payload bytes never cross the Arrow boundary. The
-    logical codec seam is asserted separately (fused == two-stage)."""
+    logical codec seam is asserted separately (fused == two-stage). This
+    counts plan nodes; tests/test_python_stages.py counts how often each
+    node runs per action."""
     p = plan(QS["multimodal_jpeg_refined_real"](spark, sf_dir))
     assert _count_nodes(p, "MapInPandas") == 1
 
