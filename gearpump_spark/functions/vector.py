@@ -3,8 +3,8 @@
 This module is the only one that knows the vector arithmetic. Every
 vector form has one DataFrame function here and one DuckDB SQL twin,
 named ``sql_<form>``, that the oracles format in: `dot`, `int_dot`,
-`l2_norm`, `cosine`, `sq_dist`, `int_sq_dist`, `micro_units`,
-`milli_units` and `seed_order`. A twin takes SQL expressions naming list
+`l2_norm`, `cosine`, `sq_dist`, `int_sq_dist`, `micro_units` and
+`milli_units`. A twin takes SQL expressions naming list
 columns and returns a SQL expression.
 
 The fold order is part of each form. Floating-point addition is not
@@ -151,15 +151,3 @@ def milli_units(arr: Column, scale: int = MILLI_SCALE) -> Column:
 def sql_milli_units(arr: str, scale: int = MILLI_SCALE) -> str:
     """DuckDB twin of `milli_units`."""
     return f"LIST_TRANSFORM({arr}, x -> CAST(ROUND(CAST(x AS DOUBLE) * {scale}) AS BIGINT))"
-
-
-def seed_order(id_col: str) -> list[Column]:
-    """Sort keys of the seeded pick: (md5(id), id). Taking the first k
-    rows in this order gives k seeds decorrelated from id order, the same
-    on any engine or partitioning."""
-    return [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
-
-
-def sql_seed_order(id_col: str = "vec_id") -> str:
-    """DuckDB twin of `seed_order`, as an ORDER BY list."""
-    return f"md5(CAST({id_col} AS VARCHAR)), {id_col}"

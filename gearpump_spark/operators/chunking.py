@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gearpump_spark.functions import hash as H
 from gearpump_spark.functions import text as TX
 
 
@@ -91,8 +92,6 @@ def cdc_chunks(
     bounds to tame the geometric length tail; omitted here so the oracle
     stays closed-form (the bound is one extra filter on n_tokens).
     """
-    from gearpump_spark.operators.hashing import seeded_hash15
-
     tk = TX.tokens(F.col(text_col))
     base = docs.select(F.col(id_col), tk.alias("tk")).filter(F.size("tk") > 0)
     n = F.size("tk")
@@ -100,7 +99,7 @@ def cdc_chunks(
     # doc has no window, so it stays one whole-doc chunk
     cuts = F.transform(
         TX.ngrams(F.col("tk"), 2),
-        lambda g, i: F.when(seeded_hash15(g, seed) % modulus == 0, i + 1),
+        lambda g, i: F.when(H.hash15(g, seed) % modulus == 0, i + 1),
     )
     bpos = F.filter(cuts, lambda c: c.isNotNull())
     seg = base.select(
@@ -121,5 +120,5 @@ def cdc_chunks(
         F.col("chunk_idx").cast("bigint").alias("chunk_idx"),
         start.cast("bigint").alias("tok_start"),
         (end - start).cast("bigint").alias("n_tokens"),
-        F.md5(F.array_join(chunk, " ").cast("binary")).alias("fp"),
+        H.digest(F.array_join(chunk, " ")).alias("fp"),
     )

@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gearpump_spark.functions import hash as H
 from gearpump_spark.functions import text as TX
-from gearpump_spark.operators.hashing import seeded_hash15
 
 N_BUCKETS = 64
 BIAS_J = N_BUCKETS  # feature index of the always-1 bias term
@@ -53,8 +53,8 @@ def hashed_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return (
         tok.select(
             "doc_id",
-            (seeded_hash15(F.col("w"), 9) % N_BUCKETS).alias("j"),
-            F.when(seeded_hash15(F.col("w"), 10) % 2 == 0, F.lit(1))
+            (H.hash15(F.col("w"), 9) % N_BUCKETS).alias("j"),
+            F.when(H.hash15(F.col("w"), 10) % 2 == 0, F.lit(1))
             .otherwise(F.lit(-1))
             .alias("s"),
         )
@@ -274,8 +274,8 @@ def lr_margin_expr(weights: "dict[int, int]", text_col: str = "text") -> Column:
     tokens = TX.lower_tokens(F.col(text_col))
 
     def term(t: Column) -> Column:
-        bucket = seeded_hash15(t, 9) % N_BUCKETS
-        sign = F.when(seeded_hash15(t, 10) % 2 == 0, F.lit(1)).otherwise(
+        bucket = H.hash15(t, 9) % N_BUCKETS
+        sign = F.when(H.hash15(t, 10) % 2 == 0, F.lit(1)).otherwise(
             F.lit(-1)
         )
         return F.coalesce(F.element_at(wmap, bucket), F.lit(0)) * sign

@@ -9,8 +9,8 @@ stays inside whole-stage codegen):
 - ngram_jaccard_pairs  — exact n-gram Jaccard (verification / small-side)
 
 Cross-engine determinism: the hash family is md5 over seed-prefixed
-shingles (identical in Spark and DuckDB), not engine-private hash
-functions, so every step is oracle-checkable.
+shingles (functions/hash.py, identical in Spark and DuckDB), not
+engine-private hash functions, so every step is oracle-checkable.
 
 Scale notes: MinHash+LSH is the 100 TB path — cost is O(total shingles)
 plus a shuffle keyed by (band, band_hash); exact Jaccard is O(pairs) and
@@ -24,18 +24,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gearpump_spark.functions import hash as H
 from gearpump_spark.functions.text import (
     lower_tokens,
     ngrams,
     normalize_text,
     normalized_words,
 )
-from gearpump_spark.operators.hashing import seeded_md5
-
-
-def fingerprint(col: Column) -> Column:
-    """Deterministic 128-bit content fingerprint (hex) of normalized text."""
-    return F.md5(normalize_text(col).cast("binary"))
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -46,7 +41,7 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     full text never shuffles, only (fingerprint, id).
     """
     return (
-        docs.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
+        docs.select(F.col(id_col), H.fingerprint(F.col(text_col)).alias("fp"))
         .groupBy("fp")
         .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_dups"))
     )
@@ -65,15 +60,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     return F.when(F.size(ws) < n, F.array(norm)).otherwise(ngrams(ws, n))
 
 
-def _minhash_cols(k: int) -> list[Column]:
-    """MinHash estimator h_i = MIN(md5('<i>|' || shingle)) for seeds 0..k-1.
-
-    md5 with a seed prefix is a cheap universal-ish hash family that both
-    Spark and DuckDB compute identically (lexicographic MIN over hex).
-    """
-    return [F.min(seeded_md5(F.col("shingle"), i)).alias(f"h{i}") for i in range(k)]
-
-
 def minhash_signatures_from_shingles(
     sh: DataFrame, id_col: str = "doc_id", k: int = 6
 ) -> DataFrame:
@@ -82,7 +68,7 @@ def minhash_signatures_from_shingles(
     the raw multiset give identical signatures — callers that already
     materialized a shingle relation (dedup_lsh_recall's ground-truth leg)
     reuse it instead of re-tokenizing the corpus."""
-    return sh.groupBy(id_col).agg(*_minhash_cols(k))
+    return sh.groupBy(id_col).agg(*H.minhash_signature(F.col("shingle"), k))
 
 
 def minhash_signatures(
@@ -119,12 +105,7 @@ def lsh_candidate_pairs(
     bands = F.array(
         *[
             F.struct(
-                F.lit(b).alias("band_idx"),
-                F.md5(
-                    F.concat_ws(
-                        "|", *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-                    ).cast("binary")
-                ).alias("band_key"),
+                F.lit(b).alias("band_idx"), H.band_key(b, rows_per_band).alias("band_key")
             )
             for b in range(n_bands)
         ]
@@ -285,7 +266,7 @@ def cross_split_contamination(
     per-doc distinct + the semi-join; the train side collapses to DISTINCT
     shingles before joining, so shingle document-frequency skew (stop
     shingles) feeds AQE one hot partition at worst. At 100 TB swap the
-    shingle string for seeded_hash15(shingle) on BOTH sides: 8-byte join
+    shingle string for H.hash15(shingle) on BOTH sides: 8-byte join
     keys, identical semantics (collisions ~2^-60).
     """
     sh = docs.select(
@@ -317,14 +298,13 @@ def simhash32(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     """32-bit SimHash fingerprint per document (Charikar 2002): each token
     votes ±1 per bit of its 32-bit hash; fingerprint bit = sign of the sum.
 
-    Token hash = first 8 hex chars of md5 (deterministic cross-run). All
+    Token hash = `hash32` of the token (deterministic cross-run). All
     expression-level (64 agg columns), no UDF. Returns (id, simhash: long).
     """
     tok = docs.select(
         F.col(id_col), F.explode(lower_tokens(F.col(text_col))).alias("w")
     )
-    h32 = F.conv(F.substring(F.md5(F.col("w").cast("binary")), 1, 8), 16, 10).cast("long")
-    tok = tok.select(id_col, h32.alias("h"))
+    tok = tok.select(id_col, H.hash32(F.col("w")).alias("h"))
     votes = tok.groupBy(id_col).agg(
         *[
             F.sum(
@@ -413,11 +393,11 @@ def incremental_dedup(
        fingerprint index.
 
     At scale the snapshot side is a pre-materialized fingerprint table
-    (write `fingerprint(text)` once at ingest, bucketed by fp, and the
+    (write `H.fingerprint(text)` once at ingest, bucketed by fp, and the
     anti-join co-locates without re-shuffling history); here we derive it
     inline from the snapshot rows.
     """
-    snap_fp = snapshot.select(fingerprint(F.col(text_col)).alias("fp"))
+    snap_fp = snapshot.select(H.fingerprint(F.col(text_col)).alias("fp"))
     return incremental_dedup_against_index(batch, snap_fp, id_col, text_col)
 
 
@@ -433,7 +413,7 @@ def incremental_dedup_against_index(
     index and never re-hashes history. Composes directly with
     foreachBatch for streaming ingest (tests/test_streaming.py)."""
     survivors = (
-        batch.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
+        batch.select(F.col(id_col), H.fingerprint(F.col(text_col)).alias("fp"))
         .groupBy("fp")
         .agg(F.min(id_col).alias(id_col))
     )
@@ -480,7 +460,7 @@ def duplicate_spans(
     # window). Lazy localCheckpoints (r11 shared-relation discipline).
     win = base.select(
         id_col,
-        F.posexplode(F.transform(ngrams(F.col("tk"), n), lambda g: F.md5(g))).alias(
+        F.posexplode(F.transform(ngrams(F.col("tk"), n), H.digest)).alias(
             "pos", "fp"
         ),
     ).localCheckpoint(eager=False)

@@ -518,7 +518,7 @@ def triangle_count_estimate(
     n_sampled_triangles, est_triangles), where n_nodes/n_edges describe
     the FULL graph and est_triangles = n_sampled_triangles / p^3.
     """
-    from gearpump_spark.operators.hashing import seeded_hash15
+    from gearpump_spark.functions.hash import hash15
 
     und = _canonical_undirected(edges, src, dst)
     # The canonical edge list is consumed by EVERY downstream leg — the
@@ -532,7 +532,7 @@ def triangle_count_estimate(
     # path's "auto" which must count() to pick a strategy).
     und = und.localCheckpoint(eager=False)
     kept = und.where(
-        seeded_hash15(F.concat_ws(",", F.col("u"), F.col("v")), seed) % 10000
+        hash15(F.concat_ws(",", F.col("u"), F.col("v")), seed) % 10000
         < p_bp
     )
     # explicit strategy (no count action); "merge" because a graph worth
@@ -875,7 +875,7 @@ def connected_components_twophase(
     localCheckpoint; the driver sees only a per-round (count, checksum)
     pair for the fixpoint test.
     """
-    from gearpump_spark.operators.hashing import seeded_hash15
+    from gearpump_spark.functions.hash import hash15
 
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -889,7 +889,7 @@ def connected_components_twophase(
         # one action per round: (n_edges, order-insensitive content hash)
         # sum in decimal(38,0): 2^60-sized terms overflow BIGINT sums under
         # ANSI mode long before the row count gets interesting
-        h = seeded_hash15(F.concat_ws(",", "hi", "lo"), 0).cast("decimal(38,0)")
+        h = hash15(F.concat_ws(",", "hi", "lo"), 0).cast("decimal(38,0)")
         row = pairs.agg(
             F.count("*").alias("n"),
             F.coalesce(F.sum(h), F.lit(0).cast("decimal(38,0)")).alias("s"),

@@ -7,7 +7,7 @@ splits, per-source mixing rates, and down-sampling all have to be
 running it on a different engine, must keep every document on the same side
 of every split. Random() can't do that; a content-keyed hash can.
 
-All operators hash with the seeded-md5 family (operators/hashing.py):
+All operators hash with the seeded-md5 family (functions/hash.py):
 bucket = hex15(md5(seed|key)) % 10000 basis points. This is:
 
 - **shuffle-free**: a scan-local filter — Catalyst pushes it into the scan
@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from gearpump_spark.operators.hashing import seeded_hash15, seeded_md5
+from gearpump_spark.functions import hash as H
 
 BASIS = 10_000  # rates are expressed in basis points (1 bp = 0.01%)
 
@@ -40,9 +40,9 @@ BASIS = 10_000  # rates are expressed in basis points (1 bp = 0.01%)
 def hash_bucket(key: Column, seed: int = 0) -> Column:
     """Deterministic bucket in [0, 10000): hex15(md5(seed|key)) % 10000.
 
-    DuckDB mirror: hashing.SQL_H15 % 10000.
+    DuckDB mirror: H.sql_hash15(key, seed) % 10000.
     """
-    return (seeded_hash15(key, seed) % BASIS).alias("bucket")
+    return (H.hash15(key, seed) % BASIS).alias("bucket")
 
 
 def hash_sample(df: DataFrame, key_col: str, rate_bp: int, seed: int = 0) -> DataFrame:
@@ -137,7 +137,7 @@ def bottom_k_sample(df: DataFrame, key_col: str, k: int, seed: int = 0) -> DataF
     computable from per-part bottom-k's, and Spark plans the limit as
     TakeOrderedAndProject (per-partition top-k, no global sort).
     """
-    h = seeded_md5(F.col(key_col), seed)
+    h = H.seeded_md5(F.col(key_col), seed)
     return df.withColumn("_h", h).orderBy("_h", key_col).limit(k).drop("_h")
 
 
@@ -153,7 +153,7 @@ def k_per_group_sample(
     """
     from pyspark.sql import Window as W
 
-    w = W.partitionBy(group_col).orderBy(seeded_md5(F.col(key_col), seed), key_col)
+    w = W.partitionBy(group_col).orderBy(H.seeded_md5(F.col(key_col), seed), key_col)
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
@@ -210,7 +210,7 @@ def pack_sequences(
     """
     from pyspark.sql import Window as W
 
-    h = seeded_md5(F.col(key_col), seed)
+    h = H.seeded_md5(F.col(key_col), seed)
     if shards is None:
         before = global_positions(
             df.withColumn("_h", h), ["_h", key_col], size_col=size_col
@@ -310,7 +310,7 @@ def global_shuffle_order(df: DataFrame, key_col: str, seed: int = 0) -> DataFram
     is a unique total order, so positions are layout-independent).
     """
     ranked = global_positions(
-        df.withColumn("_h", seeded_md5(F.col(key_col), seed)),
+        df.withColumn("_h", H.seeded_md5(F.col(key_col), seed)),
         ["_h", key_col],
         out_col="position",
     )
@@ -341,7 +341,7 @@ def priority_sample(
     pr = (
         F.col(weight_col).cast("double")
         * F.lit(u_den)
-        / (seeded_hash15(F.col(key_col), seed) + F.lit(1)).cast("double")
+        / (H.hash15(F.col(key_col), seed) + F.lit(1)).cast("double")
     )
     top = (
         df.select(
@@ -401,7 +401,7 @@ def negative_pairs(
     # lazy-checkpoint it so the rank computation runs once.
     ranked = (
         global_positions(
-            df.select(F.col(key_col), seeded_hash15(F.col(key_col), seed).alias("h")),
+            df.select(F.col(key_col), H.hash15(F.col(key_col), seed).alias("h")),
             ["h", key_col],
             out_col="r",
         )

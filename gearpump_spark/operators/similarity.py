@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from gearpump_spark.functions import hash as H
 from gearpump_spark.functions import vector as V
 from gearpump_spark.functions.vector import cosine, dot, l2_norm
 
@@ -89,15 +90,9 @@ def cosine_topk(
 def _hyperplane(seed: int, dim: int) -> list[float]:
     """Deterministic pseudo-random unit-free hyperplane from md5 bytes.
 
-    Component j ∈ {-1..1}: derived from md5(f"{seed}|{j}") first 8 hex
-    digits scaled to [-1, 1). Pure python at plan-build time (tiny)."""
-    import hashlib
-
-    out = []
-    for j in range(dim):
-        h = hashlib.md5(f"{seed}|{j}".encode()).hexdigest()[:8]
-        out.append(int(h, 16) / float(2**31) - 1.0)
-    return out
+    Component j ∈ {-1..1}: H.py_hash32(j, seed) scaled to [-1, 1). Pure
+    python at plan-build time (tiny)."""
+    return [H.py_hash32(j, seed) / float(2**31) - 1.0 for j in range(dim)]
 
 
 def lsh_project(
@@ -578,7 +573,7 @@ def quantize_embeddings_int4(
 def _seed_vectors(base: DataFrame, k: int) -> list[list[int]]:
     """The micro-unit vectors ``v`` of the k rows of ``base`` first in the
     seeded (md5(__id), __id) order: one bounded collect of k rows."""
-    rows = base.orderBy(*V.seed_order("__id")).limit(k).collect()
+    rows = base.orderBy(*H.seed_order("__id")).limit(k).collect()
     return [[int(x) for x in r.v] for r in rows]
 
 
@@ -846,23 +841,12 @@ def pq_topk_ivfadc(
 
 def _jl_signs(seed: int, out_dim: int, dim: int) -> list[list[int]]:
     """Deterministic ±1 sign matrix for the JL projection, one row per
-    output component. Sign (j, pos) = +1 iff the seeded md5 bigint of
-    "seed|j|pos" is even — the exact expression the DuckDB oracle
-    recomputes (SQL_H15 % 2), so the matrix never has to be shipped:
-    both engines derive it from (seed, j, pos). Plan-build time, tiny."""
-    import hashlib
-
+    output component. Sign (j, pos) = +1 iff H.py_hash15("j|pos", seed)
+    is even — the exact expression the DuckDB oracle recomputes
+    (H.sql_hash15 % 2), so the matrix never has to be shipped: both
+    engines derive it from (seed, j, pos). Plan-build time, tiny."""
     return [
-        [
-            1
-            if int(
-                hashlib.md5(f"{seed}|{j}|{pos}".encode()).hexdigest()[:15], 16
-            )
-            % 2
-            == 0
-            else -1
-            for pos in range(dim)
-        ]
+        [1 if H.py_hash15(f"{j}|{pos}", seed) % 2 == 0 else -1 for pos in range(dim)]
         for j in range(out_dim)
     ]
 

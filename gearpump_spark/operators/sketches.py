@@ -8,9 +8,9 @@ infeasible one:
 - **Bloom-filter semi-join reduction**: build a tiny bit array from the
   small side's join keys, broadcast it, and drop non-matching fact rows at
   the scan — the classic way to cut a 100 TB shuffle before it happens.
-  Our build uses the seeded-md5 hash family (same family as
-  operators/dedup.py), so the filter bits are *bit-identical* across
-  engines and the whole operator is exactly DuckDB-oracle-checkable
+  Our build uses the seeded-md5 hash family (functions/hash.py, the
+  family of operators/dedup.py), so the filter bits are *bit-identical*
+  across engines and the whole operator is exactly DuckDB-oracle-checkable
   (no false negatives by construction; false positives are deterministic
   given the hash family).
 - **HLL approximate distinct** (`approx_count_distinct`): constant memory
@@ -31,8 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# The shared cross-engine hash family; DuckDB mirror is hashing.SQL_H15.
-from gearpump_spark.operators.hashing import seeded_hash15 as _h15
+from gearpump_spark.functions import hash as H
 
 # 32-bit words stored in BIGINT: DuckDB's BIGINT << overflows at bit 63,
 # and 32-bit masks keep every intermediate positive on both engines.
@@ -49,7 +48,7 @@ def bloom_build(df: DataFrame, col: str, num_words: int = 64, num_hashes: int = 
     m = num_words * WORD_BITS
     vals = df.select(F.col(col).alias("v")).where(F.col("v").isNotNull())
     rows = vals.select(
-        F.explode(F.array(*[(_h15(F.col("v"), i) % m) for i in range(num_hashes)])).alias("p")
+        F.explode(F.array(*[H.hash15(F.col("v"), i) % m for i in range(num_hashes)])).alias("p")
     )
     words = rows.select(
         F.floor(F.col("p") / WORD_BITS).cast("long").alias("word"),
@@ -75,7 +74,7 @@ def bloom_probe(
     keys = probe.select(F.col(col).alias("key")).where(F.col("key").isNotNull()).distinct()
     rows = keys.select(
         "key",
-        F.explode(F.array(*[(_h15(F.col("key"), i) % m) for i in range(num_hashes)])).alias("p"),
+        F.explode(F.array(*[H.hash15(F.col("key"), i) % m for i in range(num_hashes)])).alias("p"),
     )
     pos = rows.select(
         "key",
@@ -198,14 +197,14 @@ def countmin_build(
     discipline as the reference's state, state/api/Monoid.scala:17-24).
     The finished sketch is ≤ depth·width rows — broadcastable.
 
-    Cross-engine: the hash family is seeded md5 (hashing.SQL_H15), so
+    Cross-engine: the hash family is seeded md5 (H.sql_hash15), so
     sketch cells AND estimates are bit-identical in DuckDB — the oracle
     checks exact equality, not a tolerance.
     """
     vals = df.select(F.col(col).alias("v")).where(F.col("v").isNotNull())
     cells = vals.select(
         F.posexplode(
-            F.array(*[(_h15(F.col("v"), seed_base + j) % width) for j in range(depth)])
+            F.array(*[(H.hash15(F.col("v"), seed_base + j) % width) for j in range(depth)])
         ).alias("j", "bucket")
     )
     return cells.groupBy("j", "bucket").agg(F.count("*").alias("cnt"))
@@ -228,7 +227,7 @@ def countmin_estimate(
     hashed = pr.select(
         "v",
         F.posexplode(
-            F.array(*[(_h15(F.col("v"), seed_base + j) % width) for j in range(depth)])
+            F.array(*[(H.hash15(F.col("v"), seed_base + j) % width) for j in range(depth)])
         ).alias("j", "bucket"),
     )
     joined = hashed.join(F.broadcast(sketch), ["j", "bucket"], "left")
@@ -256,21 +255,20 @@ def hll_register_table(
               -> 61 - b, the all-zero max — bin() prints '0', length 1,
               so the CASE keeps both engines identical)
 
-    Same register math as streaming's hll_monoid (which buckets the full
-    64-bit md5 prefix); here the 15-hex-digit family keeps every step
-    bit-reproducible in DuckDB (SQL_H15 mirror), so the SKETCH STATE
-    itself is oracle-checkable — not just a tolerance band around the
-    estimate (contrast approx_distinct_by). Registers are mergeable by
-    max: union two tables and re-aggregate.
+    Streaming's hll_monoid builds the same registers at seed 0 with the
+    Python twin H.py_hash15, so a streamed window's estimate equals the
+    estimate from this table over the same rows. The 15-hex-digit family
+    keeps every step bit-reproducible in DuckDB (H.sql_hash15 mirror), so
+    the SKETCH STATE itself is oracle-checkable — not just a tolerance
+    band around the estimate (contrast approx_distinct_by). Registers are
+    mergeable by max: union two tables and re-aggregate.
 
     Scale: one groupBy shuffle carrying (group, idx, partial-max) — the
     corpus reduces map-side to at most |groups| * 2^b rows.
     """
-    from gearpump_spark.operators.hashing import seeded_hash15
-
     gcols = group_cols or []
     m = 1 << b
-    h = seeded_hash15(F.col(value_col).cast("string"), seed)
+    h = H.hash15(F.col(value_col), seed)
     idx = (h % F.lit(m)).alias("idx")  # h >= 0: % == & (m-1)
     w = F.shiftright(h, b)
     rho = (
@@ -282,6 +280,19 @@ def hll_register_table(
         df.select(*gcols, idx, rho)
         .groupBy(*gcols, "idx")
         .agg(F.max("rho").alias("rho"))
+    )
+
+
+def kmv_minset(df: DataFrame, col: str, k: int, seed: int) -> DataFrame:
+    """The KMV min-set: the k smallest distinct `hash15` values of
+    df[col], as one column ``h``. A global TakeOrdered (per-partition
+    top-k + driver merge of k values), never a global sort."""
+    return (
+        df.select(F.col(col).alias("_v"))
+        .distinct()
+        .select(H.hash15(F.col("_v"), seed).alias("h"))
+        .orderBy("h")
+        .limit(k)
     )
 
 
@@ -303,15 +314,7 @@ def kmv_distinct(
     driver merge of k values — never a global sort); everything before it
     is the distinct agg, map-side combined. Memory is O(k) per partition.
     """
-    from gearpump_spark.operators.hashing import seeded_hash15
-
-    h = (
-        df.select(F.col(col).alias("_v"))
-        .distinct()
-        .select(seeded_hash15(F.col("_v"), seed).alias("h"))
-    )
-    kmin = h.orderBy("h").limit(k)
-    return kmin.agg(
+    return kmv_minset(df, col, k, seed).agg(
         F.lit(k).cast("bigint").alias("k"),
         F.max("h").alias("kth_hash"),
         (
@@ -338,25 +341,14 @@ def kmv_anotb(
     runs on ≤ 2k rows — the retention/churn estimator (what fraction of
     audience A never appears in B) without materializing either set.
     """
-    from gearpump_spark.operators.hashing import seeded_hash15
-
-    def kmin(df: DataFrame) -> DataFrame:
-        return (
-            df.select(F.col(col).alias("_v"))
-            .distinct()
-            .select(seeded_hash15(F.col("_v"), seed).alias("h"))
-            .orderBy("h")
-            .limit(k)
-        )
-
     # Each 64-row min-set feeds multiple legs (theta — itself consumed by
     # the combine AND the output row — plus the anti-join), and every leg
     # otherwise re-runs the full distinct scan + TakeOrdered over the
     # corpus. Lazy localCheckpoint (r11 shared-relation discipline): each
     # side's sketch is computed once and every combine leg reads k rows.
     ha, hb = (
-        kmin(a).localCheckpoint(eager=False),
-        kmin(b).localCheckpoint(eager=False),
+        kmv_minset(a, col, k, seed).localCheckpoint(eager=False),
+        kmv_minset(b, col, k, seed).localCheckpoint(eager=False),
     )
     theta_df = (
         ha.agg(F.max("h").alias("ta"))
@@ -398,24 +390,13 @@ def kmv_overlap(
     est_intersection). Scale: each sketch is a distinct agg + global
     TakeOrdered of k values; the combine step runs on ≤ 2k rows.
     """
-    from gearpump_spark.operators.hashing import seeded_hash15
-
-    def kmin(df: DataFrame) -> DataFrame:
-        return (
-            df.select(F.col(col).alias("_v"))
-            .distinct()
-            .select(seeded_hash15(F.col("_v"), seed).alias("h"))
-            .orderBy("h")
-            .limit(k)
-        )
-
     # Same shared-relation discipline as kmv_anotb: each 64-row min-set
     # feeds the union-theta leg AND the intersection join (and theta is
     # consumed twice), so without materialization every leg re-runs the
     # full distinct scan + TakeOrdered over its corpus side.
     ha, hb = (
-        kmin(a).localCheckpoint(eager=False),
-        kmin(b).localCheckpoint(eager=False),
+        kmv_minset(a, col, k, seed).localCheckpoint(eager=False),
+        kmv_minset(b, col, k, seed).localCheckpoint(eager=False),
     )
     theta_df = (
         ha.unionByName(hb).distinct().orderBy("h").limit(k)

@@ -3,8 +3,8 @@ reference surface, first-class per the north star): deduplication,
 embedding similarity search, text analysis, multimodal metadata.
 
 Oracle strategy: every hash-based operator uses md5 over seed-prefixed
-input — a hash family both Spark and DuckDB evaluate identically — so even
-MinHash/LSH is exactly DuckDB-checkable. Only SimHash (bit twiddling) and
+input (functions/hash.py) — a hash family both Spark and DuckDB evaluate
+identically — so even MinHash/LSH is exactly DuckDB-checkable. Only SimHash (bit twiddling) and
 PageRank (iterative) fall back to rows-only checks + pytest goldens.
 """
 
@@ -19,7 +19,7 @@ from gearpump_spark.datasets import row_count, stream_table, table
 from gearpump_spark.operators import dedup as D
 from gearpump_spark.operators import sampling as SP
 from gearpump_spark.operators import similarity as S
-from gearpump_spark.operators.hashing import SQL_H15 as _SQL_H15
+from gearpump_spark.functions import hash as H
 from gearpump_spark.functions import text as TX
 from gearpump_spark.functions import vector as V
 from gearpump_spark.queries import register
@@ -128,7 +128,7 @@ def _sql_shipment(weighted: bool = False) -> str:
 @register(
     "dedup_exact",
     oracle=f"""
-    SELECT MD5({TX.sql_normalize_text()}) AS fp,
+    SELECT {H.sql_fingerprint()} AS fp,
            MIN(doc_id) AS keep_id, COUNT(*) AS n_dups
     FROM documents GROUP BY 1 ORDER BY keep_id
     """,
@@ -144,9 +144,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_sql_shingles(3)}
     SELECT doc_id,
-           MIN(MD5('0|' || shingle)) AS h0, MIN(MD5('1|' || shingle)) AS h1,
-           MIN(MD5('2|' || shingle)) AS h2, MIN(MD5('3|' || shingle)) AS h3,
-           MIN(MD5('4|' || shingle)) AS h4, MIN(MD5('5|' || shingle)) AS h5
+           {H.sql_minhash_signature()}
     FROM shingled GROUP BY doc_id ORDER BY doc_id
     """,
     desc="MinHash signatures (k=6) over word 3-gram shingles, md5 hash family",
@@ -161,16 +159,11 @@ def dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_sql_shingles(3)},
     sig AS (
         SELECT doc_id,
-               MIN(MD5('0|' || shingle)) AS h0, MIN(MD5('1|' || shingle)) AS h1,
-               MIN(MD5('2|' || shingle)) AS h2, MIN(MD5('3|' || shingle)) AS h3,
-               MIN(MD5('4|' || shingle)) AS h4, MIN(MD5('5|' || shingle)) AS h5
+               {H.sql_minhash_signature()}
         FROM shingled GROUP BY doc_id),
     bands AS (
         SELECT doc_id, b.band_idx,
-               CASE b.band_idx
-                    WHEN 0 THEN MD5(h0 || '|' || h1)
-                    WHEN 1 THEN MD5(h2 || '|' || h3)
-                    ELSE MD5(h4 || '|' || h5) END AS band_key
+               {H.sql_band_key("b.band_idx")} AS band_key
         FROM sig CROSS JOIN (SELECT UNNEST([0, 1, 2]) AS band_idx) b)
     SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
     FROM bands x JOIN bands y
@@ -196,16 +189,11 @@ _SQL_CLUSTERS_CTES = f"""
     WITH RECURSIVE {_sql_shingles(3)},
     sig AS (
         SELECT doc_id,
-               MIN(MD5('0|' || shingle)) AS h0, MIN(MD5('1|' || shingle)) AS h1,
-               MIN(MD5('2|' || shingle)) AS h2, MIN(MD5('3|' || shingle)) AS h3,
-               MIN(MD5('4|' || shingle)) AS h4, MIN(MD5('5|' || shingle)) AS h5
+               {H.sql_minhash_signature()}
         FROM shingled GROUP BY doc_id),
     bands AS (
         SELECT doc_id, b.band_idx,
-               CASE b.band_idx
-                    WHEN 0 THEN MD5(h0 || '|' || h1)
-                    WHEN 1 THEN MD5(h2 || '|' || h3)
-                    ELSE MD5(h4 || '|' || h5) END AS band_key
+               {H.sql_band_key("b.band_idx")} AS band_key
         FROM sig CROSS JOIN (SELECT UNNEST([0, 1, 2]) AS band_idx) b),
     pairs AS (
         SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
@@ -532,7 +520,7 @@ def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TEST_BUCKET = _SQL_H15.format(seed="'0'", key="doc_id") + " % 10000 < 1000"
+_SQL_TEST_BUCKET = H.sql_hash15("doc_id", 0) + " % 10000 < 1000"
 
 
 @register(
@@ -565,8 +553,8 @@ def dedup_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # SimHash is bit-for-bit deterministic (integer votes over md5 token
 # hashes), so it is fully oracle-expressible: DuckDB rebuilds the 32 vote
-# columns with >>/& integer ops and the same '0x'-cast of md5's first 8 hex
-# chars (converted from rows-only in r4 — the 'bit-level' label had
+# columns with >>/& integer ops and the same token hash, H.sql_hash32
+# (converted from rows-only in r4 — the 'bit-level' label had
 # conflated bit manipulation with non-determinism).
 _SIMHASH_VOTES = ",\n        ".join(
     f"SUM(CASE WHEN (hv >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
@@ -584,7 +572,7 @@ _SIMHASH_FP = " + ".join(
     WITH tok AS (
         SELECT doc_id, UNNEST({TX.sql_lower_tokens()}) AS w FROM documents),
     h AS (SELECT doc_id,
-                 CAST(('0x' || SUBSTR(MD5(w), 1, 8)) AS BIGINT) AS hv
+                 {H.sql_hash32("w")} AS hv
           FROM tok),
     votes AS (SELECT doc_id, {_SIMHASH_VOTES} FROM h GROUP BY doc_id),
     fp AS (SELECT doc_id, {_SIMHASH_FP} AS simhash FROM votes)
@@ -608,7 +596,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                {TX.sql_normalized_words()} AS tk
         FROM documents),
     win AS (
-        SELECT doc_id, CAST(i AS INT) - 1 AS pos, MD5(g[i]) AS fp
+        SELECT doc_id, CAST(i AS INT) - 1 AS pos, {H.sql_digest("g[i]")} AS fp
         FROM (SELECT doc_id, {TX.sql_ngrams("tk", 8)} AS g FROM tok),
              UNNEST(RANGE(1, LEN(g) + 1)) AS t(i)),
     freq AS (SELECT fp, COUNT(*) AS c FROM win GROUP BY fp),
@@ -703,11 +691,10 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_plane_sql(p: int) -> str:
     """Hyperplane p as a list, component j the exact double
-    operators/similarity.py _hyperplane computes: u32(md5('p|j')[:8])/2^31 - 1."""
+    operators/similarity.py _hyperplane computes: hash32(j, p)/2^31 - 1."""
     return (
         f"LIST_TRANSFORM(RANGE(0, {V.EMBED_DIM}), j -> "
-        f"CAST(('0x' || SUBSTR(MD5(CONCAT('{p}', '|', CAST(j AS VARCHAR))), 1, 8))"
-        " AS BIGINT) / 2147483648.0 - 1.0)"
+        f"{H.sql_hash32('j', p)} / 2147483648.0 - 1.0)"
     )
 
 
@@ -830,9 +817,9 @@ def _sql_seeds(k: int) -> str:
     (md5(id), id) order, cid 0-based in that order."""
     return f"""seeds AS MATERIALIZED (
         SELECT vec_id,
-               CAST(ROW_NUMBER() OVER (ORDER BY {V.sql_seed_order()}) AS BIGINT) - 1 AS cid
+               CAST(ROW_NUMBER() OVER (ORDER BY {H.sql_seed_order()}) AS BIGINT) - 1 AS cid
         FROM embeddings
-        ORDER BY {V.sql_seed_order()} LIMIT {k})"""
+        ORDER BY {H.sql_seed_order()} LIMIT {k})"""
 
 
 # Shared DuckDB CTE chain for product quantization (m=8 subspaces of 8
@@ -1195,14 +1182,14 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_fingerprint",
     oracle=f"""
     SELECT doc_id,
-           MD5({TX.sql_normalize_text()}) AS fp
+           {H.sql_fingerprint()} AS fp
     FROM documents ORDER BY doc_id
     """,
     desc="deterministic 128-bit content fingerprint per document",
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    return docs.select("doc_id", D.fingerprint(F.col("text")).alias("fp")).orderBy("doc_id")
+    return docs.select("doc_id", H.fingerprint(F.col("text")).alias("fp")).orderBy("doc_id")
 
 
 # PII injection formula shared by the Spark query and its oracle: both
@@ -1240,7 +1227,7 @@ _SQL_PII_COUNTS = ", ".join(
     oracle=f"""
     WITH injected AS ({_SQL_PII_INJECT})
     SELECT doc_id, {_SQL_PII_COUNTS},
-           MD5({_sql_redact_chain("t")}) AS redacted_hash
+           {H.sql_digest(_sql_redact_chain("t"))} AS redacted_hash
     FROM injected ORDER BY doc_id
     """,
     desc="PII scrubbing: deterministic synthetic emails/phones/IPs injected "
@@ -1276,7 +1263,7 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return injected.select(
         "doc_id",
         *[c.alias(f"n_{name}") for name, c in counts.items()],
-        F.md5(TX.redact_pii(F.col("t")).cast("binary")).alias("redacted_hash"),
+        H.digest(TX.redact_pii(F.col("t"))).alias("redacted_hash"),
     ).orderBy("doc_id")
 
 
@@ -1288,12 +1275,12 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_metadata",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            CAST(STRLEN(text) AS BIGINT) AS byte_len,
            CAST(LENGTH(text) AS BIGINT) AS char_len,
            CASE WHEN STRLEN(text) > LENGTH(text) THEN 'multibyte' ELSE 'ascii' END AS enc_kind,
-           MD5(text) AS content_hash
+           {H.sql_digest("text")} AS content_hash
     FROM documents ORDER BY doc_id
     """,
     desc="opaque-payload metadata: byte length vs char length, content hash "
@@ -1307,7 +1294,7 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.octet_length(t).cast("bigint").alias("byte_len"),
         F.length(t).cast("bigint").alias("char_len"),
         F.when(F.octet_length(t) > F.length(t), "multibyte").otherwise("ascii").alias("enc_kind"),
-        F.md5(t.cast("binary")).alias("content_hash"),
+        H.digest(t).alias("content_hash"),
     ).orderBy("doc_id")
 
 
@@ -2312,7 +2299,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_sql_copurchase()},
     kept AS (
         SELECT u, v FROM copurchase
-        WHERE {_SQL_H15.format(seed="'7'", key="(u || ',' || v)")} % 10000 < 2000),
+        WHERE {H.sql_hash15("(u || ',' || v)", 7)} % 10000 < 2000),
     st AS (
         SELECT COUNT(*) AS n_sampled_triangles FROM kept e1
         JOIN kept e2 ON e2.u = e1.u AND e2.v > e1.v
@@ -2383,7 +2370,7 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return CH.chunk_by_tokens(docs, size=32, stride=24).orderBy("doc_id", "chunk_idx")
 
 
-_SQL_SNAP = "(" + _SQL_H15.format(seed="'7'", key="doc_id") + " % 10000) < 8000"
+_SQL_SNAP = "(" + H.sql_hash15("doc_id", 7) + " % 10000) < 8000"
 
 
 @register(
@@ -2391,7 +2378,7 @@ _SQL_SNAP = "(" + _SQL_H15.format(seed="'7'", key="doc_id") + " % 10000) < 8000"
     oracle=f"""
     WITH fp AS (
         SELECT doc_id,
-               MD5({TX.sql_normalize_text()}) AS fp,
+               {H.sql_fingerprint()} AS fp,
                {_SQL_SNAP} AS in_snap
         FROM documents),
     keep AS (SELECT fp, MIN(doc_id) AS doc_id FROM fp WHERE NOT in_snap GROUP BY fp)
@@ -3085,9 +3072,8 @@ def text_sentencepiece_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM chunks),
     packed AS (
         SELECT doc_id, chunk_idx, n_tokens,
-               CAST(CONCAT('0x', SUBSTR(MD5('1' || '|' || key), 1, 15)) AS BIGINT)
-                 % 10000 % 8 AS shard,
-               MD5('0' || '|' || key) AS h, key
+               {H.sql_hash15("key", 1)} % 10000 % 8 AS shard,
+               {H.sql_seeded_md5("key", 0)} AS h, key
         FROM keyed),
     binned AS (
         SELECT doc_id, chunk_idx, n_tokens,
@@ -3447,7 +3433,7 @@ def multimodal_png_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_chunk_exact",
     oracle=f"""
     WITH {_sql_chunks(32, 32)},
-    ch AS (SELECT doc_id, chunk_idx, MD5(chunk_text) AS fp FROM chunks),
+    ch AS (SELECT doc_id, chunk_idx, {H.sql_digest("chunk_text")} AS fp FROM chunks),
     r AS (
         SELECT doc_id, chunk_idx, fp,
                ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id, chunk_idx) AS rn,
@@ -3470,7 +3456,7 @@ def dedup_chunk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     ch = CH.chunk_by_tokens(docs, size=32, stride=32).select(
-        "doc_id", "chunk_idx", F.md5(F.col("chunk_text").cast("binary")).alias("fp")
+        "doc_id", "chunk_idx", H.digest(F.col("chunk_text")).alias("fp")
     )
     w = W.partitionBy("fp")
     return (
@@ -3610,7 +3596,7 @@ def multimodal_gif_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_sql_shingles(3)},
     samp AS (SELECT doc_id FROM documents
-             WHERE CAST(CONCAT('0x', SUBSTR(MD5('9' || '|' || doc_id), 1, 15)) AS BIGINT) % 10000 < 2000),
+             WHERE {H.sql_hash15("doc_id", 9)} % 10000 < 2000),
     sh AS (SELECT DISTINCT s.doc_id, s.shingle FROM shingled s
            JOIN samp USING (doc_id)),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
@@ -3624,16 +3610,11 @@ def multimodal_gif_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.5),
     sig AS (
         SELECT doc_id,
-               MIN(MD5('0|' || shingle)) AS h0, MIN(MD5('1|' || shingle)) AS h1,
-               MIN(MD5('2|' || shingle)) AS h2, MIN(MD5('3|' || shingle)) AS h3,
-               MIN(MD5('4|' || shingle)) AS h4, MIN(MD5('5|' || shingle)) AS h5
+               {H.sql_minhash_signature()}
         FROM shingled GROUP BY doc_id),
     bands AS (
         SELECT doc_id, bi.band_idx,
-               CASE bi.band_idx
-                    WHEN 0 THEN MD5(h0 || '|' || h1)
-                    WHEN 1 THEN MD5(h2 || '|' || h3)
-                    ELSE MD5(h4 || '|' || h5) END AS band_key
+               {H.sql_band_key("bi.band_idx")} AS band_key
         FROM sig JOIN samp USING (doc_id)
         CROSS JOIN (SELECT UNNEST([0, 1, 2]) AS band_idx) bi),
     cand AS (
@@ -4571,9 +4552,7 @@ def multimodal_phash_int(spark: SparkSession, sf_dir: str) -> DataFrame:
               FROM embeddings), range(1, {V.EMBED_DIM + 1}) t(i)),
     s AS (
         SELECT CAST(j.j AS BIGINT) AS j, CAST(p.pos AS BIGINT) AS pos,
-               CASE WHEN CAST(CONCAT('0x',
-                        SUBSTR(MD5('7|' || j.j || '|' || p.pos), 1, 15))
-                        AS BIGINT) % 2 = 0
+               CASE WHEN {H.sql_hash15("j.j || '|' || p.pos", 7)} % 2 = 0
                     THEN 1 ELSE -1 END AS sgn
         FROM range(0, 16) j(j) CROSS JOIN range(0, {V.EMBED_DIM}) p(pos)),
     comp AS (
@@ -4705,7 +4684,7 @@ def multimodal_video_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     + f""",
     labeled AS (
         SELECT doc_id, cluster_id,
-               CASE WHEN {_SQL_H15.format(seed="'0'", key="cluster_id")}
+               CASE WHEN {H.sql_hash15("cluster_id", 0)}
                     % 10000 < 1000
                     THEN 'test' ELSE 'train' END AS split
         FROM clusters)
@@ -4740,7 +4719,7 @@ def sample_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     b AS (
         SELECT doc_id, tk,
                LIST_FILTER(RANGE(1, LEN(tk)),
-                   i -> {_SQL_H15.format(seed="'9'", key="g[i]")} % 8 = 0) AS bpos
+                   i -> {H.sql_hash15("g[i]", 9)} % 8 = 0) AS bpos
         FROM (SELECT doc_id, tk, {TX.sql_ngrams("tk", 2)} AS g FROM toks)
         WHERE LEN(tk) > 0),
     seg AS (
@@ -4753,7 +4732,7 @@ def sample_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, CAST(j - 1 AS BIGINT) AS chunk_idx,
                CAST(starts[j] AS BIGINT) AS tok_start,
                CAST(ends[j] - starts[j] AS BIGINT) AS n_tokens,
-               MD5(ARRAY_TO_STRING(tk[starts[j] + 1 : ends[j]], ' ')) AS fp
+               {H.sql_digest("ARRAY_TO_STRING(tk[starts[j] + 1 : ends[j]], ' ')")} AS fp
         FROM seg),
     r AS (
         SELECT doc_id, chunk_idx, tok_start, n_tokens, fp,
@@ -5259,23 +5238,19 @@ def embedding_top_pc_int(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _rs_plane(p: int, dim: int = V.EMBED_DIM) -> list[int]:
     """Integer LSH hyperplane for range search: coefficient j of plane p is
-    (int(md5('rs{p}|{j}')[:8], 16) % 2001) - 1000 ∈ [-1000, 1000] — pure
+    (H.py_hash32(j, f"rs{p}") % 2001) - 1000 ∈ [-1000, 1000] — pure
     integer, so the projection SIGN is exact on both engines (the float
     hyperplanes in operators/similarity.lsh_project are fine for top-k
     recall but a sign flip at the boundary would break a hash-exact
     oracle)."""
-    import hashlib
-
-    return [
-        (int(hashlib.md5(f"rs{p}|{j}".encode()).hexdigest()[:8], 16) % 2001) - 1000
-        for j in range(dim)
-    ]
+    return [(H.py_hash32(j, f"rs{p}") % 2001) - 1000 for j in range(dim)]
 
 
-_SQL_RS_COEF = (
-    "((CAST(CONCAT('0x', SUBSTR(MD5('rs' || {p} || '|' || (j - 1)), 1, 8)) AS BIGINT)"
-    " % 2001) - 1000)"
-)
+def _sql_rs_coef(p: str) -> str:
+    """DuckDB twin of `_rs_plane`: coefficient j - 1 of the plane the SQL
+    expression ``p`` numbers."""
+    h = H.sql_hash32("(j - 1)", f"'rs' || {p}")
+    return f"(({h} % 2001) - 1000)"
 
 
 @register(
@@ -5293,7 +5268,7 @@ _SQL_RS_COEF = (
                LIST_SUM(LIST_TRANSFORM(RANGE(0, (SELECT k FROM np)),
                    p -> CASE WHEN
                    LIST_SUM(LIST_TRANSFORM(RANGE(1, {V.EMBED_DIM + 1}),
-                       j -> qv[j] * {_SQL_RS_COEF.format(p="p")}))
+                       j -> qv[j] * {_sql_rs_coef("p")}))
                    > 0 THEN CAST(POW(2, p) AS BIGINT) ELSE 0 END)) AS bucket
         FROM q),
     pr AS (
@@ -7594,8 +7569,8 @@ def sample_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, UNNEST({TX.sql_lower_tokens()}) AS w FROM documents),
     h AS (
         SELECT doc_id,
-               {_SQL_H15.format(seed="'9'", key="w")} % 64 AS bucket,
-               CASE WHEN {_SQL_H15.format(seed="'10'", key="w")} % 2 = 0
+               {H.sql_hash15("w", 9)} % 64 AS bucket,
+               CASE WHEN {H.sql_hash15("w", 10)} % 2 = 0
                     THEN 1 ELSE -1 END AS s
         FROM tok)
     SELECT doc_id, CAST(bucket AS BIGINT) AS bucket,
@@ -7614,14 +7589,12 @@ def text_hashed_ngram_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle carries at most 64 rows per document regardless of
     document length; no vocabulary table exists anywhere (the trick's
     whole point)."""
-    from gearpump_spark.operators.hashing import seeded_hash15
-
     docs = table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(TX.lower_tokens(F.col("text"))).alias("w"))
     h = tok.select(
         "doc_id",
-        (seeded_hash15(F.col("w"), 9) % 64).alias("bucket"),
-        F.when(seeded_hash15(F.col("w"), 10) % 2 == 0, F.lit(1))
+        (H.hash15(F.col("w"), 9) % 64).alias("bucket"),
+        F.when(H.hash15(F.col("w"), 10) % 2 == 0, F.lit(1))
         .otherwise(F.lit(-1))
         .alias("s"),
     )
@@ -7659,8 +7632,8 @@ def _quality_lr_oracle(
     truncates, DuckDB // floors; they agree only on non-negative
     magnitudes). Same MATERIALIZED discipline as _bpe_exact_oracle —
     fx is referenced twice per step."""
-    h9 = _SQL_H15.format(seed="'9'", key="w")
-    h10 = _SQL_H15.format(seed="'10'", key="w")
+    h9 = H.sql_hash15("w", 9)
+    h10 = H.sql_hash15("w", 10)
     blocks = [
         f"""
     tok AS (
@@ -7836,8 +7809,8 @@ def _quality_lr_multiclass_oracle(
     exactly like the joint Spark plan. The k-class teacher label is the
     argmax over marker-word counts with first-occurrence tie-break
     (DuckDB list_position == Spark array_position semantics)."""
-    h9 = _SQL_H15.format(seed="'9'", key="w")
-    h10 = _SQL_H15.format(seed="'10'", key="w")
+    h9 = H.sql_hash15("w", 9)
+    h10 = H.sql_hash15("w", 10)
     k = len(_MC_CLASS_WORDS)
     cnt_cols = ", ".join(
         "COUNT(*) FILTER (WHERE w IN ({})) AS c{}".format(
@@ -7995,7 +7968,7 @@ def text_quality_lr_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, text FROM (
             SELECT d.doc_id, d.text,
                    MIN(d.doc_id) OVER (PARTITION BY
-                       MD5({TX.sql_normalize_text("d.text")})) AS keeper
+                       {H.sql_fingerprint("d.text")}) AS keeper
             FROM documents d JOIN zq ON zq.doc_id = d.doc_id AND zq.z >= 0)
         WHERE doc_id = keeper),{_sql_chunks(32, 32, "surv")},
     keyed AS (
@@ -8003,9 +7976,8 @@ def text_quality_lr_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM chunks),
     packed AS (
         SELECT doc_id, chunk_idx, n_tokens,
-               CAST(CONCAT('0x', SUBSTR(MD5('1' || '|' || key), 1, 15)) AS BIGINT)
-                 % 10000 % 8 AS shard,
-               MD5('0' || '|' || key) AS h, key
+               {H.sql_hash15("key", 1)} % 10000 % 8 AS shard,
+               {H.sql_seeded_md5("key", 0)} AS h, key
         FROM keyed),
     binned AS (
         SELECT doc_id, chunk_idx, n_tokens,
@@ -8858,8 +8830,7 @@ def sample_domain_reweight_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_sql_shingles(3)},
     nn AS (SELECT LEAST(10000, 1500000 // COUNT(*)) AS rate FROM documents),
     samp AS (SELECT doc_id FROM documents CROSS JOIN nn
-             WHERE CAST(CONCAT('0x', SUBSTR(MD5('11' || '|' || doc_id), 1, 15))
-                   AS BIGINT) % 10000 < nn.rate),
+             WHERE {H.sql_hash15("doc_id", 11)} % 10000 < nn.rate),
     sh AS (SELECT DISTINCT s.doc_id, s.shingle FROM shingled s
            JOIN samp USING (doc_id)),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
@@ -8877,16 +8848,11 @@ def sample_domain_reweight_int(spark: SparkSession, sf_dir: str) -> DataFrame:
         LEFT JOIN inter i ON i.a = sa.doc_id AND i.b = sb.doc_id),
     sig AS (
         SELECT doc_id,
-               MIN(MD5('0|' || shingle)) AS h0, MIN(MD5('1|' || shingle)) AS h1,
-               MIN(MD5('2|' || shingle)) AS h2, MIN(MD5('3|' || shingle)) AS h3,
-               MIN(MD5('4|' || shingle)) AS h4, MIN(MD5('5|' || shingle)) AS h5
+               {H.sql_minhash_signature()}
         FROM sh GROUP BY doc_id),
     bands AS (
         SELECT doc_id, bi.band_idx,
-               CASE bi.band_idx
-                    WHEN 0 THEN MD5(h0 || '|' || h1)
-                    WHEN 1 THEN MD5(h2 || '|' || h3)
-                    ELSE MD5(h4 || '|' || h5) END AS band_key
+               {H.sql_band_key("bi.band_idx")} AS band_key
         FROM sig
         CROSS JOIN (SELECT UNNEST([0, 1, 2]) AS band_idx) bi),
     cand AS (
@@ -9054,7 +9020,7 @@ _DSIR_SEED = 13
         UNION ALL
         SELECT doc_id, source, UNNEST({TX.sql_ngrams("tk", 2)}) AS g FROM toks),
     fb AS (SELECT doc_id, source,
-                  {_SQL_H15.format(seed="'13'", key="g")} % {_DSIR_BUCKETS} AS b
+                  {H.sql_hash15("g", 13)} % {_DSIR_BUCKETS} AS b
            FROM feats),
     tc AS (SELECT b, COUNT(*) AS ct FROM fb
            WHERE source IN {_DSIR_TGT} GROUP BY b),
@@ -9109,8 +9075,6 @@ def sample_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id for the per-doc sum; top-K is TakeOrdered (no global sort
     shuffle, no window). At 100 TB nothing but (doc_id, bucket) pairs
     ever moves."""
-    from gearpump_spark.operators.hashing import seeded_hash15
-
     tgt = ["src1", "src2", "src3"]
     docs = table(spark, sf_dir, "documents")
     base = docs.select(
@@ -9132,7 +9096,7 @@ def sample_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "source",
-            (seeded_hash15(F.col("g"), _DSIR_SEED) % _DSIR_BUCKETS).alias("b"),
+            (H.hash15(F.col("g"), _DSIR_SEED) % _DSIR_BUCKETS).alias("b"),
         )
         .localCheckpoint(eager=False)
     )
@@ -9207,7 +9171,7 @@ def sample_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT h.doc_id, h.ahash FROM hashes h
         WHERE h.doc_id NOT IN (SELECT id_b FROM pairs))
     SELECT doc_id, CAST(ahash AS BIGINT) AS ahash,
-           {_SQL_H15.format(seed="'5'", key="doc_id")} % 8 AS shard
+           {H.sql_hash15("doc_id", 5)} % 8 AS shard
     FROM surv ORDER BY doc_id
     """,
     desc="composed MEDIA curation pipeline, every stage a shipped "
@@ -9228,7 +9192,6 @@ def pipeline_media_dedup_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join, dedup one anti-join on the pair list, sharding a pure
     row-local hash. At 100 TB of images nothing but fingerprints ever
     moves between executors."""
-    from gearpump_spark.operators.hashing import seeded_hash15
     from gearpump_spark.operators.multimodal import (
         ahash_fingerprints,
         noise_pair_payload,
@@ -9255,5 +9218,5 @@ def pipeline_media_dedup_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return surv.select(
         "doc_id",
         F.col("ahash").cast("bigint").alias("ahash"),
-        (seeded_hash15(F.col("doc_id"), 5) % 8).alias("shard"),
+        (H.hash15(F.col("doc_id"), 5) % 8).alias("shard"),
     ).orderBy("doc_id")

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gearpump_spark.datasets import table
+from gearpump_spark.functions import hash as H
 from gearpump_spark.queries import register
 from gearpump_spark.queries._util import davg, dec, dsum, sql_davg, sql_dsum
 
@@ -894,9 +895,6 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r5 addition: snapshot diff (CDC bootstrap)
 # ---------------------------------------------------------------------------
 
-from gearpump_spark.operators.hashing import SQL_H15 as _SQL_H15
-from gearpump_spark.operators.hashing import seeded_hash15 as _h15
-
 # Deterministic simulated snapshots of `orders`: "old" drops the keys whose
 # seeded hash lands in the top 5%, "new" drops the bottom 3% and bumps
 # o_totalprice by 10% for keys with hash % 7 == 0 — inserts, deletes, and
@@ -911,7 +909,7 @@ _SNAP_UPD = "({h} % 7) = 0"
     oracle=f"""
     WITH hashed AS (
         SELECT o_orderkey, o_totalprice,
-               {_SQL_H15.format(seed="'21'", key="o_orderkey")} AS h
+               {H.sql_hash15("o_orderkey", 21)} AS h
         FROM orders),
     old AS (
         SELECT o_orderkey, CAST(o_totalprice AS DECIMAL(18,4)) AS price
@@ -948,7 +946,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = od.select(
         "o_orderkey",
         "o_totalprice",
-        _h15(F.col("o_orderkey"), 21).alias("h"),
+        H.hash15(F.col("o_orderkey"), 21).alias("h"),
     )
     price = F.col("o_totalprice").cast("decimal(18,4)")
     old = hashed.where((F.col("h") % 10000) < 9500).select(
@@ -992,9 +990,9 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH tagged AS (
         SELECT l_shipdate,
                CAST(STRFTIME(l_shipdate, '%Y%m') AS INT) * 4
-                 + CAST({_SQL_H15.format(seed="'13'", key="l_orderkey")} % 4 AS INT)
+                 + CAST({H.sql_hash15("l_orderkey", 13)} % 4 AS INT)
                  AS file_clustered,
-               CAST({_SQL_H15.format(seed="'13'", key="l_orderkey")} % 64 AS INT)
+               CAST({H.sql_hash15("l_orderkey", 13)} % 64 AS INT)
                  AS file_scattered
         FROM lineitem),
     layouts AS (
@@ -1025,7 +1023,7 @@ def q_file_skip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts. This is the accounting a table-format metadata layer
     (Iceberg/Delta stats) maintains incrementally."""
     li = table(spark, sf_dir, "lineitem")
-    h = _h15(F.col("l_orderkey"), 13)
+    h = H.hash15(F.col("l_orderkey"), 13)
     tagged = li.select(
         "l_shipdate",
         (

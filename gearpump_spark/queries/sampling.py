@@ -1,7 +1,8 @@
 """Deterministic sampling / splitting / mixing queries (training-data
 pipeline surface — beyond the reference, which has no sampling at all).
 
-Every operator here is keyed md5-hash sampling (operators/sampling.py), so
+Every operator here is keyed md5-hash sampling (operators/sampling.py,
+over the hash family of functions/hash.py), so
 membership is bit-identical across engines and every query has an exact
 DuckDB oracle. At scale these are scan-local filters: no shuffle, full
 pushdown, reproducible splits.
@@ -13,22 +14,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gearpump_spark.datasets import table
+from gearpump_spark.functions import hash as H
 from gearpump_spark.functions import text as TX
 from gearpump_spark.operators import sampling as SP
 from gearpump_spark.queries import register
 
-# DuckDB mirror of operators/sampling.hash_bucket, derived from the
-# single-source hash-family template.
-from gearpump_spark.operators.hashing import SQL_H15 as _SQL_H15
 
-_SQL_BUCKET = _SQL_H15 + " % 10000"
+def _sql_bucket(key: str = "doc_id", seed: int = 0) -> str:
+    """DuckDB mirror of operators/sampling.hash_bucket."""
+    return f"{H.sql_hash15(key, seed)} % {SP.BASIS}"
 
 
 @register(
     "sample_hash_10pct",
     oracle=f"""
     SELECT doc_id, lang FROM documents
-    WHERE {_SQL_BUCKET.format(seed="'0'", key="doc_id")} < 1000
+    WHERE {_sql_bucket()} < 1000
     ORDER BY doc_id
     """,
     desc="deterministic 10% sample by key hash — scan-local, shuffle-free, "
@@ -45,7 +46,7 @@ def sample_hash_10pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sample_train_test_split",
     oracle=f"""
     SELECT lang,
-           CASE WHEN {_SQL_BUCKET.format(seed="'0'", key="doc_id")} < 1000
+           CASE WHEN {_sql_bucket()} < 1000
                 THEN 'test' ELSE 'train' END AS split,
            COUNT(*) AS n
     FROM documents GROUP BY 1, 2 ORDER BY lang, split
@@ -65,7 +66,7 @@ _MIX_RATES = {"en": 5000, "de": 2500, "fr": 1000}
     "sample_stratified_mix",
     oracle=f"""
     SELECT doc_id, lang FROM documents
-    WHERE {_SQL_BUCKET.format(seed="'0'", key="doc_id")} <
+    WHERE {_sql_bucket()} <
           CASE lang WHEN 'en' THEN 5000 WHEN 'de' THEN 2500 WHEN 'fr' THEN 1000
                     ELSE -1 END
     ORDER BY doc_id
@@ -95,7 +96,7 @@ def sample_stratified_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM totals)
     SELECT d.doc_id, d.source FROM documents d
     JOIN rates r ON d.source = r.source
-    WHERE {_SQL_BUCKET.format(seed="'0'", key="d.doc_id")} < r.rate_bp
+    WHERE {_sql_bucket("d.doc_id")} < r.rate_bp
     ORDER BY d.doc_id
     """,
     desc="temperature mixing (alpha=0.5): per-source rates computed from the "
@@ -114,10 +115,10 @@ def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sample_bottom_k",
-    oracle="""
+    oracle=f"""
     SELECT doc_id FROM (
         SELECT doc_id FROM documents
-        ORDER BY MD5('0|' || doc_id) LIMIT 64)
+        ORDER BY {H.sql_seeded_md5("doc_id", 0)} LIMIT 64)
     ORDER BY doc_id
     """,
     desc="fixed-size (k=64) uniform sample = bottom-k by key hash; Spark "
@@ -146,10 +147,10 @@ def sample_bottom_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped AS (
         SELECT MIN(doc_id) AS doc_id, MIN(lang) AS lang
         FROM kept
-        GROUP BY MD5({TX.sql_normalize_text()})),
+        GROUP BY {H.sql_fingerprint()}),
     sampled AS (
         SELECT doc_id, lang FROM deduped
-        WHERE {_SQL_BUCKET.format(seed="'0'", key="doc_id")} < 5000)
+        WHERE {_sql_bucket()} < 5000)
     SELECT lang, COUNT(*) AS n_docs FROM sampled GROUP BY lang ORDER BY lang
     """,
     desc="end-to-end curation pipeline: quality filter → exact dedup (keep "
@@ -159,11 +160,9 @@ def pipeline_quality_dedup_sample(spark: SparkSession, sf_dir: str) -> DataFrame
     """The composed shape a real curation job has. At 100 TB: the quality
     filter is scan-local, dedup shuffles only (fp, doc_id, lang), and the
     sample filter runs before the final count shuffle."""
-    from gearpump_spark.operators.dedup import fingerprint
-
     docs = table(spark, sf_dir, "documents")
     kept = docs.where(TX.quality_score(F.col("text")) >= 0.5)
-    deduped = kept.groupBy(fingerprint(F.col("text")).alias("fp")).agg(
+    deduped = kept.groupBy(H.fingerprint(F.col("text")).alias("fp")).agg(
         F.min("doc_id").alias("doc_id"), F.min("lang").alias("lang")
     )
     sampled = SP.hash_sample(deduped, "doc_id", rate_bp=5000)
@@ -172,10 +171,10 @@ def pipeline_quality_dedup_sample(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "sample_k_per_group",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang FROM (
         SELECT doc_id, lang,
-               ROW_NUMBER() OVER (PARTITION BY lang ORDER BY MD5('0|' || doc_id)) AS rn
+               ROW_NUMBER() OVER (PARTITION BY lang ORDER BY {H.sql_seeded_md5("doc_id", 0)}) AS rn
         FROM documents)
     WHERE rn <= 8
     ORDER BY doc_id
@@ -196,7 +195,7 @@ def sample_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sample_epochs_mix",
     oracle=f"""
     SELECT doc_id, lang, UNNEST(RANGE(0,
-           CASE WHEN {_SQL_BUCKET.format(seed="'0'", key="doc_id")} < 5000
+           CASE WHEN {_sql_bucket()} < 5000
                 THEN 3 ELSE 2 END)) AS copy
     FROM documents
     ORDER BY doc_id, copy
@@ -215,10 +214,10 @@ def sample_epochs_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sample_pack_sequences",
-    oracle="""
+    oracle=f"""
     WITH ordered AS (
         SELECT doc_id, n_chars,
-               COALESCE(SUM(n_chars) OVER (ORDER BY MD5('0|' || doc_id), doc_id
+               COALESCE(SUM(n_chars) OVER (ORDER BY {H.sql_seeded_md5("doc_id", 0)}, doc_id
                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
         FROM documents)
     SELECT doc_id, n_chars, CAST(FLOOR(before / 4096) AS BIGINT) AS bin_id
@@ -238,9 +237,9 @@ def sample_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sample_shuffle_order",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CAST(ROW_NUMBER() OVER (ORDER BY MD5('7|' || doc_id), doc_id) AS BIGINT) - 1
+           CAST(ROW_NUMBER() OVER (ORDER BY {H.sql_seeded_md5("doc_id", 7)}, doc_id) AS BIGINT) - 1
              AS position
     FROM documents ORDER BY doc_id
     """,
@@ -254,7 +253,7 @@ def sample_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_PRI = (
     "CAST(n_chars AS DOUBLE) * 1152921504606846976.0 / CAST("
-    + _SQL_H15.format(seed="'3'", key="doc_id")
+    + H.sql_hash15("doc_id", 3)
     + " + 1 AS DOUBLE)"
 )
 
@@ -293,7 +292,7 @@ def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id,
                ROW_NUMBER() OVER (ORDER BY h, doc_id) - 1 AS r
         FROM (SELECT doc_id,
-                     {_SQL_H15.format(seed="'0'", key="doc_id")} AS h
+                     {H.sql_hash15("doc_id", 0)} AS h
               FROM documents)),
     n AS (SELECT COUNT(*) AS cnt FROM ranked),
     anchors AS (
@@ -383,7 +382,7 @@ def sample_unimax_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH keyed AS (
         SELECT doc_id, source, n_chars,
-               -LN((CAST({_SQL_H15.format(seed="'31'", key="doc_id")} AS DOUBLE) + 1.0)
+               -LN((CAST({H.sql_hash15("doc_id", 31)} AS DOUBLE) + 1.0)
                    / 1152921504606846976.0) / CAST(n_chars AS DOUBLE) AS k
         FROM documents WHERE n_chars > 0),
     ranked AS (
@@ -407,11 +406,10 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     full partition. The exponential-race key means merging two reservoirs
     is just 'keep the 20 smallest keys of the union', the mergeability
     that makes this THE distributed weighted sampler."""
-    from gearpump_spark.operators.hashing import seeded_hash15
     from pyspark.sql import Window
 
     docs = table(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
-    u = (seeded_hash15(F.col("doc_id"), 31).cast("double") + F.lit(1.0)) / F.lit(
+    u = (H.hash15(F.col("doc_id"), 31).cast("double") + F.lit(1.0)) / F.lit(
         float(1 << 60)
     )
     k = -F.log(u) / F.col("n_chars").cast("double")
@@ -455,7 +453,7 @@ def _sql_poisson_w(h: str) -> str:
     WITH reps AS (SELECT UNNEST(RANGE(0, 10)) AS rep),
     w AS (
         SELECT rep, doc_id, n_chars,
-               {_sql_poisson_w(_SQL_H15.format(seed="CAST(100 + rep AS VARCHAR)", key="doc_id"))} AS w
+               {_sql_poisson_w(H.sql_hash15("doc_id", "CAST(100 + rep AS VARCHAR)"))} AS w
         FROM documents, reps)
     SELECT CAST(rep AS BIGINT) AS rep,
            CAST(SUM(CASE WHEN w > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_docs,
@@ -483,24 +481,8 @@ def sample_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         F.explode(F.array(*[F.lit(r) for r in range(10)])).alias("rep"),
     )
-    # seed = 100 + rep varies per row: build the hash with the rep column
-    # inside the seed string (the hashing helper takes int seeds, so
-    # inline the same md5 form with a column seed).
-    hexpr = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    (F.lit(100) + F.col("rep")).cast("string"),
-                    F.lit("|"),
-                    F.col("doc_id").cast("string"),
-                ).cast("binary")
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    # seed = 100 + rep varies per row: a column seed
+    hexpr = H.hash15(F.col("doc_id"), F.lit(100) + F.col("rep"))
     w = F.lit(6)
     for k in reversed(range(6)):
         w = F.when(hexpr + 1 <= _POISSON1_T60[k], F.lit(k)).otherwise(w)

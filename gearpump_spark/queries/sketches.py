@@ -15,17 +15,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gearpump_spark.datasets import table
+from gearpump_spark.functions import hash as H
 from gearpump_spark.functions import text as TX
 from gearpump_spark.operators import sketches as SK
 from gearpump_spark.queries import register
 
 _BLOOM_WORDS = 64  # m = 2048 bits
 _BLOOM_K = 3
-
-# The single-source DuckDB mirror of the seeded hash family.
-from gearpump_spark.operators.hashing import SQL_H15 as _SQL_H15_T
-
-_SQL_H15 = _SQL_H15_T.replace("{key}", "{v}")
 
 
 @register(
@@ -36,14 +32,14 @@ _SQL_H15 = _SQL_H15_T.replace("{key}", "{v}")
     build AS (
         SELECT CAST(FLOOR(p / 32) AS BIGINT) AS word,
                BIT_OR(1::BIGINT << CAST(p % 32 AS INT)) AS bits
-        FROM (SELECT {_SQL_H15.format(seed="i", v="v")} % {_BLOOM_WORDS * 32} AS p
+        FROM (SELECT {H.sql_hash15("v", "i")} % {_BLOOM_WORDS * 32} AS p
               FROM vals, seeds)
         GROUP BY 1),
     keys AS (SELECT DISTINCT c_custkey AS key FROM customer WHERE c_custkey IS NOT NULL),
     pos AS (
         SELECT key, CAST(FLOOR(p / 32) AS BIGINT) AS word,
                (1::BIGINT << CAST(p % 32 AS INT)) AS mask
-        FROM (SELECT key, {_SQL_H15.format(seed="i", v="key")} % {_BLOOM_WORDS * 32} AS p
+        FROM (SELECT key, {H.sql_hash15("key", "i")} % {_BLOOM_WORDS * 32} AS p
               FROM keys, seeds)),
     probed AS (
         SELECT key, BOOL_AND((COALESCE(b.bits, 0) & mask) <> 0) AS bloom_maybe
@@ -180,7 +176,7 @@ _SQL_WORDS = f"""
     oracle=f"""
     WITH {_SQL_WORDS},
     cms AS (
-        SELECT j, {_SQL_H15_T.format(seed="(100 + j)", key="word")} % {_CMS_W} AS bucket,
+        SELECT j, {H.sql_hash15("word", "(100 + j)")} % {_CMS_W} AS bucket,
                COUNT(*) AS cnt
         FROM words CROSS JOIN (SELECT UNNEST(RANGE(0, {_CMS_D})) AS j) js
         GROUP BY 1, 2),
@@ -190,7 +186,7 @@ _SQL_WORDS = f"""
         FROM exact e
         CROSS JOIN (SELECT UNNEST(RANGE(0, {_CMS_D})) AS j) js
         JOIN cms c ON c.j = js.j
-                  AND c.bucket = {_SQL_H15_T.format(seed="(100 + js.j)", key="e.word")} % {_CMS_W}
+                  AND c.bucket = {H.sql_hash15("e.word", "(100 + js.j)")} % {_CMS_W}
         GROUP BY e.word)
     SELECT exact.word, CAST(exact.exact_n AS BIGINT) AS exact_n,
            CAST(est.est_n AS BIGINT) AS est_n,
@@ -226,11 +222,10 @@ def sketch_countmin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sketch_hll_registers",
-    oracle="""
+    oracle=f"""
     WITH hashed AS (
         SELECT DATE_TRUNC('hour', ts) AS window_start,
-               CAST(CONCAT('0x', SUBSTR(MD5('0' || '|' ||
-                        CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+               {H.sql_hash15("CAST(user_id AS VARCHAR)", 0)} AS h
         FROM events),
     regs AS (
         SELECT window_start, h % 1024 AS idx,
@@ -289,8 +284,7 @@ _HLL_UNION_ALPHA_NUM = "3.349767950060819e+21"
     oracle=f"""
     WITH hashed AS (
         SELECT event_type,
-               CAST(CONCAT('0x', SUBSTR(MD5('0' || '|' ||
-                        CAST(event_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+               {H.sql_hash15("CAST(event_id AS VARCHAR)", 0)} AS h
         FROM events),
     regs AS (
         SELECT event_type, h % 64 AS idx,
@@ -366,7 +360,7 @@ def sketch_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH w AS (
         SELECT DISTINCT UNNEST({TX.sql_lower_tokens()}) AS word FROM documents),
-    h AS (SELECT {_SQL_H15_T.format(seed="'4'", key="word")} AS h FROM w),
+    h AS (SELECT {H.sql_hash15("word", 4)} AS h FROM w),
     kmin AS (SELECT h FROM h ORDER BY h LIMIT 64)
     SELECT CAST(64 AS BIGINT) AS k,
            MAX(h) AS kth_hash,
@@ -400,9 +394,9 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT DISTINCT CAST(user_id AS VARCHAR) || '|'
                || CAST(CAST(DATE_TRUNC('day', ts) AS DATE) AS VARCHAR) AS e
         FROM events WHERE event_type = 'purchase'),
-    ha AS (SELECT {_SQL_H15_T.format(seed="'4'", key="e")} AS h FROM ae
+    ha AS (SELECT {H.sql_hash15("e", 4)} AS h FROM ae
            ORDER BY h LIMIT 64),
-    hb AS (SELECT {_SQL_H15_T.format(seed="'4'", key="e")} AS h FROM be
+    hb AS (SELECT {H.sql_hash15("e", 4)} AS h FROM be
            ORDER BY h LIMIT 64),
     un AS (SELECT h FROM (SELECT h FROM ha UNION SELECT h FROM hb)
            ORDER BY h LIMIT 64),
@@ -449,9 +443,9 @@ def sketch_theta_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT DISTINCT CAST(user_id AS VARCHAR) || '|'
                || CAST(CAST(DATE_TRUNC('day', ts) AS DATE) AS VARCHAR) AS e
         FROM events WHERE event_type = 'purchase'),
-    ha AS (SELECT {_SQL_H15_T.format(seed="'4'", key="e")} AS h FROM ae
+    ha AS (SELECT {H.sql_hash15("e", 4)} AS h FROM ae
            ORDER BY h LIMIT 64),
-    hb AS (SELECT {_SQL_H15_T.format(seed="'4'", key="e")} AS h FROM be
+    hb AS (SELECT {H.sql_hash15("e", 4)} AS h FROM be
            ORDER BY h LIMIT 64),
     th AS (SELECT LEAST((SELECT MAX(h) FROM ha),
                         (SELECT MAX(h) FROM hb)) AS theta),
@@ -499,7 +493,7 @@ _AMS_SEED0 = 100
     WITH signs AS (
         SELECT o_custkey AS v,
                {", ".join(
-                   "CASE WHEN " + _SQL_H15.format(seed=f"'{_AMS_SEED0 + j}'", v="o_custkey")
+                   "CASE WHEN " + H.sql_hash15("o_custkey", _AMS_SEED0 + j)
                    + f" % 2 = 0 THEN 1 ELSE -1 END AS s{j}"
                    for j in range(_AMS_J)
                )}
@@ -541,12 +535,10 @@ def sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison column is the one groupBy. The median of 4 group sums is
     (mid1+mid2)/8.0 — a power-of-two division, so the estimate column is
     exact on both engines."""
-    from gearpump_spark.operators.hashing import seeded_hash15
-
     od = table(spark, sf_dir, "orders").where(F.col("o_custkey").isNotNull())
     signs = [
         F.when(
-            seeded_hash15(F.col("o_custkey"), _AMS_SEED0 + j) % 2 == 0, F.lit(1)
+            H.hash15(F.col("o_custkey"), _AMS_SEED0 + j) % 2 == 0, F.lit(1)
         )
         .otherwise(F.lit(-1))
         .alias(f"s{j}")
@@ -605,7 +597,7 @@ def sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM documents),
     regs AS (
         SELECT source,
-               COUNT(DISTINCT {_SQL_H15.format(seed="'44'", v="word")} % 4096)
+               COUNT(DISTINCT {H.sql_hash15("word", 44)} % 4096)
                  AS v_regs,
                COUNT(DISTINCT word) AS exact_distinct
         FROM w GROUP BY source)
@@ -631,15 +623,13 @@ def sketch_hll_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; at 100 TB the sparse set is a mergeable per-partition
     structure (partial COUNT DISTINCT over 4096-bounded indices) — the
     exact-distinct audit column is the expensive side, not the sketch."""
-    from gearpump_spark.operators.hashing import seeded_hash15
-
     docs = table(spark, sf_dir, "documents")
     words = docs.select(
         "source",
         F.explode(TX.lower_tokens(F.col("text"))).alias("word"),
     )
     regs = words.groupBy("source").agg(
-        F.countDistinct(seeded_hash15(F.col("word"), 44) % 4096).alias("v_regs"),
+        F.countDistinct(H.hash15(F.col("word"), 44) % 4096).alias("v_regs"),
         F.countDistinct("word").alias("exact_distinct"),
     )
     return regs.select(
@@ -684,7 +674,7 @@ _HLL_SW_NUM = _HLL_SW_ALPHA * _HLL_SW_M * _HLL_SW_M * float(1 << 40)
     oracle=f"""
     WITH base AS (
         SELECT event_type, DATE_TRUNC('week', ts) AS wk, user_id,
-               {_SQL_H15_T.format(seed="'45'", key="user_id")} AS h
+               {H.sql_hash15("user_id", 45)} AS h
         FROM events),
     r AS (
         SELECT event_type, wk, h % {_HLL_SW_M} AS idx,
@@ -734,15 +724,13 @@ def sketch_hll_switchover(spark: SparkSession, sf_dir: str) -> DataFrame:
     width (<= m rows per group survive the partial MAX), one group agg;
     at 100 TB the register table IS the mergeable sketch state — the
     exact-distinct audit column is the expensive side, not the sketch."""
-    from gearpump_spark.operators.hashing import seeded_hash15
-
     m = _HLL_SW_M
     ev = table(spark, sf_dir, "events")
     base = ev.select(
         "event_type",
         F.date_trunc("week", "ts").alias("wk"),
         "user_id",
-        seeded_hash15(F.col("user_id"), 45).alias("h"),
+        H.hash15(F.col("user_id"), 45).alias("h"),
     )
     regs = base.groupBy(
         "event_type", "wk", (F.col("h") % m).alias("idx")
@@ -796,8 +784,7 @@ def sketch_hll_switchover(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events WHERE event_type IN ('view', 'purchase')),
     hashed AS (
         SELECT grp,
-               CAST(CONCAT('0x', SUBSTR(MD5('0' || '|' || e), 1, 15))
-                    AS BIGINT) AS h
+               {H.sql_hash15("e", 0)} AS h
         FROM el),
     regs AS (
         SELECT grp, h % 64 AS idx,
@@ -929,7 +916,7 @@ _BK_Q = {"q10": 0.1, "q25": 0.25, "q50": 0.5, "q75": 0.75, "q90": 0.9}
     oracle=f"""
     WITH ids AS (
         SELECT l_extendedprice AS v,
-               {_SQL_H15_T.format(seed="'7'", key="CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)")} AS h
+               {H.sql_hash15("CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)", 7)} AS h
         FROM lineitem),
     samp AS (SELECT v, h FROM ids ORDER BY h, v LIMIT {_BK_K}),
     arr AS (SELECT LIST(v ORDER BY v, h) AS sv FROM samp),
@@ -962,12 +949,10 @@ def sketch_bottomk_rank_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch); the audit side is one full-scan aggregate against the
     broadcast 1-row estimate record. At 100 TB the audit column is the
     optional expensive half; the sketch half never shuffles the corpus."""
-    from gearpump_spark.operators.hashing import seeded_hash15
-
     li = table(spark, sf_dir, "lineitem")
     ids = li.select(
         F.col("l_extendedprice").alias("v"),
-        seeded_hash15(
+        H.hash15(
             F.concat_ws(
                 "|",
                 F.col("l_orderkey").cast("string"),

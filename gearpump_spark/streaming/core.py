@@ -505,8 +505,9 @@ def hll_monoid(b: int = 10, value_col: str = "v") -> dict:
     aggregators the same way). Returns kwargs for monoid_windowed_state:
 
         zero     = 2^b zeroed registers
-        lift     = per-batch register maxima (md5 of the value: idx = low
-                   b bits, rho = leading-zeros+1 of the remaining 64-b)
+        lift     = per-batch register maxima over H.py_hash15(value, 0),
+                   hll_register_table's hash and rho rule: idx = low b
+                   bits, rho = leading-zeros+1 of the remaining 60-b
         plus     = elementwise max (associative, commutative, idempotent
                    — merging partials across batches/windows/partitions
                    is order-free, the exactly-once argument)
@@ -519,20 +520,23 @@ def hll_monoid(b: int = 10, value_col: str = "v") -> dict:
     bounded memory: the exact equivalent needs per-window value SETS
     (unbounded state), which is why Spark itself ships approx HLL aggs
     for batch but nothing windowed-streaming-custom — this composes the
-    engine's monoid seam with its sketch family instead.
+    engine's monoid seam with its sketch family instead. The registers
+    equal operators/sketches.py hll_register_table's (seed 0) over the
+    same rows, so a streamed window can be checked against a batch replay.
     """
-    import hashlib
     import math
+
+    from gearpump_spark.functions.hash import py_hash15
 
     m = 1 << b
 
     def lift(g) -> list[int]:
         regs = [0] * m
         for v in g[value_col]:
-            h = int.from_bytes(hashlib.md5(str(v).encode()).digest()[:8], "big")
+            h = py_hash15(v, 0)
             idx = h & (m - 1)
             w = h >> b
-            rho = (64 - b) - w.bit_length() + 1
+            rho = (60 - b) - w.bit_length() + 1
             if rho > regs[idx]:
                 regs[idx] = rho
         return regs
@@ -581,14 +585,10 @@ def kmv_monoid(k: int = 64, value_col: str = "v", seed: int = 4) -> dict:
     query `sketch_kmv_distinct` hash-matches DuckDB with the same
     formula, so streaming results can be audited against a batch replay.
     """
-    import hashlib
+    from gearpump_spark.functions.hash import py_hash15
 
     def lift(g) -> list[int]:
-        hs = {
-            int(hashlib.md5(f"{seed}|{v}".encode()).hexdigest()[:15], 16)
-            for v in g[value_col]
-        }
-        return sorted(hs)[:k]
+        return sorted({py_hash15(v, seed) for v in g[value_col]})[:k]
 
     def plus(a: list[int], c: list[int]) -> list[int]:
         return sorted(set(a) | set(c))[:k]

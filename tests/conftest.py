@@ -1,5 +1,8 @@
 import os
 import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
+from typing import NamedTuple
 
 import pytest
 
@@ -19,6 +22,67 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+class BuiltQuery(NamedTuple):
+    """One registered query built at sf0.001: its DataFrame (or the build
+    error as a string), an (input-row accumulator, input DataFrame) pair
+    per mapInPandas call made while building it, and its initial physical
+    plan as executedPlan().toString() and as simpleString()."""
+
+    df: object
+    nodes: list
+    executed_plan: str
+    simple_plan: str
+
+
+_building = threading.local()
+
+
+@pytest.fixture(scope="session")
+def built(spark):
+    """Every registered query built once, with mapInPandas wrapped to
+    count each Python node's input rows inside the worker, for the tests
+    that read every query's plan or count its Python stage runs. The
+    plans are read here, before any test executes a query."""
+    from gearpump_spark.queries import all_queries
+
+    cls = type(spark.range(1))
+    original = cls.mapInPandas
+
+    def counted(self, func, schema, *args, **kwargs):
+        acc = spark.sparkContext.accumulator(0)
+
+        def run(batches, func=func, acc=acc):
+            def rows(batches):
+                for pdf in batches:
+                    acc.add(len(pdf))
+                    yield pdf
+
+            return func(rows(batches))
+
+        _building.nodes.append((acc, self))
+        return original(self, run, schema, *args, **kwargs)
+
+    def build(item):
+        name, fn = item
+        _building.nodes = []
+        try:
+            df = fn(spark, "/root/testdata/sf0.001")
+            qe = df._jdf.queryExecution()
+            return name, BuiltQuery(
+                df, _building.nodes, qe.executedPlan().toString(), qe.simpleString()
+            )
+        except Exception as e:  # noqa: BLE001 — reported by the tests
+            return name, BuiltQuery(f"build failed: {type(e).__name__}: {e}", [], "", "")
+
+    cls.mapInPandas = counted
+    try:
+        with ThreadPoolExecutor(max_workers=4) as ex:
+            queries = dict(ex.map(build, all_queries().items()))
+    finally:
+        cls.mapInPandas = original
+    return queries
 
 
 @pytest.fixture(scope="session")

@@ -18,14 +18,21 @@ enforced mechanically.
    matches U+000B) against oracles using RE2's \\s (which does not).
 
 4. One vector layer. functions/vector.py owns the dot, norm, cosine and
-   distance folds, micro- and milli-unit quantization and the seeded
-   pick, each with its DuckDB twin: a float fold whose twin is spelled
+   distance folds and micro- and milli-unit quantization, each with
+   its DuckDB twin: a float fold whose twin is spelled
    elsewhere can reorder its sum and move the last bit of every result
    built on it.
 
 5. One fixture stream reader. datasets.stream_table owns the streaming
    read of a fixture table: its path shape, its ts rule and the flush
    sentinel. A query that opens its own file source repeats all three.
+
+6. One hash layer. functions/hash.py owns the md5 hash family: the
+   seeded digest, its 60- and 32-bit prefixes, the content fingerprint,
+   the MinHash signature and the band key, each with its DuckDB twin and,
+   where Python computes it too, its Python twin. A second spelling is
+   how the streamed HLL came to hash with another family than the batch
+   HLL it should equal.
 """
 
 from __future__ import annotations
@@ -196,3 +203,52 @@ def test_no_read_stream_in_queries():
         if "readStream" in path.read_text()
     )
     assert not found, "readStream in a query module; use datasets.stream_table: " + ", ".join(found)
+
+
+# md5 calls that are not members of the hash family: the multimodal
+# payload encoders and decoders (fixture byte generators) with their
+# oracle mirrors, and the flush sentinel's cache key.
+HASH_EXEMPT_FILES = {"gearpump_spark/operators/multimodal.py"}
+HASH_EXEMPT_FORMS = (
+    "MD5(d.text || CHR(0)",  # multimodal_frames: frame hash
+    "MD5(d.text || '|32x24|'",  # multimodal_resize: keystream block
+    "MD5(STRING_AGG(hx",  # multimodal_resize: payload hex digest
+    'F.md5(F.hex("payload"))',  # multimodal_resize: payload hex digest
+    "SUBSTR(MD5(text || CHR(0)",  # multimodal_features: fake feature
+    "MD5(REPEAT(LOWER(LPAD(TO_HEX(cb)",  # multimodal_image_dedup: pixels
+    "MD5(ARRAY_TO_STRING(LIST_TRANSFORM(RANGE(0, 16)",  # multimodal_audio_dedup
+    'hashlib.md5(f"{ts_col}|',  # streaming flush sentinel cache key
+)
+
+
+def test_hash_family_only_in_hash_module():
+    """Outside functions/hash.py no file under gearpump_spark/ spells the
+    md5 hash family: no seeded MD5('<n>|' or MD5(<n> || '|' (nor a band
+    key MD5(h0 || '|' ...), no SUBSTR(MD5( prefix, no SQL MD5( at all, no
+    F.md5( and no hashlib.md5(, except the payload forms named in
+    HASH_EXEMPT_FORMS."""
+    hash_module = ROOT / "gearpump_spark" / "functions" / "hash.py"
+    patterns = {
+        "MD5('<n>|'": re.compile(r"MD5\('\d+\|'", re.I),
+        "MD5(<n> || '|'": re.compile(r"MD5\(\s*[^(),]{1,30}?\|\|\s*'\|'", re.I),
+        "SUBSTR(MD5(": re.compile(r"SUBSTR\(MD5\(", re.I),
+        "MD5(": re.compile(r"MD5\("),
+        "F.md5(": re.compile(r"F\.md5\("),
+        'hashlib.md5(f"{seed}|': re.compile(r'hashlib\.md5\(f"[^"]*\}\|'),
+        "hashlib.md5(": re.compile(r"hashlib\.md5\("),
+    }
+    found = []
+    for path in sorted((ROOT / "gearpump_spark").rglob("*.py")):
+        rel = str(path.relative_to(ROOT))
+        if path == hash_module or rel in HASH_EXEMPT_FILES:
+            continue
+        src = path.read_text()
+        for form in HASH_EXEMPT_FORMS:
+            src = src.replace(form, "")
+        found += [f"{rel}: {label}" for label, pat in patterns.items() if pat.search(src)]
+    assert not found, (
+        "md5 hash family outside functions/hash.py; use H.seeded_md5 / "
+        "H.hash15 / H.hash32 / H.digest / H.fingerprint / "
+        "H.minhash_signature / H.band_key, their H.sql_* twins or their "
+        "H.py_* twins: " + "; ".join(found)
+    )

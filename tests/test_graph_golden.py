@@ -1,16 +1,19 @@
 """Golden result hashes at sf0.001 for the 17 registered graph queries,
-the queries that tokenize text, the vector queries and the streaming
-queries.
+the queries that tokenize text, the vector queries, the streaming
+queries and the queries whose oracle hashes.
 
 test_oracle_parity compares each query with its DuckDB oracle, and both
 sides now read one shared input: the co-purchase or shipment graph (the
 DataFrame builders and CTE fragments at the top of queries/llm.py), the
-token forms of functions/text.py, or the vector forms of
-functions/vector.py, each with its SQL twin. A change to a shared input
-would move the two sides together and still pass there. These hashes pin
-the results themselves; they were recorded from the implementations
-that still built every graph input, spelled every whitespace split and
-wrote every vector fold by hand.
+token forms of functions/text.py, the vector forms of
+functions/vector.py, or the hash forms of functions/hash.py, each with
+its SQL twin. A change to a shared input would move the two sides
+together and still pass there. These hashes pin the results themselves;
+they were recorded from the implementations that still built every
+graph input, spelled every whitespace split, wrote every vector fold
+and spelled every seeded md5 by hand. The multimodal payload queries
+are not pinned for their hashes: their md5 calls encode fixture bytes
+and are not members of the hash family.
 
 The hash is the driver contract checker's own (``value_hash`` over
 ``norm``, tools/drive_contract.py), so a mismatch here reads the same as a
@@ -91,17 +94,32 @@ GOLDEN_SF001 = {
     "pipeline_chunk_pack": "1f182749cfa8ca22",
     "pipeline_quality_dedup_pack": "32ba69e7eb8d76fa",
     "pipeline_quality_dedup_sample": "19806659ee472741",
+    "q_file_skip_stats": "5566c371edcaa82a",
     "q_running_aggregate_stream": "b9be6e4d4757ae81",
     "q_session_window_stream": "51bbeb4ca3488d15",
+    "q_snapshot_diff": "66c4706a43e19d8d",
     "q_stream_dedup_replay": "ecad457308c949b2",
     "q_stream_join_outer": "eeb40ecbb69add0b",
     "q_stream_stream_join": "be9feab51f4198e3",
     "q_window_sliding_stream": "f679200bd5e557b0",
     "q_window_tumbling_stream": "ecad457308c949b2",
+    "sample_bottom_k": "61d4512c52a3c2e3",
     "sample_cluster_split": "e722df1f5a5aa16f",
     "sample_curriculum_order": "99dbc78be453be2a",
     "sample_domain_reweight_int": "db03473c64a0088d",
     "sample_dsir_select": "38e0a1526c5f1851",
+    "sample_epochs_mix": "65d00608751422c9",
+    "sample_hash_10pct": "389099a7a3fe093d",
+    "sample_k_per_group": "9738ac80d26ff0b4",
+    "sample_negative_pairs": "ba71c6230b426879",
+    "sample_pack_sequences": "075a005bf43540d1",
+    "sample_poisson_bootstrap": "ccad8cb23192afd8",
+    "sample_shuffle_order": "521de6d725a948b4",
+    "sample_stratified_mix": "54082443d92ab9ee",
+    "sample_temperature_mix": "4886a19be394ccfc",
+    "sample_train_test_split": "956e6c58cbc90fa5",
+    "sample_weighted_priority": "42fb54347933a26d",
+    "sample_weighted_reservoir": "8da059f956860229",
     "similarity_binary_rerank": "8e1f36634d55d564",
     "similarity_hard_negatives": "d93dad9a79cb391e",
     "similarity_ivf_recall": "9bea5fe3a32ffe94",
@@ -114,9 +132,18 @@ GOLDEN_SF001 = {
     "similarity_topk_ivfpq": "8a77fcdd02c82720",
     "similarity_topk_lsh": "eb0fd153a5d3ebd2",
     "similarity_topk_pq_adc": "98398181501ea8a4",
+    "sketch_ams_f2": "f8215a0982909f48",
+    "sketch_bloom_membership": "17f4b3a8350f97de",
+    "sketch_bottomk_rank_error": "7c94fe94da260481",
     "sketch_countmin_words": "869613ff8b4b4613",
+    "sketch_hll_intersection": "07e1aa08d6898195",
+    "sketch_hll_registers": "41fba9d39e07cfaf",
     "sketch_hll_sparse": "475a2681f299c790",
+    "sketch_hll_switchover": "0a12affa97c29f1a",
+    "sketch_hll_union": "77d03455bfab3f70",
     "sketch_kmv_distinct": "b3439d8198133b05",
+    "sketch_theta_anotb": "8c7c3a50e87f2fde",
+    "sketch_theta_overlap": "c199c25013925cc0",
     "text_backoff_lm_score": "005cae190c57564f",
     "text_bigram_lm_perplexity": "7ab71b51e6ff1e2c",
     "text_blocklist_filter": "3e73db7969bf9dd1",
@@ -140,6 +167,7 @@ GOLDEN_SF001 = {
     "text_longest_dup_ngram": "6796410e61beeaf2",
     "text_oov_rate": "4f79e0d17b1e63b1",
     "text_phrase_match": "c7f347be0c6eb811",
+    "text_pii_redact": "040b55800b17f278",
     "text_pmi_bigrams": "505589694a6d7801",
     "text_qgram_lang_distance": "cfe163dfeb17bac9",
     "text_quality": "372be178dfef6e07",

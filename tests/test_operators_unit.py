@@ -2756,14 +2756,14 @@ def test_weighted_reservoir_is_mergeable(spark, sf_dir):
     merge at the end."""
     from pyspark.sql import functions as F
 
-    from gearpump_spark.operators.hashing import seeded_hash15
+    from gearpump_spark.functions.hash import hash15
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .where((F.col("n_chars") > 0) & (F.col("source") == "src0"))
         .select("doc_id", "n_chars")
     )
-    u = (seeded_hash15(F.col("doc_id"), 31).cast("double") + F.lit(1.0)) / F.lit(
+    u = (hash15(F.col("doc_id"), 31).cast("double") + F.lit(1.0)) / F.lit(
         float(1 << 60)
     )
     keyed = docs.select("doc_id", (-F.log(u) / F.col("n_chars")).alias("k"))

@@ -1068,27 +1068,15 @@ def _has_single_partition_window(p: str) -> bool:
     return False
 
 
-def test_no_undocumented_global_window_sorts(spark):
-    """Every registered query's physical plan is scanned; the set of
+def test_no_undocumented_global_window_sorts(built):
+    """Every registered query's physical plan (built once at sf0.001 by
+    the session fixture in tests/conftest.py) is scanned; the set of
     queries containing a Window fed by Exchange SinglePartition must equal
     GLOBAL_WINDOW_ALLOWLIST exactly."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    sf = "/root/testdata/sf0.001"
-
-    def flag(item):
-        name, fn = item
-        try:
-            # not plan(): explain() prints to process-global stdout, which
-            # interleaves across threads; read the plan string directly.
-            df = fn(spark, sf)
-            p = df._jdf.queryExecution().simpleString()
-            return name, _has_single_partition_window(p)
-        except Exception as e:  # noqa: BLE001 — surface as a flag
-            return name, f"plan-failed: {type(e).__name__}"
-
-    with ThreadPoolExecutor(max_workers=8) as ex:
-        results = dict(ex.map(flag, QS.items()))
+    results = {
+        name: q.df if isinstance(q.df, str) else _has_single_partition_window(q.simple_plan)
+        for name, q in built.items()
+    }
 
     errors = {n: r for n, r in results.items() if isinstance(r, str)}
     assert not errors, f"plans failed to build: {errors}"
@@ -1218,18 +1206,12 @@ def test_theta_anotb_sketches_are_takeordered_corpus_never_joined(spark, sf_dir)
     assert "ExistingRDD" in p, "min-set checkpoints gone — corpus re-scans are back"
     assert "parquet" not in p, "combine leg re-reads the corpus"
     # and the min-set subtree (pre-checkpoint) is a TakeOrdered, never a
-    # global sort: pin it on the operator's sketch shape directly
-    from gearpump_spark.operators.hashing import seeded_hash15
+    # global sort: pin it on the min-set the operators build
+    from gearpump_spark.operators.sketches import kmv_minset
     from pyspark.sql import functions as F
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    kmin = (
-        ev.select(F.col("user_id").cast("string").alias("_v"))
-        .distinct()
-        .select(seeded_hash15(F.col("_v"), 4).alias("h"))
-        .orderBy("h")
-        .limit(64)
-    )
+    kmin = kmv_minset(ev.select(F.col("user_id").cast("string").alias("u")), "u", 64, 4)
     assert "TakeOrderedAndProject" in plan(kmin)
 
 

@@ -7,7 +7,8 @@ action. operators/multimodal.py sorted_python_stage range-partitions the
 ids before the stages and sorts within partitions after them, so the
 sample reads only the scan.
 
-Two checks over every registered query, built once at sf0.001:
+Two checks over every registered query, built once at sf0.001 (the
+session fixture ``built`` in tests/conftest.py):
 
 1. Plan: no Python node sits below a rangepartitioning exchange without
    another exchange in between, read from the initial physical plan (no
@@ -21,16 +22,10 @@ Two checks over every registered query, built once at sf0.001:
 from __future__ import annotations
 
 import re
-import threading
-from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
-from gearpump_spark.queries import all_queries
-
-SF = "/root/testdata/sf0.001"
 PYTHON_NODES = ("MapInPandas", "MapInArrow", "FlatMapGroupsInPandas", "EvalPython")
-_building = threading.local()
 
 
 def _depth(line: str) -> int:
@@ -60,44 +55,6 @@ def python_below_range_exchange(plan: str) -> list[str]:
     return found
 
 
-@pytest.fixture(scope="module")
-def built(spark):
-    """name -> (DataFrame or build error, [(input-row accumulator, input
-    DataFrame) per mapInPandas call made while building it])."""
-    cls = type(spark.range(1))
-    original = cls.mapInPandas
-
-    def counted(self, func, schema, *args, **kwargs):
-        acc = spark.sparkContext.accumulator(0)
-
-        def run(batches, func=func, acc=acc):
-            def rows(batches):
-                for pdf in batches:
-                    acc.add(len(pdf))
-                    yield pdf
-
-            return func(rows(batches))
-
-        _building.nodes.append((acc, self))
-        return original(self, run, schema, *args, **kwargs)
-
-    def build(item):
-        name, fn = item
-        _building.nodes = []
-        try:
-            return name, (fn(spark, SF), _building.nodes)
-        except Exception as e:  # noqa: BLE001 — reported by the tests
-            return name, (f"build failed: {type(e).__name__}: {e}", [])
-
-    cls.mapInPandas = counted
-    try:
-        with ThreadPoolExecutor(max_workers=4) as ex:
-            queries = dict(ex.map(build, all_queries().items()))
-    finally:
-        cls.mapInPandas = original
-    return queries
-
-
 def test_range_exchange_detection():
     """The plan reader flags a Python node under a range exchange and
     passes one behind a nearer exchange."""
@@ -117,11 +74,11 @@ def test_range_exchange_detection():
 
 
 def test_no_python_stage_below_a_range_exchange(built):
-    errors = {n: df for n, (df, _) in built.items() if isinstance(df, str)}
+    errors = {n: q.df for n, q in built.items() if isinstance(q.df, str)}
     assert not errors, errors
     bad = {}
-    for name, (df, _) in built.items():
-        nodes = python_below_range_exchange(df._jdf.queryExecution().executedPlan().toString())
+    for name, q in built.items():
+        nodes = python_below_range_exchange(q.executed_plan)
         if nodes:
             bad[name] = nodes
     assert not bad, (
@@ -136,14 +93,14 @@ def test_python_stages_run_once_per_action(built):
     Python node its input exactly once.
     test_jpeg_refined_fused_single_arrow_stage counts plan nodes; this
     counts runs."""
-    staged = {name: nodes for name, (_, nodes) in built.items() if nodes}
+    staged = {name: q.nodes for name, q in built.items() if q.nodes}
     # the counting wrapper saw the stages (a vacuous pass otherwise)
     assert {"multimodal_jpeg_refined_real", "text_bpe_tokens"} <= set(staged)
     wrong = {}
     for name, nodes in sorted(staged.items()):
         expected = [child.count() for _, child in nodes]
         before = [acc.value for acc, _ in nodes]
-        built[name][0].write.format("noop").mode("overwrite").save()
+        built[name].df.write.format("noop").mode("overwrite").save()
         seen = [acc.value - b for (acc, _), b in zip(nodes, before)]
         if seen != expected:
             wrong[name] = f"input rows seen {seen}, input rows {expected}"
@@ -162,5 +119,5 @@ def test_sorted_python_stage_keeps_global_order(built, name, order):
     """A range-partitioned, partition-sorted result collects in the same
     order a global orderBy gave: ascending key, then the secondary
     column a fan-out stage emits."""
-    rows = [tuple(r) for r in built[name][0].select(*order).collect()]
+    rows = [tuple(r) for r in built[name].df.select(*order).collect()]
     assert len(rows) > 1 and rows == sorted(rows)

@@ -534,10 +534,8 @@ def test_streaming_incremental_dedup_foreachbatch(spark, tmp_path):
     — so later batches reject duplicates of earlier accepted docs, not
     just of the original snapshot. foreachBatch runs batches strictly in
     sequence, which is exactly the ordering this loop needs."""
-    from gearpump_spark.operators.dedup import (
-        fingerprint,
-        incremental_dedup_against_index,
-    )
+    from gearpump_spark.functions.hash import fingerprint
+    from gearpump_spark.operators.dedup import incremental_dedup_against_index
 
     idx_path = str(tmp_path / "fp_index")
     snap = spark.createDataFrame(
@@ -598,12 +596,13 @@ def test_streaming_incremental_dedup_foreachbatch(spark, tmp_path):
 def test_hll_monoid_windowed_distinct(spark, tmp_path):
     """Streaming approximate COUNT DISTINCT per window via the HLL
     register monoid riding monoid_windowed_state's codec seam: the
-    streamed estimate must equal a pure-python HLL over the same rows
-    (same registers -> same estimate, across batch boundaries), and land
-    within the sketch's error envelope of the true distinct count."""
-    import hashlib
+    streamed estimate must equal the estimate from the batch
+    hll_register_table registers over the same rows (same registers ->
+    same estimate, across batch boundaries), and land within the
+    sketch's error envelope of the true distinct count."""
     import math
 
+    from gearpump_spark.operators.sketches import hll_register_table
     from gearpump_spark.streaming import hll_monoid, monoid_windowed_state
 
     # two windows for key "a", values split ACROSS micro-batches so the
@@ -623,13 +622,14 @@ def test_hll_monoid_windowed_distinct(spark, tmp_path):
     }
 
     b, m = 10, 1 << 10
+    batch = spark.createDataFrame(
+        [(0, v) for _, v, _ in w0] + [(10, v) for _, v, _ in w1], "w long, v long"
+    )
+    regs = {0: [0] * m, 10: [0] * m}
+    for r in hll_register_table(batch, "v", group_cols=["w"], b=b).collect():
+        regs[r.w][r.idx] = r.rho
 
-    def pyhll(values):
-        regs = [0] * m
-        for v in values:
-            h = int.from_bytes(hashlib.md5(str(v).encode()).digest()[:8], "big")
-            idx, w = h & (m - 1), h >> b
-            regs[idx] = max(regs[idx], (64 - b) - w.bit_length() + 1)
+    def estimate(regs):
         alpha = 0.7213 / (1 + 1.079 / m)
         est = alpha * m * m / sum(2.0 ** -r for r in regs)
         zeros = regs.count(0)
@@ -637,10 +637,7 @@ def test_hll_monoid_windowed_distinct(spark, tmp_path):
             est = m * math.log(m / zeros)
         return est
 
-    expect = {
-        0: pyhll([v for _, v, _ in w0]),
-        10: pyhll([v for _, v, _ in w1]),
-    }
+    expect = {w: estimate(r) for w, r in regs.items()}
     assert set(got) == set(expect)
     for w, est in expect.items():
         assert abs(got[w] - est) < 1e-9, (w, got[w], est)
