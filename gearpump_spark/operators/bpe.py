@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gearpump_spark.functions import text as TX
+from gearpump_spark.functions.exact import py_ln_micro
 
 
 def _word_counts(docs: DataFrame, text_col: str) -> DataFrame:
@@ -478,20 +479,6 @@ def wordpiece_tokenize(
 UNIGRAM_TIE_BASE = 1024
 
 
-def _ln_micro(x: int) -> int:
-    """ROUND(ln x, 6) in integer micro-units, HALF_UP on the exact binary
-    double — bit-compatible with DuckDB's ROUND(LN(CAST(x AS DOUBLE)), 6)
-    (CPython math.log and DuckDB std::log resolve to the same platform
-    libm, and both engines round half away from zero)."""
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return int(
-        Decimal(math.log(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
-        * 1_000_000
-    )
-
-
 def unigram_vocab_scores(
     docs: DataFrame,
     n_merges: int = 16,
@@ -527,8 +514,8 @@ def unigram_vocab_scores(
         p = a + b
         counts[p] = counts.get(p, 0) + f
     total = sum(counts.values())
-    ln_tot = _ln_micro(total)
-    return {p: _ln_micro(f) - ln_tot for p, f in counts.items()}
+    ln_tot = py_ln_micro(total)
+    return {p: py_ln_micro(f) - ln_tot for p, f in counts.items()}
 
 
 def unigram_encode_word(

@@ -118,7 +118,9 @@ def lsh_candidate_pairs(
     # upstream (tokenize + shingle explode + MinHash aggregate) twice.
     # Lazy localCheckpoint (r11, the wedge-tier discipline) materializes
     # the n_bands-rows-per-doc relation once; both join sides read the
-    # blocks. eager=False keeps construction side-effect-free.
+    # blocks. eager=False defers the blocks to the first action, but under
+    # AQE creating the checkpoint already runs the shuffle stages below it
+    # (1-2 jobs at sf0.001).
     keyed = keyed.localCheckpoint(eager=False)
     a, b = keyed.alias("a"), keyed.alias("b")
     return (

@@ -518,7 +518,7 @@ def triangle_count_estimate(
     n_sampled_triangles, est_triangles), where n_nodes/n_edges describe
     the FULL graph and est_triangles = n_sampled_triangles / p^3.
     """
-    from gearpump_spark.functions.hash import hash15
+    from gearpump_spark.operators.sampling import hash_bucket
 
     und = _canonical_undirected(edges, src, dst)
     # The canonical edge list is consumed by EVERY downstream leg — the
@@ -527,14 +527,12 @@ def triangle_count_estimate(
     # the node count, and the edge count. When the upstream derivation is
     # expensive (e.g. a co-purchase self-join), staying fully lazy re-runs
     # it per consumer — measured 12.4s vs 3.4s at sf0.1. Lazy
-    # localCheckpoint materializes it once at first action (eager=False:
-    # building the DataFrame stays side-effect-free, unlike the exact
-    # path's "auto" which must count() to pick a strategy).
+    # localCheckpoint materializes it once (eager=False defers the blocks
+    # to the first action, but under AQE creating the checkpoint runs the
+    # shuffle stages below it: 4 jobs at sf0.001; the exact path's "auto"
+    # adds a count() to pick a strategy).
     und = und.localCheckpoint(eager=False)
-    kept = und.where(
-        hash15(F.concat_ws(",", F.col("u"), F.col("v")), seed) % 10000
-        < p_bp
-    )
+    kept = und.where(hash_bucket(F.concat_ws(",", F.col("u"), F.col("v")), seed) < p_bp)
     # explicit strategy (no count action); "merge" because a graph worth
     # SAMPLING is one whose sampled edge list may still be too big to
     # broadcast. kept IS canonical (a filter over the distinct canonical
@@ -579,9 +577,9 @@ def _degree_oriented_wedges(und: DataFrame, broadcast_wedges: bool = False):
       consumer re-derives the whole degree-agg + attach-join subtree —
       the r10 plan audit counted the orientation derivation THREE times
       in the physical plan (6 SortMergeJoins, ~15 Exchanges for what is
-      one pass of work). eager=False keeps DataFrame construction
-      side-effect-free (the estimate path's invariant); blocks
-      materialize once at the first action.
+      one pass of work). eager=False defers the blocks to the first
+      action, but under AQE creating each checkpoint runs the shuffle
+      stages below it (1-3 jobs at sf0.001).
 
     Two wedge-join strategies, chosen by the caller's closing strategy
     (the same small-graph/large-graph split):
@@ -1159,8 +1157,9 @@ def link_predict_common_neighbors(
     # The canonical edge list feeds FOUR consumers (both adjacency
     # directions, the degree agg, and the anti-join); materialize it once
     # so the possibly-expensive upstream edge derivation doesn't re-run
-    # per consumer. Lazy (r11): blocks materialize at first action, so
-    # construction stays side-effect-free.
+    # per consumer. Lazy (r11): the blocks materialize at the first action,
+    # but under AQE creating the checkpoint runs the shuffle stages below
+    # it (4 jobs at sf0.001).
     und = und.localCheckpoint(eager=False)
     adj = _adjacency(und)
     deg = adj.groupBy("n").agg(F.count("*").alias("d"))

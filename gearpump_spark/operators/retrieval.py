@@ -110,8 +110,9 @@ def tokenize_postings(
     multiple legs (postings; dl twice — the scoring join and the Σdl in
     stats), and without the cut each leg re-runs the full regex tokenize
     scan — the dominant per-query cost of the inline BM25 path. eager=False
-    keeps construction side-effect-free; blocks materialize once at the
-    first action and every leg reads them. ``materialize_tokens=False``
+    defers the blocks to the first action, and every leg reads them; under
+    AQE creating the checkpoint still runs the scan-side shuffle below it
+    (1 job at sf0.001). ``materialize_tokens=False``
     keeps the relation fully lazy for single-consumer callers (the
     persistent-index build reads only postings — materializing the token
     arrays there would be pure overhead)."""

@@ -39,10 +39,13 @@ BASIS = 10_000  # rates are expressed in basis points (1 bp = 0.01%)
 
 def hash_bucket(key: Column, seed: int = 0) -> Column:
     """Deterministic bucket in [0, 10000): hex15(md5(seed|key)) % 10000.
-
-    DuckDB mirror: H.sql_hash15(key, seed) % 10000.
-    """
+    Its DuckDB twin is `sql_hash_bucket`."""
     return (H.hash15(key, seed) % BASIS).alias("bucket")
+
+
+def sql_hash_bucket(key: str = "doc_id", seed: int | str = 0) -> str:
+    """DuckDB twin of `hash_bucket` over a SQL key expression."""
+    return f"{H.sql_hash15(key, seed)} % {BASIS}"
 
 
 def hash_sample(df: DataFrame, key_col: str, rate_bp: int, seed: int = 0) -> DataFrame:

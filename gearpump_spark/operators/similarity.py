@@ -478,8 +478,9 @@ def semantic_dedup(
     # action and lets every consumer read the persisted blocks instead of
     # re-running the cross join 3× (measured: 2.9s → ~1s at sf0.1; at
     # 100 TB the k·n assignment pass is the dominant cost, so recomputing
-    # it per consumer triples the whole job). eager=False keeps the
-    # DataFrame build side-effect-free.
+    # it per consumer triples the whole job). eager=False defers the blocks
+    # to the first action, but under AQE creating the checkpoint runs the
+    # shuffle stages below it (4 jobs at sf0.001).
     assigned = assigned.localCheckpoint(eager=False)
     # one-time per-vector double cast + norm (oracle-identical tree:
     # round(dot/(norm_a*norm_b), 4) == round(dot/(sqrt(f_a)*sqrt(f_b)), 4))

@@ -28,7 +28,7 @@ same bound; both sides must print `true` plus exact anchor columns.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gearpump_spark.functions import hash as H
@@ -257,7 +257,8 @@ def hll_register_table(
 
     Streaming's hll_monoid builds the same registers at seed 0 with the
     Python twin H.py_hash15, so a streamed window's estimate equals the
-    estimate from this table over the same rows. The 15-hex-digit family
+    estimate from this table over the same rows. The DuckDB twin is
+    `sql_hll_registers`. The 15-hex-digit family
     keeps every step bit-reproducible in DuckDB (H.sql_hash15 mirror), so
     the SKETCH STATE itself is oracle-checkable — not just a tolerance
     band around the estimate (contrast approx_distinct_by). Registers are
@@ -281,6 +282,58 @@ def hll_register_table(
         .groupBy(*gcols, "idx")
         .agg(F.max("rho").alias("rho"))
     )
+
+
+def sql_hll_registers(
+    rel: str,
+    value_col: str,
+    group_cols: list[str] | None = None,
+    b: int = 10,
+    seed: int = 0,
+) -> str:
+    """DuckDB twin of `hll_register_table`: a SELECT over the relation
+    ``rel`` with one row per (group, idx) and its max rank ``rho``."""
+    g = "".join(f"{c}, " for c in group_cols or [])
+    h = H.sql_hash15(f"CAST({value_col} AS VARCHAR)", seed)
+    top = 60 - b + 1
+    return f"""SELECT {g}h % {1 << b} AS idx,
+               MAX(CASE WHEN (h >> {b}) > 0
+                        THEN {top} - LENGTH(BIN(h >> {b}))
+                        ELSE {top} END) AS rho
+        FROM (SELECT {g}{h} AS h FROM {rel}) GROUP BY {g}idx"""
+
+
+def hll_alpha_num(m: int, shift: int) -> float:
+    """The raw-HLL numerator alpha_m * m^2 * 2^shift, with the register
+    terms scaled by 2^shift so that their harmonic sum is an exact
+    integer. Both engines read the same double (the SQL twins render its
+    repr)."""
+    return 0.7213 / (1.0 + 1.079 / m) * m * m * float(1 << shift)
+
+
+def hll_raw_estimate(b: int) -> Column:
+    """Raw HLL estimate of a group of register rows (idx, rho) of
+    ``2^b`` registers, rounded to 4 places: alpha_m m^2 / sum(2^-rho)
+    with an absent register counting 2^0. Every term 2^(60 - rho) is an
+    integer, so the denominator is an exact decimal sum and the estimate
+    is one IEEE division in either engine. No linear-counting
+    correction. An aggregate expression; the DuckDB twin is
+    `sql_hll_raw_estimate`."""
+    m = 1 << b
+    term = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(60 - rho AS INT))")
+    inv_sum = F.sum(term.cast("decimal(20,0)")) + (F.lit(m) - F.count("*")).cast(
+        "decimal(38,0)"
+    ) * F.lit(1 << 60).cast("decimal(38,0)")
+    return F.round(F.lit(hll_alpha_num(m, 60)) / inv_sum.cast("double"), 4)
+
+
+def sql_hll_raw_estimate(b: int) -> str:
+    """DuckDB twin of `hll_raw_estimate`."""
+    m = 1 << b
+    return f"""ROUND({hll_alpha_num(m, 60)!r} / CAST(
+                   CAST(SUM(CAST(1 AS BIGINT) << CAST(60 - rho AS INT)) AS HUGEINT)
+                   + CAST({m} - COUNT(*) AS HUGEINT)
+                     * CAST(CAST(1 AS BIGINT) << 60 AS HUGEINT) AS DOUBLE), 4)"""
 
 
 def kmv_minset(df: DataFrame, col: str, k: int, seed: int) -> DataFrame:

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from gearpump_spark.datasets import stream_table, table
 from gearpump_spark.functions import text as TX
 from gearpump_spark.queries import register
-from gearpump_spark.queries._util import dec, dsum, sql_dsum
+from gearpump_spark.functions.exact import dec, dsum, out_double, sql_dec, sql_dsum, sql_out_double
 from gearpump_spark.stream import Stream
 from gearpump_spark.streaming.core import (
     before_flush,
@@ -555,13 +555,13 @@ def q_flatten_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_multi_output_tags",
-    oracle="""
+    oracle=f"""
     SELECT event_id, 'engagement' AS tag,
-           CAST(CAST(ROUND(CAST(value AS DECIMAL(18,4)) * 2, 2) AS DECIMAL(38,2)) AS DOUBLE) AS out_value
+           {sql_out_double(f"{sql_dec('value')} * 2")} AS out_value
     FROM events WHERE event_type IN ('click', 'view')
     UNION ALL
     SELECT event_id, 'revenue' AS tag,
-           CAST(CAST(ROUND(CAST(value AS DECIMAL(18,4)) * 100, 2) AS DECIMAL(38,2)) AS DOUBLE) AS out_value
+           {sql_out_double(f"{sql_dec('value')} * 100")} AS out_value
     FROM events WHERE event_type = 'purchase'
     UNION ALL
     SELECT event_id, 'ops' AS tag, CAST(0.0 AS DOUBLE) AS out_value
@@ -580,12 +580,12 @@ def q_multi_output_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     engagement = ev.filter(F.col("event_type").isin("click", "view")).select(
         "event_id",
         F.lit("engagement").alias("tag"),
-        (dec("value") * 2).cast("decimal(38,2)").cast("double").alias("out_value"),
+        out_double(dec("value") * 2).alias("out_value"),
     )
     revenue = ev.filter(F.col("event_type") == "purchase").select(
         "event_id",
         F.lit("revenue").alias("tag"),
-        (dec("value") * 100).cast("decimal(38,2)").cast("double").alias("out_value"),
+        out_double(dec("value") * 100).alias("out_value"),
     )
     ops = ev.filter(F.col("event_type").isin("signup", "error")).select(
         "event_id",

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gearpump_spark.datasets import row_count, stream_table, table
+from gearpump_spark.functions.exact import ln_dec, sql_ln_dec, sql_ln_micro
 from gearpump_spark.operators import dedup as D
 from gearpump_spark.operators import sampling as SP
 from gearpump_spark.operators import similarity as S
@@ -520,7 +521,7 @@ def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TEST_BUCKET = H.sql_hash15("doc_id", 0) + " % 10000 < 1000"
+_SQL_TEST_BUCKET = SP.sql_hash_bucket("doc_id", 0) + " < 1000"
 
 
 @register(
@@ -1447,7 +1448,9 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     count (they use 50k at LAION scale): fixing k would make the pair
     join quadratic in the corpus — measured 36x on a 10x data step before
     k became data-derived. k is sized from the parquet footers' row
-    counts (datasets.row_count), so building the query runs no job."""
+    counts (datasets.row_count), so sizing it runs no job; building the
+    query still does, because under AQE the lazy checkpoint of the
+    assignment runs the shuffle stages below it (4 jobs at sf0.001)."""
     emb = table(spark, sf_dir, "embeddings")
     k = max(8, row_count(spark, sf_dir, "embeddings") // 250)
     return S.semantic_dedup(emb, n_clusters=k, threshold=0.30).orderBy("vec_id")
@@ -2299,7 +2302,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_sql_copurchase()},
     kept AS (
         SELECT u, v FROM copurchase
-        WHERE {H.sql_hash15("(u || ',' || v)", 7)} % 10000 < 2000),
+        WHERE {SP.sql_hash_bucket("(u || ',' || v)", 7)} < 2000),
     st AS (
         SELECT COUNT(*) AS n_sampled_triangles FROM kept e1
         JOIN kept e2 ON e2.u = e1.u AND e2.v > e1.v
@@ -2370,7 +2373,7 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return CH.chunk_by_tokens(docs, size=32, stride=24).orderBy("doc_id", "chunk_idx")
 
 
-_SQL_SNAP = "(" + H.sql_hash15("doc_id", 7) + " % 10000) < 8000"
+_SQL_SNAP = "(" + SP.sql_hash_bucket("doc_id", 7) + ") < 8000"
 
 
 @register(
@@ -2961,10 +2964,6 @@ def _unigram_oracle(
         f"JOIN p{k} pk ON pk.l = b.l AND pk.r = b.r"
         for k in range(n_merges)
     )
-    lnm = (
-        "CAST(CAST(ROUND(LN(CAST({x} AS DOUBLE)), 6) AS DECIMAL(18,6))"
-        " * 1000000 AS BIGINT)"
-    )
     blocks.append(
         f""",
     cc AS (
@@ -2978,7 +2977,7 @@ def _unigram_oracle(
     ptot AS (SELECT CAST(SUM(f) AS BIGINT) AS tot FROM pc),
     vm AS MATERIALIZED (
       SELECT MAP_FROM_ENTRIES(LIST((p, s))) AS m FROM (
-        SELECT p, {lnm.format(x='f')} - {lnm.format(x='t.tot')} AS s
+        SELECT p, {sql_ln_micro('f')} - {sql_ln_micro('t.tot')} AS s
         FROM pc CROSS JOIN ptot t)),
     wt AS MATERIALIZED (SELECT DISTINCT word FROM bpe_words),
     s0 AS MATERIALIZED (SELECT word, [CAST(0 AS BIGINT)] AS ks FROM wt)"""
@@ -3072,7 +3071,7 @@ def text_sentencepiece_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM chunks),
     packed AS (
         SELECT doc_id, chunk_idx, n_tokens,
-               {H.sql_hash15("key", 1)} % 10000 % 8 AS shard,
+               {SP.sql_hash_bucket("key", 1)} % 8 AS shard,
                {H.sql_seeded_md5("key", 0)} AS h, key
         FROM keyed),
     binned AS (
@@ -3120,11 +3119,11 @@ def pipeline_chunk_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     top AS (SELECT w1, w2, n12 FROM b ORDER BY n12 DESC, w1, w2 LIMIT 50)
     SELECT t.w1, t.w2, t.n12,
            u1.n AS n1, u2.n AS n2,
-           CAST(CAST(ROUND(LN(t.n12), 6) AS DECIMAL(18,6))
-              + 2 * CAST(ROUND(LN(tot.nu), 6) AS DECIMAL(18,6))
-              - CAST(ROUND(LN(nb.nbt), 6) AS DECIMAL(18,6))
-              - CAST(ROUND(LN(u1.n), 6) AS DECIMAL(18,6))
-              - CAST(ROUND(LN(u2.n), 6) AS DECIMAL(18,6)) AS DOUBLE) AS pmi
+           CAST({sql_ln_dec('t.n12')}
+              + 2 * {sql_ln_dec('tot.nu')}
+              - {sql_ln_dec('nb.nbt')}
+              - {sql_ln_dec('u1.n')}
+              - {sql_ln_dec('u2.n')} AS DOUBLE) AS pmi
     FROM top t JOIN u u1 ON u1.word = t.w1 JOIN u u2 ON u2.word = t.w2,
          tot, nb
     ORDER BY t.n12 DESC, t.w1, t.w2
@@ -3169,9 +3168,6 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     nb = b.agg(F.sum("n12").cast("long").alias("nbt"))
     top = b.orderBy(F.desc("n12"), "w1", "w2").limit(50)
 
-    def L(c):
-        return F.round(F.log(c.cast("double")), 6).cast("decimal(18,6)")
-
     u1 = uni.select(F.col("word").alias("w1"), F.col("n").alias("n1"))
     u2 = uni.select(F.col("word").alias("w2"), F.col("n").alias("n2"))
     return (
@@ -3186,11 +3182,11 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n1",
             "n2",
             (
-                L(F.col("n12"))
-                + F.lit(2) * L(F.col("nu"))
-                - L(F.col("nbt"))
-                - L(F.col("n1"))
-                - L(F.col("n2"))
+                ln_dec(F.col("n12"))
+                + F.lit(2) * ln_dec(F.col("nu"))
+                - ln_dec(F.col("nbt"))
+                - ln_dec(F.col("n1"))
+                - ln_dec(F.col("n2"))
             )
             .cast("double")
             .alias("pmi"),
@@ -3596,7 +3592,7 @@ def multimodal_gif_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_sql_shingles(3)},
     samp AS (SELECT doc_id FROM documents
-             WHERE {H.sql_hash15("doc_id", 9)} % 10000 < 2000),
+             WHERE {SP.sql_hash_bucket("doc_id", 9)} < 2000),
     sh AS (SELECT DISTINCT s.doc_id, s.shingle FROM shingled s
            JOIN samp USING (doc_id)),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
@@ -4684,8 +4680,7 @@ def multimodal_video_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     + f""",
     labeled AS (
         SELECT doc_id, cluster_id,
-               CASE WHEN {H.sql_hash15("cluster_id", 0)}
-                    % 10000 < 1000
+               CASE WHEN {SP.sql_hash_bucket("cluster_id", 0)} < 1000
                     THEN 'test' ELSE 'train' END AS split
         FROM clusters)
     SELECT doc_id, cluster_id, split FROM labeled ORDER BY doc_id
@@ -5366,8 +5361,8 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     rk AS (SELECT cnt, CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, word)
                             AS BIGINT) AS rank FROM top),
     terms AS (
-        SELECT CAST(ROUND(LN(CAST(rank AS DOUBLE)), 6) AS DECIMAL(18,6)) AS x,
-               CAST(ROUND(LN(CAST(cnt AS DOUBLE)), 6) AS DECIMAL(18,6)) AS y
+        SELECT {sql_ln_dec('rank')} AS x,
+               {sql_ln_dec('cnt')} AS y
         FROM rk),
     agg AS (
         SELECT CAST(COUNT(*) AS DECIMAL(10,0)) AS n,
@@ -5412,10 +5407,9 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("rank"),
     )
-    d6 = "decimal(18,6)"
     terms = rk.select(
-        F.round(F.log(F.col("rank").cast("double")), 6).cast(d6).alias("x"),
-        F.round(F.log(F.col("cnt").cast("double")), 6).cast(d6).alias("y"),
+        ln_dec(F.col("rank")).alias("x"),
+        ln_dec(F.col("cnt")).alias("y"),
     )
     # Every decimal stays inside (18,6)/(10,0) bounds so no engine hits
     # its precision-overflow scale-reduction path (Spark reduces scale on
@@ -5629,7 +5623,8 @@ def text_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One tokenize pass shared by the BM25 ranker AND the relevance set
     # (r11, the wedge-tier checkpoint lesson): both legs tokenize the same
     # corpus, and without the cut the plan carried two full regex-tokenize
-    # subtrees. Lazy localCheckpoint — blocks materialize at first action.
+    # subtrees. Lazy localCheckpoint — blocks materialize at first action;
+    # under AQE creating it runs the scan-side shuffle (1 job at sf0.001).
     toks = tokenized_docs(docs).localCheckpoint(eager=False)
     lexw = W.orderBy(F.desc("score"), F.col("doc_id"))
     lex = (
@@ -5755,8 +5750,7 @@ def multimodal_exif_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, tok, COUNT(*) AS m FROM toks GROUP BY doc_id, tok),
     terms AS (
         SELECT d.doc_id, d.m,
-               CAST(ROUND(LN(CAST(v.c AS DOUBLE) / CAST(t.n AS DOUBLE)), 4)
-                    AS DECIMAL(12,4)) AS lp
+               {sql_ln_dec("CAST(v.c AS DOUBLE) / CAST(t.n AS DOUBLE)", 4)} AS lp
         FROM doc_tok d JOIN vocab v USING (tok) CROSS JOIN total t)
     SELECT doc_id,
            CAST(SUM(m) AS BIGINT) AS n_tokens,
@@ -5792,9 +5786,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = vocab.agg(F.sum("c").alias("n"))
     doc_tok = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("m"))
-    lp = F.round(
-        F.log(F.col("c").cast("double") / F.col("n").cast("double")), 4
-    ).cast("decimal(12,4)")
+    lp = ln_dec(F.col("c").cast("double") / F.col("n").cast("double"), 4)
     terms = doc_tok.join(vocab, "tok").crossJoin(F.broadcast(total)).select(
         "doc_id", "m", lp.alias("lp")
     )
@@ -7976,7 +7968,7 @@ def text_quality_lr_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM chunks),
     packed AS (
         SELECT doc_id, chunk_idx, n_tokens,
-               {H.sql_hash15("key", 1)} % 10000 % 8 AS shard,
+               {SP.sql_hash_bucket("key", 1)} % 8 AS shard,
                {H.sql_seeded_md5("key", 0)} AS h, key
         FROM keyed),
     binned AS (
@@ -8233,10 +8225,8 @@ def text_lang_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     bcnt AS (SELECT b, COUNT(*) AS cb FROM bg GROUP BY b),
     scored AS (
         SELECT g.doc_id,
-               CAST(ROUND(LN(CAST(bc.cb + 1 AS DOUBLE)), 6)
-                    AS DECIMAL(18,6))
-               - CAST(ROUND(LN(CAST(uc.cu + vv.v AS DOUBLE)), 6)
-                    AS DECIMAL(18,6)) AS t
+               {sql_ln_dec('bc.cb + 1')}
+               - {sql_ln_dec('uc.cu + vv.v')} AS t
         FROM bg g
         JOIN bcnt bc ON bc.b = g.b
         JOIN ucnt uc ON uc.w = SPLIT_PART(g.b, ' ', 1)
@@ -8291,12 +8281,7 @@ def text_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             (
-                F.round(F.log((F.col("cb") + 1).cast("double")), 6).cast(
-                    "decimal(18,6)"
-                )
-                - F.round(
-                    F.log((F.col("cu") + F.col("v")).cast("double")), 6
-                ).cast("decimal(18,6)")
+                ln_dec(F.col("cb") + 1) - ln_dec(F.col("cu") + F.col("v"))
             ).alias("t"),
         )
     )
@@ -8333,10 +8318,8 @@ def text_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM tg GROUP BY 1),
     scored AS (
         SELECT t.doc_id,
-               CAST(ROUND(LN(CAST(tc.ct + 1 AS DOUBLE)), 6)
-                    AS DECIMAL(18,6))
-               - CAST(ROUND(LN(CAST(cx.cc + vv.v AS DOUBLE)), 6)
-                    AS DECIMAL(18,6)) AS t
+               {sql_ln_dec('tc.ct + 1')}
+               - {sql_ln_dec('cx.cc + vv.v')} AS t
         FROM tg t
         JOIN tcnt tc ON tc.g = t.g
         JOIN ctx cx ON cx.c = SPLIT_PART(t.g, ' ', 1) || ' '
@@ -8395,12 +8378,7 @@ def text_trigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             (
-                F.round(F.log((F.col("ct") + 1).cast("double")), 6).cast(
-                    "decimal(18,6)"
-                )
-                - F.round(
-                    F.log((F.col("cc") + F.col("v")).cast("double")), 6
-                ).cast("decimal(18,6)")
+                ln_dec(F.col("ct") + 1) - ln_dec(F.col("cc") + F.col("v"))
             ).alias("t"),
         )
     )
@@ -8451,22 +8429,16 @@ def text_trigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
                CASE WHEN tc.ct IS NOT NULL THEN 2
                     WHEN bc.bc IS NOT NULL THEN 1 ELSE 0 END AS tier,
                CASE WHEN tc.ct IS NOT NULL THEN
-                      CAST(ROUND(LN(CAST(tc.ct AS DOUBLE)), 6)
-                           AS DECIMAL(18,6))
-                    - CAST(ROUND(LN(CAST(cx.cc AS DOUBLE)), 6)
-                           AS DECIMAL(18,6))
+                      {sql_ln_dec('tc.ct')}
+                    - {sql_ln_dec('cx.cc')}
                     WHEN bc.bc IS NOT NULL THEN
                       CAST(-0.916291 AS DECIMAL(18,6))
-                    + CAST(ROUND(LN(CAST(bc.bc AS DOUBLE)), 6)
-                           AS DECIMAL(18,6))
-                    - CAST(ROUND(LN(CAST(h.hc AS DOUBLE)), 6)
-                           AS DECIMAL(18,6))
+                    + {sql_ln_dec('bc.bc')}
+                    - {sql_ln_dec('h.hc')}
                     ELSE
                       CAST(-1.832582 AS DECIMAL(18,6))
-                    + CAST(ROUND(LN(CAST(COALESCE(u.uc, 0) + 1 AS DOUBLE)), 6)
-                           AS DECIMAL(18,6))
-                    - CAST(ROUND(LN(CAST(n.n + v.v AS DOUBLE)), 6)
-                           AS DECIMAL(18,6))
+                    + {sql_ln_dec('COALESCE(u.uc, 0) + 1')}
+                    - {sql_ln_dec('n.n + v.v')}
                END AS t
         FROM tga t
         LEFT JOIN tcnt tc ON tc.g = t.g
@@ -8514,8 +8486,9 @@ def text_backoff_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The tokenized corpus feeds EIGHT legs (n_tok, vsz, tcnt, c12, bcnt,
     # c2, ucnt via train, plus tga) — fully lazy, each leg re-ran the
     # regex tokenize scan (r11 plan audit: 8 tokenize subtrees for one
-    # query). Lazy localCheckpoint materializes it once at first action;
-    # every count table and the scoring stream read the blocks.
+    # query). Lazy localCheckpoint materializes it once, at the first
+    # action (under AQE creating it runs the scan-side shuffle, 1 job at
+    # sf0.001); every count table and the scoring stream read the blocks.
     base = docs.select(
         "doc_id",
         TX.lower_tokens(F.col("text")).alias("tk"),
@@ -8571,9 +8544,6 @@ def text_backoff_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("uc"))
     )
 
-    def rln(c):  # ROUND(LN(int), 6) as an exact decimal term
-        return F.round(F.log(c.cast("double")), 6).cast("decimal(18,6)")
-
     ln04 = F.lit("-0.916291").cast("decimal(18,6)")
     ln04x2 = F.lit("-1.832582").cast("decimal(18,6)")
     scored = (
@@ -8594,15 +8564,15 @@ def text_backoff_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             .when(F.col("bc").isNotNull(), 1)
             .otherwise(0)
             .alias("tier"),
-            F.when(F.col("ct").isNotNull(), rln(F.col("ct")) - rln(F.col("cc")))
+            F.when(F.col("ct").isNotNull(), ln_dec(F.col("ct")) - ln_dec(F.col("cc")))
             .when(
                 F.col("bc").isNotNull(),
-                ln04 + rln(F.col("bc")) - rln(F.col("hc")),
+                ln04 + ln_dec(F.col("bc")) - ln_dec(F.col("hc")),
             )
             .otherwise(
                 ln04x2
-                + rln(F.coalesce(F.col("uc"), F.lit(0)) + 1)
-                - rln(F.col("n") + F.col("v"))
+                + ln_dec(F.coalesce(F.col("uc"), F.lit(0)) + 1)
+                - ln_dec(F.col("n") + F.col("v"))
             )
             .alias("t"),
         )
@@ -8660,8 +8630,7 @@ def _domain_reweight_oracle(n_steps: int = _DRW_N_STEPS) -> str:
         SELECT source, tok, COUNT(*) AS m FROM toks GROUP BY source, tok),
     terms AS (
         SELECT st.source, st.m,
-               CAST(ROUND(LN(CAST(v.c AS DOUBLE) / CAST(t.n AS DOUBLE)), 4)
-                    AS DECIMAL(12,4)) AS lp
+               {sql_ln_dec("CAST(v.c AS DOUBLE) / CAST(t.n AS DOUBLE)", 4)} AS lp
         FROM src_tok st JOIN vocab v USING (tok) CROSS JOIN total t),
     loss AS MATERIALIZED (
         SELECT source,
@@ -8741,9 +8710,7 @@ def sample_domain_reweight_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = toks.groupBy("tok").agg(F.count("*").alias("c"))
     total = vocab.agg(F.sum("c").alias("n"))
     src_tok = toks.groupBy("source", "tok").agg(F.count("*").alias("m"))
-    lp = F.round(
-        F.log(F.col("c").cast("double") / F.col("n").cast("double")), 4
-    ).cast("decimal(12,4)")
+    lp = ln_dec(F.col("c").cast("double") / F.col("n").cast("double"), 4)
     terms = src_tok.join(vocab, "tok").crossJoin(F.broadcast(total)).select(
         "source", "m", lp.alias("lp")
     )
@@ -8830,7 +8797,7 @@ def sample_domain_reweight_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_sql_shingles(3)},
     nn AS (SELECT LEAST(10000, 1500000 // COUNT(*)) AS rate FROM documents),
     samp AS (SELECT doc_id FROM documents CROSS JOIN nn
-             WHERE {H.sql_hash15("doc_id", 11)} % 10000 < nn.rate),
+             WHERE {SP.sql_hash_bucket("doc_id", 11)} < nn.rate),
     sh AS (SELECT DISTINCT s.doc_id, s.shingle FROM shingled s
            JOIN samp USING (doc_id)),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
@@ -9030,14 +8997,10 @@ _DSIR_SEED = 13
     rt AS (SELECT COUNT(*) AS nr FROM fb WHERE source NOT IN {_DSIR_TGT}),
     wt AS (
         SELECT g.b,
-               CAST(ROUND(LN(CAST(COALESCE(tc.ct, 0) + 1 AS DOUBLE)), 6)
-                    AS DECIMAL(18,6))
-             - CAST(ROUND(LN(CAST(tt.nt + {_DSIR_BUCKETS} AS DOUBLE)), 6)
-                    AS DECIMAL(18,6))
-             - CAST(ROUND(LN(CAST(COALESCE(rc.cr, 0) + 1 AS DOUBLE)), 6)
-                    AS DECIMAL(18,6))
-             + CAST(ROUND(LN(CAST(rt.nr + {_DSIR_BUCKETS} AS DOUBLE)), 6)
-                    AS DECIMAL(18,6)) AS lw
+               {sql_ln_dec('COALESCE(tc.ct, 0) + 1')}
+             - {sql_ln_dec(f'tt.nt + {_DSIR_BUCKETS}')}
+             - {sql_ln_dec('COALESCE(rc.cr, 0) + 1')}
+             + {sql_ln_dec(f'rt.nr + {_DSIR_BUCKETS}')} AS lw
         FROM (SELECT UNNEST(RANGE({_DSIR_BUCKETS})) AS b) g
         LEFT JOIN tc USING (b) LEFT JOIN rc USING (b)
         CROSS JOIN tt CROSS JOIN rt),
@@ -9106,9 +9069,6 @@ def sample_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     tt = fb.where(is_tgt).agg(F.count("*").alias("nt"))
     rt = fb.where(~is_tgt).agg(F.count("*").alias("nr"))
 
-    def rln(c):
-        return F.round(F.log(c.cast("double")), 6).cast("decimal(18,6)")
-
     wt = (
         spark.range(_DSIR_BUCKETS)
         .select(F.col("id").alias("b"))
@@ -9119,10 +9079,10 @@ def sample_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "b",
             (
-                rln(F.coalesce(F.col("ct"), F.lit(0)) + 1)
-                - rln(F.col("nt") + _DSIR_BUCKETS)
-                - rln(F.coalesce(F.col("cr"), F.lit(0)) + 1)
-                + rln(F.col("nr") + _DSIR_BUCKETS)
+                ln_dec(F.coalesce(F.col("ct"), F.lit(0)) + 1)
+                - ln_dec(F.col("nt") + _DSIR_BUCKETS)
+                - ln_dec(F.coalesce(F.col("cr"), F.lit(0)) + 1)
+                + ln_dec(F.col("nr") + _DSIR_BUCKETS)
             ).alias("lw"),
         )
     )

@@ -19,12 +19,31 @@ from pyspark.sql import functions as F
 
 from gearpump_spark.datasets import table
 from gearpump_spark.functions import hash as H
+from gearpump_spark.functions.exact import (
+    davg,
+    dec,
+    dsum,
+    out_double,
+    sql_davg,
+    sql_dec,
+    sql_dsum,
+    sql_out_double,
+)
+from gearpump_spark.operators import sampling as SP
 from gearpump_spark.queries import register
-from gearpump_spark.queries._util import davg, dec, dsum, sql_davg, sql_dsum
 
 # ---------------------------------------------------------------------------
 # TPC-H-style core
 # ---------------------------------------------------------------------------
+
+# l_extendedprice * (1 - l_discount) as an exact decimal product, and the
+# rounded double of its sum.
+SQL_DISC_PRICE = f"{sql_dec('l_extendedprice')} * {sql_dec('1.0 - l_discount')}"
+SQL_REVENUE = sql_out_double(f"SUM({SQL_DISC_PRICE})")
+
+
+def disc_price():
+    return dec("l_extendedprice") * dec(F.lit(1.0) - F.col("l_discount"))
 
 
 @register(
@@ -33,10 +52,8 @@ from gearpump_spark.queries._util import davg, dec, dsum, sql_davg, sql_dsum
     SELECT l_returnflag, l_linestatus,
            {sql_dsum('l_quantity')} AS sum_qty,
            {sql_dsum('l_extendedprice')} AS sum_base_price,
-           CAST(CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-                    * CAST(1.0 - l_discount AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE) AS sum_disc_price,
-           CAST(CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-                    * CAST((1.0 - l_discount) * (1.0 + l_tax) AS DECIMAL(18,8))), 2) AS DECIMAL(38,2)) AS DOUBLE) AS sum_charge,
+           {SQL_REVENUE} AS sum_disc_price,
+           {sql_out_double(f"SUM({sql_dec('l_extendedprice')} * {sql_dec('(1.0 - l_discount) * (1.0 + l_tax)', 8)})")} AS sum_charge,
            {sql_davg('l_quantity')} AS avg_qty,
            {sql_davg('l_extendedprice')} AS avg_price,
            {sql_davg('l_discount')} AS avg_disc,
@@ -53,18 +70,17 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parquet scan; aggregation is map-side partial then a 6-group
     exchange — shuffle volume is O(groups), not O(rows)."""
     li = table(spark, sf_dir, "lineitem")
-    disc_price = dec("l_extendedprice") * dec(F.lit(1.0) - F.col("l_discount"))
-    charge = dec("l_extendedprice") * (
-        (F.lit(1.0) - F.col("l_discount")) * (F.lit(1.0) + F.col("l_tax"))
-    ).cast("decimal(18,8)")
+    charge = dec("l_extendedprice") * dec(
+        (F.lit(1.0) - F.col("l_discount")) * (F.lit(1.0) + F.col("l_tax")), 8
+    )
     return (
         li.filter(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             dsum("l_quantity").alias("sum_qty"),
             dsum("l_extendedprice").alias("sum_base_price"),
-            F.sum(disc_price).cast("decimal(38,2)").cast("double").alias("sum_disc_price"),
-            F.sum(charge).cast("decimal(38,2)").cast("double").alias("sum_charge"),
+            out_double(F.sum(disc_price())).alias("sum_disc_price"),
+            out_double(F.sum(charge)).alias("sum_charge"),
             davg("l_quantity").alias("avg_qty"),
             davg("l_extendedprice").alias("avg_price"),
             davg("l_discount").alias("avg_disc"),
@@ -76,10 +92,9 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q3_shipping_priority",
-    oracle="""
+    oracle=f"""
     SELECT l_orderkey,
-           CAST(CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-                    * CAST(1.0 - l_discount AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE) AS revenue,
+           {SQL_REVENUE} AS revenue,
            o_orderdate, o_orderpriority
     FROM customer JOIN orders ON c_custkey = o_custkey
                   JOIN lineitem ON l_orderkey = o_orderkey
@@ -103,12 +118,11 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1997-06-30").cast("timestamp")
     )
-    revenue = dec("l_extendedprice") * dec(F.lit(1.0) - F.col("l_discount"))
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .join(li, F.col("o_orderkey") == li.l_orderkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(revenue).cast("decimal(38,2)").cast("double").alias("revenue"))
+        .agg(out_double(F.sum(disc_price())).alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
         .orderBy(F.desc("revenue"), "l_orderkey")
         .limit(10)
@@ -117,10 +131,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q5_local_supplier_volume",
-    oracle="""
+    oracle=f"""
     SELECT n_name,
-           CAST(CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-                    * CAST(1.0 - l_discount AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE) AS revenue
+           {SQL_REVENUE} AS revenue
     FROM customer
       JOIN orders   ON c_custkey = o_custkey
       JOIN lineitem ON l_orderkey = o_orderkey
@@ -149,7 +162,6 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
     li = table(spark, sf_dir, "lineitem")
-    revenue = dec("l_extendedprice") * dec(F.lit(1.0) - F.col("l_discount"))
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .join(li, F.col("o_orderkey") == li.l_orderkey)
@@ -160,16 +172,15 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(nation, supplier.s_nationkey == nation.n_nationkey)
         .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
-        .agg(F.sum(revenue).cast("decimal(38,2)").cast("double").alias("revenue"))
+        .agg(out_double(F.sum(disc_price())).alias("revenue"))
         .orderBy(F.desc("revenue"), "n_name")
     )
 
 
 @register(
     "q6_revenue_forecast",
-    oracle="""
-    SELECT CAST(CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-                    * CAST(l_discount AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE) AS revenue
+    oracle=f"""
+    SELECT {sql_out_double(f"SUM({sql_dec('l_extendedprice')} * {sql_dec('l_discount')})")} AS revenue
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01'
       AND l_shipdate <  TIMESTAMP '1997-01-01'
@@ -188,15 +199,14 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_discount").between(0.04, 0.08))
         & (F.col("l_quantity") < 24)
-    ).agg(F.sum(dec("l_extendedprice") * dec("l_discount")).cast("decimal(38,2)").cast("double").alias("revenue"))
+    ).agg(out_double(F.sum(dec("l_extendedprice") * dec("l_discount"))).alias("revenue"))
 
 
 @register(
     "q10_returned_items",
-    oracle="""
+    oracle=f"""
     SELECT c_custkey, c_name,
-           CAST(CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-                    * CAST(1.0 - l_discount AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE) AS revenue,
+           {SQL_REVENUE} AS revenue,
            c_acctbal, n_name
     FROM customer
       JOIN orders   ON c_custkey = o_custkey
@@ -216,13 +226,12 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     nation = F.broadcast(table(spark, sf_dir, "nation"))
-    revenue = dec("l_extendedprice") * dec(F.lit(1.0) - F.col("l_discount"))
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .join(li, F.col("o_orderkey") == li.l_orderkey)
         .join(nation, cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.sum(revenue).cast("decimal(38,2)").cast("double").alias("revenue"))
+        .agg(out_double(F.sum(disc_price())).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
         .orderBy(F.desc("revenue"), "c_custkey")
         .limit(20)
@@ -231,14 +240,14 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q18_large_volume_customer",
-    oracle="""
+    oracle=f"""
     SELECT c_custkey, o_orderkey, o_totalprice,
-           CAST(CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE) AS sum_qty
+           {sql_dsum('l_quantity')} AS sum_qty
     FROM customer
       JOIN orders   ON c_custkey = o_custkey
       JOIN lineitem ON o_orderkey = l_orderkey
     GROUP BY c_custkey, o_orderkey, o_totalprice
-    HAVING SUM(CAST(l_quantity AS DECIMAL(18,4))) > 150
+    HAVING SUM({sql_dec('l_quantity')}) > 150
     ORDER BY o_totalprice DESC, o_orderkey
     LIMIT 50
     """,
@@ -260,7 +269,7 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_custkey",
             "o_orderkey",
             "o_totalprice",
-            F.col("_sq").cast("decimal(38,2)").cast("double").alias("sum_qty"),
+            out_double(F.col("_sq")).alias("sum_qty"),
         )
         .orderBy(F.desc("o_totalprice"), "o_orderkey")
         .limit(50)
@@ -318,9 +327,9 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_outer_join_counts",
-    oracle="""
+    oracle=f"""
     SELECT c_custkey, COUNT(o_orderkey) AS n_orders,
-           CAST(CAST(ROUND(COALESCE(SUM(CAST(o_totalprice AS DECIMAL(18,4))), 0), 2) AS DECIMAL(38,2)) AS DOUBLE) AS total_spend
+           {sql_out_double(f"COALESCE(SUM({sql_dec('o_totalprice')}), 0)")} AS total_spend
     FROM customer LEFT JOIN orders ON c_custkey = o_custkey
     GROUP BY c_custkey
     ORDER BY c_custkey
@@ -335,10 +344,9 @@ def q_outer_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey")
         .agg(
             F.count("o_orderkey").alias("n_orders"),
-            F.coalesce(F.sum(dec("o_totalprice")), F.lit(0).cast("decimal(18,4)"))
-            .cast("decimal(38,2)")
-            .cast("double")
-            .alias("total_spend"),
+            out_double(F.coalesce(F.sum(dec("o_totalprice")), dec(F.lit(0)))).alias(
+                "total_spend"
+            ),
         )
         .orderBy("c_custkey")
     )
@@ -417,9 +425,9 @@ def q_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_rollup",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           CAST(CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE) AS sum_qty,
+           {sql_dsum('l_quantity')} AS sum_qty,
            COUNT(*) AS n
     FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
     ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
@@ -437,9 +445,9 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_cube",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           CAST(CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE) AS sum_qty,
+           {sql_dsum('l_quantity')} AS sum_qty,
            COUNT(*) AS n
     FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
     ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
@@ -483,11 +491,11 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_agg_stats",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus,
            CAST(MIN(o_totalprice) AS DOUBLE) AS min_price,
            CAST(MAX(o_totalprice) AS DOUBLE) AS max_price,
-           CAST(CAST(CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE) / COUNT(o_totalprice) AS DOUBLE) AS avg_price,
+           {sql_davg('o_totalprice')} AS avg_price,
            COUNT(*) AS n
     FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
     """,
@@ -509,9 +517,9 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_groupby_having",
-    oracle="""
+    oracle=f"""
     SELECT l_suppkey, COUNT(*) AS n_items,
-           CAST(CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE) AS total_qty
+           {sql_dsum('l_quantity')} AS total_qty
     FROM lineitem GROUP BY l_suppkey
     HAVING COUNT(*) > 50
     ORDER BY n_items DESC, l_suppkey
@@ -588,11 +596,9 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_window_running",
-    oracle="""
+    oracle=f"""
     SELECT o_custkey, o_orderkey,
-           CAST(CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
-                OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS DECIMAL(38,2)) AS DOUBLE)
+           {sql_out_double(f"SUM({sql_dec('o_totalprice')}) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")}
              AS running_spend,
            CAST(LAG(o_totalprice) OVER (PARTITION BY o_custkey
                                         ORDER BY o_orderdate, o_orderkey) AS DOUBLE)
@@ -613,9 +619,9 @@ def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "o_custkey",
             "o_orderkey",
-            F.sum(dec("o_totalprice"))
-            .over(w.rowsBetween(W.unboundedPreceding, W.currentRow)).cast("decimal(38,2)").cast("double")
-            .alias("running_spend"),
+            out_double(
+                F.sum(dec("o_totalprice")).over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
+            ).alias("running_spend"),
             # raw double both sides: lag moves a value without arithmetic,
             # so no decimal rounding — the oracle is CAST(LAG(..) AS DOUBLE)
             F.lag("o_totalprice").over(w).alias("prev_price"),
@@ -896,12 +902,10 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # Deterministic simulated snapshots of `orders`: "old" drops the keys whose
-# seeded hash lands in the top 5%, "new" drops the bottom 3% and bumps
+# seeded bucket lands in the top 5%, "new" drops the bottom 3% and bumps
 # o_totalprice by 10% for keys with hash % 7 == 0 — inserts, deletes, and
 # updates, all reproducible on both engines.
-_SNAP_OLD = "({h} % 10000) < 9500"
-_SNAP_NEW = "({h} % 10000) >= 300"
-_SNAP_UPD = "({h} % 7) = 0"
+_SNAP_SEED = 21
 
 
 @register(
@@ -909,17 +913,17 @@ _SNAP_UPD = "({h} % 7) = 0"
     oracle=f"""
     WITH hashed AS (
         SELECT o_orderkey, o_totalprice,
-               {H.sql_hash15("o_orderkey", 21)} AS h
+               {H.sql_hash15("o_orderkey", _SNAP_SEED)} AS h
         FROM orders),
     old AS (
-        SELECT o_orderkey, CAST(o_totalprice AS DECIMAL(18,4)) AS price
-        FROM hashed WHERE {_SNAP_OLD.format(h="h")}),
+        SELECT o_orderkey, {sql_dec("o_totalprice")} AS price
+        FROM hashed WHERE {SP.sql_hash_bucket("o_orderkey", _SNAP_SEED)} < 9500),
     new AS (
         SELECT o_orderkey,
-               CASE WHEN {_SNAP_UPD.format(h="h")}
-                    THEN CAST(o_totalprice AS DECIMAL(18,4)) * 1.1
-                    ELSE CAST(o_totalprice AS DECIMAL(18,4)) END AS price
-        FROM hashed WHERE {_SNAP_NEW.format(h="h")})
+               CASE WHEN (h % 7) = 0
+                    THEN {sql_dec("o_totalprice")} * 1.1
+                    ELSE {sql_dec("o_totalprice")} END AS price
+        FROM hashed WHERE {SP.sql_hash_bucket("o_orderkey", _SNAP_SEED)} >= 300)
     SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS o_orderkey,
            CASE WHEN o.o_orderkey IS NULL THEN 'inserted'
                 WHEN n.o_orderkey IS NULL THEN 'deleted'
@@ -946,13 +950,12 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = od.select(
         "o_orderkey",
         "o_totalprice",
-        H.hash15(F.col("o_orderkey"), 21).alias("h"),
+        H.hash15(F.col("o_orderkey"), _SNAP_SEED).alias("h"),
     )
-    price = F.col("o_totalprice").cast("decimal(18,4)")
-    old = hashed.where((F.col("h") % 10000) < 9500).select(
-        "o_orderkey", price.alias("price")
-    )
-    new = hashed.where((F.col("h") % 10000) >= 300).select(
+    price = dec("o_totalprice")
+    bucket = SP.hash_bucket(F.col("o_orderkey"), _SNAP_SEED)
+    old = hashed.where(bucket < 9500).select("o_orderkey", price.alias("price"))
+    new = hashed.where(bucket >= 300).select(
         "o_orderkey",
         # decimal literal, NOT F.lit(1.1): a bare 1.1 is a DOUBLE in Spark
         # but an exact DECIMAL(2,1) in DuckDB — the product would silently

@@ -20,16 +20,11 @@ from gearpump_spark.operators import sampling as SP
 from gearpump_spark.queries import register
 
 
-def _sql_bucket(key: str = "doc_id", seed: int = 0) -> str:
-    """DuckDB mirror of operators/sampling.hash_bucket."""
-    return f"{H.sql_hash15(key, seed)} % {SP.BASIS}"
-
-
 @register(
     "sample_hash_10pct",
     oracle=f"""
     SELECT doc_id, lang FROM documents
-    WHERE {_sql_bucket()} < 1000
+    WHERE {SP.sql_hash_bucket()} < 1000
     ORDER BY doc_id
     """,
     desc="deterministic 10% sample by key hash — scan-local, shuffle-free, "
@@ -46,7 +41,7 @@ def sample_hash_10pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sample_train_test_split",
     oracle=f"""
     SELECT lang,
-           CASE WHEN {_sql_bucket()} < 1000
+           CASE WHEN {SP.sql_hash_bucket()} < 1000
                 THEN 'test' ELSE 'train' END AS split,
            COUNT(*) AS n
     FROM documents GROUP BY 1, 2 ORDER BY lang, split
@@ -66,7 +61,7 @@ _MIX_RATES = {"en": 5000, "de": 2500, "fr": 1000}
     "sample_stratified_mix",
     oracle=f"""
     SELECT doc_id, lang FROM documents
-    WHERE {_sql_bucket()} <
+    WHERE {SP.sql_hash_bucket()} <
           CASE lang WHEN 'en' THEN 5000 WHEN 'de' THEN 2500 WHEN 'fr' THEN 1000
                     ELSE -1 END
     ORDER BY doc_id
@@ -96,7 +91,7 @@ def sample_stratified_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM totals)
     SELECT d.doc_id, d.source FROM documents d
     JOIN rates r ON d.source = r.source
-    WHERE {_sql_bucket("d.doc_id")} < r.rate_bp
+    WHERE {SP.sql_hash_bucket("d.doc_id")} < r.rate_bp
     ORDER BY d.doc_id
     """,
     desc="temperature mixing (alpha=0.5): per-source rates computed from the "
@@ -150,7 +145,7 @@ def sample_bottom_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY {H.sql_fingerprint()}),
     sampled AS (
         SELECT doc_id, lang FROM deduped
-        WHERE {_sql_bucket()} < 5000)
+        WHERE {SP.sql_hash_bucket()} < 5000)
     SELECT lang, COUNT(*) AS n_docs FROM sampled GROUP BY lang ORDER BY lang
     """,
     desc="end-to-end curation pipeline: quality filter → exact dedup (keep "
@@ -195,7 +190,7 @@ def sample_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sample_epochs_mix",
     oracle=f"""
     SELECT doc_id, lang, UNNEST(RANGE(0,
-           CASE WHEN {_sql_bucket()} < 5000
+           CASE WHEN {SP.sql_hash_bucket()} < 5000
                 THEN 3 ELSE 2 END)) AS copy
     FROM documents
     ORDER BY doc_id, copy

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from gearpump_spark.datasets import table
 from gearpump_spark.functions import hash as H
 from gearpump_spark.functions import text as TX
+from gearpump_spark.functions.exact import ln_dec, sql_ln_dec
 from gearpump_spark.operators import sketches as SK
 from gearpump_spark.queries import register
 
@@ -223,16 +224,10 @@ def sketch_countmin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sketch_hll_registers",
     oracle=f"""
-    WITH hashed AS (
-        SELECT DATE_TRUNC('hour', ts) AS window_start,
-               {H.sql_hash15("CAST(user_id AS VARCHAR)", 0)} AS h
-        FROM events),
+    WITH ev AS (
+        SELECT DATE_TRUNC('hour', ts) AS window_start, user_id FROM events),
     regs AS (
-        SELECT window_start, h % 1024 AS idx,
-               MAX(CASE WHEN (h >> 10) > 0
-                        THEN 51 - LENGTH(BIN(h >> 10))
-                        ELSE 51 END) AS rho
-        FROM hashed GROUP BY window_start, idx)
+        {SK.sql_hll_registers("ev", "user_id", ["window_start"], b=10, seed=0)})
     SELECT window_start,
            CAST(COUNT(*) AS BIGINT) AS n_regs,
            CAST(MAX(rho) AS BIGINT) AS max_rho,
@@ -269,45 +264,26 @@ def sketch_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# alpha_64 * 64^2 * 2^60 (the raw-HLL estimator numerator for m=64
-# registers, scaled so the harmonic denominator is the EXACT integer sum
-# of 2^(60-rho); computed once in Python — both engines parse the same
-# decimal literal to the same double). b=6 keeps every scale factor's
-# per-type cardinality above the 2.5*m small-range cutoff, where the raw
-# estimator (no linear-counting correction — that needs ln(), which is
-# not bit-identical across engines) is within ~13% (1.04/sqrt(64)).
-_HLL_UNION_ALPHA_NUM = "3.349767950060819e+21"
+# b=6 keeps every scale factor's per-type cardinality above the 2.5*m
+# small-range cutoff, where the raw estimator (operators/sketches.py
+# hll_raw_estimate, no linear-counting correction) is within ~13%
+# (1.04/sqrt(64)).
 
 
 @register(
     "sketch_hll_union",
     oracle=f"""
-    WITH hashed AS (
-        SELECT event_type,
-               {H.sql_hash15("CAST(event_id AS VARCHAR)", 0)} AS h
-        FROM events),
-    regs AS (
-        SELECT event_type, h % 64 AS idx,
-               MAX(CASE WHEN (h >> 6) > 0
-                        THEN 55 - LENGTH(BIN(h >> 6))
-                        ELSE 55 END) AS rho
-        FROM hashed GROUP BY 1, 2),
+    WITH regs AS (
+        {SK.sql_hll_registers("events", "event_id", ["event_type"], b=6, seed=0)}),
     merged AS (
         SELECT event_type AS grp, idx, rho FROM regs
         UNION ALL
-        SELECT 'ALL' AS grp, idx, MAX(rho) AS rho FROM regs GROUP BY idx),
-    est AS (
-        SELECT grp,
-               CAST(COUNT(*) AS BIGINT) AS n_regs,
-               CAST(SUM((idx + 1) * rho) AS BIGINT) AS reg_checksum,
-               CAST(SUM(CAST(1 AS BIGINT) << CAST(60 - rho AS INT)) AS HUGEINT)
-                 + CAST(64 - COUNT(*) AS HUGEINT)
-                   * CAST(CAST(1 AS BIGINT) << 60 AS HUGEINT) AS inv_sum
-        FROM merged GROUP BY grp)
-    SELECT grp, n_regs, reg_checksum,
-           ROUND({_HLL_UNION_ALPHA_NUM} / CAST(inv_sum AS DOUBLE), 4)
-             AS est_distinct
-    FROM est ORDER BY grp
+        SELECT 'ALL' AS grp, idx, MAX(rho) AS rho FROM regs GROUP BY idx)
+    SELECT grp,
+           CAST(COUNT(*) AS BIGINT) AS n_regs,
+           CAST(SUM((idx + 1) * rho) AS BIGINT) AS reg_checksum,
+           {SK.sql_hll_raw_estimate(6)} AS est_distinct
+    FROM merged GROUP BY grp ORDER BY grp
     """,
     desc="HLL SET UNION by register max-merge: per-event-type sketches "
     "plus their union ('ALL') — the mergeability that makes sketches the "
@@ -336,23 +312,15 @@ def sketch_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("rho").alias("rho"))
         .select(F.lit("ALL").alias("grp"), "idx", "rho")
     )
-    # SQL form: the Python F.shiftleft wrapper only takes a literal shift
-    inv_term = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(60 - rho AS INT))")
-    est = merged.groupBy("grp").agg(
-        F.count("*").cast("bigint").alias("n_regs"),
-        F.sum((F.col("idx") + 1) * F.col("rho")).cast("bigint").alias("reg_checksum"),
-        (
-            F.sum(inv_term.cast("decimal(20,0)"))
-            + (F.lit(64) - F.count("*")).cast("decimal(38,0)")
-            * F.lit(1 << 60).cast("decimal(38,0)")
-        ).alias("inv_sum"),
+    return (
+        merged.groupBy("grp")
+        .agg(
+            F.count("*").cast("bigint").alias("n_regs"),
+            F.sum((F.col("idx") + 1) * F.col("rho")).cast("bigint").alias("reg_checksum"),
+            SK.hll_raw_estimate(6).alias("est_distinct"),
+        )
+        .orderBy("grp")
     )
-    return est.select(
-        "grp", "n_regs", "reg_checksum",
-        F.round(
-            F.lit(float(_HLL_UNION_ALPHA_NUM)) / F.col("inv_sum").cast("double"), 4
-        ).alias("est_distinct"),
-    ).orderBy("grp")
 
 
 @register(
@@ -604,8 +572,8 @@ def sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT source,
            CAST(v_regs AS BIGINT) AS v_regs,
            CAST(exact_distinct AS BIGINT) AS exact_distinct,
-           CAST(4096 * CAST(ROUND(LN(4096.0 / (4096 - LEAST(v_regs, 4095))), 6)
-                            AS DECIMAL(18,6)) AS DOUBLE) AS lc_estimate
+           CAST(4096 * {sql_ln_dec("4096.0 / (4096 - LEAST(v_regs, 4095))")} AS DOUBLE)
+             AS lc_estimate
     FROM regs ORDER BY source
     """,
     desc="HLL++ sparse-mode estimator (Heule et al. 2013 §5.3): below "
@@ -645,10 +613,7 @@ def sketch_hll_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
             # errors — a cross-engine divergence. Sparse mode is invalid at
             # saturation anyway (HLL++ switches to dense well before m),
             # so both engines clamp identically.
-            * F.round(
-                F.log(F.lit(4096.0) / (4096 - F.least(F.col("v_regs"), F.lit(4095)))),
-                6,
-            ).cast("decimal(18,6)")
+            * ln_dec(F.lit(4096.0) / (4096 - F.least(F.col("v_regs"), F.lit(4095))))
         )
         .cast("double")
         .alias("lc_estimate"),
@@ -659,31 +624,33 @@ def sketch_hll_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r7 addition: HLL++ sparse/dense switchover audit
 # ---------------------------------------------------------------------------
 
-# Raw-HLL numerator alpha_m * m^2 * 2^40, precomputed in Python and injected
-# as the SAME literal into both engines so the dense estimate is ONE IEEE
-# division by an exact integer register sum (the 2^(40-rank) trick: every
-# register term is an integer power of two, so the harmonic-mean denominator
-# is an exact BIGINT — no float summation order anywhere).
+# Raw-HLL numerator alpha_m * m^2 * 2^40, injected as the SAME literal into
+# both engines so the dense estimate is ONE IEEE division by an exact integer
+# register sum (the 2^(40-rank) trick: every register term is an integer
+# power of two, so the harmonic-mean denominator is an exact BIGINT — no
+# float summation order anywhere). Ranks above 40 are clipped to 40, and
+# the estimate is not rounded: this is not hll_raw_estimate's 2^60 form.
 _HLL_SW_M = 512
-_HLL_SW_ALPHA = 0.7213 / (1.0 + 1.079 / _HLL_SW_M)
-_HLL_SW_NUM = _HLL_SW_ALPHA * _HLL_SW_M * _HLL_SW_M * float(1 << 40)
+_HLL_SW_NUM = SK.hll_alpha_num(_HLL_SW_M, 40)
+# Linear counting, m * ln(m / (m - V)), with V clamped below m.
+_SQL_SW_LC = (
+    f"CAST({_HLL_SW_M} * "
+    f"{sql_ln_dec(f'{_HLL_SW_M}.0 / ({_HLL_SW_M} - LEAST(a.v_regs, {_HLL_SW_M - 1}))')}"
+    " AS DOUBLE)"
+)
 
 
 @register(
     "sketch_hll_switchover",
     oracle=f"""
     WITH base AS (
-        SELECT event_type, DATE_TRUNC('week', ts) AS wk, user_id,
-               {H.sql_hash15("user_id", 45)} AS h
-        FROM events),
+        SELECT event_type, DATE_TRUNC('week', ts) AS wk, user_id FROM events),
     r AS (
-        SELECT event_type, wk, h % {_HLL_SW_M} AS idx,
-               MAX(52 - LENGTH(BIN(h // {_HLL_SW_M}))) AS m_rank
-        FROM base GROUP BY event_type, wk, h % {_HLL_SW_M}),
+        {SK.sql_hll_registers("base", "user_id", ["event_type", "wk"], b=9, seed=45)}),
     agg AS (
         SELECT event_type, wk,
                CAST(COUNT(*) AS BIGINT) AS v_regs,
-               CAST(SUM(CAST(1 AS BIGINT) << (40 - LEAST(m_rank, 40)))
+               CAST(SUM(CAST(1 AS BIGINT) << (40 - LEAST(rho, 40)))
                     AS BIGINT) AS s_occ
         FROM r GROUP BY event_type, wk),
     x AS (
@@ -693,16 +660,12 @@ _HLL_SW_NUM = _HLL_SW_ALPHA * _HLL_SW_M * _HLL_SW_M * float(1 << 40)
     SELECT a.event_type, a.wk, a.v_regs, x.exact_nd,
            CASE WHEN a.v_regs * 4 < {_HLL_SW_M} THEN 'sparse'
                 ELSE 'dense' END AS regime,
-           CAST({_HLL_SW_M} * CAST(ROUND(LN({_HLL_SW_M}.0
-                    / ({_HLL_SW_M} - LEAST(a.v_regs, {_HLL_SW_M - 1}))), 6)
-                AS DECIMAL(18,6)) AS DOUBLE) AS lc_estimate,
+           {_SQL_SW_LC} AS lc_estimate,
            {_HLL_SW_NUM!r} / CAST(a.s_occ
                + ({_HLL_SW_M} - a.v_regs) * 1099511627776 AS DOUBLE)
              AS raw_estimate,
            CASE WHEN a.v_regs * 4 < {_HLL_SW_M}
-                THEN CAST({_HLL_SW_M} * CAST(ROUND(LN({_HLL_SW_M}.0
-                         / ({_HLL_SW_M} - LEAST(a.v_regs, {_HLL_SW_M - 1}))), 6)
-                     AS DECIMAL(18,6)) AS DOUBLE)
+                THEN {_SQL_SW_LC}
                 ELSE {_HLL_SW_NUM!r} / CAST(a.s_occ
                     + ({_HLL_SW_M} - a.v_regs) * 1099511627776 AS DOUBLE)
            END AS chosen_estimate
@@ -726,20 +689,11 @@ def sketch_hll_switchover(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-distinct audit column is the expensive side, not the sketch."""
     m = _HLL_SW_M
     ev = table(spark, sf_dir, "events")
-    base = ev.select(
-        "event_type",
-        F.date_trunc("week", "ts").alias("wk"),
-        "user_id",
-        H.hash15(F.col("user_id"), 45).alias("h"),
-    )
-    regs = base.groupBy(
-        "event_type", "wk", (F.col("h") % m).alias("idx")
-    ).agg(
-        F.max(F.lit(52) - F.length(F.bin(F.expr(f"h DIV {m}")))).alias("m_rank")
-    )
+    base = ev.select("event_type", F.date_trunc("week", "ts").alias("wk"), "user_id")
+    regs = SK.hll_register_table(base, "user_id", ["event_type", "wk"], b=9, seed=45)
     agg = regs.groupBy("event_type", "wk").agg(
         F.count("*").cast("bigint").alias("v_regs"),
-        F.sum(F.expr("shiftleft(1L, 40 - least(m_rank, 40))"))
+        F.sum(F.expr("shiftleft(1L, 40 - least(rho, 40))"))
         .cast("bigint")
         .alias("s_occ"),
     )
@@ -749,10 +703,7 @@ def sketch_hll_switchover(spark: SparkSession, sf_dir: str) -> DataFrame:
     sparse = F.col("v_regs") * 4 < m
     lc = (
         F.lit(m)
-        * F.round(
-            F.log(F.lit(float(m)) / (m - F.least(F.col("v_regs"), F.lit(m - 1)))),
-            6,
-        ).cast("decimal(18,6)")
+        * ln_dec(F.lit(float(m)) / (m - F.least(F.col("v_regs"), F.lit(m - 1))))
     ).cast("double")
     raw = F.lit(_HLL_SW_NUM) / (
         F.col("s_occ") + (m - F.col("v_regs")) * F.lit(1099511627776)
@@ -782,27 +733,14 @@ def sketch_hll_switchover(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(user_id AS VARCHAR) || '|'
                  || CAST(CAST(DATE_TRUNC('day', ts) AS DATE) AS VARCHAR) AS e
         FROM events WHERE event_type IN ('view', 'purchase')),
-    hashed AS (
-        SELECT grp,
-               {H.sql_hash15("e", 0)} AS h
-        FROM el),
     regs AS (
-        SELECT grp, h % 64 AS idx,
-               MAX(CASE WHEN (h >> 6) > 0
-                        THEN 55 - LENGTH(BIN(h >> 6))
-                        ELSE 55 END) AS rho
-        FROM hashed GROUP BY 1, 2),
+        {SK.sql_hll_registers("el", "e", ["grp"], b=6, seed=0)}),
     merged AS (
         SELECT grp, idx, rho FROM regs
         UNION ALL
         SELECT 'U' AS grp, idx, MAX(rho) AS rho FROM regs GROUP BY idx),
     est AS (
-        SELECT grp,
-               ROUND({_HLL_UNION_ALPHA_NUM} / CAST(
-                   CAST(SUM(CAST(1 AS BIGINT) << CAST(60 - rho AS INT)) AS HUGEINT)
-                   + CAST(64 - COUNT(*) AS HUGEINT)
-                     * CAST(CAST(1 AS BIGINT) << 60 AS HUGEINT) AS DOUBLE), 4)
-                 AS est
+        SELECT grp, {SK.sql_hll_raw_estimate(6)} AS est
         FROM merged GROUP BY grp),
     wide AS (
         SELECT MAX(CASE WHEN grp = 'A' THEN est END) AS est_a,
@@ -860,24 +798,7 @@ def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("rho").alias("rho"))
         .select(F.lit("U").alias("grp"), "idx", "rho")
     )
-    inv_term = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(60 - rho AS INT))")
-    est = (
-        merged.groupBy("grp")
-        .agg(
-            (
-                F.sum(inv_term.cast("decimal(20,0)"))
-                + (F.lit(64) - F.count("*")).cast("decimal(38,0)")
-                * F.lit(1 << 60).cast("decimal(38,0)")
-            ).alias("inv_sum")
-        )
-        .select(
-            "grp",
-            F.round(
-                F.lit(float(_HLL_UNION_ALPHA_NUM)) / F.col("inv_sum").cast("double"),
-                4,
-            ).alias("est"),
-        )
-    )
+    est = merged.groupBy("grp").agg(SK.hll_raw_estimate(6).alias("est"))
     wide = est.groupBy().agg(
         F.max(F.when(F.col("grp") == "A", F.col("est"))).alias("est_a"),
         F.max(F.when(F.col("grp") == "B", F.col("est"))).alias("est_b"),

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gearpump_spark.datasets import table
+from gearpump_spark.functions.exact import dec, dsum, out_double, sql_dec, sql_dsum, sql_out_double
 from gearpump_spark.operators.temporal import asof_join, range_join, sessionize
 from gearpump_spark.queries import register
 from gearpump_spark.queries.dataflow import SESSION_WINDOW_ORACLE
@@ -99,9 +100,9 @@ def q_asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_range_join",
-    oracle="""
+    oracle=f"""
     SELECT e.event_id, COUNT(p.event_id) AS n_follow,
-           COALESCE(CAST(CAST(ROUND(SUM(CAST(p.value AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE), 0.0) AS follow_value
+           COALESCE({sql_dsum('p.value')}, 0.0) AS follow_value
     FROM (SELECT * FROM events WHERE event_type = 'error') e
     LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
       ON e.user_id = p.user_id
@@ -133,11 +134,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy(F.col("e_id").alias("event_id"))
         .agg(
             F.count("p_id").alias("n_follow"),
-            F.coalesce(
-                F.sum(F.col("p_value").cast("decimal(18,4)"))
-                .cast("decimal(38,2)").cast("double"),
-                F.lit(0.0),
-            ).alias("follow_value"),
+            F.coalesce(dsum("p_value"), F.lit(0.0)).alias("follow_value"),
         )
         .orderBy("event_id")
     )
@@ -145,7 +142,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_sessionize",
-    oracle="""
+    oracle=f"""
     WITH flagged AS (
         SELECT user_id, ts, value,
                CASE WHEN LAG(ts) OVER w IS NULL
@@ -159,7 +156,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM flagged)
     SELECT user_id, session_id, COUNT(*) AS n_events,
            MIN(ts) AS session_start,
-           CAST(CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE) AS session_value
+           {sql_dsum('value')} AS session_value
     FROM sess GROUP BY user_id, session_id
     ORDER BY user_id, session_id
     """,
@@ -176,8 +173,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_events"),
             F.min("ts").alias("session_start"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("decimal(38,2)").cast("double").alias("session_value"),
+            dsum("value").alias("session_value"),
         )
         .orderBy("user_id", "session_id")
     )
@@ -236,11 +232,9 @@ def q_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_trailing_1h",
-    oracle="""
+    oracle=f"""
     SELECT event_id,
-           CAST(CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))) OVER (
-               PARTITION BY user_id ORDER BY epoch(ts)
-               RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW), 2) AS DECIMAL(38,2)) AS DOUBLE)
+           {sql_out_double(f"SUM({sql_dec('value')}) OVER (PARTITION BY user_id ORDER BY epoch(ts) RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)")}
            AS trailing_1h_value
     FROM events ORDER BY event_id
     """,
@@ -258,8 +252,7 @@ def q_trailing_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ev.select(
         "event_id",
-        F.sum(F.col("value").cast("decimal(18,4)")).over(w)
-        .cast("decimal(38,2)").cast("double").alias("trailing_1h_value"),
+        out_double(F.sum(dec("value")).over(w)).alias("trailing_1h_value"),
     ).orderBy("event_id")
 
 
@@ -449,10 +442,10 @@ def q_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_json_extract",
-    oracle="""
+    oracle=f"""
     SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS k_mod,
            COUNT(*) AS n,
-           CAST(CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE) AS total_value
+           {sql_dsum('value')} AS total_value
     FROM events
     GROUP BY k_mod ORDER BY k_mod
     """,
@@ -468,8 +461,7 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("k_mod")
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("decimal(38,2)").cast("double").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
         .orderBy("k_mod")
     )
@@ -505,9 +497,9 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_grouping_sets",
-    oracle="""
+    oracle=f"""
     SELECT n_name, o_orderpriority, COUNT(*) AS n_orders,
-           CAST(CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE) AS total
+           {sql_dsum('o_totalprice')} AS total
     FROM orders JOIN customer ON o_custkey = c_custkey
                 JOIN nation ON c_nationkey = n_nationkey
     GROUP BY GROUPING SETS ((n_name), (o_orderpriority), (n_name, o_orderpriority))
@@ -526,10 +518,9 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined.createOrReplaceTempView("__gs_in")
     return joined.sparkSession.sql(
-        """
+        f"""
         SELECT n_name, o_orderpriority, COUNT(*) AS n_orders,
-               CAST(CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,4))), 2)
-                    AS DECIMAL(38,2)) AS DOUBLE) AS total
+               {sql_dsum('o_totalprice')} AS total
         FROM __gs_in
         GROUP BY GROUPING SETS ((n_name), (o_orderpriority), (n_name, o_orderpriority))
         ORDER BY n_name NULLS FIRST, o_orderpriority NULLS FIRST
@@ -819,12 +810,12 @@ def q_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_corr_qty_price",
-    oracle="""
+    oracle=f"""
     WITH s AS (
         SELECT l_returnflag,
                CAST(COUNT(*) AS DOUBLE) AS n,
-               CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DECIMAL(38,2)) AS DOUBLE) AS sx,
-               CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DECIMAL(38,2)) AS DOUBLE) AS sy,
+               {sql_dsum('l_quantity')} AS sx,
+               {sql_dsum('l_extendedprice')} AS sy,
                CAST(FLOOR(SUM(CAST(l_quantity AS DECIMAL(19,4)) * CAST(l_quantity AS DECIMAL(19,4)))) AS DOUBLE) AS sxx,
                CAST(FLOOR(SUM(CAST(l_extendedprice AS DECIMAL(19,4)) * CAST(l_extendedprice AS DECIMAL(19,4)))) AS DOUBLE) AS syy,
                CAST(FLOOR(SUM(CAST(l_quantity AS DECIMAL(19,4)) * CAST(l_extendedprice AS DECIMAL(19,4)))) AS DOUBLE) AS sxy
@@ -843,15 +834,13 @@ def q_corr_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One partial-aggregate pass computes all five moments (map-side
     combined — decimal sums are associative); correlation itself is
     O(groups) driver-free arithmetic."""
-    from gearpump_spark.queries._util import dec
-
     li = table(spark, sf_dir, "lineitem")
     x = dec("l_quantity")
     y = dec("l_extendedprice")
     s = li.groupBy("l_returnflag").agg(
         F.count("*").cast("double").alias("n"),
-        F.sum(x).cast("decimal(38,2)").cast("double").alias("sx"),
-        F.sum(y).cast("decimal(38,2)").cast("double").alias("sy"),
+        dsum("l_quantity").alias("sx"),
+        dsum("l_extendedprice").alias("sy"),
         # FLOOR, not a scale-0 decimal cast: Spark's downcast rounds
         # HALF_UP while DuckDB's truncates — floor is identical on both
         # (moments are positive) and keeps the unscaled value < 2^53
@@ -870,11 +859,11 @@ def q_corr_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_user_value_outliers",
-    oracle="""
+    oracle=f"""
     WITH m AS (
         SELECT user_id,
                CAST(COUNT(*) AS DOUBLE) AS n,
-               CAST(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DECIMAL(38,2)) AS DOUBLE) AS sx,
+               {sql_dsum('value')} AS sx,
                CAST(FLOOR(SUM(CAST(value AS DECIMAL(19,4)) * CAST(value AS DECIMAL(19,4)))) AS DOUBLE) AS sxx
         FROM events GROUP BY user_id HAVING COUNT(*) >= 5),
     s AS (
@@ -895,15 +884,13 @@ def q_user_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Moments aggregate map-side (one shuffle on user_id); the
     flag join re-shuffles events on the same key — co-partitioned with
     the aggregate, no second wide stage on a real cluster."""
-    from gearpump_spark.queries._util import dec
-
     ev = table(spark, sf_dir, "events")
     x = dec("value")
     m = (
         ev.groupBy("user_id")
         .agg(
             F.count("*").cast("double").alias("n"),
-            F.sum(x).cast("decimal(38,2)").cast("double").alias("sx"),
+            dsum("value").alias("sx"),
             F.floor(F.sum(x * x)).cast("double").alias("sxx"),
         )
         .where(F.col("n") >= 5)
@@ -1079,7 +1066,7 @@ def q_gap_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_first_touch_attribution",
-    oracle="""
+    oracle=f"""
     WITH firsts AS (
         SELECT user_id, event_type AS first_touch, ts AS first_ts
         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
@@ -1094,8 +1081,7 @@ def q_gap_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT f.first_touch,
            CAST(COUNT(*) AS BIGINT) AS n_users,
            CAST(SUM(COALESCE(p.n_purchases, 0)) AS BIGINT) AS n_purchases,
-           CAST(CAST(ROUND(SUM(COALESCE(p.revenue, 0)), 2) AS DECIMAL(38, 2))
-                AS DOUBLE) AS revenue
+           {sql_out_double("SUM(COALESCE(p.revenue, 0))")} AS revenue
     FROM firsts f LEFT JOIN purchases p USING (user_id)
     GROUP BY f.first_touch ORDER BY f.first_touch
     """,
@@ -1136,13 +1122,9 @@ def q_first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.coalesce(F.col("n_purchases"), F.lit(0)))
             .cast("long")
             .alias("n_purchases"),
-            F.round(
-                F.sum(F.coalesce(F.col("revenue"), F.lit(0).cast("decimal(38,2)"))),
-                2,
-            )
-            .cast("decimal(38,2)")
-            .cast("double")
-            .alias("revenue"),
+            out_double(
+                F.round(F.sum(F.coalesce(F.col("revenue"), F.lit(0).cast("decimal(38,2)"))), 2)
+            ).alias("revenue"),
         )
         .orderBy("first_touch")
     )
@@ -1484,7 +1466,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_winsorize",
-    oracle="""
+    oracle=f"""
     WITH ranked AS (
         SELECT event_type, value,
                ROW_NUMBER() OVER (PARTITION BY event_type
@@ -1505,9 +1487,8 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS n_clipped_lo,
            CAST(SUM(CASE WHEN r.value > b.hi THEN 1 ELSE 0 END) AS BIGINT)
              AS n_clipped_hi,
-           CAST(CAST(ROUND(SUM(CAST(LEAST(GREATEST(r.value, b.lo), b.hi)
-                                    AS DECIMAL(18,6))), 2) AS DECIMAL(38,2))
-                AS DOUBLE) AS winsorized_sum
+           {sql_out_double(f"SUM({sql_dec('LEAST(GREATEST(r.value, b.lo), b.hi)', 6)})")}
+             AS winsorized_sum
     FROM ranked r JOIN bounds b USING (event_type)
     GROUP BY r.event_type ORDER BY r.event_type
     """,
@@ -1552,10 +1533,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("value") > F.col("hi")).cast("long"))
             .cast("bigint")
             .alias("n_clipped_hi"),
-            F.sum(clipped.cast("decimal(18,6)"))
-            .cast("decimal(38,2)")
-            .cast("double")
-            .alias("winsorized_sum"),
+            out_double(F.sum(dec(clipped, 6))).alias("winsorized_sum"),
         )
         .orderBy("event_type")
     )

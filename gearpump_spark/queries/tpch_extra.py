@@ -13,14 +13,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gearpump_spark.datasets import table
+from gearpump_spark.functions.exact import dec, out_double, sql_dec, sql_dsum, sql_out_double
 from gearpump_spark.queries import register
-from gearpump_spark.queries._util import dec
-
-REV2 = 'CAST(CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1.0 - l_discount AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE)'
-
-
-def _revenue():
-    return dec("l_extendedprice") * dec(F.lit(1.0) - F.col("l_discount"))
+from gearpump_spark.queries.relational import SQL_DISC_PRICE, SQL_REVENUE, disc_price
 
 
 @register(
@@ -94,7 +89,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q7_volume_shipping",
     oracle=f"""
-    SELECT supp_nation, cust_nation, l_year, {REV2} AS revenue
+    SELECT supp_nation, cust_nation, l_year, {SQL_REVENUE} AS revenue
     FROM (
         SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
                EXTRACT(year FROM l_shipdate) AS l_year,
@@ -144,24 +139,23 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.select(
             "supp_nation", "cust_nation",
             F.year("l_shipdate").cast("bigint").alias("l_year"),
-            _revenue().alias("rev"),
+            disc_price().alias("rev"),
         )
         .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(F.sum("rev").cast("decimal(38,2)").cast("double").alias("revenue"))
+        .agg(out_double(F.sum("rev")).alias("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
 @register(
     "q8_market_share",
-    oracle="""
+    oracle=f"""
     SELECT o_year,
            CAST(ROUND(CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN volume ELSE 0 END) AS DOUBLE)
                       / CAST(SUM(volume) AS DOUBLE), 6) AS DOUBLE) AS mkt_share
     FROM (
         SELECT EXTRACT(year FROM o_orderdate) AS o_year,
-               CAST(l_extendedprice AS DECIMAL(18,4))
-                    * CAST(1.0 - l_discount AS DECIMAL(18,4)) AS volume,
+               {SQL_DISC_PRICE} AS volume,
                sn.n_name AS supp_nation
         FROM part p JOIN lineitem l ON p.p_partkey = l.l_partkey
              JOIN supplier s ON s.s_suppkey = l.l_suppkey
@@ -190,7 +184,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     ))
     region = F.broadcast(table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA"))
-    volume = dec("l_extendedprice") * dec(F.lit(1.0) - F.col("l_discount"))
     joined = (
         part.join(li, part.p_partkey == li.l_partkey)
         .join(supp, F.col("s_suppkey") == li.l_suppkey)
@@ -203,14 +196,14 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         joined.select(
             F.year("o_orderdate").cast("bigint").alias("o_year"),
-            volume.alias("volume"), "supp_nation",
+            disc_price().alias("volume"), "supp_nation",
         )
         .groupBy("o_year")
         .agg(
             F.round(
                 F.sum(
                     F.when(F.col("supp_nation") == "NATION_3", F.col("volume"))
-                    .otherwise(F.lit(0).cast("decimal(18,4)"))
+                    .otherwise(dec(F.lit(0)))
                 ).cast("double")
                 / F.sum("volume").cast("double"),
                 6,
@@ -223,7 +216,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q9_product_profit",
     oracle=f"""
-    SELECT nation, o_year, {REV2} AS profit
+    SELECT nation, o_year, {SQL_REVENUE} AS profit
     FROM (
         SELECT sn.n_name AS nation, EXTRACT(year FROM o_orderdate) AS o_year,
                l_extendedprice, l_discount
@@ -255,10 +248,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         joined.select(
             "nation", F.year("o_orderdate").cast("bigint").alias("o_year"),
-            _revenue().alias("rev"),
+            disc_price().alias("rev"),
         )
         .groupBy("nation", "o_year")
-        .agg(F.sum("rev").cast("decimal(38,2)").cast("double").alias("profit"))
+        .agg(out_double(F.sum("rev")).alias("profit"))
         .orderBy("nation", "o_year")
     )
 
@@ -294,11 +287,11 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q14_promo_revenue",
-    oracle="""
+    oracle=f"""
     SELECT CAST(ROUND(100.00 * CAST(SUM(CASE WHEN p_type = 'PROMO'
-                    THEN CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1.0 - l_discount AS DECIMAL(18,4))
+                    THEN {SQL_DISC_PRICE}
                     ELSE 0 END) AS DOUBLE)
-                / CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1.0 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 6) AS DOUBLE)
+                / CAST(SUM({SQL_DISC_PRICE}) AS DOUBLE), 6) AS DOUBLE)
            AS promo_revenue
     FROM lineitem JOIN part ON l_partkey = p_partkey
     WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-02-01'
@@ -311,7 +304,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-02-01").cast("timestamp"))
     )
     part = table(spark, sf_dir, "part")
-    rev = _revenue()
+    rev = disc_price()
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .agg(
@@ -319,7 +312,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(100.0)
                 * F.sum(
                     F.when(F.col("p_type") == "PROMO", rev)
-                    .otherwise(F.lit(0).cast("decimal(18,4)"))
+                    .otherwise(dec(F.lit(0)))
                 ).cast("double")
                 / F.sum(rev).cast("double"),
                 6,
@@ -332,7 +325,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q15_top_supplier",
     oracle=f"""
     WITH revenue AS (
-        SELECT l_suppkey AS supplier_no, {REV2} AS total_revenue
+        SELECT l_suppkey AS supplier_no, {SQL_REVENUE} AS total_revenue
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01'
         GROUP BY l_suppkey)
@@ -352,7 +345,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     revenue = (
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(F.sum(_revenue()).cast("decimal(38,2)").cast("double").alias("total_revenue"))
+        .agg(out_double(F.sum(disc_price())).alias("total_revenue"))
     )
     mx = revenue.agg(F.max("total_revenue").alias("mx"))
     supp = table(spark, sf_dir, "supplier")
@@ -392,8 +385,8 @@ def q16_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q17_small_quantity_revenue",
-    oracle="""
-    SELECT CAST(CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) / 7.0, 2) AS DECIMAL(38,2)) AS DOUBLE)
+    oracle=f"""
+    SELECT {sql_out_double(f"SUM({sql_dec('l_extendedprice')}) / 7.0")}
            AS avg_yearly
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE p_brand = 'Brand#11'
@@ -425,8 +418,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(per_part_avg, li_b11.l_partkey == F.col("avg_pk"))
         .filter(F.col("l_quantity") < F.col("qty_cut"))
         .agg(
-            (F.sum(dec("l_extendedprice")) / F.lit(7.0))
-            .cast("decimal(38,2)").cast("double").alias("avg_yearly")
+            out_double(F.sum(dec("l_extendedprice")) / F.lit(7.0)).alias("avg_yearly")
         )
     )
 
@@ -434,7 +426,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q19_disjunctive_revenue",
     oracle=f"""
-    SELECT {REV2} AS revenue
+    SELECT {SQL_REVENUE} AS revenue
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 AND l_quantity >= 1 AND l_quantity <= 11)
        OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25 AND l_quantity >= 10 AND l_quantity <= 20)
@@ -459,17 +451,17 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .filter(cond)
-        .agg(F.sum(_revenue()).cast("decimal(38,2)").cast("double").alias("revenue"))
+        .agg(out_double(F.sum(disc_price())).alias("revenue"))
     )
 
 
 @register(
     "q22_idle_customers",
-    oracle="""
-    WITH avg_bal AS (SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS ab
+    oracle=f"""
+    WITH avg_bal AS (SELECT CAST(SUM({sql_dec('c_acctbal')}) AS DOUBLE) / COUNT(*) AS ab
                      FROM customer WHERE c_acctbal > 0.0)
     SELECT c_nationkey, COUNT(*) AS numcust,
-           CAST(CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DECIMAL(38,2)) AS DOUBLE) AS totacctbal
+           {sql_dsum('c_acctbal')} AS totacctbal
     FROM customer, avg_bal
     WHERE c_acctbal > ab
       AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
@@ -492,7 +484,7 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.count("*").alias("numcust"),
-            F.sum(dec("c_acctbal")).cast("decimal(38,2)").cast("double").alias("totacctbal"),
+            out_double(F.sum(dec("c_acctbal"))).alias("totacctbal"),
         )
         .orderBy("c_nationkey")
     )
@@ -500,14 +492,14 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q11_important_parts",
-    oracle="""
+    oracle=f"""
     WITH shipped AS (
         SELECT l_partkey,
-               SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(l_quantity AS DECIMAL(18,4))) AS value
+               SUM({sql_dec('l_extendedprice')} * {sql_dec('l_quantity')}) AS value
         FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
         WHERE s_nationkey = 3
         GROUP BY l_partkey)
-    SELECT l_partkey, CAST(CAST(ROUND(value, 2) AS DECIMAL(38,2)) AS DOUBLE) AS value
+    SELECT l_partkey, {sql_out_double('value')} AS value
     FROM shipped
     WHERE CAST(value AS DOUBLE) > (SELECT CAST(SUM(value) AS DOUBLE) * 0.001 FROM shipped)
     ORDER BY value DESC, l_partkey
@@ -532,7 +524,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").cast("double") > F.col("cut"))
         .select(
             "l_partkey",
-            F.col("value").cast("decimal(38,2)").cast("double").alias("value"),
+            out_double(F.col("value")).alias("value"),
         )
         .orderBy(F.desc("value"), "l_partkey")
     )
@@ -725,12 +717,9 @@ def q_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT o_custkey,
            COUNT(*) AS n_orders,
-           {{total}} AS total_spend
+           {sql_dsum('o_totalprice')} AS total_spend
     FROM orders GROUP BY o_custkey ORDER BY o_custkey
-    """.format(total=(
-        "CAST(CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,4))), 2) "
-        "AS DECIMAL(38,2)) AS DOUBLE)"
-    )),
+    """,
     desc="incremental view maintenance: per-batch partial aggregates merged "
     "by monoid == one-shot full aggregation (the oracle computes the "
     "full recompute; the Spark side merges two incremental batches)",
@@ -739,7 +728,6 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stream-table duality check: state(old ⊕ new) == agg(all).
     Scale: each delta merge shuffles only delta keys + their state rows."""
     from gearpump_spark.operators.physical import merge_aggregate_state
-    from gearpump_spark.queries._util import dec, out_double
 
     orders = table(spark, sf_dir, "orders")
     # static deterministic batch split (~80/20 by key residue) — keeps the

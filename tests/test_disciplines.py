@@ -32,7 +32,14 @@ enforced mechanically.
    the MinHash signature and the band key, each with its DuckDB twin and,
    where Python computes it too, its Python twin. A second spelling is
    how the streamed HLL came to hash with another family than the batch
-   HLL it should equal.
+   HLL it should equal. The sampling bucket of that family (basis points)
+   has one spelling too: operators/sampling.py hash_bucket.
+
+7. One exact-arithmetic layer. functions/exact.py owns the fixed-scale
+   decimal cast, the rounded double a decimal measure surfaces as, and
+   the rounded log carried as a decimal, each with its DuckDB twin. A
+   hand spelling can drop the ROUND that makes DuckDB's truncating
+   downcast agree with Spark's HALF_UP one.
 """
 
 from __future__ import annotations
@@ -226,8 +233,11 @@ def test_hash_family_only_in_hash_module():
     md5 hash family: no seeded MD5('<n>|' or MD5(<n> || '|' (nor a band
     key MD5(h0 || '|' ...), no SUBSTR(MD5( prefix, no SQL MD5( at all, no
     F.md5( and no hashlib.md5(, except the payload forms named in
-    HASH_EXEMPT_FORMS."""
+    HASH_EXEMPT_FORMS. Nor does any file but operators/sampling.py take
+    a hash % 10000 (the basis-point bucket of hash_bucket and its twin
+    sql_hash_bucket)."""
     hash_module = ROOT / "gearpump_spark" / "functions" / "hash.py"
+    sampling_module = ROOT / "gearpump_spark" / "operators" / "sampling.py"
     patterns = {
         "MD5('<n>|'": re.compile(r"MD5\('\d+\|'", re.I),
         "MD5(<n> || '|'": re.compile(r"MD5\(\s*[^(),]{1,30}?\|\|\s*'\|'", re.I),
@@ -246,9 +256,44 @@ def test_hash_family_only_in_hash_module():
         for form in HASH_EXEMPT_FORMS:
             src = src.replace(form, "")
         found += [f"{rel}: {label}" for label, pat in patterns.items() if pat.search(src)]
+        if path != sampling_module and re.search(r"%\s*10000\b", src):
+            found.append(f"{rel}: % 10000 bucket")
     assert not found, (
         "md5 hash family outside functions/hash.py; use H.seeded_md5 / "
         "H.hash15 / H.hash32 / H.digest / H.fingerprint / "
         "H.minhash_signature / H.band_key, their H.sql_* twins or their "
-        "H.py_* twins: " + "; ".join(found)
+        "H.py_* twins, and SP.hash_bucket / SP.sql_hash_bucket for the "
+        "basis-point bucket: " + "; ".join(found)
+    )
+
+
+def test_exact_arithmetic_only_in_exact_module():
+    """Outside functions/exact.py no file under gearpump_spark/ spells an
+    exact-arithmetic form: no surfacing of a decimal as a double through
+    DECIMAL(38,2) (CAST(CAST(x AS DECIMAL(38,2)) AS DOUBLE) in SQL,
+    .cast("decimal(38,2)").cast("double") on a Column), no rounded log
+    (ROUND(LN( or F.round(F.log(), and no DECIMAL(18,4) cast in either
+    engine's spelling."""
+    exact_module = ROOT / "gearpump_spark" / "functions" / "exact.py"
+    patterns = {
+        "AS DECIMAL(38,2)) AS DOUBLE": re.compile(
+            r"AS\s+DECIMAL\(38,\s*2\)\)\s+AS\s+DOUBLE", re.I
+        ),
+        '.cast("decimal(38,2)").cast("double")': re.compile(
+            r'\.cast\(\s*"decimal\(38,\s*2\)"\s*\)\s*\.cast\(\s*"double"\s*\)', re.I
+        ),
+        "ROUND(LN(": re.compile(r"ROUND\(\s*LN\(", re.I),
+        "F.round(F.log(": re.compile(r"F\.round\(\s*F\.log\("),
+        "DECIMAL(18,4)": re.compile(r"DECIMAL\(18,\s*4\)", re.I),
+    }
+    found = [
+        f"{path.relative_to(ROOT)}: {label}"
+        for path in sorted((ROOT / "gearpump_spark").rglob("*.py"))
+        if path != exact_module
+        for label, pat in patterns.items()
+        if pat.search(path.read_text())
+    ]
+    assert not found, (
+        "exact arithmetic outside functions/exact.py; use dec / out_double / "
+        "dsum / davg / ln_dec or their sql_* twins: " + "; ".join(found)
     )

@@ -1,17 +1,19 @@
 """Golden result hashes at sf0.001 for the 17 registered graph queries,
 the queries that tokenize text, the vector queries, the streaming
-queries and the queries whose oracle hashes.
+queries, the queries whose oracle hashes and the queries built on the
+exact-arithmetic forms.
 
 test_oracle_parity compares each query with its DuckDB oracle, and both
 sides now read one shared input: the co-purchase or shipment graph (the
 DataFrame builders and CTE fragments at the top of queries/llm.py), the
 token forms of functions/text.py, the vector forms of
-functions/vector.py, or the hash forms of functions/hash.py, each with
-its SQL twin. A change to a shared input would move the two sides
+functions/vector.py, the hash forms of functions/hash.py, or the decimal
+and rounded-log forms of functions/exact.py, each with its SQL twin. A change to a shared input would move the two sides
 together and still pass there. These hashes pin the results themselves;
 they were recorded from the implementations that still built every
-graph input, spelled every whitespace split, wrote every vector fold
-and spelled every seeded md5 by hand. The multimodal payload queries
+graph input, spelled every whitespace split, wrote every vector fold,
+spelled every seeded md5 and spelled every decimal cast, rounded double
+and rounded log by hand. The multimodal payload queries
 are not pinned for their hashes: their md5 calls encode fixture bytes
 and are not members of the hash family.
 
@@ -94,15 +96,50 @@ GOLDEN_SF001 = {
     "pipeline_chunk_pack": "1f182749cfa8ca22",
     "pipeline_quality_dedup_pack": "32ba69e7eb8d76fa",
     "pipeline_quality_dedup_sample": "19806659ee472741",
+    "q10_returned_items": "a49c0bb37c2a9922",
+    "q11_important_parts": "555577c34d9f1d06",
+    "q14_promo_revenue": "6e946e39e9e5cc7e",
+    "q15_top_supplier": "239278b90a387b4a",
+    "q17_small_quantity_revenue": "cdd3396753becfdf",
+    "q18_large_volume_customer": "c5bed14bb770c2b0",
+    "q19_disjunctive_revenue": "5deba0bef30f01a7",
+    "q1_pricing_summary": "5eab8c2b8e31e12b",
+    "q22_idle_customers": "e3b0c44298fc1c14",
+    "q3_shipping_priority": "0a4ee65fb6247dab",
+    "q5_local_supplier_volume": "7f7ce27b63e61aaa",
+    "q6_revenue_forecast": "1a6e4866e4d0e93a",
+    "q7_volume_shipping": "e3b0c44298fc1c14",
+    "q8_market_share": "d431c5c649bbcd1f",
+    "q9_product_profit": "6417b3d69a33b855",
+    "q_agg_stats": "651ff88b8b411f69",
+    "q_corr_qty_price": "898ee6fcb4cc89eb",
+    "q_cube": "bd2a6503f555c5e7",
     "q_file_skip_stats": "5566c371edcaa82a",
+    "q_first_touch_attribution": "c32e9638c448dd01",
+    "q_gbk_combine": "7e9d2dd2e05e9f34",
+    "q_groupby_having": "60b0d6fadb024bea",
+    "q_grouping_sets": "59638c30e640d606",
+    "q_incremental_agg": "0ef2fb33941ff81b",
+    "q_json_extract": "b5c46415c1eea323",
+    "q_multi_output_tags": "1f31a144868f1b2b",
+    "q_outer_join_counts": "03aa622616b32192",
+    "q_range_join": "c89c56038c52bdab",
+    "q_rollup": "668ad516b76d81b7",
     "q_running_aggregate_stream": "b9be6e4d4757ae81",
     "q_session_window_stream": "51bbeb4ca3488d15",
+    "q_sessionize": "81a04fc20c472d2a",
     "q_snapshot_diff": "66c4706a43e19d8d",
     "q_stream_dedup_replay": "ecad457308c949b2",
     "q_stream_join_outer": "eeb40ecbb69add0b",
     "q_stream_stream_join": "be9feab51f4198e3",
+    "q_trailing_1h": "55740a0be320e38a",
+    "q_user_value_outliers": "4d8c1bd33124f54d",
+    "q_window_running": "9ec861155d38c4dc",
+    "q_window_sliding": "f679200bd5e557b0",
     "q_window_sliding_stream": "f679200bd5e557b0",
+    "q_window_tumbling": "ecad457308c949b2",
     "q_window_tumbling_stream": "ecad457308c949b2",
+    "q_winsorize": "6889e24a9a194260",
     "sample_bottom_k": "61d4512c52a3c2e3",
     "sample_cluster_split": "e722df1f5a5aa16f",
     "sample_curriculum_order": "99dbc78be453be2a",
@@ -211,11 +248,76 @@ def _streamed_queries() -> set[str]:
     return names
 
 
+def _exact_queries() -> set[str]:
+    """Registered queries whose function or oracle uses functions/exact.py,
+    directly or through a module-level helper of a query module (a
+    constant or function whose definition uses it, followed to a fixed
+    point, across the query modules' imports of each other)."""
+    exact_mod = "gearpump_spark.functions.exact"
+    trees = {
+        path.stem: ast.parse(path.read_text())
+        for path in (pathlib.Path(__file__).parent.parent / "gearpump_spark" / "queries").glob(
+            "*.py"
+        )
+    }
+
+    def is_query(node):
+        return isinstance(node, ast.FunctionDef) and any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+            for d in node.decorator_list
+        )
+
+    def names(node):
+        return {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+
+    uses = {m: set() for m in trees}
+    changed = True
+    while changed:
+        changed = False
+        for mod, tree in trees.items():
+            for node in tree.body:
+                if isinstance(node, ast.ImportFrom) and node.module:
+                    src = node.module.rsplit(".", 1)[-1]
+                    new = {
+                        a.asname or a.name
+                        for a in node.names
+                        if node.module == exact_mod
+                        or (node.module.startswith("gearpump_spark.queries.") and a.name in uses.get(src, ()))
+                    }
+                elif isinstance(node, (ast.FunctionDef, ast.Assign)) and not is_query(node):
+                    targets = (
+                        {node.name}
+                        if isinstance(node, ast.FunctionDef)
+                        else {t.id for t in node.targets if isinstance(t, ast.Name)}
+                    )
+                    new = targets if names(node) & uses[mod] else set()
+                else:
+                    continue
+                if not new <= uses[mod]:
+                    uses[mod] |= new
+                    changed = True
+    return {
+        d.args[0].value
+        for mod, tree in trees.items()
+        for node in tree.body
+        if is_query(node) and names(node) & uses[mod]
+        for d in node.decorator_list
+        if isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+    }
+
+
 def test_golden_covers_every_graph_query():
     pinned = {n for n in REGISTRY if n.startswith(PINNED_PREFIXES)}
     streamed = _streamed_queries()
     assert len(streamed) >= 8
     assert pinned | streamed | set(VECTOR_QUERIES) <= set(GOLDEN_SF001)
+
+
+def test_golden_covers_every_exact_arithmetic_query():
+    exact = _exact_queries()
+    assert len(exact) >= 50
+    assert exact <= set(REGISTRY)
+    assert not exact - set(GOLDEN_SF001), sorted(exact - set(GOLDEN_SF001))
 
 
 @pytest.mark.parametrize("name", sorted(GOLDEN_SF001))
